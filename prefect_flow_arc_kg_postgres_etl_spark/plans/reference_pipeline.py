@@ -59,6 +59,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from prefect_flow_arc_kg_postgres_etl_spark.operators import merge as M
 
@@ -67,8 +68,10 @@ _NS = "urn:kg-to-postgres:"
 # landed view-graph spills, keyed by (applicationId, sf_dir, store
 # fingerprint) — the fingerprint (file sizes + mtimes under sf_dir)
 # makes a changed store re-land instead of serving stale triples
-# (r9 ADVICE). Default-created spill dirs are removed at interpreter
-# exit; caller-provided spill_dir paths are the caller's to manage.
+# (r9 ADVICE). A spill superseded by a re-land stays registered: a
+# frame returned before the store changed still scans it. Default-
+# created spill dirs are removed at interpreter exit; caller-provided
+# spill_dir paths are the caller's to manage.
 _SPILLS: dict[tuple[str, str, tuple[int, int]], str] = {}
 
 # Unique tokens for stores that cannot be fingerprinted (remote scheme,
@@ -158,18 +161,6 @@ def _remove_spill(path: str) -> None:
     shutil.rmtree(local, ignore_errors=True)
 
 
-def _register_spill(key: tuple[str, str, tuple[int, int]], spill: str) -> None:
-    """Record a landed spill and DROP any spill held for the same
-    (applicationId, sf_dir) under a superseded store fingerprint —
-    re-landing a mutated store must not leak the old dir for the rest
-    of the session (r10 ADVICE)."""
-    for old_key in [
-        k for k in _SPILLS if k[:2] == key[:2] and k != key
-    ]:
-        _remove_spill(_SPILLS.pop(old_key))
-    _SPILLS[key] = spill
-
-
 def _cleanup_spills() -> None:
     for path in list(_SPILLS.values()):
         _remove_spill(path)
@@ -253,6 +244,17 @@ GRAPH_TABLE_COLUMNS: dict[str, list[str]] = {
     "graph.schema_temporal": ["intellectual_entity_id", "schema_temporal"],
     "graph.thing": ["id", "schema_birth_date", "schema_birth_place", "schema_death_date", "schema_death_place", "schema_name"],
 }
+
+# The schema table_from_wide gives each table (every pivoted value is
+# a string): a store version is read with it instead of inferring it.
+GRAPH_TABLE_SCHEMAS: dict[str, StructType] = {
+    name: StructType(
+        [StructField(c, StringType()) for c in ["subject", *cols]]
+    )
+    for name, cols in GRAPH_TABLE_COLUMNS.items()
+}
+
+INDEX_DOCUMENTS = "graph.index_documents"
 
 # The FK graph 2_database_load.ts discovers via get_dependent_tables
 # (database.ts): dependencies[t] = tables t references, toposorted by
@@ -374,7 +376,7 @@ def all_view_triples(
             gc.collect()
             spark.sparkContext._jvm.System.gc()
         if spill_dir is None:
-            _register_spill(key, spill)
+            _SPILLS[key] = spill
     paths = [f"{spill}/q{i}" for i in range(len(builders))]
     return spark.read.parquet(*paths).distinct()
 
@@ -406,16 +408,35 @@ def table_from_wide(wide: DataFrame, table: str, cols: list[str]) -> DataFrame:
     )
 
 
+class ViewTables(dict):
+    """graph.* table name -> frame, every one extracted from ``wide``,
+    the persisted pivot of one triple stream."""
+
+    def __init__(self, wide: DataFrame):
+        super().__init__()
+        self.wide = wide
+
+    def emitted(self) -> set[str]:
+        """The tables the stream has records for: one small distinct
+        over the pivot's tableName values, no second triple scan."""
+        return {
+            r[0]
+            for r in self.wide.select(F.col("m")["tableName"])
+            .distinct()
+            .collect()
+        }
+
+
 def pivot_view_tables(
     triples: DataFrame,
     tables: dict[str, list[str]] | None = None,
-) -> dict[str, DataFrame]:
+) -> ViewTables:
     """The full graph.* table set from one triple stream, in FK load
     order (the dict is ordered by merge level, then name — iterate it
     to replay 2_database_load.ts's upsert sequence)."""
     tables = tables if tables is not None else GRAPH_TABLE_COLUMNS
     wide = pivot_wide(triples).persist()
-    out: dict[str, DataFrame] = {}
+    out = ViewTables(wide)
     for level in graph_load_order():
         for name in level:
             if name in tables:
@@ -1032,8 +1053,8 @@ def build_reference_index_documents(
 # whole composition (tens of thousands of rows from a 23-join star
 # over millions of triples) and THREE registered entries re-derive
 # them per call — A74 itself, A77 (which traverses them for current,
-# previous and flag frames) and the ES feed. One persisted frame per
-# store makes every traversal an in-memory scan instead of a star-join
+# previous and flag frames) and the ES feed. One landed spill per
+# store makes every traversal a parquet scan instead of a star-join
 # re-execution; entries on a fresh session (the correctness driver)
 # build it exactly once.
 _DOCS_CACHE: dict[tuple[str, str, tuple[int, int]], DataFrame] = {}
@@ -1109,25 +1130,56 @@ def flow_reference_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_reference_index_documents(tables, SYNTHETIC_STORE_ADAPTER).write.mode(
         "overwrite"
     ).parquet(f"{spill}/index_documents")
-    _register_spill((key[0], "docs:" + sf_dir, key[2]), spill)
+    _SPILLS[(key[0], "docs:" + sf_dir, key[2])] = spill
     docs = spark.read.parquet(f"{spill}/index_documents")
-    # a mutated store under the same path supersedes its old entry —
-    # drop the reference now; the checkpointed blocks are freed by the
-    # ContextCleaner once the frame is garbage-collected (unpersist()
-    # is a no-op on a checkpointed frame, kept for persisted entries
-    # from older sessions of this module).
+    # a mutated store under the same path supersedes its old entry
+    # (its spill stays on disk until exit, for frames already returned)
     for old_key in [k for k in _DOCS_CACHE if k[:2] == key[:2]]:
-        try:
-            _DOCS_CACHE.pop(old_key).unpersist()
-        except Exception:
-            pass
+        _DOCS_CACHE.pop(old_key)
     if len(_DOCS_CACHE) >= 8:
-        try:
-            _DOCS_CACHE.pop(next(iter(_DOCS_CACHE))).unpersist()
-        except Exception:
-            pass
+        _DOCS_CACHE.pop(next(iter(_DOCS_CACHE)))
     _DOCS_CACHE[key] = docs
     return docs
+
+
+def _merge_view_slice(
+    spark: SparkSession, store_dir: str, triples: DataFrame
+) -> tuple[dict[str, DataFrame], str | None]:
+    """The FK-ordered upsert of one view-triple slice over the store's
+    latest manifest (2_database_load.ts's sequential mergeTable loop,
+    which runs MERGE INTO only for the tables that received rows).
+    Returns (frames to land, the manifest the merge read).
+
+    - A table the manifest pins that the slice did not emit is left
+      out: the commit carries it by pin. This is exact, because
+      upsert(target, empty) == target.
+    - An emitted table is upserted over its pinned version (the live
+      pointer's, for a table no manifest pins), read with its pivot
+      schema.
+    - A table the store does not hold lands as pivoted."""
+    import os
+
+    from prefect_flow_arc_kg_postgres_etl_spark.sources import store as S
+
+    base = S.latest_manifest(store_dir)
+    pinned = S.read_manifest(base) if base is not None else {}
+    tables = pivot_view_tables(triples)
+    emitted = tables.emitted() if pinned else set()
+    merged: dict[str, DataFrame] = {}
+    for name, rows in tables.items():
+        if name in pinned and name not in emitted:
+            continue
+        tp = os.path.join(store_dir, f"{name}.parquet")
+        schema = GRAPH_TABLE_SCHEMAS[name]
+        if name in pinned:
+            target = S.read_table_version(spark, tp, pinned[name], schema)
+        elif S.table_exists(tp):
+            target = S.read_table(spark, tp, schema)
+        else:
+            merged[name] = rows
+            continue
+        merged[name] = M.upsert(target, rows, keys=["subject"])
+    return merged, base
 
 
 def reference_pipeline_flow(
@@ -1138,40 +1190,46 @@ def reference_pipeline_flow(
 ) -> DataFrame:
     """The composed cycle against a DURABLE store — the full
     main_flow.py job: construct (or accept a since-window triple
-    slice) -> pivot -> upsert every graph.* table over the store's
-    current state in FK topological order (2_database_load.ts's
-    sequential mergeTable loop) -> build the update_partition index
-    documents from the merged state -> commit tables AND the derived
+    slice) -> pivot -> FK-ordered upsert over the store's latest
+    snapshot (``_merge_view_slice``) -> commit tables AND the derived
     ``graph.index_documents`` in ONE atomic snapshot (the lakehouse
     form of update_partition.sql's INSERT running inside the load
     transaction) -> return the documents read back from the committed
     snapshot. Re-running with a re-emitted subject slice converges to
-    the full-sync state (pinned in tests/test_reference_pipeline.py)."""
-    import os
+    the full-sync state (pinned in tests/test_reference_pipeline.py).
 
+    The night does work in proportion to what it changed:
+    - only the tables the slice emitted are upserted and written; a
+      table it did not emit is carried by its manifest pin, with no
+      read and no write;
+    - the documents are built by ``commit_tables`` over the LANDED
+      versions (staged tables as scan leaves, carried ones at the
+      pins the merge read), so no upsert lineage runs twice;
+    - the manifest write stays the only commit point: every
+      graph.* table and the documents land in one snapshot;
+    - only the documents are read back, at their manifest version."""
     from prefect_flow_arc_kg_postgres_etl_spark.sources import store as S
 
     if triples is None:
         triples = all_view_triples(spark, sf_dir)
-    tables = pivot_view_tables(triples)
-    merged: dict[str, DataFrame] = {}
-    for level in graph_load_order():
-        for name in level:
-            if name not in tables:
-                continue
-            tp = os.path.join(store_dir, f"{name}.parquet")
-            if S.table_exists(tp):
-                merged[name] = M.upsert(
-                    S.read_table(spark, tp), tables[name], keys=["subject"]
-                )
-            else:
-                merged[name] = tables[name]
-    docs = build_reference_index_documents(merged, SYNTHETIC_STORE_ADAPTER)
+    merged, base = _merge_view_slice(spark, store_dir, triples)
+    schemas = dict(GRAPH_TABLE_SCHEMAS)
+
+    def documents(t: dict[str, DataFrame]) -> DataFrame:
+        docs = build_reference_index_documents(t, SYNTHETIC_STORE_ADAPTER)
+        schemas[INDEX_DOCUMENTS] = docs.schema
+        return docs
+
     manifest = S.commit_tables(
-        store_dir, {**merged, "graph.index_documents": docs}
+        store_dir,
+        merged,
+        carry_from=base,
+        derived={INDEX_DOCUMENTS: documents},
+        schemas=schemas,
     )
-    snap = S.read_snapshot(spark, store_dir, manifest)
-    return snap["graph.index_documents"]
+    return S.read_snapshot(
+        spark, store_dir, manifest, [INDEX_DOCUMENTS], schemas
+    )[INDEX_DOCUMENTS]
 
 
 def reference_partition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2315,9 +2373,10 @@ def main_reference_flow(
     holds). Stages, in the reference's chain order:
 
       - ``load``   construct (or accept ``triples``) -> pivot ->
-                   FK-ordered merge of every graph.* table over the
-                   store's current state, committed as one snapshot
-                   (kg_view + db_load deployments)
+                   FK-ordered merge of the graph.* tables the slice
+                   emitted over the store's latest snapshot, committed
+                   as one snapshot that carries every other table by
+                   its pin (kg_view + db_load deployments)
       - ``index``  rebuild ``graph.index_documents`` from the LATEST
                    committed tables, committed as its own (partial)
                    snapshot (the index-tables deployment)
@@ -2334,8 +2393,6 @@ def main_reference_flow(
     Returns {"load": manifest|None, "index": manifest|None,
     "delete": manifest|None, "documents": latest committed documents
     frame (None when the store has never committed any)}."""
-    import os
-
     from prefect_flow_arc_kg_postgres_etl_spark.sources import store as S
 
     act = {"load": True, "index": True, "delete": True}
@@ -2347,26 +2404,15 @@ def main_reference_flow(
 
     if act["load"]:
         tr = triples if triples is not None else all_view_triples(spark, sf_dir)
-        tables = pivot_view_tables(tr)
-        merged: dict[str, DataFrame] = {}
-        for level in graph_load_order():
-            for name in level:
-                if name not in tables:
-                    continue
-                tp = os.path.join(store_dir, f"{name}.parquet")
-                if S.table_exists(tp):
-                    merged[name] = M.upsert(
-                        S.read_table(spark, tp), tables[name], keys=["subject"]
-                    )
-                else:
-                    merged[name] = tables[name]
+        merged, _base = _merge_view_slice(spark, store_dir, tr)
         # Inherit the prior snapshot: a load run updates tables but
-        # must not orphan the standing graph.index_documents (the
-        # reference's kg_view/db_load deployments never touch the
-        # index tables) — the new manifest pins them as-was.
-        # CARRY_LATEST (not a pre-resolved path): resolution happens
-        # inside the commit lock, so a commit landing while the merge
-        # computes can never be un-pinned (r11 advice, store.py).
+        # must not orphan the untouched tables or the standing
+        # graph.index_documents (the reference's kg_view/db_load
+        # deployments never touch the index tables) — the new manifest
+        # pins them as-was. CARRY_LATEST (not the merge's manifest):
+        # resolution happens inside the commit lock, so a commit
+        # landing while the merge computes can never be un-pinned (r11
+        # advice, store.py).
         out["load"] = S.commit_tables(
             store_dir, merged, carry_from=S.CARRY_LATEST
         )
@@ -2374,19 +2420,21 @@ def main_reference_flow(
     if act["index"]:
         man = S.latest_manifest(store_dir)
         assert man is not None, "index stage needs a committed load"
-        snap = S.read_snapshot(spark, store_dir, man)
-        tables = {
-            n: df for n, df in snap.items() if n in GRAPH_TABLE_COLUMNS
-        }
-        docs = build_reference_index_documents(
-            tables, SYNTHETIC_STORE_ADAPTER
-        )
-        # Partial commit WITH snapshot inheritance: the new manifest
-        # pins the load stage's table versions alongside the rebuilt
-        # documents, so the delete stage (and any later reader of the
-        # latest manifest) sees one complete consistent state.
+        # Partial commit WITH snapshot inheritance: the documents are
+        # built over the load stage's pinned table versions, and the
+        # new manifest pins those versions alongside them, so the
+        # delete stage (and any later reader of the latest manifest)
+        # sees one complete consistent state.
         out["index"] = S.commit_tables(
-            store_dir, {"graph.index_documents": docs}, carry_from=man
+            store_dir,
+            {},
+            carry_from=man,
+            derived={
+                INDEX_DOCUMENTS: lambda t: build_reference_index_documents(
+                    t, SYNTHETIC_STORE_ADAPTER
+                )
+            },
+            schemas=GRAPH_TABLE_SCHEMAS,
         )
 
     if act["delete"]:
@@ -2395,9 +2443,10 @@ def main_reference_flow(
 
     man = S.latest_manifest(store_dir)
     docs_out = None
-    if man is not None:
-        snap = S.read_snapshot(spark, store_dir, man)
-        docs_out = snap.get("graph.index_documents")
+    if man is not None and INDEX_DOCUMENTS in S.read_manifest(man):
+        docs_out = S.read_snapshot(spark, store_dir, man, [INDEX_DOCUMENTS])[
+            INDEX_DOCUMENTS
+        ]
     out["documents"] = docs_out
     return out
 

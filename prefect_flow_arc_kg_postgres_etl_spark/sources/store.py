@@ -25,8 +25,10 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _POINTER = "_current"
 # A crashed commit_tables holder's lock is taken over after this many
@@ -48,13 +50,24 @@ def version_dir(table_path: str, version: int) -> str:
     return os.path.join(table_path, f"v_{version}")
 
 
-def read_table(spark: SparkSession, table_path: str) -> DataFrame:
+def _read_parquet(
+    spark: SparkSession, path: str, schema: StructType | None
+) -> DataFrame:
+    """A parquet scan leaf. A known ``schema`` skips the footer-reading
+    job Spark otherwise fires to infer it."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def read_table(
+    spark: SparkSession, table_path: str, schema: StructType | None = None
+) -> DataFrame:
     """Read the live version (pointer-resolved), or the flat legacy
     layout when the table predates versioning."""
     v = current_version(table_path)
     if v is None:
-        return spark.read.parquet(table_path)
-    return spark.read.parquet(version_dir(table_path, v))
+        return _read_parquet(spark, table_path, schema)
+    return _read_parquet(spark, version_dir(table_path, v), schema)
 
 
 def table_exists(table_path: str) -> bool:
@@ -283,7 +296,10 @@ def targeted_delete_rewrite(
 
 
 def read_table_version(
-    spark: SparkSession, table_path: str, version: int
+    spark: SparkSession,
+    table_path: str,
+    version: int,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """TIME TRAVEL: read a PINNED store version instead of the live
     pointer — the audit/debug read every versioned store owes its
@@ -299,7 +315,7 @@ def read_table_version(
             f"version {version} of {table_path} does not exist "
             f"(pruned by retention, or never written)"
         )
-    return spark.read.parquet(d)
+    return _read_parquet(spark, d, schema)
 
 
 def write_snapshot_manifest(store_dir: str, tables: list[str]) -> str:
@@ -358,20 +374,35 @@ def write_snapshot_manifest(store_dir: str, tables: list[str]) -> str:
     return path
 
 
-def read_snapshot(
-    spark: SparkSession, store_dir: str, manifest_path: str
-) -> dict[str, DataFrame]:
-    """Read every table AT ITS MANIFEST-PINNED VERSION — one consistent
-    cross-table state, immune to pointer swaps that happened since."""
+def read_manifest(manifest_path: str) -> dict[str, int]:
+    """The {table: version} pins of one snapshot manifest."""
     import json
 
     with open(manifest_path) as f:
-        manifest = json.load(f)
+        return json.load(f)
+
+
+def read_snapshot(
+    spark: SparkSession,
+    store_dir: str,
+    manifest_path: str,
+    names: list[str] | None = None,
+    schemas: dict[str, StructType] | None = None,
+) -> dict[str, DataFrame]:
+    """Read every table (or only ``names``) AT ITS MANIFEST-PINNED
+    VERSION — one consistent cross-table state, immune to pointer
+    swaps that happened since. A table with a known schema in
+    ``schemas`` is read without a schema-inference job."""
+    manifest = read_manifest(manifest_path)
+    schemas = schemas or {}
     return {
         name: read_table_version(
-            spark, os.path.join(store_dir, f"{name}.parquet"), version
+            spark,
+            os.path.join(store_dir, f"{name}.parquet"),
+            manifest[name],
+            schemas.get(name),
         )
-        for name, version in manifest.items()
+        for name in (manifest if names is None else names)
     }
 
 
@@ -392,7 +423,6 @@ def vacuum_table(
     metadata work (no data scan); returns the removed version numbers,
     newest-first never includes the live pointer's version."""
     import glob
-    import json
     import re
 
     if keep_last < 1:
@@ -409,8 +439,7 @@ def vacuum_table(
     pinned: set[int] = set()
     if store_dir:
         for mp in glob.glob(os.path.join(store_dir, "_snapshot_*.json")):
-            with open(mp) as f:
-                manifest = json.load(f)
+            manifest = read_manifest(mp)
             if table_name in manifest:
                 pinned.add(int(manifest[table_name]))
     import time
@@ -503,7 +532,14 @@ def write_table_validated(
 CARRY_LATEST = "latest"
 
 
-def commit_tables(store_dir: str, tables: dict, carry_from: str | None = None) -> str:
+def commit_tables(
+    store_dir: str,
+    tables: dict,
+    carry_from: str | None = None,
+    derived: dict[str, Callable[[dict[str, DataFrame]], DataFrame]]
+    | None = None,
+    schemas: dict[str, StructType] | None = None,
+) -> str:
     """A63 (r6): MULTI-TABLE ATOMIC COMMIT — per-table pointer swaps
     commit independently (A46 exists to pin around that); real
     cross-table writes (fact + its index, parent + child) need
@@ -525,10 +561,26 @@ def commit_tables(store_dir: str, tables: dict, carry_from: str | None = None) -
     commit that still yields a COMPLETE consistent state, with zero
     data rewrite for the carried tables (metadata-only: the new
     manifest simply pins their existing version numbers, which vacuum
-    already respects). This is how a stage that touches one table
+    already respects). This is how a nightly load commits only the
+    tables its slice touched, and how a stage that touches one table
     (e.g. the index rebuild committing only graph.index_documents)
     leaves the store's latest manifest fully usable by the next stage
     instead of a documents-only island.
+
+    ``derived``: {name: build} for tables computed FROM the committed
+    state (the index documents over the graph tables). They are built
+    after every table in ``tables`` is staged, over the LANDED data:
+    each build gets {name: frame} for every table the new manifest
+    pins — staged tables as scan leaves over their staging dirs,
+    carried tables at their pinned versions (read with ``schemas``
+    where given, so no schema-inference job fires) — never the
+    lineage that produced the staged frames, which would run twice.
+    The derived tables stage next, and the one manifest then pins
+    them with everything else: a build that raises leaves only
+    ``_stage_*`` dirs and the previous manifest live. Derived builds
+    read the carried versions before the commit lock, so they need an
+    explicit ``carry_from`` path (the manifest the caller's own reads
+    used), not ``CARRY_LATEST``.
 
     Concurrency contract (r12, closes the r11 advice): an EXPLICIT
     manifest path pins exactly that snapshot's versions — the caller
@@ -541,13 +593,23 @@ def commit_tables(store_dir: str, tables: dict, carry_from: str | None = None) -
     ``latest_manifest()`` call and this commit can never be silently
     un-pinned (the lost-update the path form permits under
     multi-writer use)."""
-    import json
-
     import glob
     import json
     import re
     import time
     import uuid
+
+    derived = derived or {}
+    if derived and carry_from == CARRY_LATEST:
+        raise ValueError(
+            "commit_tables: derived tables need an explicit carry_from "
+            "manifest path, not CARRY_LATEST"
+        )
+    inherited = (
+        read_manifest(carry_from)
+        if carry_from is not None and carry_from != CARRY_LATEST
+        else {}
+    )
 
     # Phase 1 — NO coordination: every committer lands its data in a
     # private staging dir per table (a crash here leaves only
@@ -589,6 +651,26 @@ def commit_tables(store_dir: str, tables: dict, carry_from: str | None = None) -
                     lambda it: _stage(*it), items[1:]
                 ):
                     staged[name] = sd
+
+    if derived:
+        spark = (
+            items[0][1].sparkSession if items else SparkSession.active()
+        )
+        schemas = schemas or {}
+        inputs = {
+            name: read_table_version(
+                spark,
+                os.path.join(store_dir, f"{name}.parquet"),
+                v,
+                schemas.get(name),
+            )
+            for name, v in inherited.items()
+            if name not in tables and name not in derived
+        }
+        for name, df in items:
+            inputs[name] = _read_parquet(spark, staged[name], df.schema)
+        for name, build in derived.items():
+            staged[name] = _stage(name, build(inputs))[1]
 
     # Phase 2 — metadata-only critical section under a store-wide
     # O_EXCL lock: allocate version numbers from what is actually on
@@ -642,21 +724,14 @@ def commit_tables(store_dir: str, tables: dict, carry_from: str | None = None) -
             v = max([current_version(tp) or 0, *on_disk, 0]) + 1
             os.rename(sd, version_dir(tp, v))
             landed[name] = v
-        manifest_entries = dict(landed)
-        if carry_from is not None:
-            # CARRY_LATEST resolves here, INSIDE the lock: no commit
-            # can land between resolution and the manifest write, so
+        if carry_from == CARRY_LATEST:
+            # Resolved here, INSIDE the lock: no commit can land
+            # between resolution and the manifest write, so
             # inheritance always reflects the true latest state.
-            src = (
-                latest_manifest(store_dir)
-                if carry_from is CARRY_LATEST or carry_from == CARRY_LATEST
-                else carry_from
-            )
-            if src is not None:
-                with open(src) as f:
-                    inherited = json.load(f)
-                # new versions win; everything else is pinned as-was
-                manifest_entries = {**inherited, **manifest_entries}
+            src = latest_manifest(store_dir)
+            inherited = read_manifest(src) if src is not None else {}
+        # new versions win; everything else is pinned as-was
+        manifest_entries = {**inherited, **landed}
         n = 1
         while True:
             path = os.path.join(store_dir, f"_snapshot_{n}.json")

@@ -627,6 +627,55 @@ def test_commit_tables_carry_latest_resolves_inside_lock(spark, tmp_path):
     assert store.read_snapshot(spark, sd, m_pinned)["orders"].count() == 10
 
 
+def test_commit_tables_derived_failure_commits_nothing(spark, tmp_path):
+    """A derived-table build runs after the tables stage and before the
+    manifest: when it raises, the latest manifest is unchanged and no
+    version directory appears — only unreferenced staging dirs."""
+    import glob
+    import os
+
+    import pytest
+
+    from prefect_flow_arc_kg_postgres_etl_spark.sources import store
+    from prefect_flow_arc_kg_postgres_etl_spark.sources.catalog import load_table
+
+    sd = str(tmp_path)
+    orders = load_table(spark, SF_SMOKE, "orders")
+    li = load_table(spark, SF_SMOKE, "lineitem")
+    first = store.commit_tables(sd, {"orders": orders.limit(10)})
+
+    def fail(tables):
+        assert set(tables) == {"orders", "lineitem"}
+        raise RuntimeError("derived build failed")
+
+    with pytest.raises(RuntimeError, match="derived build failed"):
+        store.commit_tables(
+            sd,
+            {"lineitem": li.limit(5)},
+            carry_from=first,
+            derived={"orders_index": fail},
+        )
+    assert store.latest_manifest(sd) == first
+
+    def entries(name):
+        return sorted(
+            os.path.basename(d)
+            for d in glob.glob(f"{sd}/{name}.parquet/*")
+            if os.path.isdir(d)
+        )
+
+    assert entries("orders") == ["v_1"]
+    assert [e[:7] for e in entries("lineitem")] == ["_stage_"]
+    assert not os.path.exists(f"{sd}/orders_index.parquet")
+    assert not os.path.exists(f"{sd}/_commit.lock")
+    # derived tables read the carried versions before the lock, so the
+    # newest-at-commit-time sentinel cannot name them
+    with pytest.raises(ValueError, match="explicit carry_from"):
+        store.commit_tables(
+            sd, {}, carry_from=store.CARRY_LATEST, derived={"x": fail}
+        )
+
+
 def test_run_exclusive_skip_if_running(tmp_path):
     """The engine-side at-most-one-running guard (main_flow.py:31-42):
     a held lock skips, a crashed (stale) lock is reclaimed atomically,

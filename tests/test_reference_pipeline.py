@@ -360,6 +360,140 @@ def test_reference_pipeline_flow_store_backed(spark, tmp_path):
     triples.unpersist()
 
 
+def _view_triples(spark, rows_by_table):
+    """View-graph triples that pivot back into ``rows_by_table``."""
+    data = []
+    for tbl, rows in rows_by_table.items():
+        for r in rows:
+            data.append((r["subject"], RP._NS + "tableName", tbl))
+            data += [
+                (r["subject"], RP._NS + c, v)
+                for c, v in r.items()
+                if c != "subject" and v is not None
+            ]
+    return spark.createDataFrame(
+        data, "subject string, predicate string, object string"
+    )
+
+
+def _night_rows():
+    """Two nights of view rows: night 1 fills five tables, night 2
+    re-emits two of them (a renamed entity, a new entity, a new
+    keyword)."""
+    org = "https://x/org/"
+    night1 = {
+        "graph.organization": [
+            dict(subject="o1", id="o1", org_identifier="OR-1",
+                 skos_pref_label="Archief", org_classification="ContentPartner"),
+            dict(subject="o2", id="o2", org_identifier="OR-2",
+                 skos_pref_label="Stad", org_classification="ContentPartner"),
+        ],
+        "graph.intellectual_entity": [
+            dict(subject=E + str(i), id=E + str(i), schema_identifier=f"e{i}",
+                 schema_name=f"naam {i}", schema_maintainer=org + f"OR-{i % 2 + 1}")
+            for i in range(1, 4)
+        ],
+        "graph.dcterms_format": [
+            dict(subject=f"f{i}", intellectual_entity_id=E + str(i),
+                 dcterms_format="video")
+            for i in range(1, 5)
+        ],
+        "graph.schema_keywords": [
+            dict(subject="k1", intellectual_entity_id=E + "1", schema_keywords="krant"),
+            dict(subject="k2", intellectual_entity_id=E + "2", schema_keywords="film"),
+        ],
+        "graph.schema_license": [
+            dict(subject="l1", intellectual_entity_id=E + "1",
+                 schema_license="Publiek-Domein"),
+        ],
+    }
+    night2 = {
+        "graph.intellectual_entity": [
+            dict(subject=E + "2", id=E + "2", schema_identifier="e2",
+                 schema_name="nieuwe naam", schema_maintainer=org + "OR-1"),
+            dict(subject=E + "4", id=E + "4", schema_identifier="e4",
+                 schema_name="naam 4", schema_maintainer=org + "OR-2"),
+        ],
+        "graph.schema_keywords": [
+            dict(subject="k3", intellectual_entity_id=E + "1", schema_keywords="oorlog"),
+        ],
+    }
+    return night1, night2
+
+
+def _canon(df):
+    pdf = df.toPandas().sort_values("iri").reset_index(drop=True)
+    return {c: pdf[c].astype(str).tolist() for c in pdf.columns}
+
+
+def test_store_commit_touches_only_emitted_tables(spark, tmp_path):
+    """The durable load without the reference checkout: night 2 emits
+    two of the five tables night 1 filled. The committed documents
+    equal the storeless build over the upserted state; every table the
+    night did not emit keeps its pinned version and gains no version
+    directory; each emitted table gains exactly one version."""
+    import glob
+
+    from prefect_flow_arc_kg_postgres_etl_spark.sources import store as S
+
+    store = str(tmp_path / "store")
+    rows1, rows2 = _night_rows()
+    night1, night2 = _view_triples(spark, rows1), _view_triples(spark, rows2)
+
+    def versions(name):
+        return sorted(
+            os.path.basename(d)
+            for d in glob.glob(os.path.join(store, f"{name}.parquet", "v_*"))
+        )
+
+    docs1 = RP.reference_pipeline_flow(spark, "unused", store, triples=night1)
+    t1 = RP.pivot_view_tables(night1)
+    assert _canon(docs1) == _canon(
+        RP.build_reference_index_documents(t1, RP.SYNTHETIC_STORE_ADAPTER)
+    )
+    m1 = S.read_manifest(S.latest_manifest(store))
+    assert set(m1) == {*RP.GRAPH_TABLE_COLUMNS, RP.INDEX_DOCUMENTS}
+
+    docs2 = RP.reference_pipeline_flow(spark, "unused", store, triples=night2)
+    t2 = RP.pivot_view_tables(night2)
+    upserted = {
+        name: M.upsert(t1[name], t2[name], keys=["subject"]) for name in t1
+    }
+    want = _canon(
+        RP.build_reference_index_documents(upserted, RP.SYNTHETIC_STORE_ADAPTER)
+    )
+    assert _canon(docs2) == want
+    assert len(want["iri"]) == 4 and "nieuwe naam" in want["schema_name"]
+
+    m2 = S.read_manifest(S.latest_manifest(store))
+    assert set(m2) == set(m1)
+    touched = {*rows2, RP.INDEX_DOCUMENTS}
+    for name in m1:
+        if name in touched:
+            assert m2[name] == m1[name] + 1, name
+            assert versions(name) == [f"v_{m1[name]}", f"v_{m2[name]}"], name
+        else:
+            assert m2[name] == m1[name], name
+            assert versions(name) == [f"v_{m1[name]}"], name
+
+
+def test_docs_frame_survives_a_reland(spark, tmp_path, monkeypatch):
+    """A documents frame returned before the store changed still reads
+    after a re-land: the superseded spill is left to the exit sweep."""
+    rows1, _ = _night_rows()
+    triples = _view_triples(spark, rows1)
+    monkeypatch.setattr(RP, "all_view_triples", lambda spark, sf: triples)
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "quads").write_bytes(b"night 1")
+    before = RP.flow_reference_pipeline(spark, str(sf))
+    n = before.count()
+    (sf / "quads").write_bytes(b"night 2, more bytes")
+    after = RP.flow_reference_pipeline(spark, str(sf))
+    assert after is not before  # the changed store re-landed
+    assert before.count() == n == after.count() > 0
+
+
 def test_index_documents_ndjson_payload(spark):
     """The ES feed variant: one JSON document per (id, index) routing
     pair, payload parseable, null fields omitted (ES treats absent and

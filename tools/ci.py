@@ -1,10 +1,12 @@
 """Round gate: refuse to call a round done while anything is red.
 
-Runs, in order, the three checks the driver snapshot grades on:
+Runs, in order, four checks:
 
   1. ``pytest tests/ -q``               (unit + oracle + plan-audit suite)
-  2. ``tools/check_oracle.py <sf_dir>`` (driver correctness-gate mirror)
-  3. ``python bench.py``                (must exit 0 and print its JSON line)
+  2. ``pytest perfbench/tests -q``      (the benchmark's entry points still
+                                         run against the package)
+  3. ``tools/check_oracle.py <sf_dir>`` (oracle correctness gate)
+  4. ``python bench.py``                (must exit 0 and print its JSON line)
 
 Exit code is non-zero if ANY stage fails, so ``python tools/ci.py`` is
 the one command to run before ending a round (VERDICT r3: a red suite
@@ -113,6 +115,10 @@ def main() -> int:
         ok = run("pytest", [py, "-m", "pytest", "tests/", "-q"])
     else:
         ok = run_pytest_sharded(py)
+    ok = run(
+        "perfbench-tests",
+        [py, "-m", "pytest", "perfbench/tests", "-q", "-p", "no:cacheprovider"],
+    ) and ok
     ok = run("oracle-gate", [py, "tools/check_oracle.py", sf_dir]) and ok
     if "--skip-bench" not in sys.argv:
         t0 = time.time()

@@ -33,6 +33,7 @@ from prefect_flow_arc_kg_postgres_etl_spark.operators.index_documents import (
 from prefect_flow_arc_kg_postgres_etl_spark.operators.merge import fk_merge_order
 from prefect_flow_arc_kg_postgres_etl_spark.sinks.es_bulk import write_bulk_ndjson
 from prefect_flow_arc_kg_postgres_etl_spark.sinks.jdbc import stage_then_merge
+from prefect_flow_arc_kg_postgres_etl_spark.sinks.observed import observed_write
 from prefect_flow_arc_kg_postgres_etl_spark.sources import store
 from prefect_flow_arc_kg_postgres_etl_spark.sources.catalog import load_table
 
@@ -313,7 +314,6 @@ def sync_flow(
     or_ids: list[int] | None = None,
     tables: list[str] | None = None,
     build_index: bool = True,
-    collect_stats: bool = True,
     validate: bool = False,
     record_limit: int | None = None,
 ) -> RunStats:
@@ -326,15 +326,19 @@ def sync_flow(
     row counts after merge plus staged/merged/failed accounting
     (``RunStats``).
 
-    ``collect_stats=False`` skips the driver-side ``.count()`` passes
-    that only feed RunStats (row counts report as -1; merged/failed
-    status is still exact). Each count is an extra scan of the staged
-    or merged table — negligible at harness scale, a redundant full
-    pass per table at 100 TB, so production runs at scale should turn
-    it off.
+    Every count is observed in the write that lands it (one
+    ``Observation`` per written frame), so reporting costs no Spark
+    job: the full-sync write, the staged batch and the merged table of
+    an incremental merge, and the index feed. ``index_documents`` is
+    the number of lines this run wrote to the feed, two per document
+    (every document is a ``to_json`` of a struct, never null). It is
+    not the feed directory's total: the feed is overwritten per
+    organisation, and an organisation partition an earlier run left in
+    place is not counted.
 
     ``since="auto"`` derives each table's watermark from the STORE
-    itself (max of its modified column — a min/max-stats-only scan):
+    itself (max of its modified column — a full scan of that one
+    column of the landed table):
     the store is its own high-water mark, so the scheduler needs no
     external watermark bookkeeping and a crashed run resumes correctly.
     Auto watermarks filter INCLUSIVELY (>=): rows that arrive later
@@ -354,9 +358,6 @@ def sync_flow(
     deps = {t: TABLE_DEPS[t] & set(wanted) for t in wanted}
     stats = RunStats()
 
-    def count(df) -> int:
-        return df.count() if collect_stats else -1
-
     def since_for(name: str):
         if since != "auto":
             return since
@@ -372,7 +373,7 @@ def sync_flow(
         )
 
     def sync_table(name: str) -> tuple[int, int]:
-        """Returns (staged_rows, merged_rows); -1 when stats are off."""
+        """Returns (staged_rows, merged_rows), as the writes observed."""
         src = load_table(spark, sf_dir, name)
         if or_ids is not None and name in TABLE_ORG:
             src = src.filter(F.col(TABLE_ORG[name]).isin(or_ids))
@@ -380,8 +381,7 @@ def sync_flow(
         if full_sync:
             if record_limit is not None:
                 src = src.limit(record_limit)
-            store.write_table(src, path)
-            n = count(store.read_table(spark, path))
+            n = observed_write(src, lambda d: store.write_table(d, path))
             return n, n
         if name in TABLE_MULTIVALUE:
             # Incremental multi-value merge: a modified group re-emits
@@ -407,9 +407,10 @@ def sync_flow(
             )
 
             staging = f"{store_dir}/_staging/{name}"
-            batch.write.mode("overwrite").parquet(staging)
-            staged = spark.read.parquet(staging)
-            n_staged = count(staged)
+            n_staged = observed_write(
+                batch, lambda d: d.write.mode("overwrite").parquet(staging)
+            )
+            staged = spark.read.schema(batch.schema).parquet(staging)
             if not store.table_exists(path):
                 # First incremental load of a never-full-synced table:
                 # the staged batch IS the initial table (same fallback
@@ -434,8 +435,9 @@ def sync_flow(
                 )
             # One write: the merge lands as the next table version and
             # the pointer swaps (sources/store.py) — no tmp-rewrite.
-            store.write_table(merged, path)
-            return n_staged, count(store.read_table(spark, path))
+            return n_staged, observed_write(
+                merged, lambda d: store.write_table(d, path)
+            )
         s = since_for(name)
         if s is not None and name in TABLE_MODIFIED:
             cmp = F.col(TABLE_MODIFIED[name])
@@ -444,10 +446,10 @@ def sync_flow(
             )
         if record_limit is not None:
             src = src.limit(record_limit)
-        merged = stage_then_merge(
+        landed = stage_then_merge(
             spark, src, path, f"{store_dir}/_staging/{name}", TABLE_PK[name]
         )
-        return count(src), count(merged)
+        return landed.staged, landed.merged
 
     def run_table(name: str) -> tuple[str, int, int, str | None]:
         try:
@@ -472,18 +474,20 @@ def sync_flow(
                 }
 
     if build_index and {"customer", "nation", "region", "orders"} <= set(wanted):
-        docs = build_index_documents(spark, store_dir, as_json=True)
-        write_bulk_ndjson(docs, f"{store_dir}/_index/es_bulk")
-        stats["index_documents"] = count(
-            spark.read.text(f"{store_dir}/_index/es_bulk")
+        feed = f"{store_dir}/_index/es_bulk"
+        docs = observed_write(
+            build_index_documents(spark, store_dir, as_json=True),
+            lambda d: write_bulk_ndjson(d, feed),
         )
+        # an action line and a source line per document
+        stats["index_documents"] = 2 * docs
     if validate:
         # Post-merge DQ gate (validate_store): PK + FK checks over the
         # CONVERGED store, recorded per table; dq_violations is the run
-        # total an operator alerts on. Opt-in like collect_stats — each
-        # check is an extra (minimal) pass over the store. Only tables
-        # that actually merged THIS run validate — and an all-failed
-        # run validates nothing (the empty list must not fall through
+        # total an operator alerts on. Opt-in — each check is an extra
+        # (minimal) pass over the store. Only tables that actually
+        # merged THIS run validate — and an all-failed run validates
+        # nothing (the empty list must not fall through
         # to validate_store's validate-everything default).
         merged_tables = [
             n for n in wanted if stats.tables[n]["status"] == "merged"
@@ -535,8 +539,8 @@ def curation_flow(
     window, shard window) keep their member operators' shapes. Stage
     semantics are the oracle-checked operators'; per-stage survivor
     accounting rides RunStats (count passes gated by
-    ``collect_stats`` exactly like sync_flow — at 100 TB turn it off
-    and read sink metrics instead).
+    ``collect_stats`` — at 100 TB turn it off and read sink metrics
+    instead).
 
     Returns (curated docs with pack/shard assignment, stats)."""
     from prefect_flow_arc_kg_postgres_etl_spark.operators.text import (

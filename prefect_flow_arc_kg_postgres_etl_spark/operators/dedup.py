@@ -693,7 +693,7 @@ def build_dedup_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    partitions: int = 64,
+    partitions: int | None = None,
 ) -> None:
     """Persist the dedup ingest index: the history corpus's band keys
     and gram sets, laid out for PARTITION-PRUNED probes. Built ONCE at
@@ -709,12 +709,21 @@ def build_dedup_index(
                   — verification fetches gram sets for CANDIDATE history
                   docs only, pruned to their id partitions.
 
-    P (``partitions``) scales with corpus size at (re)build time —
-    partition bytes stay bounded, so probe cost tracks the BATCH's
-    partition coverage, not the corpus: the probe is sub-linear in
-    history for any batch that doesn't touch every partition, and the
-    per-partition read is index rows (16 longs/doc + gram hashes), not
-    corpus text."""
+    P scales with corpus size at (re)build time: one ``count()`` of the
+    history, then the next power of two >= docs / 65 536, clamped to
+    [1, 4096]. An index document of 80-140 words takes about 1 KB on
+    disk (about 140 B of band keys and 870 B of gram hashes), so a
+    partition holds about 64 MB. Partition bytes stay
+    bounded, so probe cost tracks the BATCH's partition coverage, not
+    the corpus: the probe is sub-linear in history for any batch that
+    doesn't touch every partition, and the per-partition read is index
+    rows (16 longs/doc + gram hashes), not corpus text. A small corpus
+    gets one partition, whose probe lists one directory instead of
+    fanning a listing job out over empty ones. ``partitions`` overrides
+    the derived P (tests pin it to exercise pruning); either way P is
+    recorded in ``_meta``, which the probe adopts."""
+    if partitions is None:
+        partitions = _index_partitions(history.count())
     r = k // bands
     sig = minhash_signatures(history, k, id_col, text_col, n)
     # repartition ON the partition column before partitionBy: each
@@ -748,47 +757,84 @@ def build_dedup_index(
     # build parameters alongside the index so probes ADOPT them instead
     # of trusting their caller's defaults. Written through Spark (one
     # tiny file) so the index works on any filesystem the index itself
-    # lives on, not just the driver's local disk.
-    history.sparkSession.createDataFrame(
-        [(int(k), int(bands), int(n), int(partitions))],
-        "k int, bands int, n int, partitions int",
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/_meta")
+    # lives on, not just the driver's local disk; the one-row frame is
+    # JVM-only (a createDataFrame of Python rows starts a Python worker).
+    history.sparkSession.range(1, numPartitions=1).select(
+        *[
+            F.lit(int(v)).alias(c)
+            for c, v in (
+                ("k", k), ("bands", bands), ("n", n), ("partitions", partitions)
+            )
+        ]
+    ).write.mode("overwrite").json(f"{path}/_meta")
 
 
-# Per-process cache of persisted index _meta: (appId, path, mtime_ns of
-# the _meta dir) -> collected rows (or None for a pre-_meta index). The
-# _meta is four ints of BUILD-TIME configuration — a catalog lookup, not
-# query data — but reading it through spark.read.json costs a schema-
-# inference job + a collect per probe call (guide §1: don't pay per-call
-# for what cannot change under the key). A rebuilt index rewrites _meta,
-# changing the directory mtime, so a stale hit is impossible. When the
-# path is NOT visible to driver-side os.stat (hdfs://, s3a://, file:
-# URIs — r12 ADVICE), the modification time comes from the Hadoop
-# FileSystem API instead; if THAT fails too, the cache is bypassed
-# entirely (read fresh every call) rather than pinned to a key that
-# would serve a stale _meta for a rebuilt index.
+# Index sizing: documents per partition and the cap on P. Measured on
+# 4 cores with 80-140-word documents: a document takes about 1 KB of
+# index on disk (140 B band keys + 870 B gram hashes), so a partition
+# is about 64 MB. With 50k and 200k history documents, a warm probe of
+# a 10- or 200-document batch costs the same CPU at P=1 and P=4 and
+# 0.5-1.5 s more at P=64 (the listing and file opens of 64 partitions
+# outweigh what pruning saves); at 200k documents P=1 builds 15 %
+# slower than P=4 (one writer task). Not measured above 200k documents.
+_DOCS_PER_PARTITION = 65_536
+_MAX_PARTITIONS = 4096
+
+
+def _index_partitions(docs: int) -> int:
+    """The next power of two >= docs / _DOCS_PER_PARTITION, clamped to
+    [1, _MAX_PARTITIONS]."""
+    p = 1
+    while p * _DOCS_PER_PARTITION < docs and p < _MAX_PARTITIONS:
+        p *= 2
+    return p
+
+
+# Per-process cache of persisted index _meta: (appId, path, listing
+# stamp of the _meta dir) -> collected rows (or None for a pre-_meta
+# index). The _meta is four ints of BUILD-TIME configuration — a
+# catalog lookup, not query data — but reading it through
+# spark.read.json costs a schema-inference job + a collect per probe
+# call (guide §1: don't pay per-call for what cannot change under the
+# key). The key's stamp hashes the
+# (name, length, mtime) of every file in the _meta directory: a rebuilt
+# index rewrites _meta with new part-file names (each write has its own
+# job id), so even a rewrite inside one coarse mtime tick with equal
+# lengths changes the stamp and a stale hit is impossible. The listing
+# comes from driver-side os.scandir, or from the Hadoop FileSystem API
+# when the path is not visible to it (hdfs://, s3a://, file: URIs —
+# r12 ADVICE); if THAT fails too, the cache is bypassed entirely (read
+# fresh every call) rather than pinned to a key that would serve a
+# stale _meta for a rebuilt index.
 _INDEX_META_CACHE: dict[tuple[str, str, int], "list | None"] = {}
 
 
-def _meta_mtime_ns(spark, index_path: str) -> "int | None":
+def _listing_stamp(files) -> int:
+    """Order-independent stamp of a directory listing, given as
+    (name, length, mtime) tuples."""
+    return hash(tuple(sorted(files)))
+
+
+def _meta_stamp(spark, index_path: str) -> "int | None":
     import os as _os
 
+    meta = f"{index_path}/_meta"
     try:
-        return _os.stat(f"{index_path}/_meta").st_mtime_ns
+        with _os.scandir(meta) as it:
+            return _listing_stamp(
+                (e.name, st.st_size, st.st_mtime_ns)
+                for e in it
+                for st in (e.stat(),)
+            )
     except OSError:
         pass
     try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(f"{index_path}/_meta")
+        hpath = spark._jvm.org.apache.hadoop.fs.Path(meta)
         fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        # Directory mtime alone is not reliable on object stores; fold
-        # in the content files' times and lengths.
-        stamp = 0
-        for st in fs.listStatus(hpath):
-            stamp = max(
-                stamp, st.getModificationTime() * 1_000_000 + st.getLen()
-            )
-        return stamp
+        return _listing_stamp(
+            (st.getPath().getName(), st.getLen(), st.getModificationTime())
+            for st in fs.listStatus(hpath)
+        )
     except Exception:
         return None
 
@@ -796,9 +842,9 @@ def _meta_mtime_ns(spark, index_path: str) -> "int | None":
 def _read_index_meta(spark, index_path: str):
     from pyspark.errors import AnalysisException
 
-    mtime = _meta_mtime_ns(spark, index_path)
-    key = (spark.sparkContext.applicationId, index_path, mtime)
-    if mtime is not None and key in _INDEX_META_CACHE:
+    stamp = _meta_stamp(spark, index_path)
+    key = (spark.sparkContext.applicationId, index_path, stamp)
+    if stamp is not None and key in _INDEX_META_CACHE:
         return _INDEX_META_CACHE[key]
     try:
         rows = spark.read.json(f"{index_path}/_meta").collect()
@@ -808,7 +854,7 @@ def _read_index_meta(spark, index_path: str):
         if "PATH_NOT_FOUND" not in (exc.getErrorClass() or ""):
             raise
         rows = None
-    if mtime is not None:
+    if stamp is not None:
         if len(_INDEX_META_CACHE) >= 64:
             _INDEX_META_CACHE.pop(next(iter(_INDEX_META_CACHE)))
         _INDEX_META_CACHE[key] = rows

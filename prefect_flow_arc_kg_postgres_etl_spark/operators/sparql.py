@@ -1066,7 +1066,9 @@ def _join(
             try:
                 small = b.limit(cap + 1).count() <= cap
             except Exception:
-                small = True  # probe failure: keep the r12 behavior
+                # A side of unknown size is never broadcast: the plain
+                # crossJoin below is slow but memory-safe.
+                small = False
             if small:
                 return a.crossJoin(F.broadcast(b))
         return a.crossJoin(b)

@@ -21,6 +21,8 @@ Spark the same contract splits into:
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -190,42 +192,66 @@ def resumable_stage(
     return {"written": n_todo, "skipped": n_done}
 
 
+class MergeResult(NamedTuple):
+    """What ``stage_then_merge`` landed: the table (read back from the
+    landed version) and the row counts the two writes observed — the
+    staged batch and the merged table (the counts the reference's
+    ``MERGE INTO`` statements return)."""
+
+    table: DataFrame
+    staged: int
+    merged: int
+
+
 def stage_then_merge(
     spark: SparkSession,
     source: DataFrame,
     target_path: str,
     staging_path: str,
     keys: list[str],
-) -> DataFrame:
+) -> MergeResult:
     """Engine-side merge: stage the batch as parquet (the temp-table
     analogue — restartable, inspectable), then converge it into the
     target with the distributed source-wins upsert and land the result.
 
-    Returns the merged DataFrame (read back from the landed target).
+    Returns a ``MergeResult``: the merged table read back from the
+    landed target, plus the staged and merged row counts. Both counts
+    are observed in the two writes, and both read-backs (the staging
+    dir, the landed table) use the schema just written, so besides the
+    two writes the only Spark job is the target's schema inference.
+    "First load" means ``store.table_exists`` says there is no target;
+    any other failure to read or merge the target raises and leaves the
+    live version untouched.
+
     One shuffle on the PKs; at 100 TB the target should be bucketed on
     ``keys`` so repeated merges co-locate. The target is a versioned
     table (sources/store.py): the merge reads version N and lands
     version N+1 with ONE data write + an atomic pointer swap — no
     write-tmp-read-rewrite double I/O."""
     from prefect_flow_arc_kg_postgres_etl_spark.operators.merge import upsert
+    from prefect_flow_arc_kg_postgres_etl_spark.sinks.observed import observed_write
     from prefect_flow_arc_kg_postgres_etl_spark.sources import store
     from prefect_flow_arc_kg_postgres_etl_spark.sources.catalog import (
         conform_to_schema,
     )
 
-    source.write.mode("overwrite").parquet(staging_path)
-    staged = spark.read.parquet(staging_path)
-    try:
+    n_staged = observed_write(
+        source, lambda d: d.write.mode("overwrite").parquet(staging_path)
+    )
+    staged = spark.read.schema(source.schema).parquet(staging_path)
+    if store.table_exists(target_path):
         target = store.read_table(spark, target_path)
         # Column-level intersection (get_table_columns.sql analogue):
         # the staged batch is projected onto the target's columns, so a
         # drifted source schema (extra / missing / retyped columns)
         # still merges — extra columns drop, missing ones land NULL.
         merged = upsert(target, conform_to_schema(staged, target.schema), keys)
-    except Exception:  # first load: nothing to merge into
+    else:  # first load: nothing to merge into
         merged = staged
-    store.write_table(merged, target_path)
-    return store.read_table(spark, target_path)
+    n_merged = observed_write(merged, lambda d: store.write_table(d, target_path))
+    return MergeResult(
+        store.read_table(spark, target_path, merged.schema), n_staged, n_merged
+    )
 
 
 def validate_statement_syntax(

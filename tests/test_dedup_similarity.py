@@ -491,6 +491,31 @@ class TestIndexMeta:
         )
         assert out.count() > 0  # caller's (correct) parameters used
 
+    def test_small_history_builds_one_partition(self, spark, tmp_path):
+        """Without an explicit ``partitions`` the index is sized to its
+        corpus: a small history gets P=1, ``_meta`` records it, and the
+        probe still finds exactly the in-plan oracle's pairs."""
+        import glob
+        import json
+
+        import prefect_flow_arc_kg_postgres_etl_spark.operators.dedup as D
+
+        hist, new = self._corpus(spark)
+        D.build_dedup_index(hist, str(tmp_path))
+        for sub, col in (("band_keys", "bh_p"), ("grams", "id_p")):
+            dirs = glob.glob(f"{tmp_path}/{sub}/{col}=*")
+            assert [d.rsplit("/", 1)[1] for d in dirs] == [f"{col}=0"], sub
+        (meta,) = glob.glob(f"{tmp_path}/_meta/part-*.json")
+        with open(meta) as f:
+            assert json.loads(f.read()) == {
+                "k": 64, "bands": 16, "n": 3, "partitions": 1
+            }
+        indexed = D.incremental_dup_pairs_indexed(new, str(tmp_path), 0.8)
+        inplan = D.incremental_dup_pairs(hist, new, 0.8)
+        a = {(r.doc_a, r.doc_b, round(r.jaccard, 6)) for r in indexed.collect()}
+        b = {(r.doc_a, r.doc_b, round(r.jaccard, 6)) for r in inplan.collect()}
+        assert a == b and a
+
     def test_corrupt_meta_fails_loudly(self, spark, tmp_path):
         import shutil
 
@@ -853,3 +878,33 @@ def test_pq_topk_rejects_indivisible_dim(spark):
     queries = emb.filter(F.col("vec_id") < 3)
     with pytest.raises(Exception, match="divisible by m"):
         pq_topk(queries, emb, k=3, m=8).collect()
+
+
+def test_index_partitions_sized_to_corpus():
+    """P is the next power of two >= docs / 65 536, clamped to [1, 4096]."""
+    from prefect_flow_arc_kg_postgres_etl_spark.operators.dedup import (
+        _index_partitions,
+    )
+
+    assert [_index_partitions(d) for d in (0, 1, 65_536)] == [1, 1, 1]
+    assert _index_partitions(65_537) == 2
+    assert _index_partitions(3 * 65_536) == 4
+    assert _index_partitions(4096 * 65_536) == 4096
+    assert _index_partitions(10**12) == 4096
+
+
+def test_meta_listing_stamp_separates_colliding_listings():
+    """Two _meta listings whose max(mtime * 1e6 + len) collides (a
+    rewrite inside one coarse mtime tick) must not share a cache key;
+    the same listing in another order must."""
+    from prefect_flow_arc_kg_postgres_etl_spark.operators.dedup import (
+        _listing_stamp,
+    )
+
+    old = [("part-0000-a.json", 48, 1_700_000_000_000), ("_SUCCESS", 0, 1_700_000_000_000)]
+    new = [("part-0000-b.json", 48, 1_700_000_000_000), ("_SUCCESS", 0, 1_700_000_000_000)]
+    assert max(m * 1_000_000 + n for _, n, m in old) == max(
+        m * 1_000_000 + n for _, n, m in new
+    )
+    assert _listing_stamp(old) != _listing_stamp(new)
+    assert _listing_stamp(old) == _listing_stamp(list(reversed(old)))

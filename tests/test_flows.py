@@ -176,26 +176,42 @@ def test_incremental_store_has_single_version_after_rerun(spark, tmp_path):
         assert not os.path.exists(tdir + ".new")
 
 
-def test_sync_flow_collect_stats_off(spark, tmp_path):
-    """collect_stats=False skips the accounting-only .count() passes:
-    the store still lands identically, statuses are exact, and all row
-    counts report -1 (100 TB mode — no redundant scans)."""
-    store_on = str(tmp_path / "stats_on")
-    store_off = str(tmp_path / "stats_off")
-    tables = ["region", "nation", "customer"]
-    stats_on = sync_flow(
-        spark, SF_SMOKE, store_on, full_sync=True, tables=tables,
-        build_index=False,
-    )
-    stats_off = sync_flow(
-        spark, SF_SMOKE, store_off, full_sync=True, tables=tables,
-        build_index=False, collect_stats=False,
-    )
-    assert stats_off.merged_tables == stats_on.merged_tables == len(tables)
-    assert all(stats_off[t] == -1 for t in tables)
-    assert all(stats_on[t] > 0 for t in tables)
-    for t in tables:
-        assert _table_rows(spark, store_off, t) == _table_rows(spark, store_on, t)
+def test_run_stats_counts_equal_landed_rows(spark, tmp_path):
+    """RunStats counts are observed in the writes, not re-counted: after
+    a full and then a since="auto" sync, every table's count equals the
+    rows of the landed table (lineitem's multi-value path included) and
+    index_documents equals the bulk feed's line count."""
+    store = str(tmp_path / "observed")
+    for kw in ({"full_sync": True}, {"full_sync": False, "since": "auto"}):
+        stats = sync_flow(spark, SF_SMOKE, store, **kw)
+        assert stats.failed_tables == 0, stats.tables
+        for name in TABLE_PK:
+            landed = tstore.read_table(spark, f"{store}/{name}.parquet").count()
+            assert stats[name] == stats.tables[name]["merged"] == landed, (
+                kw, name,
+            )
+        lines = spark.read.text(f"{store}/_index/es_bulk").count()
+        assert stats["index_documents"] == lines > 0, kw
+    # the incremental run's staged counts are its batches, not the tables
+    assert stats.tables["region"]["staged"] == stats["region"]
+    assert 0 < stats.tables["lineitem"]["staged"] < stats["lineitem"]
+
+
+def test_incremental_sync_job_budget(spark, tmp_path):
+    """An incremental sync runs only the jobs that move data: no count
+    pass per table and no schema inference of frames whose schema the
+    flow already holds. The DAGScheduler's job counter covers the
+    flow's pool threads too (they carry no job group). In the 8-core
+    test session this flow runs 54 jobs; with a .count() per staged and
+    per merged table and inferred read-backs it ran 104."""
+    store = str(tmp_path / "budget")
+    sync_flow(spark, SF_SMOKE, store, full_sync=True)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    stats = sync_flow(spark, SF_SMOKE, store, full_sync=False, since="auto")
+    jobs = dag.numTotalJobs() - before
+    assert stats.failed_tables == 0, stats.tables
+    assert jobs <= 60, jobs
 
 
 def test_curation_flow_composes_gates_end_to_end(spark):

@@ -201,15 +201,54 @@ def test_stage_then_merge_converges(spark, tmp_path):
     staging = str(tmp_path / "staging")
     v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
     out1 = stage_then_merge(spark, v1, target, staging, ["id"])
-    assert {(r.id, r.v) for r in out1.collect()} == {(1, "a"), (2, "b")}
+    assert {(r.id, r.v) for r in out1.table.collect()} == {(1, "a"), (2, "b")}
+    assert (out1.staged, out1.merged) == (2, 2)
 
     v2 = spark.createDataFrame([(2, "B"), (3, "c")], "id long, v string")
     out2 = stage_then_merge(spark, v2, target, staging, ["id"])
-    assert {(r.id, r.v) for r in out2.collect()} == {(1, "a"), (2, "B"), (3, "c")}
+    assert {(r.id, r.v) for r in out2.table.collect()} == {
+        (1, "a"), (2, "B"), (3, "c")
+    }
+    assert (out2.staged, out2.merged) == (2, 3)
 
     # idempotent: re-merging the same batch changes nothing
     out3 = stage_then_merge(spark, v2, target, staging, ["id"])
-    assert {(r.id, r.v) for r in out3.collect()} == {(1, "a"), (2, "B"), (3, "c")}
+    assert {(r.id, r.v) for r in out3.table.collect()} == {
+        (1, "a"), (2, "B"), (3, "c")
+    }
+    assert (out3.staged, out3.merged) == (2, 3)
+
+
+def test_stage_then_merge_unreadable_target_raises(spark, tmp_path):
+    """Only a MISSING target is a first load. A live version that cannot
+    be read (here: a corrupt parquet file) makes the merge raise and
+    leaves the table as it was, instead of replacing it with the batch
+    and pruning the old version."""
+    import glob
+
+    from prefect_flow_arc_kg_postgres_etl_spark.sources import store
+
+    target = str(tmp_path / "t.parquet")
+    staging = str(tmp_path / "staging")
+    v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    stage_then_merge(spark, v1, target, staging, ["id"])
+    live = store.current_version(target)
+    files = glob.glob(f"{store.version_dir(target, live)}/*.parquet")
+    saved = {f: open(f, "rb").read() for f in files}
+    for f in files:
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file")
+
+    v2 = spark.createDataFrame([(3, "c")], "id long, v string")
+    with pytest.raises(Exception):
+        stage_then_merge(spark, v2, target, staging, ["id"])
+
+    assert store.current_version(target) == live
+    for f, data in saved.items():
+        with open(f, "wb") as fh:
+            fh.write(data)
+    rows = {(r.id, r.v) for r in store.read_table(spark, target).collect()}
+    assert rows == {(1, "a"), (2, "b")}
 
 
 def test_resumable_stage_skips_landed_batches(spark, tmp_path):
@@ -266,14 +305,14 @@ def test_stage_then_merge_drifted_schema_converges(spark, tmp_path):
     drifted = spark.createDataFrame(
         [(2, "B", "zzz"), (3, "c", "zzz")], "id int, v string, junk string"
     )
-    out = stage_then_merge(spark, drifted, target, staging, ["id"])
+    out = stage_then_merge(spark, drifted, target, staging, ["id"]).table
     assert [f.name for f in out.schema.fields] == ["id", "v", "score"]
     assert dict(out.dtypes)["id"] == "bigint"
     rows = {(r.id, r.v, r.score) for r in out.collect()}
     assert rows == {(1, "a", 10.0), (2, "B", None), (3, "c", None)}
 
     # idempotent under the drifted schema too
-    again = stage_then_merge(spark, drifted, target, staging, ["id"])
+    again = stage_then_merge(spark, drifted, target, staging, ["id"]).table
     assert {(r.id, r.v, r.score) for r in again.collect()} == rows
 
 

@@ -1617,3 +1617,29 @@ def test_disjoint_groups_cross_product_is_broadcast_not_cartesian(spark):
                 expect.add((e, "urn:out:r3", "urn:k"))
     got = {(r.subject, r.predicate, r.object) for r in df.collect()}
     assert got == expect
+
+
+def test_cross_join_probe_failure_does_not_broadcast(spark):
+    """When the size probe of a variable-disjoint cross join raises, the
+    right side's size is unknown, so it must not be broadcast: the
+    join falls back to the plain crossJoin (no BroadcastNestedLoopJoin
+    once size-based broadcasting is off)."""
+    from pyspark.sql import functions as F
+
+    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
+
+    a = spark.range(3).toDF("x")
+    # every row fails the assertion, so the probe's count raises
+    b = spark.range(3).toDF("y").filter(F.assert_true(F.col("y") < 0).isNull())
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = SQ._join(a, b)
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+    finally:
+        spark.conf.set(key, prev)
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" in plan

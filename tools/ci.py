@@ -1,12 +1,16 @@
 """Round gate: refuse to call a round done while anything is red.
 
-Runs, in order, four checks:
+Runs, in order, five checks:
 
   1. ``pytest tests/ -q``               (unit + oracle + plan-audit suite)
   2. ``pytest perfbench/tests -q``      (the benchmark's entry points still
                                          run against the package)
-  3. ``tools/check_oracle.py <sf_dir>`` (oracle correctness gate)
-  4. ``python bench.py``                (must exit 0 and print its JSON line)
+  3. ``perfbench/run.py --workload sync_dedup`` (one seeded run of the
+                                         table-sync + dedup workload; its
+                                         store-hash, RunStats-status and
+                                         planted-pair checks must pass)
+  4. ``tools/check_oracle.py <sf_dir>`` (oracle correctness gate)
+  5. ``python bench.py``                (must exit 0 and print its JSON line)
 
 Exit code is non-zero if ANY stage fails, so ``python tools/ci.py`` is
 the one command to run before ending a round (VERDICT r3: a red suite
@@ -118,6 +122,11 @@ def main() -> int:
     ok = run(
         "perfbench-tests",
         [py, "-m", "pytest", "perfbench/tests", "-q", "-p", "no:cacheprovider"],
+    ) and ok
+    ok = run(
+        "perfbench-sync-dedup",
+        [py, "perfbench/run.py", "--workload", "sync_dedup",
+         "--seed", "1", "--seconds", "0", "--trace", "0"],
     ) and ok
     ok = run("oracle-gate", [py, "tools/check_oracle.py", sf_dir]) and ok
     if "--skip-bench" not in sys.argv:

@@ -256,6 +256,39 @@ GRAPH_TABLE_SCHEMAS: dict[str, StructType] = {
 
 INDEX_DOCUMENTS = "graph.index_documents"
 
+
+def with_absent_tables(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """``tables`` plus an empty relation of its declared schema for
+    every graph.* table it lacks. A load lands only the tables its view
+    emitted, so a table no load has emitted is absent from the store's
+    manifest; readers see it through this as empty.
+
+    The empty relation must be built in the JVM: a LIMIT 0 over a
+    one-row select of typed null literals, which the optimizer folds
+    to an empty LocalRelation (OptimizeLimitZero) and then prunes from
+    every join, union and aggregate it feeds (PropagateEmptyRelation)
+    — the 23-way document star drops its empty sides at plan time and
+    runs no job for them. ``spark.createDataFrame([], schema)`` is a
+    Python-RDD scan instead: opaque to the optimizer, so every empty
+    side still runs, and each run starts Python workers. The select
+    is one SQL string, so a table costs one call into the JVM rather
+    than three per column."""
+    spark = (
+        next(iter(tables.values())).sparkSession
+        if tables
+        else SparkSession.active()
+    )
+    out = dict(tables)
+    for name, schema in GRAPH_TABLE_SCHEMAS.items():
+        if name not in out:
+            cols = ", ".join(
+                f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
+                for f in schema
+            )
+            out[name] = spark.sql(f"SELECT {cols} LIMIT 0")
+    return out
+
+
 # The FK graph 2_database_load.ts discovers via get_dependent_tables
 # (database.ts): dependencies[t] = tables t references, toposorted by
 # operators.merge.fk_merge_order into parallel merge levels.
@@ -525,8 +558,10 @@ def build_reference_index_documents(
     '|'-joined strings (the document consumer is full-text search; the
     reference's jsonb arrays are unordered Postgres aggregates).
     ``updated_at``/``%(since)s`` are the incremental window (A10/A46's
-    domain) — this build is the full-sync form.
+    domain) — this build is the full-sync form. A graph.* table absent
+    from ``t`` reads as empty (``with_absent_tables``).
     """
+    t = with_absent_tables(t)
     ie = t["graph.intellectual_entity"]
     org = t["graph.organization"]
     rep = t["graph.representation"]
@@ -1150,13 +1185,20 @@ def _merge_view_slice(
     which runs MERGE INTO only for the tables that received rows).
     Returns (frames to land, the manifest the merge read).
 
-    - A table the manifest pins that the slice did not emit is left
-      out: the commit carries it by pin. This is exact, because
-      upsert(target, empty) == target.
-    - An emitted table is upserted over its pinned version (the live
-      pointer's, for a table no manifest pins), read with its pivot
-      schema.
-    - A table the store does not hold lands as pivoted."""
+    The slice's emitted tables come from one distinct over the
+    persisted pivot, on every load, the first one included:
+    - A table the slice did not emit is left out: the commit carries
+      it by pin if the manifest has one. This is exact, because
+      upsert(target, empty) == target. A graph.* table no load has
+      emitted is therefore never landed and not in the manifest;
+      readers see it as empty with its declared schema
+      (``with_absent_tables``).
+    - An emitted table is upserted over its pinned version, read with
+      its pivot schema.
+    - A table the store holds unpinned (written by its live pointer
+      only) is upserted over that version, emitted or not, so the
+      manifest takes it in.
+    - An emitted table the store does not hold lands as pivoted."""
     import os
 
     from prefect_flow_arc_kg_postgres_etl_spark.sources import store as S
@@ -1164,19 +1206,20 @@ def _merge_view_slice(
     base = S.latest_manifest(store_dir)
     pinned = S.read_manifest(base) if base is not None else {}
     tables = pivot_view_tables(triples)
-    emitted = tables.emitted() if pinned else set()
+    emitted = tables.emitted()
     merged: dict[str, DataFrame] = {}
     for name, rows in tables.items():
-        if name in pinned and name not in emitted:
-            continue
         tp = os.path.join(store_dir, f"{name}.parquet")
         schema = GRAPH_TABLE_SCHEMAS[name]
         if name in pinned:
+            if name not in emitted:
+                continue
             target = S.read_table_version(spark, tp, pinned[name], schema)
         elif S.table_exists(tp):
             target = S.read_table(spark, tp, schema)
         else:
-            merged[name] = rows
+            if name in emitted:
+                merged[name] = rows
             continue
         merged[name] = M.upsert(target, rows, keys=["subject"])
     return merged, base
@@ -1201,7 +1244,10 @@ def reference_pipeline_flow(
     The night does work in proportion to what it changed:
     - only the tables the slice emitted are upserted and written; a
       table it did not emit is carried by its manifest pin, with no
-      read and no write;
+      read and no write; a graph.* table no load has emitted is not in
+      the manifest at all, and the document build sees it as empty
+      with its declared schema, pruned from the star join at plan
+      time;
     - the documents are built by ``commit_tables`` over the LANDED
       versions (staged tables as scan leaves, carried ones at the
       pins the merge read), so no upsert lineage runs twice;
@@ -2267,17 +2313,25 @@ def reference_delete_flow(
     arc_db_delete_flow.py's single Postgres transaction (:34-66)
     followed by the emptied-partition drops (:70-122; partitions with
     no surviving documents simply have no rows in the committed
-    table). Returns the committed documents read back."""
+    table). Returns the committed documents read back.
+
+    A graph.* table the manifest does not pin (no load has emitted
+    it) reads as empty with its declared schema
+    (``with_absent_tables``) and stays absent from the new manifest.
+    The commit stages only the two tables the cascade rewrites,
+    graph.intellectual_entity and graph.mh_fragment_identifier, where
+    the store holds them, plus the documents; every other table is
+    carried by its pin."""
     from prefect_flow_arc_kg_postgres_etl_spark.sources import store as S
 
     man = S.latest_manifest(store_dir)
     assert man is not None, "delete run needs a prior full sync"
-    snap = S.read_snapshot(spark, store_dir, man)
-    tables = {
-        name: df
-        for name, df in snap.items()
-        if name in GRAPH_TABLE_COLUMNS
-    }
+    snap = S.read_snapshot(
+        spark, store_dir, man, schemas=GRAPH_TABLE_SCHEMAS
+    )
+    tables = with_absent_tables(
+        {name: df for name, df in snap.items() if name in GRAPH_TABLE_COLUMNS}
+    )
     live = _live_tables(tables)
     # r10: worklist-scoped rebuild — only documents the cascade can
     # change pay the star join; the rest pass through from the
@@ -2304,10 +2358,17 @@ def reference_delete_flow(
                 scoped, SYNTHETIC_STORE_ADAPTER
             )
             docs = rebuilt.unionByName(passthrough.select(*rebuilt.columns))
+    rewritten = {
+        name: live[name]
+        for name in ("graph.intellectual_entity", "graph.mh_fragment_identifier")
+        if name in snap
+    }
     manifest = S.commit_tables(
-        store_dir, {**live, "graph.index_documents": docs}
+        store_dir, {**rewritten, INDEX_DOCUMENTS: docs}, carry_from=man
     )
-    return S.read_snapshot(spark, store_dir, manifest)["graph.index_documents"]
+    return S.read_snapshot(spark, store_dir, manifest, [INDEX_DOCUMENTS])[
+        INDEX_DOCUMENTS
+    ]
 
 
 def _scratch_store(spark: SparkSession, tag: str) -> str:

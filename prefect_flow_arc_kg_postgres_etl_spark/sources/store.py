@@ -575,7 +575,12 @@ def commit_tables(
     carried tables at their pinned versions (read with ``schemas``
     where given, so no schema-inference job fires) — never the
     lineage that produced the staged frames, which would run twice.
-    The derived tables stage next, and the one manifest then pins
+    A table the new manifest does not pin is not in that dict: the
+    graph load lands only the tables its view emitted, so a graph.*
+    table no load has emitted is absent, and the document build reads
+    it as empty with its declared schema
+    (``plans.reference_pipeline.with_absent_tables``). The derived
+    tables stage next, and the one manifest then pins
     them with everything else: a build that raises leaves only
     ``_stage_*`` dirs and the previous manifest live. Derived builds
     read the carried versions before the commit lock, so they need an

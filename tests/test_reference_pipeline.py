@@ -379,7 +379,7 @@ def _view_triples(spark, rows_by_table):
 def _night_rows():
     """Two nights of view rows: night 1 fills five tables, night 2
     re-emits two of them (a renamed entity, a new entity, a new
-    keyword)."""
+    keyword) and fills one night 1 did not emit (a genre)."""
     org = "https://x/org/"
     night1 = {
         "graph.organization": [
@@ -417,6 +417,9 @@ def _night_rows():
         "graph.schema_keywords": [
             dict(subject="k3", intellectual_entity_id=E + "1", schema_keywords="oorlog"),
         ],
+        "graph.schema_genre": [
+            dict(subject="g1", intellectual_entity_id=E + "1", schema_genre="drama"),
+        ],
     }
     return night1, night2
 
@@ -427,11 +430,13 @@ def _canon(df):
 
 
 def test_store_commit_touches_only_emitted_tables(spark, tmp_path):
-    """The durable load without the reference checkout: night 2 emits
-    two of the five tables night 1 filled. The committed documents
-    equal the storeless build over the upserted state; every table the
-    night did not emit keeps its pinned version and gains no version
-    directory; each emitted table gains exactly one version."""
+    """The durable load without the reference checkout: night 1 pins
+    exactly the tables it emitted plus the documents; night 2 emits
+    two of the five tables night 1 filled and one it did not. The
+    committed documents equal the storeless build over the upserted
+    state; every table the night did not emit keeps its pinned version
+    and gains no version directory; each re-emitted table gains
+    exactly one version, and the newly emitted one lands as pivoted."""
     import glob
 
     from prefect_flow_arc_kg_postgres_etl_spark.sources import store as S
@@ -452,7 +457,7 @@ def test_store_commit_touches_only_emitted_tables(spark, tmp_path):
         RP.build_reference_index_documents(t1, RP.SYNTHETIC_STORE_ADAPTER)
     )
     m1 = S.read_manifest(S.latest_manifest(store))
-    assert set(m1) == {*RP.GRAPH_TABLE_COLUMNS, RP.INDEX_DOCUMENTS}
+    assert set(m1) == {*rows1, RP.INDEX_DOCUMENTS}
 
     docs2 = RP.reference_pipeline_flow(spark, "unused", store, triples=night2)
     t2 = RP.pivot_view_tables(night2)
@@ -464,9 +469,16 @@ def test_store_commit_touches_only_emitted_tables(spark, tmp_path):
     )
     assert _canon(docs2) == want
     assert len(want["iri"]) == 4 and "nieuwe naam" in want["schema_name"]
+    assert "drama" in want["schema_genre"]
 
+    genre = "graph.schema_genre"
     m2 = S.read_manifest(S.latest_manifest(store))
-    assert set(m2) == set(m1)
+    assert set(m2) == {*m1, genre}
+    assert m2[genre] == 1 and versions(genre) == ["v_1"]
+    landed = S.read_table_version(
+        spark, os.path.join(store, f"{genre}.parquet"), 1
+    )
+    assert sorted(landed.collect()) == sorted(t2[genre].collect())
     touched = {*rows2, RP.INDEX_DOCUMENTS}
     for name in m1:
         if name in touched:
@@ -475,6 +487,126 @@ def test_store_commit_touches_only_emitted_tables(spark, tmp_path):
         else:
             assert m2[name] == m1[name], name
             assert versions(name) == [f"v_{m1[name]}"], name
+
+
+@pytest.mark.parametrize(
+    "rows", [_night_rows()[0], _fixture_rows()], ids=["night1", "fixture"]
+)
+def test_documents_over_absent_tables_equal_landed_empties(spark, tmp_path, rows):
+    """A graph.* table no load has emitted reads as an empty relation
+    of its declared schema: the documents built with the empty tables
+    absent equal the ones built over all of them landed, the empties
+    written as parquet. This covers the inner format join, the left
+    joins' nulls and the children count's coalesce to 0; with the
+    format table absent the inner join leaves no document."""
+    tables = _spark_tables(spark, rows)
+    landed = {}
+    for name, schema in RP.GRAPH_TABLE_SCHEMAS.items():
+        path = str(tmp_path / name)
+        tables.get(name, spark.createDataFrame([], schema)).write.parquet(path)
+        landed[name] = spark.read.schema(schema).parquet(path)
+    present = {name: landed[name] for name, r in rows.items() if r}
+    assert len(present) < len(landed)
+
+    def docs(t):
+        return RP.build_reference_index_documents(t, RP.SYNTHETIC_STORE_ADAPTER)
+
+    want = _canon(docs(landed))
+    assert want["iri"] and "0" in want["children"]
+    assert _canon(docs(present)) == want
+    del present["graph.dcterms_format"]
+    assert docs(present).count() == 0
+
+
+def test_cold_load_job_budget(spark, tmp_path):
+    """A cold load stages only the tables its view emitted and builds
+    the documents with the absent ones pruned from the star join at
+    plan time. In the 8-core test session this night-1 load (five
+    tables) runs 19 Spark jobs; staging all 31 tables and joining 26
+    empty parquet tables into the star ran 71."""
+    rows1, _ = _night_rows()
+    night1 = _view_triples(spark, rows1)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    RP.reference_pipeline_flow(
+        spark, "unused", str(tmp_path / "store"), triples=night1
+    )
+    jobs = dag.numTotalJobs() - before
+    assert jobs <= 30, jobs
+
+
+def test_delete_flow_over_absent_tables(spark, tmp_path):
+    """The durable delete cycle over a store that holds only the
+    tables its loads emitted. With fragments flagged on a top-level
+    entity and on a child, the committed documents equal the storeless
+    post-cascade build; only the entity and fragment tables and the
+    documents gain a version; no table absent before the run enters
+    the manifest. A store with no fragment table at all deletes
+    nothing and keeps its documents."""
+    from prefect_flow_arc_kg_postgres_etl_spark.sources import store as S
+
+    rows1, _ = _night_rows()
+    rows = {
+        **rows1,
+        "graph.intellectual_entity": [
+            *rows1["graph.intellectual_entity"],
+            dict(subject=E + "1c", id=E + "1c", schema_identifier="e1c",
+                 schema_name="deel", schema_maintainer="https://x/org/OR-2",
+                 relation_is_part_of=E + "1"),
+        ],
+        "graph.dcterms_format": [
+            *rows1["graph.dcterms_format"],
+            dict(subject="f5", intellectual_entity_id=E + "1c",
+                 dcterms_format="videofragment"),
+        ],
+        "graph.mh_fragment_identifier": [
+            dict(subject="m1", intellectual_entity_id=E + "3",
+                 mh_fragment_identifier="frag3", is_deleted="true"),
+            dict(subject="m2", intellectual_entity_id=E + "1c",
+                 mh_fragment_identifier="frag1c", is_deleted="true"),
+            dict(subject="m3", intellectual_entity_id=E + "2",
+                 mh_fragment_identifier="frag2", is_deleted="false"),
+        ],
+    }
+    view = _view_triples(spark, rows)
+    store = str(tmp_path / "store")
+    loaded = _canon(RP.reference_pipeline_flow(spark, "unused", store, triples=view))
+    m1 = S.read_manifest(S.latest_manifest(store))
+    assert set(m1) == {*rows, RP.INDEX_DOCUMENTS}
+
+    got = _canon(RP.reference_delete_flow(spark, "unused", store))
+    want = _canon(
+        RP.build_reference_index_documents(
+            RP._live_tables(RP.pivot_view_tables(view)),
+            RP.SYNTHETIC_STORE_ADAPTER,
+        )
+    )
+    assert got == want
+    assert E + "3" in loaded["iri"] and E + "3" not in want["iri"]
+    e1 = want["iri"].index(E + "1")
+    assert loaded["children"][loaded["iri"].index(E + "1")] == "1"
+    assert want["children"][e1] == "0"
+
+    m2 = S.read_manifest(S.latest_manifest(store))
+    assert set(m2) == set(m1)
+    rewritten = {
+        "graph.intellectual_entity",
+        "graph.mh_fragment_identifier",
+        RP.INDEX_DOCUMENTS,
+    }
+    for name in m1:
+        assert m2[name] == m1[name] + (name in rewritten), name
+
+    plain = str(tmp_path / "plain")
+    before = _canon(
+        RP.reference_pipeline_flow(
+            spark, "unused", plain, triples=_view_triples(spark, rows1)
+        )
+    )
+    p1 = S.read_manifest(S.latest_manifest(plain))
+    assert "graph.mh_fragment_identifier" not in p1
+    assert _canon(RP.reference_delete_flow(spark, "unused", plain)) == before
+    assert set(S.read_manifest(S.latest_manifest(plain))) == set(p1)
 
 
 def test_docs_frame_survives_a_reland(spark, tmp_path, monkeypatch):

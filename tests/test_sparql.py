@@ -960,6 +960,7 @@ def test_param_in_triple_position_constrains_scan(spark):
     assert {r.subject for r in out2.collect()} == {"org1", "org2"}
 
 
+@needs_reference
 def test_av_audio_maintainer_scoped_equals_filtered(spark):
     """The per-org fan-out invariant (1_kg_view_construct.ts:47-63):
     av-audio bound to maintainer_id=OR-3 returns exactly the unscoped

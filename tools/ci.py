@@ -1,6 +1,6 @@
 """Round gate: refuse to call a round done while anything is red.
 
-Runs, in order, five checks:
+Runs, in order, six checks:
 
   1. ``pytest tests/ -q``               (unit + oracle + plan-audit suite)
   2. ``pytest perfbench/tests -q``      (the benchmark's entry points still
@@ -9,8 +9,11 @@ Runs, in order, five checks:
                                          table-sync + dedup workload; its
                                          store-hash, RunStats-status and
                                          planted-pair checks must pass)
-  4. ``tools/check_oracle.py <sf_dir>`` (oracle correctness gate)
-  5. ``python bench.py``                (must exit 0 and print its JSON line)
+  4. ``perfbench/run.py --workload kg_nightly`` (one seeded run of the
+                                         KG load; the documents of both
+                                         nights must match the generator)
+  5. ``tools/check_oracle.py <sf_dir>`` (oracle correctness gate)
+  6. ``python bench.py``                (must exit 0 and print its JSON line)
 
 Exit code is non-zero if ANY stage fails, so ``python tools/ci.py`` is
 the one command to run before ending a round (VERDICT r3: a red suite
@@ -126,6 +129,11 @@ def main() -> int:
     ok = run(
         "perfbench-sync-dedup",
         [py, "perfbench/run.py", "--workload", "sync_dedup",
+         "--seed", "1", "--seconds", "0", "--trace", "0"],
+    ) and ok
+    ok = run(
+        "perfbench-kg-nightly",
+        [py, "perfbench/run.py", "--workload", "kg_nightly",
          "--seed", "1", "--seconds", "0", "--trace", "0"],
     ) and ok
     ok = run("oracle-gate", [py, "tools/check_oracle.py", sf_dir]) and ok

@@ -20,6 +20,7 @@ from prefect_flow_arc_kg_postgres_etl_spark.functions.text import (
     fingerprint,
     words,
 )
+from prefect_flow_arc_kg_postgres_etl_spark.session import MISS, AppLRU
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -790,13 +791,13 @@ def _index_partitions(docs: int) -> int:
     return p
 
 
-# Per-process cache of persisted index _meta: (appId, path, listing
-# stamp of the _meta dir) -> collected rows (or None for a pre-_meta
-# index). The _meta is four ints of BUILD-TIME configuration — a
-# catalog lookup, not query data — but reading it through
-# spark.read.json costs a schema-inference job + a collect per probe
-# call (guide §1: don't pay per-call for what cannot change under the
-# key). The key's stamp hashes the
+# Per-process cache of persisted index _meta: (application, path),
+# stamped with the listing stamp of the _meta dir -> collected rows (or
+# None for a pre-_meta index). The _meta is four ints of BUILD-TIME
+# configuration — a catalog lookup, not query data — but reading it
+# through spark.read.json costs a schema-inference job + a collect per
+# probe call (guide §1: don't pay per-call for what cannot change under
+# the key). The stamp hashes the
 # (name, length, mtime) of every file in the _meta directory: a rebuilt
 # index rewrites _meta with new part-file names (each write has its own
 # job id), so even a rewrite inside one coarse mtime tick with equal
@@ -806,7 +807,7 @@ def _index_partitions(docs: int) -> int:
 # r12 ADVICE); if THAT fails too, the cache is bypassed entirely (read
 # fresh every call) rather than pinned to a key that would serve a
 # stale _meta for a rebuilt index.
-_INDEX_META_CACHE: dict[tuple[str, str, int], "list | None"] = {}
+_INDEX_META_CACHE = AppLRU(64)
 
 
 def _listing_stamp(files) -> int:
@@ -843,9 +844,10 @@ def _read_index_meta(spark, index_path: str):
     from pyspark.errors import AnalysisException
 
     stamp = _meta_stamp(spark, index_path)
-    key = (spark.sparkContext.applicationId, index_path, stamp)
-    if stamp is not None and key in _INDEX_META_CACHE:
-        return _INDEX_META_CACHE[key]
+    if stamp is not None:
+        hit = _INDEX_META_CACHE.get(spark, index_path, stamp)
+        if hit is not MISS:
+            return hit
     try:
         rows = spark.read.json(f"{index_path}/_meta").collect()
     except AnalysisException as exc:
@@ -855,9 +857,7 @@ def _read_index_meta(spark, index_path: str):
             raise
         rows = None
     if stamp is not None:
-        if len(_INDEX_META_CACHE) >= 64:
-            _INDEX_META_CACHE.pop(next(iter(_INDEX_META_CACHE)))
-        _INDEX_META_CACHE[key] = rows
+        _INDEX_META_CACHE.put(spark, index_path, rows, stamp)
     return rows
 
 

@@ -89,6 +89,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from prefect_flow_arc_kg_postgres_etl_spark.session import MISS, AppLRU
+
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 # ---------------------------------------------------------------------------
@@ -1004,6 +1006,11 @@ def _value_cols(df: DataFrame) -> list[str]:
     return [c for c in df.columns if not c.endswith("__lang")]
 
 
+# Largest right side a variable-disjoint cross join broadcasts (see
+# _join); a larger one falls back to the plain crossJoin.
+_CROSS_BROADCAST_MAX_ROWS = 1 << 17
+
+
 def _join(
     a: DataFrame,
     b: DataFrame,
@@ -1051,26 +1058,16 @@ def _join(
         # returns a single long, and short-circuits after N+1 rows. A
         # right side above the cap falls back to the plain crossJoin
         # (slow but memory-safe) instead of an unbounded broadcast
-        # build. Escape hatch for a deployment whose right sides are
-        # known-small: SPARK_GRAFT_SPARQL_CROSS_BROADCAST=0 disables
-        # broadcasting entirely; ..._MAX_ROWS tunes the cap.
-        import os as _os
-
-        if _os.environ.get("SPARK_GRAFT_SPARQL_CROSS_BROADCAST", "1") != "0":
-            cap = int(
-                _os.environ.get(
-                    "SPARK_GRAFT_SPARQL_CROSS_BROADCAST_MAX_ROWS",
-                    str(1 << 17),
-                )
-            )
-            try:
-                small = b.limit(cap + 1).count() <= cap
-            except Exception:
-                # A side of unknown size is never broadcast: the plain
-                # crossJoin below is slow but memory-safe.
-                small = False
-            if small:
-                return a.crossJoin(F.broadcast(b))
+        # build.
+        cap = _CROSS_BROADCAST_MAX_ROWS
+        try:
+            small = b.limit(cap + 1).count() <= cap
+        except Exception:
+            # A side of unknown size is never broadcast: the plain
+            # crossJoin below is slow but memory-safe.
+            small = False
+        if small:
+            return a.crossJoin(F.broadcast(b))
         return a.crossJoin(b)
     if not lang_shared:
         return a.join(b, on=shared, how=how)
@@ -1412,24 +1409,19 @@ def _expr_has_exists(e) -> bool:
     return False
 
 
+# Subject buckets of the star-fusion fan-out probe (see
+# _Eval._fanout_hot_buckets).
+_FANOUT_BUCKETS = 1 << 20
+
+
 class _Eval:
     def __init__(
         self,
         quads: DataFrame,
         datasets: list[str],
         params: dict[str, str] | None = None,
-        working: "tuple[DataFrame | None, set[str]] | None" = None,
-        hot: "dict[str, DataFrame] | None" = None,
     ):
         self.quads = quads
-        # Predicate working set (see _working_set): constant-predicate
-        # pattern scans read this cached slice; variable-predicate and
-        # NPS scans keep the full store.
-        self.ws, self.ws_preds = working if working else (None, set())
-        # Per-predicate posting lists (see _hot_posting_lists): a
-        # constant-predicate pattern whose predicate is hot reads its
-        # persisted slice instead of re-scanning the store.
-        self.hot = hot or {}
         self.datasets = datasets
         # Injected initial bindings — the reference's runner substitutes
         # ?since / ?prefix_id_base into its query text before sending
@@ -1462,12 +1454,11 @@ class _Eval:
         have. The hot set only affects ROUTING, never semantics (both
         paths compute identical bags), so a sound, false-positive-
         tolerant detector suffices: subjects are bucketed by
-        pmod(xxhash64(subject), B) (B = 2^20,
-        SPARK_GRAFT_STAR_FANOUT_BUCKETS) and rows counted per BUCKET
-        over the FULL store — a superset of every star's slice, so
-        any subject whose per-member fan-out could exceed
-        SPARK_GRAFT_STAR_FANOUT_MAX (default 10000; 0 disables) is
-        certainly inside a hot bucket. The bounded-cardinality
+        pmod(xxhash64(subject), B) (B = _FANOUT_BUCKETS = 2^20) and
+        rows counted per BUCKET over the FULL store — a superset of
+        every star's slice, so any subject whose per-member fan-out
+        could exceed SPARK_GRAFT_STAR_FANOUT_MAX (default 10000; 0
+        disables) is certainly inside a hot bucket. The bounded-cardinality
         count-agg collapses map-side to <= B rows per task (the store
         itself is never shuffled), runs ONCE per query evaluation as
         a small driver-coordination job (<= B tiny rows back, in
@@ -1487,30 +1478,23 @@ class _Eval:
         if fanout_max <= 0:
             self._fanout_hot = []
             return self._fanout_hot
-        n_buckets = int(
-            os.environ.get("SPARK_GRAFT_STAR_FANOUT_BUCKETS", str(1 << 20))
-        )
         # Probe results cache per (session, quads PLAN identity,
-        # thresholds): a session evaluating many queries over the same
+        # threshold): a session evaluating many queries over the same
         # store (the composed flows build 9+ _Evals) pays the probe
         # once. semanticHash keys the ANALYZED plan, so a different
         # store path / snapshot plan re-probes; in-place content
         # changes under an identical plan reuse the cached routing —
         # acceptable because routing never affects semantics, only
         # which path computes a hot subject.
-        key = (
-            self.quads.sparkSession.sparkContext.applicationId,
-            self.quads.semanticHash(),
-            fanout_max,
-            n_buckets,
-        )
-        cached = _FANOUT_PROBE_CACHE.get(key)
-        if cached is not None:
+        spark = self.quads.sparkSession
+        key = (self.quads.semanticHash(), fanout_max)
+        cached = _FANOUT_PROBE_CACHE.get(spark, key)
+        if cached is not MISS:
             self._fanout_hot = cached
             return cached
         rows = (
             self.quads.groupBy(
-                F.pmod(F.xxhash64("subject"), F.lit(n_buckets)).alias(
+                F.pmod(F.xxhash64("subject"), F.lit(_FANOUT_BUCKETS)).alias(
                     "__fb"
                 )
             )
@@ -1520,9 +1504,7 @@ class _Eval:
             .collect()
         )
         self._fanout_hot = [r["__fb"] for r in rows]
-        if len(_FANOUT_PROBE_CACHE) > 256:
-            _FANOUT_PROBE_CACHE.clear()
-        _FANOUT_PROBE_CACHE[key] = self._fanout_hot
+        _FANOUT_PROBE_CACHE.put(spark, key, self._fanout_hot)
         return self._fanout_hot
 
     def _materialize_exists(self, e, acc: DataFrame):
@@ -1566,29 +1548,8 @@ class _Eval:
         elif isinstance(p, str) and p.startswith("?"):
             sel.append(F.col("predicate").alias(p[1:]))
         elif isinstance(p, str) and "|" in p:
-            members = p.split("|")
-            if self.ws is not None and set(members) <= self.ws_preds:
-                q = self.ws
-            q = q.filter(F.col("predicate").isin(members))
-        elif (
-            p in self.hot
-            and t.s.startswith("?")
-            and isinstance(t.o, str)
-            and t.o.startswith("?")
-            and (t.graph is None or t.graph.startswith("?"))
-        ):
-            # hot predicate AND a fully-unbound pattern: the persisted
-            # posting list IS the predicate filter, and an unbound scan
-            # genuinely needs every row of it. Patterns with a bound
-            # subject/object/graph constant stay on the parquet scan —
-            # serving those from memory FORFEITS pushdown (an in-memory
-            # rescan reads the whole predicate slice where the parquet
-            # scan reads the matching row group slice), measured +32%
-            # wall on the 13-bound-object-branch issues query at sf0.1.
-            q = self.hot[p]
+            q = q.filter(F.col("predicate").isin(p.split("|")))
         else:
-            if self.ws is not None and p in self.ws_preds:
-                q = self.ws
             q = q.filter(F.col("predicate") == p)
         # graph scoping
         if t.graph is None:
@@ -1671,9 +1632,7 @@ class _Eval:
     def _star_ok(self, t: Triple) -> bool:
         """Star-fusion eligibility of one triple: subject variable,
         constant plain/alternation predicate, no self-reference, no
-        variable-graph collision, and not a hot-posting-list read (the
-        opt-in cold-store mode must keep hitting its persisted
-        per-predicate slice)."""
+        variable-graph collision."""
         return (
             isinstance(t.p, str)
             and not t.p.startswith("?")
@@ -1683,11 +1642,6 @@ class _Eval:
                 t.graph is not None
                 and t.graph.startswith("?")
                 and t.graph in (t.s, t.o)
-            )
-            and not (
-                t.p in self.hot
-                and t.o.startswith("?")
-                and (t.graph is None or t.graph.startswith("?"))
             )
         )
 
@@ -1702,10 +1656,7 @@ class _Eval:
         patterns (?x p ?x), an object variable already bound by an
         earlier star member (the repeat enforces EQUALITY, which the
         pivot does not), and object/subject variables colliding with a
-        variable graph position. Excluded entirely: hot-posting-list
-        predicates on fully-unbound patterns (opt-in cold-store mode —
-        those reads must keep hitting the persisted per-predicate
-        slice, not re-scan parquet)."""
+        variable graph position."""
         groups: dict[tuple, list[Triple]] = {}
         rest: list[Triple] = []
         seen_ovars: dict[tuple, set[str]] = {}
@@ -1722,12 +1673,9 @@ class _Eval:
                 groups.setdefault(key, []).append(t)
             else:
                 rest.append(t)
-        import os as _os
-
-        min_star = int(_os.environ.get("SPARK_GRAFT_STAR_MIN", "2"))
         stars: list[tuple[tuple, list[Triple]]] = []
         for key, ts in groups.items():
-            if len(ts) >= min_star or key in keep_single:
+            if len(ts) >= 2 or key in keep_single:
                 stars.append((key, ts))
             else:
                 rest.extend(ts)
@@ -1793,15 +1741,9 @@ class _Eval:
         ts = list(ts) + list(opt_ts)
         n_req = len(ts) - len(opt_ts)
         members = [t.p.split("|") if "|" in t.p else [t.p] for t in ts]
-        all_preds = sorted({m for ms in members for m in ms})
-        base = (
-            self.ws
-            if self.ws is not None and set(all_preds) <= self.ws_preds
-            else self.quads
-        )
         gcols = ["subject"]
         out_gvar: str | None = None
-        q = base
+        q = self.quads
         if graph is None:
             if self.datasets:
                 q = q.filter(F.col("graph").isin(self.datasets))
@@ -1859,12 +1801,7 @@ class _Eval:
         hot_cond: Column | None = None
         pivot_in = q
         if hot_list:
-            n_buckets = int(
-                os.environ.get(
-                    "SPARK_GRAFT_STAR_FANOUT_BUCKETS", str(1 << 20)
-                )
-            )
-            bexpr = F.pmod(F.xxhash64("subject"), F.lit(n_buckets))
+            bexpr = F.pmod(F.xxhash64("subject"), F.lit(_FANOUT_BUCKETS))
             if len(hot_list) > 2048:
                 cold_cond, hot_cond = F.lit(False), F.lit(True)
             else:
@@ -1875,37 +1812,16 @@ class _Eval:
         df = pivot_in.groupBy(*gcols).agg(*aggs)
         for i in range(n_req):
             df = df.filter(F.size(f"__st{i}") >= 1)
-        # Per-star checkpointing defaults to "compact" — checkpoint
-        # the pivot output PRE-explode, one array row per subject
-        # (r12 optimization round; r11 shipped the full post-explode
-        # checkpoint whose bytes are the star's exploded cross
-        # product, and the mid-r12 build briefly defaulted to NO
-        # checkpoint). Idle-host measurement (tools/time_query.py,
-        # noop sink, min-of-3 warm after a cold pass, sf0.1) across
-        # the three modes:
-        #
-        #   issues        mode 0: cold 57.3 / warm 16.0   compact:
-        #                 62.9 / 7.5   legacy 1: 62.5 / 7.4
-        #   av_audio_org  mode 0: 38.3 / 8.9   compact: 47.3 / 3.8
-        #                 legacy 1: 49.1 / 4.2
-        #   deletes       mode 0: 5.0 / 2.6    compact: 7.1 / 1.4
-        #                 legacy 1: 7.0 / 1.3
-        #
-        # i.e. WITHOUT a per-star materialization the steady-state
-        # (plan-cache-warm) walls double — the downstream accumulator
-        # checkpoints do not make star re-execution free, because
-        # repeated actions on the cached plan re-run every star pivot
-        # upstream of the LAST lazy checkpoint each time. "compact"
-        # buys legacy's warm wall at ~10% one-shot overhead over
-        # mode 0 while writing the SMALL (pre-explode) representation
-        # — the right trade at 100 TB too, where the exploded cross
-        # product is the one set of bytes you never want to spill.
-        # Plan-text growth stays bounded by the fold counter
-        # (_TRUNCATE_EVERY). SPARK_GRAFT_STAR_CKPT: "compact"
-        # (default) as above; "0"/"none" = no star checkpoint
-        # (fastest one-shot); "1" = legacy full post-explode
-        # checkpoint.
-        ckpt_mode = os.environ.get("SPARK_GRAFT_STAR_CKPT", "compact")
+        # Every star checkpoints its pivot output PRE-explode, one
+        # array row per subject. Without a per-star materialization
+        # the plan-cache-warm walls double (sf0.1, tools/time_query.py,
+        # warm min-of-3: issues 16.0 s without vs 7.5 s with,
+        # av_audio_org 8.9 vs 3.8, deletes 2.6 vs 1.4): repeated
+        # actions on a cached plan re-run every star pivot upstream of
+        # the LAST lazy checkpoint. The one-shot cost is ~10%, and the
+        # pre-explode rows are the small representation, never the
+        # star's exploded cross product. Plan-text growth stays
+        # bounded by the fold counter (_TRUNCATE_EVERY).
         # Star checkpoints are narrow (one pre-explode array row per
         # subject) and MUTUALLY INDEPENDENT, so they get an explicit
         # small partition count: block count and warm re-read tasks
@@ -1920,8 +1836,7 @@ class _Eval:
             2,
             self.quads.sparkSession.sparkContext.defaultParallelism // 8,
         )
-        if ckpt_mode not in ("0", "none"):
-            df = _truncate_lineage(df, coalesce=n_ckpt)
+        df = _truncate_lineage(df, coalesce=n_ckpt)
         for i in range(len(ts)):
             gen = F.explode if i < n_req else F.explode_outer
             df = df.select("*", gen(f"__st{i}").alias(f"__sx{i}")).drop(
@@ -1974,19 +1889,10 @@ class _Eval:
                     )
             hot_out = base.select(*hsel)
             # This branch exists only when the probe actually found
-            # hot buckets; under a checkpointing mode it gets its own
-            # checkpoint so the member-frame scans stay out of the
-            # executed-plan print.
-            if ckpt_mode not in ("0", "none"):
-                hot_out = _truncate_lineage(hot_out, coalesce=n_ckpt)
+            # hot buckets; it gets its own checkpoint so the
+            # member-frame scans stay out of the executed-plan print.
+            hot_out = _truncate_lineage(hot_out, coalesce=n_ckpt)
             out = out.unionByName(hot_out)
-
-        if ckpt_mode == "1":
-            # Legacy r11 behavior: additionally materialize the full
-            # exploded star (bytes = the cross product; measured ~60 s
-            # vs ~40 s one-shot issues at sf0.1 against the compact
-            # default, warm walls identical).
-            out = _truncate_lineage(out)
         return out, bound
 
     def _fuse_union_branches(
@@ -2103,12 +2009,7 @@ class _Eval:
     ) -> DataFrame:
         """Build the single-scan frame for a fused branch set."""
         fused_preds = [t.p for t, _ in items]
-        base = (
-            self.ws
-            if self.ws is not None and set(fused_preds) <= self.ws_preds
-            else self.quads
-        )
-        q = base.filter(F.col("predicate").isin(fused_preds))
+        q = self.quads.filter(F.col("predicate").isin(fused_preds))
         graph_var: str | None = None
         if gkey is None:
             if self.datasets:
@@ -2288,11 +2189,8 @@ class _Eval:
             # Multi-alternative paths (union-of-rewrites + distinct) and
             # closures keep the per-triple path machinery.
             expanded: list[Triple] = []
-            exp_on = (
-                _os.environ.get("SPARK_GRAFT_STAR_EXPAND", "1") != "0"
-            )
             for t in triples:
-                if exp_on and isinstance(t.p, tuple) and _path_expandable(t.p):
+                if isinstance(t.p, tuple) and _path_expandable(t.p):
                     alts = _expand_path_triple(t)
                     if len(alts) == 1:
                         expanded.extend(alts[0])
@@ -2519,7 +2417,6 @@ class _Eval:
             owns compatible-binding semantics for rebound variables."""
             if (
                 not star_on
-                or _os.environ.get("SPARK_GRAFT_STAR_OPT", "1") == "0"
                 or len(og.elements) != 1
                 or og.elements[0][0] != "triple"
             ):
@@ -2924,13 +2821,6 @@ def parse(text: str) -> Query:
     return Parser(text).parse_query()
 
 
-# Prepared-plan cache: the reference runner executes the same nine
-# production query files every sync cycle (main_flow.py drives each
-# record type's CONSTRUCT per run); compiling a 465-line file to a
-# DataFrame DAG costs seconds of driver-side work that is identical
-# across cycles. Keyed by (session, quad-store analyzed-plan semantic
-# hash, query text, params) — a store swap or param change misses; the
-# cached object is only the immutable plan, never materialized data.
 import threading as _threading
 
 _TRUNCATE_AQE_LOCK = _threading.Lock()
@@ -2957,7 +2847,12 @@ class _no_aqe_planning:
     points feed — still plans and runs under AQE. Re-entrant and
     thread-safe (the star compile pool plans truncations
     concurrently): a depth counter keeps AQE off until the outermost
-    scope restores the saved value."""
+    scope restores the saved value.
+
+    Known limit: the flag is set on the SHARED session conf, so while
+    a star compiles, every other query planned in the same session
+    (another thread, the per-organisation fan-out) plans without AQE
+    too."""
 
     def __init__(self, spark):
         self.spark = spark
@@ -3027,357 +2922,27 @@ def _truncate_lineage(df: DataFrame, coalesce: "int | None" = None) -> DataFrame
         )
 
 
-_PLAN_CACHE: dict[tuple, DataFrame] = {}
-_PLAN_CACHE_MAX = 64
+# Prepared-plan cache: the reference runner executes the same nine
+# production query files every sync cycle (main_flow.py drives each
+# record type's CONSTRUCT per run); compiling a 465-line file to a
+# DataFrame DAG costs seconds of driver-side work that is identical
+# across cycles. Keyed by (application, kind, quad-store analyzed-plan
+# semantic hash, query text, params) — a store swap or param change
+# misses; the cached object is only the immutable plan, never
+# materialized data.
+_PLAN_CACHE = AppLRU(64)
 
-# Star-fusion fan-out probe results, keyed by (applicationId, quads
-# semanticHash, threshold, buckets) — see _Eval._fanout_hot_buckets.
-_FANOUT_PROBE_CACHE: dict[tuple, list] = {}
-
-# Persisted predicate working sets (opt-in, see _working_set): bounded
-# LRU so long-lived sessions don't accumulate cached store slices.
-_WORKING_CACHE: dict[tuple, DataFrame] = {}
-_WORKING_CACHE_MAX = 16
-
-# Persisted per-predicate posting lists (on by default, see
-# _hot_posting_lists): keyed (appId, store hash, predicate) so every
-# query over the same store shares one materialization per predicate.
-_HOT_CACHE: dict[tuple, DataFrame] = {}
-_HOT_CACHE_MAX = 32
-_HOT_MIN_USES = 3
-# Minimum local JVM heap for auto-engaging posting lists (see the
-# heap-gate note in _hot_posting_lists): a default 1 GiB driver OOMs
-# building broadcasts next to the persisted lists; tuned sessions
-# (session.py) run 16 GiB.
-_HOT_MIN_HEAP_BYTES = 3 << 30
-
-
-def _hot_heap_ok(spark) -> bool:
-    """True iff the local JVM heap can afford persisted posting lists
-    alongside broadcast builds (the _HOT_MIN_HEAP_BYTES gate)."""
-    try:
-        runtime = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
-        return runtime.maxMemory() >= _HOT_MIN_HEAP_BYTES
-    except Exception:
-        return False
+# Star-fusion fan-out probe results, keyed by (application, quads
+# semanticHash, threshold) — see _Eval._fanout_hot_buckets.
+_FANOUT_PROBE_CACHE = AppLRU(256)
 
 
 def clear_plan_cache() -> None:
-    """Drop all prepared plans (tests that patch evaluator internals
-    between runs of the same query text must bust the cache), and
-    unpersist any cached working-set frames with them."""
+    """Drop all prepared plans and fan-out probe results (tests that
+    patch evaluator internals between runs of the same query text must
+    bust the cache)."""
     _PLAN_CACHE.clear()
     _FANOUT_PROBE_CACHE.clear()
-    for cache in (_WORKING_CACHE, _HOT_CACHE):
-        for frame in cache.values():
-            try:
-                frame.unpersist()
-            except Exception:
-                pass  # session already stopped
-        cache.clear()
-
-
-def _collect_query_predicates(g: "Group") -> set[str] | None:
-    """All constant predicate IRIs a group's patterns can ever scan,
-    or None when the predicate set is not statically bounded (a
-    variable predicate or a negated property set — both need the full
-    store). Drives the WORKING-SET materialization below."""
-
-    def from_path(p) -> set[str] | None:
-        if isinstance(p, str):
-            if p.startswith("?"):
-                return None
-            return set(p.split("|"))  # the compacted alternation form
-        kind = p[0]
-        if kind == "nps":
-            return None
-        if kind in ("inv", "plus", "star", "opt"):
-            return from_path(p[1])
-        if kind in ("seq", "alt"):
-            out: set[str] = set()
-            for part in p[1]:
-                sub = from_path(part)
-                if sub is None:
-                    return None
-                out |= sub
-            return out
-        return None
-
-    def from_expr(e) -> set[str] | None:
-        # EXISTS groups inside FILTER/BIND expressions scan the store
-        if isinstance(e, tuple):
-            if e[0] == "exists_expr":
-                return walk(e[1])
-            out: set[str] = set()
-            for part in e[1:]:
-                sub = from_expr(part)
-                if sub is None:
-                    return None
-                out |= sub
-            return out
-        if isinstance(e, list):
-            out = set()
-            for part in e:
-                sub = from_expr(part)
-                if sub is None:
-                    return None
-                out |= sub
-            return out
-        return set()
-
-    def walk(group: "Group") -> set[str] | None:
-        out: set[str] = set()
-        for el in group.elements:
-            kind = el[0]
-            if kind == "triple":
-                # a variable-predicate or NPS pattern reads the FULL
-                # store for itself (pattern_scan routes it there); it
-                # does not poison the working set for the others
-                sub = from_path(el[1].p) or set()
-            elif kind in ("optional", "group", "not_exists", "exists"):
-                sub = walk(el[1])
-            elif kind == "union":
-                sub = set()
-                for b in el[1]:
-                    s2 = walk(b)
-                    if s2 is None:
-                        sub = None
-                        break
-                    sub |= s2
-            elif kind == "subselect":
-                sub = walk(el[1].where)
-            elif kind in ("filter", "bind"):
-                sub = from_expr(el[-1])
-            elif kind == "values":
-                sub = set()
-            else:
-                sub = None
-            if sub is None:
-                return None
-            out |= sub
-        return out
-
-    return walk(g)
-
-
-def _working_set(
-    quads: DataFrame, g: "Group"
-) -> tuple[DataFrame | None, set[str]]:
-    """Materialize the query's PREDICATE WORKING SET once.
-
-    A production CONSTRUCT like newspaper.sparql compiles to ~200
-    pattern scans; against the parquet store each is its own file scan
-    (the posting-list layout prunes it, but 200 scan stages of one
-    query are driver-side scheduling load a large cluster feels before
-    the data hurts — the r7 verdict's named 100x hazard). When the
-    query's predicate set is statically bounded, ONE scan filtered to
-    that set is cached and every pattern scan becomes an in-memory
-    read with batch-level predicate pushdown: parquet is touched once
-    per query, not once per pattern. The cache is keyed by the
-    canonicalized plan (Spark's CacheManager), so repeated executions
-    of the same query reuse one materialization; the working set is
-    the union of the query's posting lists — the slice of the store
-    that fits memory even when the store does not. Patterns with a
-    variable predicate or a negated property set route to the FULL
-    store individually (pattern_scan) and do not disable the working
-    set for the query's constant patterns.
-
-    MEASURED OFF by default: on the local[32] harness the parquet
-    posting lists live in page cache and partition-prune per pattern,
-    while 200 InMemoryTableScans of a mixed-predicate cache each pay a
-    batch-stats sweep + columnar deserialize — wall went 18 s -> 33 s
-    at sf0.1. The win case is a COLD remote store (S3: one object
-    sweep instead of 200); enable there with
-    SPARK_GRAFT_SPARQL_WORKING_SET=1.
-
-    Persisted frames live in a small LRU keyed like the plan cache
-    (session, store plan hash, predicate set) — a long-lived session
-    executing many distinct queries reuses working sets with the same
-    key and UNPERSISTS evicted ones instead of accumulating cached
-    slices without bound (r9 ADVICE).
-
-    Returns (working_frame | None, predicate_set)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SPARQL_WORKING_SET") != "1":
-        return None, set()
-    preds = _collect_query_predicates(g)
-    if preds is None or not preds or len(preds) > 512:
-        return None, set()
-    try:
-        qh = quads._jdf.queryExecution().analyzed().semanticHash()
-        # Keyed on applicationId, not id(session): a GC'd session's id
-        # can be recycled by a new session, which would serve a
-        # persisted frame bound to the STOPPED session (r10 ADVICE);
-        # applicationIds are unique per SparkContext.
-        app_id = quads.sparkSession.sparkContext.applicationId
-        key = (app_id, qh, frozenset(preds))
-    except Exception:
-        key = None
-    if key is not None and key in _WORKING_CACHE:
-        cached = _WORKING_CACHE[key]
-        # Liveness guard: a frame whose session has been stopped is a
-        # miss (drop it and re-land), never served.
-        alive = True
-        try:
-            alive = cached.sparkSession.sparkContext._jsc is not None
-        except Exception:
-            alive = False
-        if alive:
-            # genuine LRU: a hit moves the key to the MRU end so the
-            # eviction below pops the least-recently-USED frame.
-            _WORKING_CACHE[key] = _WORKING_CACHE.pop(key)
-            return cached, preds
-        _WORKING_CACHE.pop(key, None)
-    frame = quads.filter(F.col("predicate").isin(sorted(preds))).persist()
-    if key is not None:
-        if len(_WORKING_CACHE) >= _WORKING_CACHE_MAX:
-            try:
-                _WORKING_CACHE.pop(next(iter(_WORKING_CACHE))).unpersist()
-            except Exception:
-                pass  # evictee's session already stopped
-        _WORKING_CACHE[key] = frame
-    return frame, preds
-
-
-def _count_scan_predicates(g: "Group") -> dict[str, int]:
-    """Count how many PATTERN SCANS each constant single predicate
-    would issue for a group (unions, optionals, subselects and EXISTS
-    groups included; alternations, paths, variable predicates and NPS
-    excluded — they scan through their own machinery). Drives the
-    hot-posting-list materialization below."""
-    counts: dict[str, int] = {}
-
-    def from_expr(e) -> None:
-        if isinstance(e, tuple):
-            if e[0] == "exists_expr":
-                walk(e[1])
-                return
-            for part in e[1:]:
-                from_expr(part)
-        elif isinstance(e, list):
-            for part in e:
-                from_expr(part)
-
-    def walk(group: "Group") -> None:
-        for el in group.elements:
-            kind = el[0]
-            if kind == "triple":
-                t = el[1]
-                p = t.p
-                if (
-                    isinstance(p, str)
-                    and not p.startswith("?")
-                    and "|" not in p
-                    # only FULLY-UNBOUND patterns are posting-list
-                    # consumers (pattern_scan's serving condition):
-                    # bound-constant scans keep parquet pushdown
-                    and t.s.startswith("?")
-                    and isinstance(t.o, str)
-                    and t.o.startswith("?")
-                    and (t.graph is None or t.graph.startswith("?"))
-                ):
-                    counts[p] = counts.get(p, 0) + 1
-            elif kind in ("optional", "group", "not_exists", "exists"):
-                walk(el[1])
-            elif kind == "union":
-                for b in el[1]:
-                    walk(b)
-            elif kind == "subselect":
-                walk(el[1].where)
-            elif kind in ("filter", "bind"):
-                from_expr(el[-1])
-
-    walk(g)
-    return counts
-
-
-def _hot_posting_lists(quads: DataFrame, g: "Group") -> dict[str, DataFrame]:
-    """Materialize PER-PREDICATE posting lists for the query's hot
-    predicates — constant predicates pattern-scanned >= _HOT_MIN_USES
-    times (newspaper.sparql scans rdf:type from 13 branches,
-    schema:name from 6). Each hot predicate becomes ONE parquet scan
-    persisted columnar; every pattern over it is an in-memory re-read.
-    Two wins at cluster scale: the store is touched once per hot
-    predicate instead of once per branch, and the executed plan loses
-    a dozen scheduler-visible scan stages per query (the r7-flagged
-    driver-pressure hazard for 1000-executor runs).
-
-    Unlike the opt-in mixed-predicate working set (_working_set,
-    measured slower locally because every scan sweeps every cached
-    batch), a single-predicate frame contains only rows every scan of
-    that predicate wants — remaining object/graph constants prune on
-    in-memory batch stats. Frames live in the same bounded-LRU shape
-    as _WORKING_CACHE, keyed (applicationId, store plan hash,
-    predicate) so ALL queries over one store share one
-    materialization per predicate across the session.
-
-    OPT-IN (SPARK_GRAFT_SPARQL_HOT_PREDS=1): on warm LOCAL parquet the
-    in-memory re-reads measured net SLOWER than letting every branch
-    re-scan (sf0.1 issues query: 12.7 s hot vs 9.6 s plain — the
-    persisted slice loses pushdown/codegen economics that a local
-    page-cached parquet scan gets for free), so the default is OFF —
-    the same decision as the mixed-predicate working set above. The
-    win case is a COLD REMOTE store (S3/HDFS), where each of the ~17
-    avoided scan stages is a network round trip, plus scheduler
-    pressure at 1000 executors (44 vs 61 stages per query).
-
-    HEAP GATE (applies even when opted in): posting lists live in the
-    unified memory region AND their InMemoryRelation stats steer the
-    planner toward broadcast joins built on the driver — under a
-    DEFAULT-sized (1 GiB) driver JVM the combination fails the largest
-    production query with "Not enough memory to build and broadcast"
-    (found by the r10 plain-session sweep; tuned sessions run 16 GiB
-    and never see it). The opt-in engages only when the local JVM heap
-    is >= _HOT_MIN_HEAP_BYTES."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SPARQL_HOT_PREDS", "") != "1":
-        return {}
-    if not _hot_heap_ok(quads.sparkSession):
-        return {}
-    hot = {
-        p
-        for p, n in _count_scan_predicates(g).items()
-        if n >= _HOT_MIN_USES
-    }
-    if not hot:
-        return {}
-    try:
-        qh = quads._jdf.queryExecution().analyzed().semanticHash()
-        app_id = quads.sparkSession.sparkContext.applicationId
-    except Exception:
-        return {}
-    out: dict[str, DataFrame] = {}
-    for p in sorted(hot):
-        key = (app_id, qh, p)
-        cached = _HOT_CACHE.get(key)
-        if cached is not None:
-            alive = True
-            try:
-                alive = cached.sparkSession.sparkContext._jsc is not None
-            except Exception:
-                alive = False
-            if alive:
-                # LRU: move the hit to the MRU end
-                _HOT_CACHE[key] = _HOT_CACHE.pop(key)
-                out[p] = cached
-                continue
-            _HOT_CACHE.pop(key, None)
-        frame = quads.filter(F.col("predicate") == p).persist()
-        if len(_HOT_CACHE) >= _HOT_CACHE_MAX:
-            try:
-                # tolerate a concurrent evictor (per-org fan-out pool)
-                evicted = _HOT_CACHE.pop(next(iter(_HOT_CACHE)), None)
-                if evicted is not None:
-                    evicted.unpersist()
-            except (StopIteration, RuntimeError):
-                pass
-            except Exception:
-                pass  # evictee's session already stopped
-        _HOT_CACHE[key] = frame
-        out[p] = frame
-    return out
 
 
 def _bind_params_in_group(g: "Group", params: dict[str, str]) -> None:
@@ -3415,31 +2980,15 @@ def _bind_params_in_group(g: "Group", params: dict[str, str]) -> None:
 def _plan_cached(kind: str, quads: DataFrame, text: str, params, build):
     try:
         qh = quads._jdf.queryExecution().analyzed().semanticHash()
-        # applicationId, not id(session): unique per SparkContext, so a
-        # recycled Python object id can never serve a dead session's
-        # plan (same fix as _WORKING_CACHE, r10 ADVICE).
-        app_id = quads.sparkSession.sparkContext.applicationId
     except Exception:
         return build()
-    key = (
-        app_id,
-        kind,
-        qh,
-        text,
-        tuple(sorted((params or {}).items())),
-    )
-    hit = _PLAN_CACHE.get(key)
-    if hit is not None:
+    spark = quads.sparkSession
+    key = (kind, qh, text, tuple(sorted((params or {}).items())))
+    hit = _PLAN_CACHE.get(spark, key)
+    if hit is not MISS:
         return hit
     df = build()
-    if len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
-        try:
-            # tolerate a concurrent evictor (the parallel per-org
-            # fan-out compiles plans from a thread pool)
-            _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)), None)
-        except (StopIteration, RuntimeError):
-            pass
-    _PLAN_CACHE[key] = df
+    _PLAN_CACHE.put(spark, key, df)
     return df
 
 
@@ -3472,13 +3021,7 @@ def _construct_query_impl(
     query = parse(text)
     if params:
         _bind_params_in_group(query.where, params)
-    ev = _Eval(
-        quads,
-        query.datasets,
-        params,
-        working=_working_set(quads, query.where),
-        hot=_hot_posting_lists(quads, query.where),
-    )
+    ev = _Eval(quads, query.datasets, params)
     bindings = ev.eval_group(query.where, None)
     assert bindings is not None, "WHERE clause produced no bindings frame"
     cols = set(bindings.columns)
@@ -3535,12 +3078,7 @@ def select_query(
         _bind_params_in_group(query.where, params)
 
     def build() -> DataFrame:
-        ev = _Eval(
-            quads,
-            query.datasets,
-            params,
-            hot=_hot_posting_lists(quads, query.where),
-        )
+        ev = _Eval(quads, query.datasets, params)
         bindings = ev.eval_group(query.where, None)
         assert bindings is not None, "WHERE clause produced no bindings frame"
         if query.form == "ask":
@@ -3701,12 +3239,7 @@ def _describe_query_impl(
     if vars_:
         if params:
             _bind_params_in_group(query.where, params)
-        ev = _Eval(
-            quads,
-            query.datasets,
-            params,
-            hot=_hot_posting_lists(quads, query.where),
-        )
+        ev = _Eval(quads, query.datasets, params)
         bindings = ev.eval_group(query.where, None)
         assert bindings is not None, "DESCRIBE ?var needs a WHERE pattern"
         for v in vars_:
@@ -3831,7 +3364,7 @@ def update_delta(
     if up.where is not None:
         if params:
             _bind_params_in_group(up.where, params)
-        ev = _Eval(quads, [], params, hot=_hot_posting_lists(quads, up.where))
+        ev = _Eval(quads, [], params)
         bindings = ev.eval_group(up.where, None)
         assert bindings is not None, "WHERE produced no bindings frame"
     deleted = added = None

@@ -62,6 +62,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from prefect_flow_arc_kg_postgres_etl_spark.operators import merge as M
+from prefect_flow_arc_kg_postgres_etl_spark.session import MISS, AppLRU
 
 _NS = "urn:kg-to-postgres:"
 
@@ -1083,16 +1084,17 @@ def build_reference_index_documents(
     )
 
 
-# Built document frames, keyed like the view-graph spills (session,
-# sf_dir, store fingerprint). The documents are the FAN-IN of the
-# whole composition (tens of thousands of rows from a 23-join star
-# over millions of triples) and THREE registered entries re-derive
-# them per call — A74 itself, A77 (which traverses them for current,
-# previous and flag frames) and the ES feed. One landed spill per
-# store makes every traversal a parquet scan instead of a star-join
+# Built document frames, keyed by (application, sf_dir) and stamped
+# with the store fingerprint, so a mutated store under the same path
+# misses and its rebuild replaces the entry. The documents are the
+# FAN-IN of the whole composition (tens of thousands of rows from a
+# 23-join star over millions of triples) and THREE registered entries
+# re-derive them per call — A74 itself, A77 (which traverses them for
+# current, previous and flag frames) and the ES feed. One landed spill
+# per store makes every traversal a parquet scan instead of a star-join
 # re-execution; entries on a fresh session (the correctness driver)
 # build it exactly once.
-_DOCS_CACHE: dict[tuple[str, str, tuple[int, int]], DataFrame] = {}
+_DOCS_CACHE = AppLRU(8)
 
 # Prepared-PLAN cache for the composed flows (operators/sparql's
 # _PLAN_CACHE precedent): the delete cascade compiles a fresh
@@ -1101,28 +1103,20 @@ _DOCS_CACHE: dict[tuple[str, str, tuple[int, int]], DataFrame] = {}
 # of actual execution (guide §5 "very large query plans"/§7.3
 # planning-bound drivers). Returning the SAME DataFrame re-uses the
 # analyzed plan while every action still re-EXECUTES it end to end —
-# a plan cache, not a result cache. Keyed like _DOCS_CACHE (appId,
-# sf_dir, store fingerprint) so a mutated store recompiles.
-_FLOW_PLAN_CACHE: dict[tuple[str, str, str, tuple[int, int]], DataFrame] = {}
+# a plan cache, not a result cache. Keyed by (application, tag,
+# sf_dir) and stamped with the store fingerprint like _DOCS_CACHE, so a
+# mutated store recompiles.
+_FLOW_PLAN_CACHE = AppLRU(32)
 
 
 def _flow_plan_cached(spark, sf_dir, tag, build):
-    key = (
-        tag,
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _store_fingerprint(sf_dir, spark),
-    )
-    hit = _FLOW_PLAN_CACHE.get(key)
-    if hit is not None:
-        _FLOW_PLAN_CACHE[key] = _FLOW_PLAN_CACHE.pop(key)  # LRU reorder
+    key = (tag, sf_dir)
+    fp = _store_fingerprint(sf_dir, spark)
+    hit = _FLOW_PLAN_CACHE.get(spark, key, fp)
+    if hit is not MISS:
         return hit
     df = build()
-    for old in [k for k in _FLOW_PLAN_CACHE if k[:3] == key[:3] and k != key]:
-        _FLOW_PLAN_CACHE.pop(old)  # superseded store fingerprint
-    if len(_FLOW_PLAN_CACHE) >= 32:
-        _FLOW_PLAN_CACHE.pop(next(iter(_FLOW_PLAN_CACHE)))
-    _FLOW_PLAN_CACHE[key] = df
+    _FLOW_PLAN_CACHE.put(spark, key, df, fp)
     return df
 
 
@@ -1131,16 +1125,9 @@ def flow_reference_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries -> triple stream -> graph.* record pivot in FK order ->
     update_partition.sql index documents. The ES NDJSON feed over this
     result is ``index_documents_ndjson``."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _store_fingerprint(sf_dir, spark),
-    )
-    hit = _DOCS_CACHE.get(key)
-    if hit is not None:
-        # genuine LRU: reorder on hit so eviction pops least-recently-
-        # USED, not first-inserted (r10 ADVICE).
-        _DOCS_CACHE[key] = _DOCS_CACHE.pop(key)
+    fp = _store_fingerprint(sf_dir, spark)
+    hit = _DOCS_CACHE.get(spark, sf_dir, fp)
+    if hit is not MISS:
         return hit
     triples = all_view_triples(spark, sf_dir)
     tables = pivot_view_tables(triples)
@@ -1165,15 +1152,11 @@ def flow_reference_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_reference_index_documents(tables, SYNTHETIC_STORE_ADAPTER).write.mode(
         "overwrite"
     ).parquet(f"{spill}/index_documents")
-    _SPILLS[(key[0], "docs:" + sf_dir, key[2])] = spill
+    _SPILLS[(spark.sparkContext.applicationId, "docs:" + sf_dir, fp)] = spill
     docs = spark.read.parquet(f"{spill}/index_documents")
-    # a mutated store under the same path supersedes its old entry
-    # (its spill stays on disk until exit, for frames already returned)
-    for old_key in [k for k in _DOCS_CACHE if k[:2] == key[:2]]:
-        _DOCS_CACHE.pop(old_key)
-    if len(_DOCS_CACHE) >= 8:
-        _DOCS_CACHE.pop(next(iter(_DOCS_CACHE)))
-    _DOCS_CACHE[key] = docs
+    # a mutated store under the same path replaces its old entry (the
+    # old spill stays on disk until exit, for frames already returned)
+    _DOCS_CACHE.put(spark, sf_dir, docs, fp)
     return docs
 
 

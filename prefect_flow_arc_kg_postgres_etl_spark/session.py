@@ -10,8 +10,63 @@ the few Pandas-UDF paths, shuffle partitions sized to cores locally
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import SparkSession
+
+# Returned by AppLRU.get on a miss, so a cached None is a hit.
+MISS = object()
+
+
+class AppLRU:
+    """Bounded least-recently-used cache of driver-side values (plans,
+    probe results, small catalog rows), keyed per Spark application.
+
+    The application id, not the session object, scopes an entry: ids
+    are unique per SparkContext, so a stopped session's entries can
+    never be served to a new one (a recycled Python ``id()`` could).
+    An entry put with a ``stamp`` (a store fingerprint, a listing
+    stamp) hits only when read with the same stamp; a put replaces it.
+    A lock guards every access: the per-organisation fan-out and the
+    star compile pool read and fill these caches from threads. Values
+    are built outside the lock by the caller, so two threads missing
+    on one key may both build it; the later put wins."""
+
+    def __init__(self, maxsize: int):
+        self.maxsize = maxsize
+        self._entries: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    @staticmethod
+    def _key(spark: SparkSession, key) -> tuple:
+        return (spark.sparkContext.applicationId, key)
+
+    def get(self, spark: SparkSession, key, stamp=None):
+        """The value cached under ``key`` and ``stamp``, else MISS."""
+        k = self._key(spark, key)
+        with self._lock:
+            entry = self._entries.get(k)
+            if entry is None or entry[0] != stamp:
+                return MISS
+            self._entries.move_to_end(k)
+            return entry[1]
+
+    def put(self, spark: SparkSession, key, value, stamp=None) -> None:
+        k = self._key(spark, key)
+        with self._lock:
+            self._entries[k] = (stamp, value)
+            self._entries.move_to_end(k)
+            while len(self._entries) > self.maxsize:
+                self._entries.popitem(last=False)
+
+    def clear(self) -> None:
+        with self._lock:
+            self._entries.clear()
+
+    def __len__(self) -> int:
+        with self._lock:
+            return len(self._entries)
 
 
 def get_spark(app_name: str = "arc-kg-spark", cpus: int | None = None) -> SparkSession:

@@ -797,7 +797,7 @@ def _issues_first_execution_plan(spark):
     return plan
 
 
-def test_issues_query_scan_budget(spark, monkeypatch):
+def test_issues_query_scan_budget(spark):
     """The newspaper.sparql (issues) executed plan stays within its scan
     budget (r8: 207 -> 99 via accumulator checkpoints; r9: 61 with
     union-branch fusion; r11: 31 with property-table STAR fusion —
@@ -806,26 +806,6 @@ def test_issues_query_scan_budget(spark, monkeypatch):
     materializes exactly once. Budget 50, the r9 verdict's bar, with
     headroom so a star-membership regression fails loudly before it
     lands in the bench)."""
-    monkeypatch.delenv("SPARK_GRAFT_SPARQL_HOT_PREDS", raising=False)
     scans = _physical_parquet_scans(_issues_first_execution_plan(spark))
     assert 0 < scans <= 50, scans
 
-
-def test_issues_query_scan_budget_hot_preds(spark, monkeypatch):
-    """OPT-IN hot-predicate posting lists (SPARK_GRAFT_SPARQL_HOT_PREDS
-    =1, the cold-remote-store / driver-pressure mode): fully-unbound
-    patterns over predicates scanned >= 3 times read per-predicate
-    persisted lists — the same query drops to ~44 physical scans + >= 5
-    in-memory re-reads (budget 50). Opt-in because on warm local
-    parquet the in-memory re-reads measured net SLOWER (sf0.1 issues:
-    12.7 s vs 9.6 s) — the win case is remote storage where each
-    avoided scan is a network round trip."""
-    monkeypatch.setenv("SPARK_GRAFT_SPARQL_HOT_PREDS", "1")
-    plan = _issues_first_execution_plan(spark)
-    scans = _physical_parquet_scans(plan)
-    cached_reads = plan.count("InMemoryTableScan")
-    # r11: star fusion consumes most fully-unbound repeats, so the
-    # posting lists serve the residual non-star patterns (measured 28
-    # scans + 15 in-memory re-reads with stars on).
-    assert 0 < scans <= 40, scans
-    assert cached_reads >= 5, cached_reads

@@ -1206,127 +1206,6 @@ def test_reliable_checkpoint_mode(spark, monkeypatch, tmp_path):
     SQ.clear_plan_cache()
 
 
-def test_working_set_cache_bounded_and_unpersisted(spark, monkeypatch):
-    """r9 ADVICE: opt-in working-set persists live in a bounded LRU —
-    identical (store, predicate-set) keys share ONE persisted frame,
-    and clear_plan_cache unpersists everything it cached."""
-    monkeypatch.setenv("SPARK_GRAFT_SPARQL_WORKING_SET", "1")
-    SQ.clear_plan_cache()
-    assert not SQ._WORKING_CACHE
-    quads = _quads(
-        spark,
-        [("e1", "urn:a", "x", None, None), ("e1", "urn:b", "y", None, None)],
-    )
-    q = "CONSTRUCT { ?e <urn:out:v> ?v } WHERE { ?e <urn:a> ?v . ?e <urn:b> ?w }"
-    SQ.construct_query(quads, q).collect()
-    assert len(SQ._WORKING_CACHE) == 1
-    frame = next(iter(SQ._WORKING_CACHE.values()))
-    assert frame.storageLevel.useMemory or frame.storageLevel.useDisk
-    # same store + same predicate set (other query text) -> same frame
-    SQ.construct_query(
-        quads, "CONSTRUCT { ?e <urn:out:w> ?w } WHERE { ?e <urn:a> ?v . ?e <urn:b> ?w }"
-    ).collect()
-    assert len(SQ._WORKING_CACHE) == 1
-    SQ.clear_plan_cache()
-    assert not SQ._WORKING_CACHE
-    assert not (frame.storageLevel.useMemory or frame.storageLevel.useDisk)
-
-
-def test_hot_posting_lists_differential(spark, monkeypatch):
-    """A constant predicate pattern-scanned >= 3 times (across UNION
-    branches, OPTIONALs and EXISTS groups) reads ONE persisted posting
-    list instead of re-scanning the store — row-for-row identical to
-    the plain path, shared across query texts on the same store, and
-    unpersisted by clear_plan_cache. Opt-in mode (=1, the cold-remote-
-    store path; default is OFF after the r10 sf0.1 wall measurement)."""
-    monkeypatch.setenv("SPARK_GRAFT_SPARQL_HOT_PREDS", "1")
-    quads = _quads(
-        spark,
-        [
-            ("e1", "urn:a", "Doc", None, "g"),
-            ("e2", "urn:a", "Doc", None, "g"),
-            ("s1", "urn:a", "Serie", None, "g"),
-            ("e1", "urn:name", "boek", "nl", "g"),
-            ("s1", "urn:name", "reeks", None, "g"),
-            ("e1", "urn:part", "s1", None, "g"),
-            ("e2", "urn:genre", "news", None, "g"),
-        ],
-    )
-    # urn:a scanned 3x FULLY UNBOUND (main + union branch + EXISTS);
-    # urn:name 2x; the bound-object "Doc"/"Serie" scans keep parquet
-    # pushdown and neither count toward nor read from the list
-    text = """
-    CONSTRUCT { ?e <urn:o:a> ?a . ?e <urn:o:t> ?t . ?e <urn:o:g> ?g2 }
-    WHERE {
-      ?e <urn:a> ?a .
-      OPTIONAL { ?e <urn:name> ?n }
-      {} UNION {
-        ?e <urn:part> ?s . ?s <urn:a> ?t2 ; <urn:name> ?t .
-      }
-      UNION {
-        ?e <urn:genre> ?g2 .
-        FILTER EXISTS { ?e <urn:a> ?a2 }
-      }
-      FILTER (?a = "Doc" || ?a = "Serie")
-    }
-    """
-    SQ.clear_plan_cache()
-    assert not SQ._HOT_CACHE
-    hot_rows = set(map(tuple, SQ.construct_query(quads, text).collect()))
-    assert len(SQ._HOT_CACHE) == 1  # urn:a only (urn:name is below 3)
-    ((key, frame),) = list(SQ._HOT_CACHE.items())
-    assert key[2] == "urn:a"
-    assert frame.storageLevel.useMemory or frame.storageLevel.useDisk
-    # a different query over the SAME store reuses the frame
-    SQ.construct_query(
-        quads,
-        """CONSTRUCT { ?x <urn:o:x> ?y } WHERE {
-             ?x <urn:a> ?y . {} UNION { ?x <urn:a> ?y2 }
-             FILTER EXISTS { ?x <urn:a> ?y } }""",
-    ).collect()
-    assert len(SQ._HOT_CACHE) == 1
-    # disabled path produces identical rows
-    monkeypatch.setenv("SPARK_GRAFT_SPARQL_HOT_PREDS", "0")
-    SQ.clear_plan_cache()
-    assert not SQ._HOT_CACHE
-    assert not (frame.storageLevel.useMemory or frame.storageLevel.useDisk)
-    plain_rows = set(map(tuple, SQ.construct_query(quads, text).collect()))
-    assert hot_rows == plain_rows
-    assert not SQ._HOT_CACHE
-    SQ.clear_plan_cache()
-
-
-def test_hot_posting_lists_heap_gate(spark, monkeypatch):
-    """Posting lists are OPT-IN (=1) and, even opted in, engage only
-    when the local JVM heap clears _HOT_MIN_HEAP_BYTES — a default
-    1 GiB driver OOMs building broadcasts next to persisted lists
-    (r10 plain-session sweep). Unset -> always off."""
-    quads = _quads(
-        spark,
-        [("e1", "urn:a", "Doc", None, "g"), ("e2", "urn:a", "Doc", None, "g")],
-    )
-    text = """CONSTRUCT { ?x <urn:o:x> ?y } WHERE {
-        ?x <urn:a> ?y . {} UNION { ?x <urn:a> ?y2 }
-        FILTER EXISTS { ?x <urn:a> ?y } }"""
-    # default: off, regardless of heap
-    monkeypatch.delenv("SPARK_GRAFT_SPARQL_HOT_PREDS", raising=False)
-    assert SQ._hot_heap_ok(spark)  # tuned test session (16 GiB)
-    SQ.clear_plan_cache()
-    SQ.construct_query(quads, text).collect()
-    assert not SQ._HOT_CACHE
-    # opted in on a big heap: engages
-    monkeypatch.setenv("SPARK_GRAFT_SPARQL_HOT_PREDS", "1")
-    SQ.clear_plan_cache()
-    SQ.construct_query(quads, text).collect()
-    assert len(SQ._HOT_CACHE) == 1
-    # opted in on a simulated default-sized JVM: the gate refuses
-    monkeypatch.setattr(SQ, "_hot_heap_ok", lambda _s: False)
-    SQ.clear_plan_cache()
-    SQ.construct_query(quads, text).collect()
-    assert not SQ._HOT_CACHE
-    SQ.clear_plan_cache()
-
-
 def test_star_fusion_differential(spark, monkeypatch):
     """Property-table STAR fusion (same-subject constant-predicate
     triples -> one predicate-IN scan + one subject pivot, r11) must be

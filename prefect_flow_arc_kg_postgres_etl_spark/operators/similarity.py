@@ -502,12 +502,15 @@ def kmeans_int(
     anyway."""
     from pyspark.sql import Window
 
+    # A null or empty vector has no distance to any centroid (a null
+    # sorts first in the assignment window) and no dimension to add to
+    # an update, so it is left out before seeding.
     vint = vectors.select(
         F.col(id_col).alias("vec_id"),
         F.transform(
             vec_col, lambda x: F.round(x.cast("double") * scale).cast("long")
         ).alias("v"),
-    )
+    ).filter(F.size("v") > 0)
     seeds = vint.orderBy("vec_id").limit(k)
     centroids = seeds.select(
         F.col("vec_id").cast("bigint").alias("cid"), F.col("v").alias("c")

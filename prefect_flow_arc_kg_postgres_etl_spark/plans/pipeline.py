@@ -595,6 +595,7 @@ vint AS (
                         x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000) AS BIGINT))
            AS v
   FROM embeddings
+  WHERE len(embedding) > 0
 ),
 bks AS (
   SELECT vec_id, embedding,
@@ -1543,6 +1544,7 @@ WITH vint AS (
                         x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000) AS BIGINT))
            AS v
   FROM embeddings
+  WHERE len(embedding) > 0
 ),
 c0 AS (SELECT CAST(vec_id AS BIGINT) AS cid, v AS c
        FROM vint ORDER BY vec_id LIMIT 4),

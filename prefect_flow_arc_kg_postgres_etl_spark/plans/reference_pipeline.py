@@ -22,9 +22,10 @@ This module is that composition on Spark:
   ``GRAPH_FK_DEPENDENCIES`` + operators.merge.fk_merge_order give the
   same topological load order DepGraph computes in 2_database_load.ts.
 - ``build_reference_index_documents`` = step 3: update_partition.sql
-  translated join-for-join and aggregate-for-aggregate (each LATERAL
-  becomes a pre-aggregated side reduced to one row per entity BEFORE
-  the star join — map-side partials, no fan-out through the join).
+  as one Spark SQL statement, translated join-for-join and
+  aggregate-for-aggregate (each LATERAL becomes a pre-aggregated side
+  reduced to one row per entity BEFORE the star join — map-side
+  partials, no fan-out through the join).
 - ``flow_reference_pipeline`` composes the three; the flows-level
   store-backed variant (full/incremental convergence) lives in
   tests/test_reference_pipeline.py against sources/store.
@@ -57,7 +58,9 @@ live by the fixture tests in tests/test_reference_pipeline.py):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections.abc import Mapping
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -258,11 +261,15 @@ GRAPH_TABLE_SCHEMAS: dict[str, StructType] = {
 INDEX_DOCUMENTS = "graph.index_documents"
 
 
-def with_absent_tables(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """``tables`` plus an empty relation of its declared schema for
-    every graph.* table it lacks. A load lands only the tables its view
-    emitted, so a table no load has emitted is absent from the store's
-    manifest; readers see it through this as empty.
+def with_absent_tables(
+    tables: dict[str, DataFrame], names=GRAPH_TABLE_SCHEMAS
+) -> dict[str, DataFrame]:
+    """The graph.* tables ``names`` (default: all of them), each its
+    frame in ``tables`` or, where ``tables`` lacks it, an empty
+    relation of its declared schema. Only the named tables are read
+    from ``tables``. A load lands only the tables its view emitted, so
+    a table no load has emitted is absent from the store's manifest;
+    readers see it through this as empty.
 
     The empty relation must be built in the JVM: a LIMIT 0 over a
     one-row select of typed null literals, which the optimizer folds
@@ -274,20 +281,33 @@ def with_absent_tables(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
     side still runs, and each run starts Python workers. The select
     is one SQL string, so a table costs one call into the JVM rather
     than three per column."""
+    out = {name: tables[name] for name in names if name in tables}
     spark = (
-        next(iter(tables.values())).sparkSession
-        if tables
-        else SparkSession.active()
+        next(iter(out.values())).sparkSession if out else SparkSession.active()
     )
-    out = dict(tables)
-    for name, schema in GRAPH_TABLE_SCHEMAS.items():
+    for name in names:
         if name not in out:
             cols = ", ".join(
                 f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
-                for f in schema
+                for f in GRAPH_TABLE_SCHEMAS[name]
             )
             out[name] = spark.sql(f"SELECT {cols} LIMIT 0")
     return out
+
+
+# The graph.* tables update_partition.sql reads: the document build's
+# inputs, and the only tables the DuckDB oracle pivots.
+DOCUMENT_TABLES = frozenset({
+    "graph.intellectual_entity", "graph.organization",
+    "graph.dcterms_format", "graph.premis_identifier", "graph.file",
+    "graph.includes", "graph.representation", "graph.schema_role",
+    "graph.thing", "graph.schema_spatial", "graph.schema_temporal",
+    "graph.schema_keywords", "graph.schema_genre",
+    "graph.schema_in_language", "graph.ha_des_coloring_type",
+    "graph.carrier", "graph.schema_license", "graph.schema_mentions",
+    "graph.collection", "graph.schema_is_part_of",
+    "graph.mh_fragment_identifier", "graph.schema_alternate_name",
+})
 
 
 # The FK graph 2_database_load.ts discovers via get_dependent_tables
@@ -442,13 +462,39 @@ def table_from_wide(wide: DataFrame, table: str, cols: list[str]) -> DataFrame:
     )
 
 
-class ViewTables(dict):
-    """graph.* table name -> frame, every one extracted from ``wide``,
-    the persisted pivot of one triple stream."""
+class ViewTables(Mapping):
+    """graph.* table name -> frame over ``wide``, the persisted pivot of
+    one triple stream, in FK load order (merge level, then name;
+    tables outside the FK map last — iterate it to replay
+    2_database_load.ts's upsert sequence).
 
-    def __init__(self, wide: DataFrame):
-        super().__init__()
+    A table's frame is extracted (``table_from_wide``) on its first
+    access and kept: a caller that reads only the tables a slice
+    emitted builds only those, while one that iterates every table
+    (``dict(...)``, ``items()``) still gets them all. Membership and
+    iteration read the names only and build nothing."""
+
+    def __init__(self, wide: DataFrame, columns: dict[str, list[str]]):
         self.wide = wide
+        self._columns = columns
+        self._frames: dict[str, DataFrame] = {}
+
+    def __getitem__(self, name: str) -> DataFrame:
+        df = self._frames.get(name)
+        if df is None:
+            df = self._frames[name] = table_from_wide(
+                self.wide, name, self._columns[name]
+            )
+        return df
+
+    def __contains__(self, name: object) -> bool:
+        return name in self._columns
+
+    def __iter__(self):
+        return iter(self._columns)
+
+    def __len__(self) -> int:
+        return len(self._columns)
 
     def emitted(self) -> set[str]:
         """The tables the stream has records for: one small distinct
@@ -466,37 +512,12 @@ def pivot_view_tables(
     tables: dict[str, list[str]] | None = None,
 ) -> ViewTables:
     """The full graph.* table set from one triple stream, in FK load
-    order (the dict is ordered by merge level, then name — iterate it
-    to replay 2_database_load.ts's upsert sequence)."""
+    order, over one persisted pivot (``ViewTables``)."""
     tables = tables if tables is not None else GRAPH_TABLE_COLUMNS
-    wide = pivot_wide(triples).persist()
-    out = ViewTables(wide)
-    for level in graph_load_order():
-        for name in level:
-            if name in tables:
-                out[name] = table_from_wide(wide, name, tables[name])
-    for name in tables:  # tables outside the FK map load last
-        if name not in out:
-            out[name] = table_from_wide(wide, name, tables[name])
-    return out
-
-
-def _sorted_join(col, sep: str = "|", distinct: bool = False):
-    """Deterministic aggregate-to-string: sorted, null-skipping,
-    NULL (not '') when no values — matching DuckDB's
-    string_agg(.. ORDER BY ..) exactly."""
-    collected = F.collect_set(col) if distinct else F.collect_list(col)
-    return F.nullif(F.array_join(F.array_sort(collected), sep), F.lit(""))
-
-
-_SLUG = r"[^a-zA-Z0-9]+"
-
-
-def _slug(col):
-    """graph.create_slug(update_partition.sql:58): lowercase,
-    non-alphanumeric runs to single dashes, trimmed."""
-    return F.expr(
-        f"trim(BOTH '-' FROM lower(regexp_replace({col}, '{_SLUG}', '-')))"
+    order = [n for level in graph_load_order() for n in level if n in tables]
+    order += [n for n in tables if n not in order]
+    return ViewTables(
+        pivot_wide(triples).persist(), {n: tables[n] for n in order}
     )
 
 
@@ -542,545 +563,416 @@ SYNTHETIC_STORE_ADAPTER = ReferenceAdapter(
 )
 
 
+# update_partition.sql:1-366 as one Spark SQL statement. ``{table}``
+# placeholders are the graph.* frames (spark.sql's DataFrame
+# arguments); ``:name`` markers are the adapter's values, bound as
+# parameters. Every jsonb_agg becomes a sorted, null-skipping,
+# '|'-joined string that is NULL rather than '' when empty
+# (DuckDB's string_agg(.. ORDER BY ..)).
+_DOCUMENTS_SQL = r"""
+WITH
+-- org (:54-60), with graph.create_slug (:58) of the label
+org AS (
+  SELECT org_identifier AS org_code,
+         org_identifier AS schema_maintainer_identifier,
+         skos_pref_label AS schema_maintainer_name,
+         ha_org_sector AS organization_sector,
+         org_classification AS organization_type,
+         trim(BOTH '-' FROM lower(regexp_replace(skos_pref_label, '[^a-zA-Z0-9]+', '-')))
+           AS schema_maintainer_alt_label
+  FROM {organization}
+),
+-- dcterms_format pick-one (INNER, :62-74): newspaper, then image,
+-- then anything, min as the tiebreak
+fmt AS (
+  SELECT intellectual_entity_id AS k,
+         substring(min(concat(CASE WHEN dcterms_format = 'newspaper' THEN '1'
+                                   WHEN dcterms_format = 'image' THEN '2'
+                                   ELSE '3' END, ':', dcterms_format)), 3, 1000)
+           AS dcterms_format
+  FROM {dcterms_format}
+  WHERE NOT dcterms_format IN ('set', ' document', 'newspaperpage')
+  GROUP BY intellectual_entity_id
+),
+-- premis_identifier type:value pairs (:76-81)
+pid AS (
+  SELECT intellectual_entity_id AS k,
+         nullif(array_join(array_sort(collect_list(
+           concat(coalesce(type, ''), ':', value))), '|'), '') AS premis_identifier
+  FROM {premis_identifier}
+  GROUP BY intellectual_entity_id
+),
+-- schema_duration (:83-103): max over mp4 files and media fragments
+dur AS (
+  SELECT k, max(d) AS schema_duration FROM (
+    SELECT r.premis_represents AS k,
+           CAST(regexp_extract(f.schema_duration, '(\\d+)', 1) AS BIGINT) AS d
+    FROM {file} f
+    JOIN {includes} i ON i.file_id = f.subject
+    JOIN {representation} r ON r.subject = i.representation_id
+    WHERE f.ebucore_has_mime_type = 'video/mp4' AND f.schema_duration IS NOT NULL
+    UNION ALL
+    SELECT premis_represents AS k,
+           CAST(schema_end_time AS BIGINT) - CAST(schema_start_time AS BIGINT) AS d
+    FROM {representation}
+    WHERE is_media_fragment_of IS NOT NULL
+  )
+  GROUP BY k
+),
+-- thumbnails (:105-153): fragment, representation and first-position
+-- child legs, distinct; a null or non-numeric schema_position sorts
+-- after every real one (DuckDB sorts nulls last, Spark first)
+thumbs AS (
+  SELECT k, nullif(array_join(array_sort(collect_set(u)), '|'), '') AS schema_thumbnail_url
+  FROM (
+    SELECT r.premis_represents AS k, f.schema_thumbnail_url AS u
+    FROM {representation} r
+    JOIN {file} f ON r.is_media_fragment_of = f.subject
+    WHERE f.schema_thumbnail_url IS NOT NULL
+    UNION ALL
+    SELECT r.premis_represents AS k, f.schema_thumbnail_url AS u
+    FROM {file} f
+    JOIN {includes} i ON i.file_id = f.subject
+    JOIN {representation} r ON r.subject = i.representation_id
+    WHERE f.schema_thumbnail_url IS NOT NULL AND r.is_media_fragment_of IS NULL
+    UNION ALL
+    SELECT k, u FROM (
+      SELECT c.relation_is_part_of AS k, f.schema_thumbnail_url AS u,
+             row_number() OVER (
+               PARTITION BY c.relation_is_part_of
+               ORDER BY coalesce(try_cast(c.schema_position AS INT), 2147483647),
+                        c.subject, f.schema_thumbnail_url
+             ) AS rn
+      FROM {intellectual_entity} c
+      JOIN {representation} r ON r.premis_represents = c.subject
+      JOIN {includes} i ON i.representation_id = r.subject
+      JOIN {file} f ON f.subject = i.file_id
+      WHERE c.relation_is_part_of IS NOT NULL AND f.schema_thumbnail_url IS NOT NULL
+    )
+    WHERE rn = 1
+  )
+  GROUP BY k
+),
+-- roles (:155-169): thing names per (entity, type, role), then the
+-- 'role=[names]' entries per (entity, type)
+role_names AS (
+  SELECT sr.intellectual_entity_id AS k, sr.type, sr.schema_role_name,
+         nullif(array_join(array_sort(collect_list(th.schema_name)), '|'), '') AS names
+  FROM {schema_role} sr
+  LEFT JOIN {thing} th ON th.subject = sr.thing_id
+  WHERE th.schema_name IS NOT NULL
+  GROUP BY sr.intellectual_entity_id, sr.type, sr.schema_role_name
+),
+roles AS (
+  SELECT k,
+         nullif(array_join(array_sort(collect_list(CASE WHEN type = 'schema_creator'
+           THEN concat(schema_role_name, '=[', coalesce(names, ''), ']') END)), ';'), '')
+           AS schema_creator,
+         nullif(array_join(array_sort(collect_list(CASE WHEN type = 'schema_contributor'
+           THEN concat(schema_role_name, '=[', coalesce(names, ''), ']') END)), ';'), '')
+           AS schema_contributor,
+         nullif(array_join(array_sort(collect_list(CASE WHEN type = 'schema_publisher'
+           THEN concat(schema_role_name, '=[', coalesce(names, ''), ']') END)), ';'), '')
+           AS schema_publisher
+  FROM role_names
+  GROUP BY k
+),
+-- creator/publisher text (:171-187): flat name lists
+creator_text AS (
+  SELECT sr.intellectual_entity_id AS k,
+         nullif(array_join(array_sort(collect_list(th.schema_name)), '|'), '')
+           AS schema_creator_text
+  FROM {schema_role} sr
+  LEFT JOIN {thing} th ON th.subject = sr.thing_id
+  WHERE sr.type = 'schema_creator'
+  GROUP BY sr.intellectual_entity_id
+),
+publisher_text AS (
+  SELECT sr.intellectual_entity_id AS k,
+         nullif(array_join(array_sort(collect_list(th.schema_name)), '|'), '')
+           AS schema_publisher_text
+  FROM {schema_role} sr
+  LEFT JOIN {thing} th ON th.subject = sr.thing_id
+  WHERE sr.type = 'schema_publisher'
+  GROUP BY sr.intellectual_entity_id
+),
+-- plain per-entity values (:189-237, :334-346)
+spatial AS (
+  SELECT intellectual_entity_id AS k,
+         nullif(array_join(array_sort(collect_list(schema_spatial)), '|'), '')
+           AS schema_spatial_coverage
+  FROM {schema_spatial} GROUP BY intellectual_entity_id
+),
+temporal AS (
+  SELECT intellectual_entity_id AS k,
+         nullif(array_join(array_sort(collect_list(schema_temporal)), '|'), '')
+           AS schema_temporal_coverage
+  FROM {schema_temporal} GROUP BY intellectual_entity_id
+),
+keywords AS (
+  SELECT intellectual_entity_id AS k,
+         nullif(array_join(array_sort(collect_list(schema_keywords)), '|'), '')
+           AS schema_keywords
+  FROM {schema_keywords} GROUP BY intellectual_entity_id
+),
+genre AS (
+  SELECT intellectual_entity_id AS k,
+         nullif(array_join(array_sort(collect_list(schema_genre)), '|'), '')
+           AS schema_genre
+  FROM {schema_genre} GROUP BY intellectual_entity_id
+),
+language AS (
+  SELECT intellectual_entity_id AS k,
+         nullif(array_join(array_sort(collect_list(schema_in_language)), '|'), '')
+           AS schema_in_language
+  FROM {schema_in_language} GROUP BY intellectual_entity_id
+),
+medium AS (
+  SELECT intellectual_entity_id AS k,
+         nullif(array_join(array_sort(collect_set(premis_medium)), '|'), '')
+           AS dcterms_medium
+  FROM {carrier} GROUP BY intellectual_entity_id
+),
+alt_name AS (
+  SELECT intellectual_entity_id AS k,
+         nullif(array_join(array_sort(collect_list(schema_alternate_name)), '|'), '')
+           AS schema_alternate_name
+  FROM {schema_alternate_name} GROUP BY intellectual_entity_id
+),
+-- meemoofilm_color (:224-230): coloring types via the carrier
+color AS (
+  SELECT ca.intellectual_entity_id AS k,
+         nullif(array_join(array_sort(collect_list(ct.ha_des_coloring_type)), '|'), '')
+           AS meemoofilm_color
+  FROM {ha_des_coloring_type} ct
+  JOIN {carrier} ca ON ca.subject = ct.carrier_id
+  GROUP BY ca.intellectual_entity_id
+),
+-- schema_license (:232-237) and dcterms_rights_statement (:263-273)
+lic AS (
+  SELECT intellectual_entity_id AS k,
+         nullif(array_join(array_sort(collect_list(schema_license)), '|'), '')
+           AS schema_license,
+         CAST(CASE max(CASE WHEN schema_license = 'Publiek-Domein' THEN 2
+                            WHEN schema_license = 'COPYRIGHT-UNDETERMINED' THEN 1 END)
+                WHEN 2 THEN 'https://creativecommons.org/publicdomain/mark/1.0/'
+                WHEN 1 THEN 'https://rightsstatements.org/page/UND/1.0/' END AS STRING)
+           AS dcterms_rights_statement
+  FROM {schema_license} GROUP BY intellectual_entity_id
+),
+-- audio (:239-252): carrier types of film-format entities
+audio AS (
+  SELECT k, CAST(CASE a WHEN 2 THEN 'true' WHEN 1 THEN 'false' END AS STRING) AS audio
+  FROM (
+    SELECT ca.intellectual_entity_id AS k,
+           max(CASE WHEN ca.type = :audio_true_carrier THEN 2
+                    WHEN ca.type = :audio_false_carrier THEN 1 END) AS a
+    FROM {carrier} ca
+    LEFT SEMI JOIN (
+      SELECT DISTINCT intellectual_entity_id FROM {dcterms_format}
+      WHERE dcterms_format = 'film'
+    ) film ON film.intellectual_entity_id = ca.intellectual_entity_id
+    GROUP BY ca.intellectual_entity_id
+  )
+),
+-- schema_mentions (:254-261): mentions on children roll up to the parent
+mentions AS (
+  SELECT c.relation_is_part_of AS k,
+         nullif(array_join(array_sort(collect_set(th.schema_name)), '|'), '')
+           AS schema_mentions
+  FROM {schema_mentions} sm
+  JOIN {intellectual_entity} c
+    ON c.subject = sm.intellectual_entity_id AND c.relation_is_part_of IS NOT NULL
+  LEFT JOIN {thing} th ON th.subject = sm.thing_id
+  GROUP BY c.relation_is_part_of
+),
+-- schema_location_created (:294-301) via collection membership
+loc AS (
+  SELECT po.intellectual_entity_id AS k,
+         nullif(array_join(array_sort(collect_set(co.schema_location_created)), '|'), '')
+           AS schema_location_created
+  FROM {schema_is_part_of} po
+  JOIN {collection} co ON co.subject = po.collection_id
+  WHERE co.schema_location_created IS NOT NULL
+  GROUP BY po.intellectual_entity_id
+),
+-- children (:303-310): fragment-format children
+children AS (
+  SELECT c.relation_is_part_of AS k, count(*) AS n
+  FROM {intellectual_entity} c
+  JOIN {dcterms_format} dcf ON dcf.intellectual_entity_id = c.subject
+  WHERE c.relation_is_part_of IS NOT NULL AND dcf.dcterms_format LIKE '%fragment'
+  GROUP BY c.relation_is_part_of
+),
+-- schema_is_part_of (:312-324): collection names per membership type
+ipo_names AS (
+  SELECT po.intellectual_entity_id AS k, po.type,
+         nullif(array_join(array_sort(collect_list(co.schema_name)), '|'), '') AS names
+  FROM {schema_is_part_of} po
+  LEFT JOIN {collection} co ON co.subject = po.collection_id
+  GROUP BY po.intellectual_entity_id, po.type
+),
+ipo AS (
+  SELECT k,
+         nullif(array_join(array_sort(collect_list(
+           concat(type, '=[', coalesce(names, ''), ']'))), ';'), '') AS schema_is_part_of
+  FROM ipo_names
+  GROUP BY k
+),
+-- is_deleted (:326-332): bool_or over the MAM fragments
+mf AS (
+  SELECT k, CAST(CASE d WHEN 2 THEN 'true' WHEN 1 THEN 'false' END AS STRING) AS is_deleted
+  FROM (
+    SELECT intellectual_entity_id AS k,
+           max(CASE WHEN is_deleted = 'true' THEN 2
+                    WHEN is_deleted = 'false' THEN 1 END) AS d
+    FROM {mh_fragment_identifier}
+    GROUP BY intellectual_entity_id
+  )
+),
+-- schema_transcript (:348-357): child transcripts in page order
+transcript AS (
+  SELECT c.relation_is_part_of AS k,
+         array_join(transform(array_sort(collect_list(named_struct(
+           'pos', coalesce(try_cast(c.schema_position AS INT), 2147483647),
+           'cid', c.subject,
+           'tx', r.schema_transcript))), s -> s.tx), '\n') AS schema_transcript
+  FROM {intellectual_entity} c
+  JOIN {representation} r ON r.premis_represents = c.subject
+  WHERE c.relation_is_part_of IS NOT NULL AND r.schema_transcript IS NOT NULL
+  GROUP BY c.relation_is_part_of
+)
+-- the star: top-level entities, INNER org and format, every side
+-- LEFT on the entity key
+SELECT /*+ BROADCAST(org) */
+  ie.schema_identifier AS id,
+  lower(org.schema_maintainer_identifier) AS `index`,
+  ie.subject AS iri,
+  ie.schema_name,
+  alt_name.schema_alternate_name,
+  ie.schema_description,
+  ie.schema_abstract,
+  transcript.schema_transcript,
+  ie.ebucore_has_cast_member AS meemoo_description_cast,
+  ie.ebucore_synopsis AS meemoo_description_programme,
+  ie.ebucore_has_object_type AS ebucore_object_type,
+  ie.schema_identifier,
+  pid.premis_identifier,
+  org.schema_maintainer_identifier,
+  org.schema_maintainer_name,
+  org.organization_sector,
+  org.organization_type,
+  org.schema_maintainer_alt_label,
+  CAST(ie.relation_is_part_of AS STRING) AS premis_is_part_of,
+  ipo.schema_is_part_of,
+  ie.ha_des_min_date_created AS schema_date_created,
+  ie.ha_des_min_date_published AS schema_date_published,
+  ie.dcterms_available,
+  fmt.dcterms_format,
+  medium.dcterms_medium,
+  dur.schema_duration,
+  thumbs.schema_thumbnail_url,
+  roles.schema_creator,
+  roles.schema_contributor,
+  roles.schema_publisher,
+  creator_text.schema_creator_text,
+  publisher_text.schema_publisher_text,
+  spatial.schema_spatial_coverage,
+  temporal.schema_temporal_coverage,
+  keywords.schema_keywords,
+  genre.schema_genre,
+  language.schema_in_language,
+  color.meemoofilm_color,
+  lic.schema_license,
+  ie.schema_copyright_notice AS dcterms_rights,
+  audio.audio,
+  ie.ha_des_number_of_pages AS schema_number_of_pages,
+  mentions.schema_mentions,
+  lic.dcterms_rights_statement,
+  lic.dcterms_rights_statement AS reuse_category_id,
+  -- reuse rights (:275-292): the rights-table leg of the UNION is
+  -- empty (no query emits graph.rights); the statement id joins the
+  -- adapter's lookup.reuse_category rows
+  CAST(map_from_arrays(:reuse_category_ids, :reuse_category_labels)[lic.dcterms_rights_statement]
+       AS STRING) AS reuse_category_label,
+  loc.schema_location_created,
+  CAST(coalesce(children.n, 0) AS BIGINT) AS children,
+  mf.is_deleted
+FROM {intellectual_entity} ie
+JOIN org ON org.org_code = regexp_extract(ie.schema_maintainer, 'OR-[0-9]+$', 0)
+JOIN fmt ON fmt.k = ie.subject
+LEFT JOIN pid ON pid.k = ie.subject
+LEFT JOIN dur ON dur.k = ie.subject
+LEFT JOIN thumbs ON thumbs.k = ie.subject
+LEFT JOIN roles ON roles.k = ie.subject
+LEFT JOIN creator_text ON creator_text.k = ie.subject
+LEFT JOIN publisher_text ON publisher_text.k = ie.subject
+LEFT JOIN spatial ON spatial.k = ie.subject
+LEFT JOIN temporal ON temporal.k = ie.subject
+LEFT JOIN keywords ON keywords.k = ie.subject
+LEFT JOIN genre ON genre.k = ie.subject
+LEFT JOIN language ON language.k = ie.subject
+LEFT JOIN medium ON medium.k = ie.subject
+LEFT JOIN alt_name ON alt_name.k = ie.subject
+LEFT JOIN color ON color.k = ie.subject
+LEFT JOIN lic ON lic.k = ie.subject
+LEFT JOIN audio ON audio.k = ie.subject
+LEFT JOIN mentions ON mentions.k = ie.subject
+LEFT JOIN loc ON loc.k = ie.subject
+LEFT JOIN children ON children.k = ie.subject
+LEFT JOIN ipo ON ipo.k = ie.subject
+LEFT JOIN mf ON mf.k = ie.subject
+LEFT JOIN transcript ON transcript.k = ie.subject
+WHERE ie.relation_is_part_of IS NULL
+"""
+
+
 def build_reference_index_documents(
     t: dict[str, DataFrame],
     adapter: ReferenceAdapter = PRODUCTION_ADAPTER,
 ) -> DataFrame:
-    """update_partition.sql:1-366 translated structure-for-structure.
+    """update_partition.sql:1-366 as one Spark SQL statement
+    (``_DOCUMENTS_SQL``), translated structure-for-structure.
 
     One output row per TOP-LEVEL intellectual entity (relation_is_part_of
     IS NULL, update_partition.sql:358) with a qualifying dcterms_format
     (INNER LATERAL :62-74) and a resolvable maintainer organisation
     (INNER join :54-60). Every LEFT JOIN LATERAL becomes a side
-    DataFrame pre-aggregated to ONE row per entity id and left-joined —
-    the star join carries no multi-value fan-out, each side is a single
-    groupBy (map-side combine), the org dimension broadcasts.
+    pre-aggregated to ONE row per entity id and left-joined — the star
+    join carries no multi-value fan-out, each side is a single group-by
+    (map-side combine), the org dimension broadcasts.
     jsonb_agg(...) document fields are emitted as deterministic sorted
     '|'-joined strings (the document consumer is full-text search; the
     reference's jsonb arrays are unordered Postgres aggregates).
     ``updated_at``/``%(since)s`` are the incremental window (A10/A46's
-    domain) — this build is the full-sync form. A graph.* table absent
-    from ``t`` reads as empty (``with_absent_tables``).
+    domain) — this build is the full-sync form.
+
+    The star is SQL text, so building it costs one parse and one
+    analysis in the JVM, not hundreds of ``Column`` calls over py4j.
+    The graph.* frames enter as ``spark.sql`` DataFrame arguments
+    (temporary views that live for the one call); the adapter's
+    carrier types and reuse lookup are bound as named parameters.
+    Only the ``DOCUMENT_TABLES`` are read from ``t``, so a
+    ``ViewTables`` extracts just those. A table absent from ``t`` reads
+    as an empty relation of its declared schema
+    (``with_absent_tables``), which the optimizer prunes from the star
+    at plan time.
     """
-    t = with_absent_tables(t)
-    ie = t["graph.intellectual_entity"]
-    org = t["graph.organization"]
-    rep = t["graph.representation"]
-    file = t["graph.file"]
-    inc = t["graph.includes"]
-
-    key = F.col("intellectual_entity_id").alias("k")
-
-    # -- org (update_partition.sql:54-60), with the slug'd alt label.
-    org_side = F.broadcast(
-        org.select(
-            F.col("org_identifier").alias("_org_code"),
-            F.col("org_identifier").alias("schema_maintainer_identifier"),
-            F.col("skos_pref_label").alias("schema_maintainer_name"),
-            F.col("ha_org_sector").alias("organization_sector"),
-            F.col("org_classification").alias("organization_type"),
-            _slug("skos_pref_label").alias("schema_maintainer_alt_label"),
-        )
-    )
-
-    # -- dcterms_format pick-one (INNER, :62-74): exclude 'set',
-    # ' document', 'newspaperpage'; prefer newspaper, then image, then
-    # anything (min as the deterministic tiebreak).
-    fmt_rank = (
-        F.when(F.col("dcterms_format") == "newspaper", "1")
-        .when(F.col("dcterms_format") == "image", "2")
-        .otherwise("3")
-    )
-    fmt_side = (
-        t["graph.dcterms_format"]
-        .filter(
-            ~F.col("dcterms_format").isin("set", " document", "newspaperpage")
-        )
-        .select(key, F.concat(fmt_rank, F.lit(":"), "dcterms_format").alias("rf"))
-        .groupBy("k")
-        .agg(F.substring(F.min("rf"), 3, 1000).alias("dcterms_format"))
-    )
-
-    # -- premis_identifier jsonb_agg of {type: value} (:76-81)
-    pid_side = (
-        t["graph.premis_identifier"]
-        .select(
-            key,
-            F.concat(
-                F.coalesce(F.col("type"), F.lit("")), F.lit(":"), F.col("value")
-            ).alias("e"),
-        )
-        .groupBy("k")
-        .agg(_sorted_join(F.col("e")).alias("premis_identifier"))
-    )
-
-    # -- schema_duration (:83-103): MAX over the UNION of file-based
-    # (video/mp4 via includes+representation) and media-fragment-based
-    # (end - start) durations, in integer seconds.
-    file_secs = F.regexp_extract("schema_duration", r"(\d+)", 1).cast("long")
-    dur_file = (
-        file.filter(
-            (F.col("ebucore_has_mime_type") == "video/mp4")
-            & F.col("schema_duration").isNotNull()
-        )
-        .select(F.col("subject").alias("fid"), file_secs.alias("d"))
-        .join(inc.select(F.col("file_id").alias("fid"), "representation_id"), "fid")
-        .join(
-            rep.select(F.col("subject").alias("representation_id"), "premis_represents"),
-            "representation_id",
-        )
-        .select(F.col("premis_represents").alias("k"), "d")
-    )
-    dur_frag = rep.filter(F.col("is_media_fragment_of").isNotNull()).select(
-        F.col("premis_represents").alias("k"),
-        (
-            F.col("schema_end_time").cast("long")
-            - F.col("schema_start_time").cast("long")
-        ).alias("d"),
-    )
-    dur_side = (
-        dur_file.unionByName(dur_frag)
-        .groupBy("k")
-        .agg(F.max("d").alias("schema_duration"))
-    )
-
-    # -- thumbnails (:105-153): three derivations unioned, DISTINCT.
-    th_frag = rep.join(
-        file.select(
-            F.col("subject").alias("_f"), F.col("schema_thumbnail_url").alias("u")
-        ).filter(F.col("u").isNotNull()),
-        rep.is_media_fragment_of == F.col("_f"),
-    ).select(F.col("premis_represents").alias("k"), "u")
-    th_rep = (
-        file.filter(F.col("schema_thumbnail_url").isNotNull())
-        .select(F.col("subject").alias("fid"), F.col("schema_thumbnail_url").alias("u"))
-        .join(inc.select(F.col("file_id").alias("fid"), "representation_id"), "fid")
-        .join(
-            rep.filter(F.col("is_media_fragment_of").isNull()).select(
-                F.col("subject").alias("representation_id"), "premis_represents"
-            ),
-            "representation_id",
-        )
-        .select(F.col("premis_represents").alias("k"), "u")
-    )
-    # first-position child leg (:130-151): per parent, the thumbnail of
-    # the lowest-schema_position child (child id as the tiebreak).
-    # schema_position order: TRY_CAST (non-numeric -> null) with nulls
-    # coalesced BELOW every real position — DuckDB sorts nulls last,
-    # Spark first; pinning the sentinel makes both engines agree.
-    pos_order = F.coalesce(
-        F.expr("try_cast(schema_position AS int)"), F.lit(2147483647)
-    )
-    child_thumbs = (
-        ie.filter(F.col("relation_is_part_of").isNotNull())
-        .select(
-            F.col("subject").alias("cid"),
-            F.col("relation_is_part_of").alias("k"),
-            pos_order.alias("pos"),
-        )
-        .join(
-            rep.select(F.col("premis_represents").alias("cid"), F.col("subject").alias("rid")),
-            "cid",
-        )
-        .join(inc.select(F.col("representation_id").alias("rid"), "file_id"), "rid")
-        .join(
-            file.filter(F.col("schema_thumbnail_url").isNotNull()).select(
-                F.col("subject").alias("file_id"),
-                F.col("schema_thumbnail_url").alias("u"),
-            ),
-            "file_id",
-        )
-    )
-    w = Window.partitionBy("k").orderBy(F.col("pos"), F.col("cid"), F.col("u"))
-    th_child = (
-        child_thumbs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("k", "u")
-    )
-    thumb_side = (
-        th_frag.unionByName(th_rep)
-        .unionByName(th_child)
-        .groupBy("k")
-        .agg(_sorted_join(F.col("u"), distinct=True).alias("schema_thumbnail_url"))
-    )
-
-    # -- roles (:155-169): per (entity, type, role_name) the thing
-    # names, then per (entity, type) the 'role=[names]' entries.
-    thing_names = t["graph.thing"].select(
-        F.col("subject").alias("thing_id"), F.col("schema_name").alias("tn")
-    )
-    role_names = (
-        t["graph.schema_role"]
-        .join(thing_names, "thing_id", "left")
-        .filter(F.col("tn").isNotNull())
-        .groupBy(
-            F.col("intellectual_entity_id").alias("k"), "type", "schema_role_name"
-        )
-        .agg(_sorted_join(F.col("tn")).alias("names"))
-    )
-    role_entry = F.concat(
-        F.col("schema_role_name"), F.lit("=["), F.coalesce("names", F.lit("")), F.lit("]")
-    )
-    roles_side = role_names.groupBy("k").agg(
-        F.nullif(
-            F.array_join(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(F.col("type") == "schema_creator", role_entry)
-                    )
-                ),
-                ";",
-            ),
-            F.lit(""),
-        ).alias("schema_creator"),
-        F.nullif(
-            F.array_join(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(F.col("type") == "schema_contributor", role_entry)
-                    )
-                ),
-                ";",
-            ),
-            F.lit(""),
-        ).alias("schema_contributor"),
-        F.nullif(
-            F.array_join(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(F.col("type") == "schema_publisher", role_entry)
-                    )
-                ),
-                ";",
-            ),
-            F.lit(""),
-        ).alias("schema_publisher"),
-    )
-
-    # -- creator/publisher text (:171-187): flat name arrays.
-    def _role_text(role_type: str, alias: str) -> DataFrame:
-        return (
-            t["graph.schema_role"]
-            .filter(F.col("type") == role_type)
-            .join(thing_names, "thing_id", "left")
-            .groupBy(F.col("intellectual_entity_id").alias("k"))
-            .agg(_sorted_join(F.col("tn")).alias(alias))
-        )
-
-    creator_text = _role_text("schema_creator", "schema_creator_text")
-    publisher_text = _role_text("schema_publisher", "schema_publisher_text")
-
-    # -- plain per-entity value aggregates (:189-237 spatial, temporal,
-    # keywords, genre, in_language, license + :334-346 medium, alt name)
-    def _agg(table: str, col: str, alias: str, distinct: bool = False) -> DataFrame:
-        return (
-            t[table]
-            .select(key, F.col(col))
-            .groupBy("k")
-            .agg(_sorted_join(F.col(col), distinct=distinct).alias(alias))
-        )
-
-    spatial = _agg("graph.schema_spatial", "schema_spatial", "schema_spatial_coverage")
-    temporal = _agg("graph.schema_temporal", "schema_temporal", "schema_temporal_coverage")
-    keywords = _agg("graph.schema_keywords", "schema_keywords", "schema_keywords")
-    genre = _agg("graph.schema_genre", "schema_genre", "schema_genre")
-    language = _agg("graph.schema_in_language", "schema_in_language", "schema_in_language")
-    medium = _agg("graph.carrier", "premis_medium", "dcterms_medium", distinct=True)
-    alt_name = _agg(
-        "graph.schema_alternate_name", "schema_alternate_name", "schema_alternate_name"
-    )
-
-    # -- meemoofilm_color (:224-230): coloring type via carrier.
-    color_side = (
-        t["graph.ha_des_coloring_type"]
-        .select(F.col("carrier_id").alias("_c"), "ha_des_coloring_type")
-        .join(
-            t["graph.carrier"].select(F.col("subject").alias("_c"), key),
-            "_c",
-        )
-        .groupBy("k")
-        .agg(_sorted_join(F.col("ha_des_coloring_type")).alias("meemoofilm_color"))
-    )
-
-    # -- schema_license (:232-237) + dcterms_rights_statement (:263-273)
-    lic = t["graph.schema_license"].select(key, "schema_license")
-    lic_side = lic.groupBy("k").agg(
-        _sorted_join(F.col("schema_license")).alias("schema_license"),
-        F.max(
-            F.when(F.col("schema_license") == "Publiek-Domein", 2)
-            .when(F.col("schema_license") == "COPYRIGHT-UNDETERMINED", 1)
-        ).alias("_rs_rank"),
-    )
-    rights_statement = (
-        F.when(
-            F.col("_rs_rank") == 2,
-            F.lit("https://creativecommons.org/publicdomain/mark/1.0/"),
-        )
-        .when(
-            F.col("_rs_rank") == 1,
-            F.lit("https://rightsstatements.org/page/UND/1.0/"),
-        )
-        .cast("string")
-    )
-
-    # -- audio (:239-252): carrier types of film-format entities.
-    film_ids = (
-        t["graph.dcterms_format"]
-        .filter(F.col("dcterms_format") == "film")
-        .select(key)
-        .distinct()
-    )
-    audio_side = (
-        t["graph.carrier"]
-        .select(key, "type")
-        .join(film_ids, "k", "left_semi")
-        .groupBy("k")
-        .agg(
-            F.max(
-                F.when(F.col("type") == adapter.audio_true_carrier, 2)
-                .when(F.col("type") == adapter.audio_false_carrier, 1)
-            ).alias("_a")
-        )
-        .select(
-            "k",
-            F.when(F.col("_a") == 2, "true")
-            .when(F.col("_a") == 1, "false")
-            .cast("string")
-            .alias("audio"),
-        )
-    )
-
-    # -- schema_mentions (:254-261): mentions on CHILD entities roll up
-    # to the parent (newspaper person mentions live on pages).
-    child_of = ie.filter(F.col("relation_is_part_of").isNotNull()).select(
-        F.col("subject").alias("_child"), F.col("relation_is_part_of").alias("k")
-    )
-    mentions_side = (
-        t["graph.schema_mentions"]
-        .select(F.col("intellectual_entity_id").alias("_child"), "thing_id")
-        .join(child_of, "_child")
-        .join(thing_names, "thing_id", "left")
-        .groupBy("k")
-        .agg(_sorted_join(F.col("tn"), distinct=True).alias("schema_mentions"))
-    )
-
-    # -- schema_location_created (:294-301): via collection membership.
-    loc_side = (
-        t["graph.schema_is_part_of"]
-        .select(key, "collection_id")
-        .join(
-            t["graph.collection"]
-            .filter(F.col("schema_location_created").isNotNull())
-            .select(
-                F.col("subject").alias("collection_id"), "schema_location_created"
-            ),
-            "collection_id",
-        )
-        .groupBy("k")
-        .agg(
-            _sorted_join(
-                F.col("schema_location_created"), distinct=True
-            ).alias("schema_location_created")
-        )
-    )
-
-    # -- children (:303-310): fragment-format children count.
-    children_side = (
-        ie.filter(F.col("relation_is_part_of").isNotNull())
-        .select(F.col("subject").alias("_cid"), F.col("relation_is_part_of").alias("k"))
-        .join(
-            t["graph.dcterms_format"]
-            .filter(F.col("dcterms_format").like("%fragment"))
-            .select(F.col("intellectual_entity_id").alias("_cid")),
-            "_cid",
-        )
-        .groupBy("k")
-        .agg(F.count("*").alias("_children"))
-    )
-
-    # -- schema_is_part_of object agg (:312-324).
-    ipo_names = (
-        t["graph.schema_is_part_of"]
-        .select(key, "collection_id", "type")
-        .join(
-            t["graph.collection"].select(
-                F.col("subject").alias("collection_id"),
-                F.col("schema_name").alias("cn"),
-            ),
-            "collection_id",
-            "left",
-        )
-        .groupBy("k", "type")
-        .agg(_sorted_join(F.col("cn")).alias("names"))
-    )
-    ipo_side = ipo_names.groupBy("k").agg(
-        F.nullif(
-            F.array_join(
-                F.array_sort(
-                    F.collect_list(
-                        F.concat(
-                            F.col("type"),
-                            F.lit("=["),
-                            F.coalesce("names", F.lit("")),
-                            F.lit("]"),
-                        )
-                    )
-                ),
-                ";",
-            ),
-            F.lit(""),
-        ).alias("schema_is_part_of")
-    )
-
-    # -- is_deleted (:326-332): bool_or over the MAM fragments.
-    mf_side = (
-        t["graph.mh_fragment_identifier"]
-        .select(key, "is_deleted")
-        .groupBy("k")
-        .agg(
-            F.max(
-                F.when(F.col("is_deleted") == "true", 2)
-                .when(F.col("is_deleted") == "false", 1)
-            ).alias("_d")
-        )
-        .select(
-            "k",
-            F.when(F.col("_d") == 2, "true")
-            .when(F.col("_d") == 1, "false")
-            .cast("string")
-            .alias("is_deleted"),
-        )
-    )
-
-    # -- schema_transcript (:348-357): child transcripts in page order.
-    transcript_side = (
-        ie.filter(F.col("relation_is_part_of").isNotNull())
-        .select(
-            F.col("subject").alias("cid"),
-            F.col("relation_is_part_of").alias("k"),
-            pos_order.alias("pos"),
-        )
-        .join(
-            rep.filter(F.col("schema_transcript").isNotNull()).select(
-                F.col("premis_represents").alias("cid"),
-                F.col("schema_transcript").alias("tx"),
-            ),
-            "cid",
-        )
-        .groupBy("k")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "cid", "tx"))),
-                    lambda s: s["tx"],
-                ),
-                "\n",
-            ).alias("schema_transcript")
-        )
-    )
-
-    # -- the star join: top-level entities, INNER org + format, every
-    # aggregate side LEFT on the entity key.
-    base = (
-        ie.filter(F.col("relation_is_part_of").isNull())
-        .withColumn(
-            "_org_code", F.regexp_extract("schema_maintainer", "OR-[0-9]+$", 0)
-        )
-        .join(org_side, "_org_code")
-        .withColumnRenamed("subject", "k")
-    )
-    doc = (
-        base.join(fmt_side, "k")
-        .join(pid_side, "k", "left")
-        .join(dur_side, "k", "left")
-        .join(thumb_side, "k", "left")
-        .join(roles_side, "k", "left")
-        .join(creator_text, "k", "left")
-        .join(publisher_text, "k", "left")
-        .join(spatial, "k", "left")
-        .join(temporal, "k", "left")
-        .join(keywords, "k", "left")
-        .join(genre, "k", "left")
-        .join(language, "k", "left")
-        .join(medium, "k", "left")
-        .join(alt_name, "k", "left")
-        .join(color_side, "k", "left")
-        .join(lic_side, "k", "left")
-        .join(audio_side, "k", "left")
-        .join(mentions_side, "k", "left")
-        .join(loc_side, "k", "left")
-        .join(children_side, "k", "left")
-        .join(ipo_side, "k", "left")
-        .join(mf_side, "k", "left")
-        .join(transcript_side, "k", "left")
-    )
-
-    rs = rights_statement.alias("dcterms_rights_statement")
-    # reuse rights (:275-292): the rights-table leg of the UNION is
-    # empty (no query emits graph.rights); the statement-derived id
-    # joins the adapter's lookup.reuse_category rows.
-    reuse_id = rights_statement.alias("reuse_category_id")
-    _lookup = F.create_map(
-        *[
-            F.lit(x)
-            for pair in adapter.reuse_category_lookup
-            for x in pair
-        ]
-    )
-    reuse_label = (
-        _lookup[rights_statement].cast("string").alias("reuse_category_label")
-    )
-
-    return doc.select(
-        F.col("schema_identifier").alias("id"),
-        F.lower("schema_maintainer_identifier").alias("index"),
-        F.col("k").alias("iri"),
-        "schema_name",
-        "schema_alternate_name",
-        "schema_description",
-        "schema_abstract",
-        "schema_transcript",
-        F.col("ebucore_has_cast_member").alias("meemoo_description_cast"),
-        F.col("ebucore_synopsis").alias("meemoo_description_programme"),
-        F.col("ebucore_has_object_type").alias("ebucore_object_type"),
-        "schema_identifier",
-        "premis_identifier",
-        "schema_maintainer_identifier",
-        "schema_maintainer_name",
-        "organization_sector",
-        "organization_type",
-        "schema_maintainer_alt_label",
-        F.col("relation_is_part_of").cast("string").alias("premis_is_part_of"),
-        "schema_is_part_of",
-        F.col("ha_des_min_date_created").alias("schema_date_created"),
-        F.col("ha_des_min_date_published").alias("schema_date_published"),
-        "dcterms_available",
-        "dcterms_format",
-        "dcterms_medium",
-        "schema_duration",
-        "schema_thumbnail_url",
-        "schema_creator",
-        "schema_contributor",
-        "schema_publisher",
-        "schema_creator_text",
-        "schema_publisher_text",
-        "schema_spatial_coverage",
-        "schema_temporal_coverage",
-        "schema_keywords",
-        "schema_genre",
-        "schema_in_language",
-        "meemoofilm_color",
-        "schema_license",
-        F.col("schema_copyright_notice").alias("dcterms_rights"),
-        "audio",
-        F.col("ha_des_number_of_pages").alias("schema_number_of_pages"),
-        "schema_mentions",
-        rs,
-        reuse_id,
-        reuse_label,
-        "schema_location_created",
-        F.coalesce(F.col("_children"), F.lit(0)).cast("long").alias("children"),
-        "is_deleted",
+    frames = {
+        name.split(".", 1)[1]: df
+        for name, df in with_absent_tables(t, DOCUMENT_TABLES).items()
+    }
+    spark = frames["intellectual_entity"].sparkSession
+    lookup = adapter.reuse_category_lookup
+    return spark.sql(
+        _DOCUMENTS_SQL,
+        args={
+            "audio_true_carrier": adapter.audio_true_carrier,
+            "audio_false_carrier": adapter.audio_false_carrier,
+            "reuse_category_ids": [k for k, _ in lookup],
+            "reuse_category_labels": [v for _, v in lookup],
+        },
+        **frames,
     )
 
 
@@ -1162,11 +1054,13 @@ def flow_reference_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _merge_view_slice(
     spark: SparkSession, store_dir: str, triples: DataFrame
-) -> tuple[dict[str, DataFrame], str | None]:
+) -> tuple[dict[str, DataFrame], str | None, DataFrame]:
     """The FK-ordered upsert of one view-triple slice over the store's
     latest manifest (2_database_load.ts's sequential mergeTable loop,
     which runs MERGE INTO only for the tables that received rows).
-    Returns (frames to land, the manifest the merge read).
+    Returns (frames to land, the manifest the merge read, the
+    persisted pivot they read — the caller unpersists it once the
+    frames have landed).
 
     The slice's emitted tables come from one distinct over the
     persisted pivot, on every load, the first one included:
@@ -1181,7 +1075,10 @@ def _merge_view_slice(
     - A table the store holds unpinned (written by its live pointer
       only) is upserted over that version, emitted or not, so the
       manifest takes it in.
-    - An emitted table the store does not hold lands as pivoted."""
+    - An emitted table the store does not hold lands as pivoted.
+
+    Only the frames of tables merged here are extracted from the pivot
+    (``ViewTables`` builds a frame on first access)."""
     import os
 
     from prefect_flow_arc_kg_postgres_etl_spark.sources import store as S
@@ -1191,7 +1088,7 @@ def _merge_view_slice(
     tables = pivot_view_tables(triples)
     emitted = tables.emitted()
     merged: dict[str, DataFrame] = {}
-    for name, rows in tables.items():
+    for name in tables:
         tp = os.path.join(store_dir, f"{name}.parquet")
         schema = GRAPH_TABLE_SCHEMAS[name]
         if name in pinned:
@@ -1202,10 +1099,10 @@ def _merge_view_slice(
             target = S.read_table(spark, tp, schema)
         else:
             if name in emitted:
-                merged[name] = rows
+                merged[name] = tables[name]
             continue
-        merged[name] = M.upsert(target, rows, keys=["subject"])
-    return merged, base
+        merged[name] = M.upsert(target, tables[name], keys=["subject"])
+    return merged, base, tables.wide
 
 
 def reference_pipeline_flow(
@@ -1236,12 +1133,14 @@ def reference_pipeline_flow(
       pins the merge read), so no upsert lineage runs twice;
     - the manifest write stays the only commit point: every
       graph.* table and the documents land in one snapshot;
-    - only the documents are read back, at their manifest version."""
+    - only the documents are read back, at their manifest version;
+    - the persisted pivot is released once the commit returns: the
+      documents are read from the store, so nothing reads it after."""
     from prefect_flow_arc_kg_postgres_etl_spark.sources import store as S
 
     if triples is None:
         triples = all_view_triples(spark, sf_dir)
-    merged, base = _merge_view_slice(spark, store_dir, triples)
+    merged, base, pivot = _merge_view_slice(spark, store_dir, triples)
     schemas = dict(GRAPH_TABLE_SCHEMAS)
 
     def documents(t: dict[str, DataFrame]) -> DataFrame:
@@ -1249,13 +1148,16 @@ def reference_pipeline_flow(
         schemas[INDEX_DOCUMENTS] = docs.schema
         return docs
 
-    manifest = S.commit_tables(
-        store_dir,
-        merged,
-        carry_from=base,
-        derived={INDEX_DOCUMENTS: documents},
-        schemas=schemas,
-    )
+    try:
+        manifest = S.commit_tables(
+            store_dir,
+            merged,
+            carry_from=base,
+            derived={INDEX_DOCUMENTS: documents},
+            schemas=schemas,
+        )
+    finally:
+        pivot.unpersist()
     return S.read_snapshot(
         spark, store_dir, manifest, [INDEX_DOCUMENTS], schemas
     )[INDEX_DOCUMENTS]
@@ -1360,7 +1262,7 @@ def reference_pipeline_oracle() -> str:
     pivots = ",\n".join(
         _pivot_cte(tbl, cols)
         for tbl, cols in GRAPH_TABLE_COLUMNS.items()
-        if tbl in _ORACLE_TABLES
+        if tbl in DOCUMENT_TABLES
     )
     return f"""
 WITH trip AS MATERIALIZED (
@@ -1377,20 +1279,6 @@ tn AS MATERIALIZED (
 {pivots},
 {_ORACLE_BODY}
 """
-
-
-# Only the tables update_partition.sql touches need oracle pivots.
-_ORACLE_TABLES = {
-    "graph.intellectual_entity", "graph.organization",
-    "graph.dcterms_format", "graph.premis_identifier", "graph.file",
-    "graph.includes", "graph.representation", "graph.schema_role",
-    "graph.thing", "graph.schema_spatial", "graph.schema_temporal",
-    "graph.schema_keywords", "graph.schema_genre",
-    "graph.schema_in_language", "graph.ha_des_coloring_type",
-    "graph.carrier", "graph.schema_license", "graph.schema_mentions",
-    "graph.collection", "graph.schema_is_part_of",
-    "graph.mh_fragment_identifier", "graph.schema_alternate_name",
-}
 
 
 _ORACLE_BODY = """
@@ -2312,9 +2200,7 @@ def reference_delete_flow(
     snap = S.read_snapshot(
         spark, store_dir, man, schemas=GRAPH_TABLE_SCHEMAS
     )
-    tables = with_absent_tables(
-        {name: df for name, df in snap.items() if name in GRAPH_TABLE_COLUMNS}
-    )
+    tables = with_absent_tables(snap)
     live = _live_tables(tables)
     # r10: worklist-scoped rebuild — only documents the cascade can
     # change pay the star join; the rest pass through from the
@@ -2448,7 +2334,7 @@ def main_reference_flow(
 
     if act["load"]:
         tr = triples if triples is not None else all_view_triples(spark, sf_dir)
-        merged, _base = _merge_view_slice(spark, store_dir, tr)
+        merged, _base, pivot = _merge_view_slice(spark, store_dir, tr)
         # Inherit the prior snapshot: a load run updates tables but
         # must not orphan the untouched tables or the standing
         # graph.index_documents (the reference's kg_view/db_load
@@ -2457,9 +2343,12 @@ def main_reference_flow(
         # resolution happens inside the commit lock, so a commit
         # landing while the merge computes can never be un-pinned (r11
         # advice, store.py).
-        out["load"] = S.commit_tables(
-            store_dir, merged, carry_from=S.CARRY_LATEST
-        )
+        try:
+            out["load"] = S.commit_tables(
+                store_dir, merged, carry_from=S.CARRY_LATEST
+            )
+        finally:
+            pivot.unpersist()
 
     if act["index"]:
         man = S.latest_manifest(store_dir)

@@ -130,6 +130,14 @@ def get_spark(app_name: str = "arc-kg-spark", cpus: int | None = None) -> SparkS
         # uniformly). Size it to hold the whole suite. Read once at
         # CodeGenerator static init, so it must be set at session build.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # No Python call-site capture per DataFrame/Column call. By
+        # default every Column method and F.col records the Python
+        # stack and makes about four extra py4j calls; that was about
+        # half of the driver-side plan-building time of a small KG
+        # night (SPARQL construct, pivot, document star). Error
+        # messages lose only the Python file:line "DataFrame" query
+        # context. Static: PySpark reads it once per process.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

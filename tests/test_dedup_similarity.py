@@ -366,6 +366,30 @@ def test_kmeans_int_partitions_all_vectors_deterministically(spark):
     assert len(a) == 4 and all(r[1] > 0 for r in a)
 
 
+def test_kmeans_int_leaves_out_null_and_empty_vectors(spark):
+    """A null or empty embedding has no distance to any centroid and no
+    dimension to add to an update: it is left out before seeding, so
+    n_members counts only the non-empty vectors and the clusters equal
+    those of a run without the two rows. Both get the smallest ids,
+    where they would otherwise be seeds."""
+    from prefect_flow_arc_kg_postgres_etl_spark.operators.similarity import (
+        kmeans_int,
+    )
+
+    emb = load_table(spark, SF_SMOKE, "embeddings").select(
+        "vec_id", "embedding"
+    )
+    lo = emb.agg(F.min("vec_id")).first()[0]
+    blanks = spark.createDataFrame([(lo - 2, None), (lo - 1, [])], emb.schema)
+    want = {tuple(r) for r in kmeans_int(emb, k=4, iters=2).collect()}
+    got = {
+        tuple(r)
+        for r in kmeans_int(emb.unionByName(blanks), k=4, iters=2).collect()
+    }
+    assert got == want
+    assert sum(r[1] for r in got) == emb.count()
+
+
 class TestIndexedIncremental:
     """r7: the persisted-index ingest probe (build_dedup_index +
     incremental_dup_pairs_indexed) must (a) match the in-plan

@@ -179,14 +179,41 @@ def _fixture_rows() -> dict[str, list[dict]]:
         "graph.collection": coll,
         "graph.mh_fragment_identifier": mf,
         "graph.schema_role": role,
-        # untouched-by-fixture tables: empty
-        "graph.ha_des_coloring_type": [],
-        "graph.schema_spatial": [],
-        "graph.schema_temporal": [],
-        "graph.schema_keywords": [],
-        "graph.schema_genre": [],
-        "graph.schema_in_language": [],
-        "graph.schema_alternate_name": [],
+        # coloring types reach the entity through its carriers
+        "graph.ha_des_coloring_type": [
+            dict(subject="ct1", carrier_id="c2", ha_des_coloring_type="zwart-wit"),
+            dict(subject="ct2", carrier_id="c3", ha_des_coloring_type="kleur"),
+            dict(subject="ct3", carrier_id="c1", ha_des_coloring_type="kleur"),
+        ],
+        "graph.schema_spatial": [
+            dict(subject="sp1", intellectual_entity_id=E + "1", schema_spatial="Gent"),
+            dict(subject="sp2", intellectual_entity_id=E + "1",
+                 schema_spatial="Antwerpen"),
+            dict(subject="sp3", intellectual_entity_id=E + "5", schema_spatial="Brugge"),
+        ],
+        "graph.schema_temporal": [
+            dict(subject="te1", intellectual_entity_id=E + "2", schema_temporal="1914"),
+        ],
+        "graph.schema_keywords": [
+            dict(subject="kw1", intellectual_entity_id=E + "1", schema_keywords="oorlog"),
+            dict(subject="kw2", intellectual_entity_id=E + "1", schema_keywords="krant"),
+            dict(subject="kw3", intellectual_entity_id=E + "4", schema_keywords="stad"),
+        ],
+        "graph.schema_genre": [
+            dict(subject="g1", intellectual_entity_id=E + "2", schema_genre="drama"),
+            dict(subject="g2", intellectual_entity_id=E + "2",
+                 schema_genre="documentaire"),
+        ],
+        "graph.schema_in_language": [
+            dict(subject="la1", intellectual_entity_id=E + "3", schema_in_language="nl"),
+            dict(subject="la2", intellectual_entity_id=E + "3", schema_in_language="fr"),
+        ],
+        "graph.schema_alternate_name": [
+            dict(subject="an1", intellectual_entity_id=E + "4",
+                 schema_alternate_name="Foto van de stad"),
+            dict(subject="an2", intellectual_entity_id=E + "1c1",
+                 schema_alternate_name="blad 2"),
+        ],
     }
 
 
@@ -275,6 +302,20 @@ def test_previously_dead_arms_are_live(spark):
     assert e1["schema_publisher"] == "uitgever=[Ada]"
     # the slug'd maintainer alt label
     assert e1["schema_maintainer_alt_label"] == "het-archief-v-z-w"
+    # plain per-entity value aggregates, sorted and '|'-joined; rows of
+    # a child (E1c1) or a dropped entity (E5) reach no document
+    assert e1["schema_spatial_coverage"] == "Antwerpen|Gent"
+    assert e2["schema_temporal_coverage"] == "1914"
+    assert e1["schema_keywords"] == "krant|oorlog"
+    assert e4["schema_keywords"] == "stad"
+    assert e2["schema_genre"] == "documentaire|drama"
+    assert e3["schema_in_language"] == "fr|nl"
+    assert e4["schema_alternate_name"] == "Foto van de stad"
+    assert e1["schema_alternate_name"] is None
+    # coloring types via the entity's carriers (E3 has two carriers)
+    assert e3["meemoofilm_color"] == "kleur|zwart-wit"
+    assert e2["meemoofilm_color"] == "kleur"
+    assert e4["meemoofilm_color"] is None
 
 
 def test_graph_load_order_respects_fk():
@@ -533,6 +574,77 @@ def test_cold_load_job_budget(spark, tmp_path):
     )
     jobs = dag.numTotalJobs() - before
     assert jobs <= 30, jobs
+
+
+def test_sessions_skip_call_site_capture(spark):
+    """get_spark turns off PySpark's per-call Python call-site capture
+    (a stack walk and about four extra py4j calls per Column method).
+    PySpark caches the flag for the whole process at its first Column
+    call, so the conf value itself is checked."""
+    assert (
+        spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    )
+
+
+def test_merge_extracts_only_the_emitted_tables(spark, tmp_path, monkeypatch):
+    """A slice that emits two tables into an empty store extracts two
+    frames from the pivot, not one per graph.* table; a caller that
+    iterates the table set still gets every table, in FK load order."""
+    calls = []
+    extract = RP.table_from_wide
+
+    def counted(wide, table, cols):
+        calls.append(table)
+        return extract(wide, table, cols)
+
+    monkeypatch.setattr(RP, "table_from_wide", counted)
+    rows1, _ = _night_rows()
+    rows = {n: rows1[n] for n in ("graph.organization", "graph.schema_keywords")}
+    view = _view_triples(spark, rows)
+    merged, base, pivot = RP._merge_view_slice(
+        spark, str(tmp_path / "store"), view
+    )
+    pivot.unpersist()
+    assert base is None
+    assert sorted(calls) == sorted(merged) == sorted(rows)
+
+    calls.clear()
+    tables = RP.pivot_view_tables(view)
+    assert list(tables) == [
+        n for level in RP.graph_load_order() for n in level
+    ]
+    assert calls == []
+    assert len(dict(tables)) == len(calls) == len(RP.GRAPH_TABLE_COLUMNS)
+    tables.wide.unpersist()
+
+
+def test_flows_release_the_pivot(spark, tmp_path, monkeypatch):
+    """The load's persisted pivot is released once its commit returns:
+    after a reference_pipeline_flow and a main_reference_flow load the
+    session's cache manager holds no entry for either pivot and no new
+    cached RDD."""
+    from pyspark import StorageLevel
+
+    pivots = []
+    pivot_wide = RP.pivot_wide
+
+    def recorded(triples):
+        pivots.append(pivot_wide(triples))
+        return pivots[-1]
+
+    monkeypatch.setattr(RP, "pivot_wide", recorded)
+    rows1, _ = _night_rows()
+    view = _view_triples(spark, rows1)
+    sc = spark.sparkContext._jsc.sc()
+    before = sc.getPersistentRDDs().size()
+    RP.reference_pipeline_flow(spark, "unused", str(tmp_path / "a"), triples=view)
+    RP.main_reference_flow(
+        spark, "unused", str(tmp_path / "b"),
+        active={"index": False, "delete": False}, triples=view,
+    )
+    assert len(pivots) == 2
+    assert all(p.storageLevel == StorageLevel.NONE for p in pivots)
+    assert sc.getPersistentRDDs().size() == before
 
 
 def test_delete_flow_over_absent_tables(spark, tmp_path):

@@ -14,8 +14,9 @@ below is the data path itself:
   Spark's scheduler interleaves the jobs) -> rebuild index documents
   -> emit the ES bulk feed.
 
-Full sync is truncate-insert (overwrite); incremental is the
-distributed PK upsert via stage_then_merge. A table with no
+Full sync is truncate-insert (overwrite); incremental goes through
+stage_then_merge: the distributed PK upsert, or clear-then-insert on
+the group key for a multi-value table. A table with no
 last-modified column is re-upserted in full on incremental runs —
 idempotent, converges (the reference treats those the same way).
 """
@@ -30,6 +31,7 @@ from pyspark.sql import functions as F
 from prefect_flow_arc_kg_postgres_etl_spark.operators.index_documents import (
     build_index_documents,
 )
+from prefect_flow_arc_kg_postgres_etl_spark.operators import merge as M
 from prefect_flow_arc_kg_postgres_etl_spark.operators.merge import fk_merge_order
 from prefect_flow_arc_kg_postgres_etl_spark.sinks.es_bulk import write_bulk_ndjson
 from prefect_flow_arc_kg_postgres_etl_spark.sinks.jdbc import stage_then_merge
@@ -383,71 +385,33 @@ def sync_flow(
                 src = src.limit(record_limit)
             n = observed_write(src, lambda d: store.write_table(d, path))
             return n, n
-        if name in TABLE_MULTIVALUE:
-            # Incremental multi-value merge: a modified group re-emits
-            # ALL its rows (the reference's CONSTRUCT does the same for
-            # an updated entity's multi-value triples), then
-            # clear-then-insert on the group key.
-            group_key = TABLE_MULTIVALUE[name]
-            batch = src
-            s = since_for(name)
-            if s is not None and name in TABLE_MODIFIED:
-                cmp = F.col(TABLE_MODIFIED[name])
-                cond = cmp >= F.lit(s) if since == "auto" else cmp > F.lit(s)
-                changed = (
-                    src.filter(cond)
-                    .select(group_key)
-                    .distinct()
-                )
-                batch = src.join(changed, on=group_key, how="left_semi")
-            if record_limit is not None:
-                batch = batch.limit(record_limit)
-            from prefect_flow_arc_kg_postgres_etl_spark.operators.merge import (
-                clear_and_insert,
-            )
-
-            staging = f"{store_dir}/_staging/{name}"
-            n_staged = observed_write(
-                batch, lambda d: d.write.mode("overwrite").parquet(staging)
-            )
-            staged = spark.read.schema(batch.schema).parquet(staging)
-            if not store.table_exists(path):
-                # First incremental load of a never-full-synced table:
-                # the staged batch IS the initial table (same fallback
-                # stage_then_merge applies on the PK path). Detected
-                # via table_exists — a transient READ failure must
-                # surface as this table's recorded failure, not
-                # silently restart it from the batch.
-                target = None
-                merged = staged
-            else:
-                target = store.read_table(spark, path)
-            if target is not None:
-                from prefect_flow_arc_kg_postgres_etl_spark.sources.catalog import (
-                    conform_to_schema,
-                )
-
-                # Column-level intersection (get_table_columns.sql):
-                # project the batch onto the target's columns before
-                # the clear-then-insert.
-                merged = clear_and_insert(
-                    target, conform_to_schema(staged, target.schema), group_key
-                )
-            # One write: the merge lands as the next table version and
-            # the pointer swaps (sources/store.py) — no tmp-rewrite.
-            return n_staged, observed_write(
-                merged, lambda d: store.write_table(d, path)
-            )
         s = since_for(name)
         if s is not None and name in TABLE_MODIFIED:
             cmp = F.col(TABLE_MODIFIED[name])
-            src = src.filter(
+            changed = src.filter(
                 cmp >= F.lit(s) if since == "auto" else cmp > F.lit(s)
             )
+            if name in TABLE_MULTIVALUE:
+                # A modified group re-emits ALL its rows (the
+                # reference's CONSTRUCT does the same for an updated
+                # entity's multi-value triples).
+                key = TABLE_MULTIVALUE[name]
+                changed = src.join(
+                    changed.select(key).distinct(), on=key, how="left_semi"
+                )
+            src = changed
+        merge = None
+        if name in TABLE_MULTIVALUE:
+            # Multi-value tables merge by clear-then-insert on the group
+            # key instead of the PK upsert.
+            def merge(target: DataFrame, batch: DataFrame) -> DataFrame:
+                return M.clear_and_insert(target, batch, TABLE_MULTIVALUE[name])
+
         if record_limit is not None:
             src = src.limit(record_limit)
         landed = stage_then_merge(
-            spark, src, path, f"{store_dir}/_staging/{name}", TABLE_PK[name]
+            spark, src, path, f"{store_dir}/_staging/{name}",
+            TABLE_PK[name], merge,
         )
         return landed.staged, landed.merged
 

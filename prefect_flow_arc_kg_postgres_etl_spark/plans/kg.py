@@ -5907,46 +5907,22 @@ SELECT subject, predicate, object FROM t
 _KG_VIEW_NS = "urn:kg-to-postgres:"
 
 
-def pivot_view_records(
-    triples: DataFrame, table: str, columns: list[str]
-) -> DataFrame:
-    """Pivot a CONSTRUCT triple set into one table's records.
-
-    The reference streams subject-grouped quads and takes the FIRST
-    value per column (with an nl-language override, stream.ts:96-101);
-    a distributed engine has no stream order, so this takes the
-    deterministic MIN per (subject, column) — identical whenever the
-    query emits one value per column (all nine production queries do:
-    their langMatches filters implement the nl preference up front).
-    One hash aggregate keyed by subject; no window, no shuffle beyond
-    the groupBy."""
-    pred_col = F.expr(f"substring(predicate, {len(_KG_VIEW_NS) + 1})")
-    recs = triples.filter(
-        F.col("predicate").startswith(_KG_VIEW_NS)
-    ).select(F.col("subject"), pred_col.alias("col"), F.col("object"))
-    aggs = [
-        F.min(F.when(F.col("col") == c, F.col("object"))).alias(c)
-        for c in ["tableName", *columns]
-    ]
-    return (
-        recs.groupBy("subject")
-        .agg(*aggs)
-        .filter(F.col("tableName") == table)
-        .drop("tableName")
-    )
-
-
 def flow_kg_view_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference view pipeline END-TO-END: person.sparql VERBATIM
     (A67) -> triple stream -> record pivot -> the graph.thing table,
     the exact composition kg_view_flow.py + arc_db_load_flow.py
     execute against TriplyDB/Postgres (construct, stream-pivot by
-    tableName, upsert). The upsert step is merge_upsert (A5) /
-    fk_merge_order (A13); this entry grades the construct->records
-    hand-off itself."""
+    tableName, upsert). The pivot is the composed pipeline's
+    (``reference_pipeline.pivot_wide`` + ``table_from_wide``). The
+    upsert step is merge_upsert (A5) / fk_merge_order (A13); this
+    entry grades the construct->records hand-off itself."""
+    from prefect_flow_arc_kg_postgres_etl_spark.plans import (
+        reference_pipeline as RP,
+    )
+
     triples = kg_construct_real_query(spark, sf_dir)
-    return pivot_view_records(
-        triples,
+    return RP.table_from_wide(
+        RP.pivot_wide(triples),
         "graph.thing",
         ["id", "schema_name", "schema_birth_date", "schema_birth_place",
          "schema_death_date", "schema_death_place"],

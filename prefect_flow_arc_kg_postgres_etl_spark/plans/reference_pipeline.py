@@ -26,9 +26,16 @@ This module is that composition on Spark:
   aggregate-for-aggregate (each LATERAL becomes a pre-aggregated side
   reduced to one row per entity BEFORE the star join — map-side
   partials, no fan-out through the join).
-- ``flow_reference_pipeline`` composes the three; the flows-level
-  store-backed variant (full/incremental convergence) lives in
-  tests/test_reference_pipeline.py against sources/store.
+- ``flow_reference_pipeline`` composes the three;
+  ``reference_pipeline_flow`` is the same cycle against a durable
+  store (sources/store).
+- ``incremental_documents`` (the nightly index run's per-partition
+  flags, then rebuild or passthrough) and ``delete_cascade`` (the
+  delete transaction and the worklist-scoped document rebuild) are
+  the cycle's two maintenance steps. The registry entries
+  (``flow_reference_incremental``, ``flow_reference_deletes``) and the
+  durable flows (``reference_incremental_flow``,
+  ``reference_delete_flow``) call the same two functions.
 
 Scale design: every construct result is localCheckpoint'ed (nine
 ~200-scan plans would otherwise union into one driver-crushing DAG);
@@ -69,14 +76,17 @@ from prefect_flow_arc_kg_postgres_etl_spark.session import MISS, AppLRU
 
 _NS = "urn:kg-to-postgres:"
 
-# landed view-graph spills, keyed by (applicationId, sf_dir, store
-# fingerprint) — the fingerprint (file sizes + mtimes under sf_dir)
-# makes a changed store re-land instead of serving stale triples
-# (r9 ADVICE). A spill superseded by a re-land stays registered: a
-# frame returned before the store changed still scans it. Default-
-# created spill dirs are removed at interpreter exit; caller-provided
-# spill_dir paths are the caller's to manage.
-_SPILLS: dict[tuple[str, str, tuple[int, int]], str] = {}
+# Every spill dir ``_make_spill_dir`` created, removed at interpreter
+# exit. A dir is recorded when it is created, so a landing that raises
+# leaves nothing behind; a spill superseded by a re-land stays until
+# exit, because a frame returned before the store changed still scans
+# it.
+_SPILL_DIRS: list[str] = []
+
+# Landed view graphs: sf_dir -> spill dir, stamped with the store
+# fingerprint (file sizes + mtimes under sf_dir), so a changed store
+# re-lands instead of serving stale triples (r9 ADVICE).
+_VIEW_CACHE = AppLRU(8)
 
 # Unique tokens for stores that cannot be fingerprinted (remote scheme,
 # no live session): each call gets a fresh key, so the cache is
@@ -166,9 +176,8 @@ def _remove_spill(path: str) -> None:
 
 
 def _cleanup_spills() -> None:
-    for path in list(_SPILLS.values()):
-        _remove_spill(path)
-    _SPILLS.clear()
+    while _SPILL_DIRS:
+        _remove_spill(_SPILL_DIRS.pop())
 
 
 import atexit as _atexit  # noqa: E402
@@ -179,31 +188,36 @@ _atexit.register(_cleanup_spills)
 _SPILL_SEQ = iter(range(1, 1 << 30))
 
 
-def _make_spill_dir(spark: SparkSession, root: str) -> str:
-    """A fresh spill dir under ``root``. Local (or file:) roots get a
-    real mkdtemp; remote-scheme roots (hdfs://, s3a://) get a unique
+def _make_spill_dir(spark: SparkSession) -> str:
+    """A fresh spill dir under the spill root (``_spill_root``),
+    recorded for the exit sweep. Local (or file:) roots get a real
+    mkdtemp; remote-scheme roots (hdfs://, s3a://) get a unique
     per-application subpath that Spark's writers create."""
     import os
     import tempfile
 
+    root = _spill_root(spark)
     if "://" in root and not root.startswith("file:"):
-        return f"{root}/{spark.sparkContext.applicationId}-{next(_SPILL_SEQ)}"
-    local = root
-    if local.startswith("file:"):
-        local = local[len("file:"):]
-        while local.startswith("//"):
-            local = local[1:]
-    os.makedirs(local, exist_ok=True)
-    return tempfile.mkdtemp(prefix="kg_view_graph_", dir=local)
+        path = f"{root}/{spark.sparkContext.applicationId}-{next(_SPILL_SEQ)}"
+    else:
+        local = root
+        if local.startswith("file:"):
+            local = local[len("file:"):]
+            while local.startswith("//"):
+                local = local[1:]
+        os.makedirs(local, exist_ok=True)
+        path = tempfile.mkdtemp(prefix="kg_view_graph_", dir=local)
+    _SPILL_DIRS.append(path)
+    return path
 
 
-def _default_spill_root(spark: SparkSession) -> str:
-    """Default landing area for the per-query view-graph spills: under
-    the session's WAREHOUSE dir, not driver-local /tmp — on a real
-    cluster the warehouse is shared storage every executor and a
-    restarted driver can read (the r8 verdict's 100 TB watch item);
-    on local mode it is a local dir exactly like /tmp was. Override
-    per call via ``spill_dir`` or globally via SPARK_GRAFT_SPILL_DIR."""
+def _spill_root(spark: SparkSession) -> str:
+    """Landing area for the view-graph spills, the document spills and
+    the scratch stores: under the session's WAREHOUSE dir, not
+    driver-local /tmp — on a real cluster the warehouse is shared
+    storage every executor and a restarted driver can read (the r8
+    verdict's 100 TB watch item); on local mode it is a local dir
+    exactly like /tmp was. Override via SPARK_GRAFT_SPILL_DIR."""
     import os
 
     env = os.environ.get("SPARK_GRAFT_SPILL_DIR")
@@ -358,9 +372,7 @@ def graph_load_order() -> list[list[str]]:
     return M.fk_merge_order(GRAPH_FK_DEPENDENCIES)
 
 
-def all_view_triples(
-    spark: SparkSession, sf_dir: str, spill_dir: str | None = None
-) -> DataFrame:
+def all_view_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Step 1: the nine production queries VERBATIM, one triple stream.
 
     Each query's CONSTRUCT result is MATERIALIZED to parquet as its own
@@ -374,8 +386,6 @@ def all_view_triples(
     of a megaplan. The union is DISTINCT — the view graph is an RDF
     set, and set semantics at ingest is exactly the r7 lesson (a bag
     here blows up every downstream join)."""
-    import tempfile
-
     from prefect_flow_arc_kg_postgres_etl_spark.plans import kg
 
     builders = [
@@ -389,29 +399,21 @@ def all_view_triples(
         kg.kg_construct_real_query_av_video,
         kg.kg_construct_real_query_av_complex,
     ]
-    # One materialization per (session, sf_dir, store fingerprint):
-    # re-running the composed pipeline (bench passes, repeated driver
-    # calls) reuses the landed view graph the same way the compiled
-    # verbatim plans reuse the plan cache; a CHANGED store under the
-    # same path re-lands (fingerprint in the key).
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _store_fingerprint(sf_dir, spark),
-    )
-    if spill_dir is None and key in _SPILLS:
-        spill = _SPILLS[key]
-    else:
+    # One landing per (session, sf_dir, store fingerprint): re-running
+    # the composed pipeline (bench passes, repeated driver calls) reuses
+    # the landed view graph the same way the compiled verbatim plans
+    # reuse the plan cache; a CHANGED store under the same path misses
+    # and re-lands.
+    fp = _store_fingerprint(sf_dir, spark)
+    spill = _VIEW_CACHE.get(spark, sf_dir, fp)
+    if spill is MISS:
         import gc
 
         from prefect_flow_arc_kg_postgres_etl_spark.operators import (
             sparql as SQ,
         )
 
-        if spill_dir is None:
-            spill = _make_spill_dir(spark, _default_spill_root(spark))
-        else:
-            spill = spill_dir
+        spill = _make_spill_dir(spark)
         for i, b in enumerate(builders):
             df = b(spark, sf_dir)
             df.write.mode("overwrite").parquet(f"{spill}/q{i}")
@@ -429,8 +431,7 @@ def all_view_triples(
             SQ.clear_plan_cache()
             gc.collect()
             spark.sparkContext._jvm.System.gc()
-        if spill_dir is None:
-            _SPILLS[key] = spill
+        _VIEW_CACHE.put(spark, sf_dir, spill, fp)
     paths = [f"{spill}/q{i}" for i in range(len(builders))]
     return spark.read.parquet(*paths).distinct()
 
@@ -1040,11 +1041,10 @@ def flow_reference_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cluster scale the durable form of this landing is
     # reference_pipeline_flow's store commit, which writes the
     # documents table to the warehouse.
-    spill = _make_spill_dir(spark, _default_spill_root(spark))
+    spill = _make_spill_dir(spark)
     build_reference_index_documents(tables, SYNTHETIC_STORE_ADAPTER).write.mode(
         "overwrite"
     ).parquet(f"{spill}/index_documents")
-    _SPILLS[(spark.sparkContext.applicationId, "docs:" + sf_dir, fp)] = spill
     docs = spark.read.parquet(f"{spill}/index_documents")
     # a mutated store under the same path replaces its old entry (the
     # old spill stays on disk until exit, for frames already returned)
@@ -1590,8 +1590,8 @@ _NEW_ENTITY = "ascii(substr(id, greatest(length(id) - 1, 1), 1)) % 2 = 0"
 
 def _incremental_frames(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(current full-sync docs, docs + window flags, previous-sync docs).
+) -> tuple[DataFrame, DataFrame]:
+    """(current full-sync docs, previous-sync docs).
 
     ``prev`` is the simulated state of graph.index_documents at the last
     sync: current rows minus inserted-since entities, with stale content
@@ -1622,33 +1622,42 @@ def _incremental_frames(
                 ),
             ).otherwise(F.col("schema_name")),
         )
-        .drop("_drift_index")
+        .drop("_drift_index", "_in_window", "_second_even")
     )
-    return docs, marked, prev
+    return docs, prev
 
 
-def flow_reference_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A77: worklist -> per-partition flags -> selective rebuild.
+def incremental_documents(
+    docs: DataFrame, prev: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """The nightly index step (arc_db_load_index_tables_flow.py's
+    per-partition loop): from the current full build ``docs`` and the
+    previous documents ``prev``, (rebuilt, passthrough) — each with
+    ``docs``' columns.
 
-    One row per surviving document with ``doc_source`` recording which
-    arm produced it: 'rebuilt' (the partition was truncated for org-name
-    drift, or the entity was inside the since window and re-upserted) or
-    'passthrough' (the stored document, untouched — the reference never
-    rewrites rows outside the window). Mirrors
-    arc_db_load_index_tables_flow.py's per-partition loop as three
-    data-parallel legs over a BROADCAST flags dimension (one row per
+    Per partition, two flags over a BROADCAST dimension (one row per
     organisation — the worklist is small by construction; the document
-    set is the big side and is never shuffled by the flag join)."""
-    docs, marked, prev = _incremental_frames(spark, sf_dir)
-    # get_partitions: is_updated = bool_or(updated_at > since) per org.
-    stats = marked.groupBy("index").agg(F.max("_in_window").alias("_is_updated"))
-    # check_if_org_name_changed: stored maintainer label vs the current
-    # organization row's label.
-    cur_label = marked.groupBy("index").agg(
-        F.min("schema_maintainer_name").alias("_label")
+    set is the big side and is never shuffled by the flag join):
+    get_partitions' ``is_updated`` (bool_or(updated_at > since)) and
+    check_if_org_name_changed (a stored maintainer label differs from
+    the current one). Both current-side figures come from one
+    aggregate. A partition whose name changed is truncated and rebuilt
+    whole; otherwise its in-window rows rebuild and the rest pass
+    through from ``prev`` untouched (the reference never rewrites rows
+    outside the window).
+
+    The flag join is LEFT (r10 ADVICE): a partition in ``prev`` but
+    absent from the current build has no flags row. The reference's
+    worklist loop leaves such a partition untouched (only the delete
+    flow drops partitions), so its documents pass through in full
+    rather than being deleted by an inner join."""
+    marked = docs.withColumn("_in_window", F.expr(_SINCE_WINDOW))
+    current = marked.groupBy("index").agg(
+        F.max("_in_window").alias("_is_updated"),
+        F.min("schema_maintainer_name").alias("_label"),
     )
     changed = (
-        prev.join(cur_label, "index")
+        prev.join(current, "index")
         .groupBy("index")
         .agg(
             F.max(
@@ -1657,19 +1666,44 @@ def flow_reference_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     flags = F.broadcast(
-        stats.join(changed, "index", "left").na.fill({"_name_changed": False})
+        current.drop("_label")
+        .join(changed, "index", "left")
+        .na.fill({"_name_changed": False})
     )
     rebuilt = (
         marked.join(flags, "index")
-        .filter(F.col("_name_changed") | (F.col("_is_updated") & F.col("_in_window")))
-        .select(*docs.columns, F.lit("rebuilt").alias("doc_source"))
+        .filter(
+            F.col("_name_changed") | (F.col("_is_updated") & F.col("_in_window"))
+        )
+        .select(*docs.columns)
     )
     passthrough = (
-        prev.join(flags, "index")
-        .filter(~F.col("_name_changed") & ~F.col("_in_window"))
-        .select(*docs.columns, F.lit("passthrough").alias("doc_source"))
+        prev.withColumn("_in_window", F.expr(_SINCE_WINDOW))
+        .join(flags, "index", "left")
+        .filter(
+            F.col("_is_updated").isNull()
+            | (~F.col("_name_changed") & ~F.col("_in_window"))
+        )
+        .select(*docs.columns)
     )
-    return rebuilt.unionByName(passthrough)
+    return rebuilt, passthrough
+
+
+def flow_reference_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A77: worklist -> per-partition flags -> selective rebuild
+    (``incremental_documents``) over the simulated previous sync.
+
+    One row per surviving document with ``doc_source`` recording which
+    arm produced it: 'rebuilt' (the partition was truncated for org-name
+    drift, or the entity was inside the since window and re-upserted) or
+    'passthrough' (the stored document, untouched). Every previous
+    partition is also in the current build here, since ``prev`` is
+    derived from it."""
+    docs, prev = _incremental_frames(spark, sf_dir)
+    rebuilt, passthrough = incremental_documents(docs, prev)
+    return rebuilt.withColumn("doc_source", F.lit("rebuilt")).unionByName(
+        passthrough.withColumn("doc_source", F.lit("passthrough"))
+    )
 
 
 def _full_docs_prefix() -> str:
@@ -1752,26 +1786,31 @@ WHERE NOT f._name_changed AND NOT p._in_window
 # would be wrong), and report emptied partitions.
 
 
-def _live_tables(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """Apply the delete transaction to the pivoted table set."""
-    out = dict(tables)
-    mf = tables["graph.mh_fragment_identifier"]
-    deleted = (
-        mf.filter(F.col("is_deleted") == "true")
+def _flagged_entities(tables: Mapping[str, DataFrame]) -> DataFrame:
+    """The delete worklist: the distinct ids (as ``subject``) of the
+    entities a fragment flagged ``is_deleted`` points at."""
+    return (
+        tables["graph.mh_fragment_identifier"]
+        .filter(F.col("is_deleted") == "true")
         .select(F.col("intellectual_entity_id").alias("subject"))
         .distinct()
     )
+
+
+def _live_tables(tables: Mapping[str, DataFrame]) -> dict[str, DataFrame]:
+    """Apply the delete transaction to the pivoted table set."""
+    out = dict(tables)
     out["graph.intellectual_entity"] = tables[
         "graph.intellectual_entity"
-    ].join(deleted, "subject", "left_anti")
-    out["graph.mh_fragment_identifier"] = mf.filter(
-        ~F.col("is_deleted").eqNullSafe("true")
-    )
+    ].join(_flagged_entities(tables), "subject", "left_anti")
+    out["graph.mh_fragment_identifier"] = tables[
+        "graph.mh_fragment_identifier"
+    ].filter(~F.col("is_deleted").eqNullSafe("true"))
     return out
 
 
 def _delete_scope(
-    tables: dict[str, DataFrame],
+    tables: Mapping[str, DataFrame],
 ) -> tuple[DataFrame, DataFrame]:
     """(top-level entities to REBUILD, document iris to REMOVE) for the
     delete cascade, computed from the PRE-delete tables (the flagged
@@ -1788,14 +1827,10 @@ def _delete_scope(
     delete transaction removes the graph rows
     (arc_db_delete_flow.py:34-66) and the next update_partition.sql
     run re-derives only affected partitions via %(id)s."""
-    ie = tables["graph.intellectual_entity"]
-    deleted = (
-        tables["graph.mh_fragment_identifier"]
-        .filter(F.col("is_deleted") == "true")
-        .select(F.col("intellectual_entity_id").alias("subject"))
-        .distinct()
+    deleted = _flagged_entities(tables)
+    del_rows = tables["graph.intellectual_entity"].join(
+        deleted, "subject", "left_semi"
     )
-    del_rows = ie.join(deleted, "subject", "left_semi")
     parents = (
         del_rows.filter(F.col("relation_is_part_of").isNotNull())
         .select(F.col("relation_is_part_of").alias("subject"))
@@ -1870,37 +1905,29 @@ def _scope_tables_to_tops(
     return out
 
 
-def flow_reference_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A78: the delete cycle's end state — the update_partition
-    documents rebuilt over the surviving entity/fragment set. Entities
-    whose fragments were flagged deleted are gone; parents of deleted
-    CHILDREN keep their row but with re-aggregated children counts,
-    transcripts and thumbnails (the reason the reference re-runs
-    update_partition.sql after its delete transaction rather than
-    patching documents in place).
+def delete_cascade(
+    tables: Mapping[str, DataFrame], standing: DataFrame | None
+) -> tuple[dict[str, DataFrame], DataFrame]:
+    """The delete cycle: from the PRE-delete graph.* tables and the
+    standing documents (``None`` when there are none), (the live
+    tables after the delete transaction, the post-delete documents).
 
-    r10: WORKLIST-SCOPED — the reference's delete flow removes graph
+    Worklist-scoped (r10): the reference's delete flow removes graph
     rows and leaves document repopulation to update_partition.sql's
-    %(id)s-scoped runs (arc_db_delete_flow.py:34-122); rebuilding the
-    WHOLE document set here was the r9 verdict's one weak scale row.
-    Only documents the cascade can change pay the star join: deleted
+    %(id)s-scoped runs (arc_db_delete_flow.py:34-122), so only the
+    documents the cascade can change pay the star join — deleted
     top-level entities' rows drop, surviving parents of deleted
-    children rebuild, and every other document passes through from
-    the standing pre-delete build byte-identical (A77's
-    rebuilt-union-passthrough shape applied to the delete cycle).
-    The result is still EXACTLY the full rebuild over the survivors —
-    the oracle is unchanged."""
-    return _flow_plan_cached(
-        spark, sf_dir, "deletes", lambda: _flow_reference_deletes_impl(spark, sf_dir)
-    )
-
-
-def _flow_reference_deletes_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    triples = all_view_triples(spark, sf_dir)
-    tables = pivot_view_tables(triples)
-    prev_docs = flow_reference_pipeline(spark, sf_dir)
+    children rebuild over the live tables (``_delete_scope``,
+    ``_scope_tables_to_tops``), and every other standing document
+    passes through byte-identical (A77's rebuilt-union-passthrough
+    shape applied to the delete cycle). The result is EXACTLY the full
+    rebuild over the survivors, which is also what it returns when
+    there are no standing documents to pass through."""
+    live = _live_tables(tables)
+    if standing is None:
+        return live, build_reference_index_documents(live, SYNTHETIC_STORE_ADAPTER)
     rebuild_tops, removed = _delete_scope(tables)
-    passthrough = prev_docs.join(
+    passthrough = standing.join(
         F.broadcast(removed.withColumnRenamed("subject", "iri")),
         "iri",
         "left_anti",
@@ -1911,10 +1938,29 @@ def _flow_reference_deletes_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # star join entirely; the cascade reduces to dropping deleted
     # tops' rows.
     if not rebuild_tops.take(1):
-        return passthrough
-    scoped = _scope_tables_to_tops(_live_tables(tables), rebuild_tops)
-    rebuilt = build_reference_index_documents(scoped, SYNTHETIC_STORE_ADAPTER)
-    return rebuilt.unionByName(passthrough.select(*rebuilt.columns))
+        return live, passthrough
+    rebuilt = build_reference_index_documents(
+        _scope_tables_to_tops(live, rebuild_tops), SYNTHETIC_STORE_ADAPTER
+    )
+    return live, rebuilt.unionByName(passthrough.select(*rebuilt.columns))
+
+
+def flow_reference_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A78: the delete cycle's end state — the update_partition
+    documents rebuilt over the surviving entity/fragment set
+    (``delete_cascade`` over the pivoted view graph, with the composed
+    documents as the standing state). Entities whose fragments were
+    flagged deleted are gone; parents of deleted CHILDREN keep their
+    row but with re-aggregated children counts, transcripts and
+    thumbnails (the reason the reference re-runs update_partition.sql
+    after its delete transaction rather than patching documents in
+    place)."""
+
+    def build() -> DataFrame:
+        tables = pivot_view_tables(all_view_triples(spark, sf_dir))
+        return delete_cascade(tables, flow_reference_pipeline(spark, sf_dir))[1]
+
+    return _flow_plan_cached(spark, sf_dir, "deletes", build)
 
 
 def reference_deletes_oracle() -> str:
@@ -1962,13 +2008,7 @@ def reference_delete_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("intellectual_entity_id").alias("subject"))
         .distinct()
     )
-    deleted = (
-        tables["graph.mh_fragment_identifier"]
-        .filter(F.col("is_deleted") == "true")
-        .select(F.col("intellectual_entity_id").alias("subject"))
-        .distinct()
-        .withColumn("_del", F.lit(True))
-    )
+    deleted = _flagged_entities(tables).withColumn("_del", F.lit(True))
     gated = (
         ie.filter(F.col("relation_is_part_of").isNull())
         .withColumn(
@@ -2068,10 +2108,7 @@ def all_view_triples_scoped(
         "av-complex",
     ):
         runs.extend((slug, oid) for oid in or_ids)
-    spill = _make_spill_dir(spark, _default_spill_root(spark))
-    _SPILLS[
-        (spark.sparkContext.applicationId, f"fanout:{spill}", (0, 0))
-    ] = spill  # registered for the same atexit cleanup
+    spill = _make_spill_dir(spark)
     if max_parallel is None:
         max_parallel = int(os.environ.get("SPARK_GRAFT_FANOUT_PARALLEL", "4"))
     paths = [f"{spill}/q{i}" for i in range(len(runs))]
@@ -2109,68 +2146,36 @@ def reference_incremental_flow(
     spark: SparkSession, sf_dir: str, store_dir: str
 ) -> DataFrame:
     """The DURABLE nightly incremental run (A77 over the store): the
-    standing documents come from the store's latest snapshot — the
-    real previous state, exactly the graph.index_documents partitions
-    update_partition.sql upserts into — flags are computed from the
-    current build against that standing state, only drift-partition /
-    since-window rows rebuild, everything else passes through from
-    the store untouched, and the merged document set commits as ONE
-    numbered snapshot (the lakehouse form of the reference's
-    per-partition transactions; the manifest is partial on purpose —
-    the nightly index run touches only graph.index_documents,
-    arc_db_load_index_tables_flow.py:236-266). Returns the documents
-    read back from the committed snapshot."""
+    previous documents are the store's latest committed
+    graph.index_documents — the real previous state, exactly the
+    partitions update_partition.sql upserts into — and
+    ``incremental_documents`` rebuilds the drift-partition and
+    since-window rows against them. The merged document set commits
+    as ONE numbered snapshot that carries every other table the store
+    holds by its pin (the nightly index run touches only
+    graph.index_documents, arc_db_load_index_tables_flow.py:236-266),
+    so a later delete or index run still reads the loaded tables.
+    Both the standing documents and the read-back are read with the
+    current build's schema, so neither infers one. Returns the
+    documents read back from the committed snapshot."""
     from prefect_flow_arc_kg_postgres_etl_spark.sources import store as S
 
     docs = flow_reference_pipeline(spark, sf_dir)
     man = S.latest_manifest(store_dir)
     assert man is not None, "incremental run needs a prior full sync"
-    prev = S.read_snapshot(spark, store_dir, man)["graph.index_documents"]
-
-    marked = docs.withColumn("_in_window", F.expr(_SINCE_WINDOW))
-    stats = marked.groupBy("index").agg(
-        F.max("_in_window").alias("_is_updated")
+    schemas = {INDEX_DOCUMENTS: docs.schema}
+    prev = S.read_snapshot(spark, store_dir, man, [INDEX_DOCUMENTS], schemas)[
+        INDEX_DOCUMENTS
+    ]
+    rebuilt, passthrough = incremental_documents(docs, prev)
+    manifest = S.commit_tables(
+        store_dir,
+        {INDEX_DOCUMENTS: rebuilt.unionByName(passthrough)},
+        carry_from=man,
     )
-    cur_label = marked.groupBy("index").agg(
-        F.min("schema_maintainer_name").alias("_label")
-    )
-    changed = (
-        prev.join(cur_label, "index")
-        .groupBy("index")
-        .agg(
-            F.max(
-                ~F.col("schema_maintainer_name").eqNullSafe(F.col("_label"))
-            ).alias("_name_changed")
-        )
-    )
-    flags = F.broadcast(
-        stats.join(changed, "index", "left").na.fill({"_name_changed": False})
-    )
-    rebuilt = (
-        marked.join(flags, "index")
-        .filter(
-            F.col("_name_changed") | (F.col("_is_updated") & F.col("_in_window"))
-        )
-        .select(*docs.columns)
-    )
-    # LEFT join (r10 ADVICE): a partition present in the previous
-    # snapshot but ABSENT from the current build has no flags row —
-    # the reference's worklist loop leaves such partitions untouched
-    # (only the delete flow drops them), so its standing documents
-    # pass through in full rather than being silently deleted by an
-    # inner join.
-    passthrough = (
-        prev.withColumn("_in_window", F.expr(_SINCE_WINDOW))
-        .join(flags, "index", "left")
-        .filter(
-            F.col("_is_updated").isNull()
-            | (~F.col("_name_changed") & ~F.col("_in_window"))
-        )
-        .select(*docs.columns)
-    )
-    out = rebuilt.unionByName(passthrough)
-    manifest = S.commit_tables(store_dir, {"graph.index_documents": out})
-    return S.read_snapshot(spark, store_dir, manifest)["graph.index_documents"]
+    return S.read_snapshot(
+        spark, store_dir, manifest, [INDEX_DOCUMENTS], schemas
+    )[INDEX_DOCUMENTS]
 
 
 def reference_delete_flow(
@@ -2200,33 +2205,9 @@ def reference_delete_flow(
     snap = S.read_snapshot(
         spark, store_dir, man, schemas=GRAPH_TABLE_SCHEMAS
     )
-    tables = with_absent_tables(snap)
-    live = _live_tables(tables)
-    # r10: worklist-scoped rebuild — only documents the cascade can
-    # change pay the star join; the rest pass through from the
-    # store's STANDING documents (the genuine previous snapshot),
-    # matching the reference's delete-then-%(id)s-repopulate cycle.
-    standing = snap.get("graph.index_documents")
-    if standing is None:
-        # No standing documents in the store (a sync that never built
-        # the index): nothing to pass through — full rebuild over the
-        # survivors, the pre-r10 plan.
-        docs = build_reference_index_documents(live, SYNTHETIC_STORE_ADAPTER)
-    else:
-        rebuild_tops, removed = _delete_scope(tables)
-        passthrough = standing.join(
-            F.broadcast(removed.withColumnRenamed("subject", "iri")),
-            "iri",
-            "left_anti",
-        )
-        if not rebuild_tops.take(1):
-            docs = passthrough
-        else:
-            scoped = _scope_tables_to_tops(live, rebuild_tops)
-            rebuilt = build_reference_index_documents(
-                scoped, SYNTHETIC_STORE_ADAPTER
-            )
-            docs = rebuilt.unionByName(passthrough.select(*rebuilt.columns))
+    live, docs = delete_cascade(
+        with_absent_tables(snap), snap.get(INDEX_DOCUMENTS)
+    )
     rewritten = {
         name: live[name]
         for name in ("graph.intellectual_entity", "graph.mh_fragment_identifier")
@@ -2235,20 +2216,9 @@ def reference_delete_flow(
     manifest = S.commit_tables(
         store_dir, {**rewritten, INDEX_DOCUMENTS: docs}, carry_from=man
     )
-    return S.read_snapshot(spark, store_dir, manifest, [INDEX_DOCUMENTS])[
-        INDEX_DOCUMENTS
-    ]
-
-
-def _scratch_store(spark: SparkSession, tag: str) -> str:
-    """A per-call scratch store under the session's spill root (atexit-
-    cleaned like the view-graph spills) for the registered store-backed
-    flow entries."""
-    spill = _make_spill_dir(spark, _default_spill_root(spark))
-    _SPILLS[
-        (spark.sparkContext.applicationId, f"{tag}:{spill}", (0, 0))
-    ] = spill
-    return spill
+    return S.read_snapshot(
+        spark, store_dir, manifest, [INDEX_DOCUMENTS], {INDEX_DOCUMENTS: docs.schema}
+    )[INDEX_DOCUMENTS]
 
 
 def flow_reference_incremental_store(
@@ -2262,30 +2232,23 @@ def flow_reference_incremental_store(
     oracle itself."""
     from prefect_flow_arc_kg_postgres_etl_spark.sources import store as S
 
-    docs, _marked, prev = _incremental_frames(spark, sf_dir)
-    store = _scratch_store(spark, "incr_store")
-    S.commit_tables(store, {"graph.index_documents": prev.select(*docs.columns)})
+    prev = _incremental_frames(spark, sf_dir)[1]
+    store = _make_spill_dir(spark)
+    S.commit_tables(store, {INDEX_DOCUMENTS: prev})
     return reference_incremental_flow(spark, sf_dir, store)
 
 
 def flow_reference_deletes_store(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """A78 store twin (registered): full sync into a scratch store —
-    graph tables AND the standing index documents, the state a real
-    full sync leaves — then the DURABLE delete flow, whose
-    worklist-scoped rebuild passes untouched documents through from
-    that standing snapshot (r10). Committed read-back equals the
+    """A78 store twin (registered): the durable load into a scratch
+    store — the emitted graph tables AND the standing index documents,
+    the state a real full sync leaves — then the DURABLE delete flow,
+    whose worklist-scoped rebuild passes untouched documents through
+    from that standing snapshot (r10). Committed read-back equals the
     storeless post-cascade build, so it shares A78's oracle."""
-    from prefect_flow_arc_kg_postgres_etl_spark.sources import store as S
-
-    triples = all_view_triples(spark, sf_dir)
-    tables = pivot_view_tables(triples)
-    store = _scratch_store(spark, "del_store")
-    standing = flow_reference_pipeline(spark, sf_dir)
-    S.commit_tables(
-        store, {**tables, "graph.index_documents": standing}
-    )
+    store = _make_spill_dir(spark)
+    reference_pipeline_flow(spark, sf_dir, store)
     return reference_delete_flow(spark, sf_dir, store)
 
 
@@ -2396,7 +2359,7 @@ def flow_reference_main_store(
     carry_from manifest inheritance exercised on the graded path (the
     index stage's partial commit must pin the load stage's table
     versions for the delete stage to read one consistent state)."""
-    store = _scratch_store(spark, "main_store")
+    store = _make_spill_dir(spark)
     out = main_reference_flow(spark, sf_dir, store)
     assert out["load"] and out["index"] and out["delete"]
     return out["documents"]

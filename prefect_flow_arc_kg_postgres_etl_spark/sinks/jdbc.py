@@ -21,7 +21,7 @@ Spark the same contract splits into:
 
 from __future__ import annotations
 
-from typing import NamedTuple
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -209,10 +209,14 @@ def stage_then_merge(
     target_path: str,
     staging_path: str,
     keys: list[str],
+    merge: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
 ) -> MergeResult:
     """Engine-side merge: stage the batch as parquet (the temp-table
     analogue — restartable, inspectable), then converge it into the
-    target with the distributed source-wins upsert and land the result.
+    target with ``merge(target, staged)`` and land the result. The
+    default merge is the distributed source-wins upsert on ``keys``
+    (database.ts's ``MERGE INTO``); a multi-value table passes its
+    clear-then-insert on the group key instead.
 
     Returns a ``MergeResult``: the merged table read back from the
     landed target, plus the staged and merged row counts. Both counts
@@ -228,7 +232,7 @@ def stage_then_merge(
     table (sources/store.py): the merge reads version N and lands
     version N+1 with ONE data write + an atomic pointer swap — no
     write-tmp-read-rewrite double I/O."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators.merge import upsert
+    from prefect_flow_arc_kg_postgres_etl_spark.operators import merge as M
     from prefect_flow_arc_kg_postgres_etl_spark.sinks.observed import observed_write
     from prefect_flow_arc_kg_postgres_etl_spark.sources import store
     from prefect_flow_arc_kg_postgres_etl_spark.sources.catalog import (
@@ -245,7 +249,11 @@ def stage_then_merge(
         # the staged batch is projected onto the target's columns, so a
         # drifted source schema (extra / missing / retyped columns)
         # still merges — extra columns drop, missing ones land NULL.
-        merged = upsert(target, conform_to_schema(staged, target.schema), keys)
+        batch = conform_to_schema(staged, target.schema)
+        merged = (
+            merge(target, batch) if merge is not None
+            else M.upsert(target, batch, keys)
+        )
     else:  # first load: nothing to merge into
         merged = staged
     n_merged = observed_write(merged, lambda d: store.write_table(d, target_path))

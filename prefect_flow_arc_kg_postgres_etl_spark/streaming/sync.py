@@ -352,9 +352,7 @@ def incremental_upsert_stream(
     ev = events_stream(spark, sf_dir)
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import Window
-        from pyspark.sql import functions as FF
-
+        from prefect_flow_arc_kg_postgres_etl_spark.operators import merge as M
         from prefect_flow_arc_kg_postgres_etl_spark.sources import store
 
         sp = batch_df.sparkSession
@@ -369,18 +367,7 @@ def incremental_upsert_stream(
         if target is None:
             merged = batch_df.dropDuplicates(keys)
         else:
-            cols = target.columns
-            tagged = (
-                batch_df.select(*cols)
-                .withColumn("_src", FF.lit(0))
-                .unionByName(target.select(*cols).withColumn("_src", FF.lit(1)))
-            )
-            w = Window.partitionBy(*keys).orderBy(FF.col("_src"))
-            merged = (
-                tagged.withColumn("_rn", FF.row_number().over(w))
-                .filter(FF.col("_rn") == 1)
-                .drop("_src", "_rn")
-            )
+            merged = M.upsert(target, batch_df, keys)
         # Versioned landing (sources/store.py): the merge reads version
         # N and writes version N+1 once, then the pointer swaps — the
         # read-modify-write is safe with a single data write per epoch.

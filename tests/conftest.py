@@ -15,5 +15,10 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
+    # The whole suite shares one JVM. With get_spark's 16g default heap
+    # ceiling on a 16 GB host the heap grows until the kernel kills the
+    # JVM, and every later test fails; the suite's live data fits in 8g
+    # (tools/ci.py runs its shards at that size).
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
     s = get_spark("tests", cpus=8)
     yield s

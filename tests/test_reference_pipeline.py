@@ -738,6 +738,199 @@ def test_docs_frame_survives_a_reland(spark, tmp_path, monkeypatch):
     assert before.count() == n == after.count() > 0
 
 
+def _cycle_rows():
+    """View rows with every arm of the incremental and delete steps
+    live. A document's id is its schema_identifier: a last character
+    whose code is divisible by 3 puts it in the since window, and an
+    even code in the second-last character marks a windowed entity as
+    new since the last sync. or-1 is the lowest index, so it is the
+    partition whose organisation label drifted. b4 is a top-level
+    entity flagged deleted; b5 is a child of b3, flagged deleted."""
+    org = "https://x/org/"
+    ents = [
+        ("a1", "a10", "OR-1"),  # drift partition, in window
+        ("a2", "a11", "OR-1"),  # drift partition, outside it
+        ("b1", "b20", "OR-2"),  # in window, new since the last sync
+        ("b2", "b13", "OR-2"),  # in window, changed since the last sync
+        ("b3", "b21", "OR-2"),  # outside the window
+        ("b4", "b22", "OR-2"),  # outside the window, deleted
+        ("c1", "c11", "OR-3"),  # a partition with nothing in the window
+        ("c2", "c12", "OR-3"),
+    ]
+    ie = [
+        dict(subject=E + s, id=E + s, schema_identifier=i,
+             schema_name=f"naam {i}", schema_maintainer=org + o)
+        for s, i, o in ents
+    ]
+    ie.append(
+        dict(subject=E + "b5", id=E + "b5", schema_identifier="b5c",
+             schema_name="deel", schema_maintainer=org + "OR-2",
+             relation_is_part_of=E + "b3")
+    )
+    return {
+        "graph.organization": [
+            dict(subject=f"o{n}", id=f"o{n}", org_identifier=f"OR-{n}",
+                 skos_pref_label=label, org_classification="ContentPartner")
+            for n, label in ((1, "Archief"), (2, "Stad"), (3, "Omroep"))
+        ],
+        "graph.intellectual_entity": ie,
+        "graph.dcterms_format": [
+            dict(subject="f" + r["subject"][len(E):],
+                 intellectual_entity_id=r["subject"],
+                 dcterms_format="videofragment"
+                 if r.get("relation_is_part_of") else "video")
+            for r in ie
+        ],
+        "graph.schema_keywords": [
+            dict(subject="k1", intellectual_entity_id=E + "b3", schema_keywords="film"),
+        ],
+        "graph.mh_fragment_identifier": [
+            dict(subject="m1", intellectual_entity_id=E + "b4",
+                 mh_fragment_identifier="frag4", is_deleted="true"),
+            dict(subject="m2", intellectual_entity_id=E + "b5",
+                 mh_fragment_identifier="frag5", is_deleted="true"),
+            dict(subject="m3", intellectual_entity_id=E + "b2",
+                 mh_fragment_identifier="frag2", is_deleted="false"),
+        ],
+    }
+
+
+def _patched_view(spark, tmp_path, monkeypatch, rows):
+    """An sf dir whose view graph is ``rows``: ``all_view_triples`` is
+    patched, and the dir holds one file so the caches keyed by its
+    fingerprint are this test's own."""
+    triples = _view_triples(spark, rows)
+    monkeypatch.setattr(RP, "all_view_triples", lambda spark, sf: triples)
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "quads").write_bytes(b"view")
+    return str(sf)
+
+
+def test_incremental_registry_and_store_flows_agree(spark, tmp_path, monkeypatch):
+    """A77 without the reference checkout. The registry entry rebuilds
+    the drift partition and the windowed rows and passes the rest
+    through; the durable incremental run over a store seeded with the
+    same previous documents commits the same documents, and both equal
+    the full build."""
+    sf = _patched_view(spark, tmp_path, monkeypatch, _cycle_rows())
+    docs = RP.flow_reference_pipeline(spark, sf)
+    full = _canon(docs)
+    out = RP.flow_reference_incremental(spark, sf)
+    assert out.columns == [*docs.columns, "doc_source"]
+    source = {r["id"]: r["doc_source"] for r in out.collect()}
+    assert source == {
+        "a10": "rebuilt", "a11": "rebuilt", "b20": "rebuilt",
+        "b13": "rebuilt", "b21": "passthrough", "b22": "passthrough",
+        "c11": "passthrough", "c12": "passthrough",
+    }
+    assert _canon(out.drop("doc_source")) == full
+    assert _canon(RP.flow_reference_incremental_store(spark, sf)) == full
+
+
+def test_delete_registry_and_store_flows_agree(spark, tmp_path, monkeypatch):
+    """A78 without the reference checkout: the registry entry, the
+    durable delete run over a loaded store and the registered store
+    entry commit the same documents, equal to the full build over the
+    surviving tables. The deleted top-level entity's document is gone
+    and the parent of the deleted child is rebuilt with one child
+    fewer."""
+    rows = _cycle_rows()
+    sf = _patched_view(spark, tmp_path, monkeypatch, rows)
+    before = _canon(RP.flow_reference_pipeline(spark, sf))
+    tables = RP.pivot_view_tables(_view_triples(spark, rows))
+    want = _canon(
+        RP.build_reference_index_documents(
+            RP._live_tables(tables), RP.SYNTHETIC_STORE_ADAPTER
+        )
+    )
+    tables.wide.unpersist()
+    assert E + "b4" in before["iri"] and E + "b4" not in want["iri"]
+    b3 = E + "b3"
+    assert before["children"][before["iri"].index(b3)] == "1"
+    assert want["children"][want["iri"].index(b3)] == "0"
+
+    assert _canon(RP.flow_reference_deletes(spark, sf)) == want
+    store = str(tmp_path / "store")
+    RP.reference_pipeline_flow(spark, sf, store)
+    assert _canon(RP.reference_delete_flow(spark, sf, store)) == want
+    assert _canon(RP.flow_reference_deletes_store(spark, sf)) == want
+
+
+def test_delete_run_after_an_index_run_deletes(spark, tmp_path, monkeypatch):
+    """An incremental index run commits the documents with every table
+    the store held carried forward, so a delete run after it still
+    sees the flagged fragments and removes their entity's document."""
+    from prefect_flow_arc_kg_postgres_etl_spark.sources import store as S
+
+    rows = _cycle_rows()
+    sf = _patched_view(spark, tmp_path, monkeypatch, rows)
+    store = str(tmp_path / "store")
+    loaded = _canon(RP.reference_pipeline_flow(spark, sf, store))
+    assert _canon(RP.reference_incremental_flow(spark, sf, store)) == loaded
+    got = _canon(RP.reference_delete_flow(spark, sf, store))
+    assert E + "b4" in loaded["iri"] and E + "b4" not in got["iri"]
+    assert set(S.read_manifest(S.latest_manifest(store))) == {
+        *rows, RP.INDEX_DOCUMENTS
+    }
+
+
+def test_index_only_run_after_an_index_run_keeps_documents(
+    spark, tmp_path, monkeypatch
+):
+    """An index-only main run after an incremental index run rebuilds
+    the documents over the tables the load committed, not over an
+    empty table set."""
+    sf = _patched_view(spark, tmp_path, monkeypatch, _cycle_rows())
+    store = str(tmp_path / "store")
+    loaded = _canon(RP.reference_pipeline_flow(spark, sf, store))
+    RP.reference_incremental_flow(spark, sf, store)
+    out = RP.main_reference_flow(
+        spark, sf, store, active={"load": False, "delete": False}
+    )
+    assert len(loaded["iri"]) == 8
+    assert _canon(out["documents"]) == loaded
+
+
+def test_failed_landing_leaves_no_spill_dir(tmp_path):
+    """A view-graph landing that raises leaves nothing under the spill
+    root once the interpreter has exited: the dir is registered for
+    the exit sweep when it is created, not after the landing."""
+    import subprocess
+    import textwrap
+
+    root = tmp_path / "spills"
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    script = textwrap.dedent(f"""
+        import types
+        from prefect_flow_arc_kg_postgres_etl_spark.plans import kg
+        from prefect_flow_arc_kg_postgres_etl_spark.plans import reference_pipeline as RP
+
+        def fail(spark, sf_dir):
+            raise RuntimeError("landing failed")
+
+        kg.kg_construct_real_query = fail
+        spark = types.SimpleNamespace(
+            sparkContext=types.SimpleNamespace(applicationId="app-1")
+        )
+        try:
+            RP.all_view_triples(spark, {str(sf)!r})
+        except RuntimeError:
+            pass
+        else:
+            raise SystemExit("the landing did not raise")
+    """)
+    env = {**os.environ, "SPARK_GRAFT_SPILL_DIR": str(root)}
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    done = subprocess.run(
+        [sys.executable, "-c", script], cwd=repo, env=env,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert done.returncode == 0, done.stderr
+    assert root.is_dir() and os.listdir(root) == []
+
+
 def test_index_documents_ndjson_payload(spark):
     """The ES feed variant: one JSON document per (id, index) routing
     pair, payload parseable, null fields omitted (ES treats absent and
@@ -1024,7 +1217,7 @@ def test_reference_incremental_flow_store_backed(spark, tmp_path):
 
     sf = "/root/testdata/sf0.001"
     store = str(tmp_path / "store")
-    docs, marked, prev = RP._incremental_frames(spark, sf)
+    docs, prev = RP._incremental_frames(spark, sf)
     seeded = S.commit_tables(
         store, {"graph.index_documents": prev.select(*docs.columns)}
     )
@@ -1054,7 +1247,7 @@ def test_reference_incremental_flow_keeps_absent_partitions(spark, tmp_path):
 
     sf = "/root/testdata/sf0.001"
     store = str(tmp_path / "store")
-    docs, marked, prev = RP._incremental_frames(spark, sf)
+    docs, prev = RP._incremental_frames(spark, sf)
     ghost = (
         prev.select(*docs.columns)
         .limit(5)

@@ -331,7 +331,9 @@ def test_pivot_view_records(spark):
     # A68 — the reference's stream-pivot (stream.ts:78-105): tableName
     # selects the table, urn: predicates become columns; other tables'
     # subjects and foreign predicates drop.
-    from prefect_flow_arc_kg_postgres_etl_spark.plans.kg import pivot_view_records
+    from prefect_flow_arc_kg_postgres_etl_spark.plans import (
+        reference_pipeline as RP,
+    )
 
     ns = "urn:kg-to-postgres:"
     triples = spark.createDataFrame(
@@ -347,7 +349,9 @@ def test_pivot_view_records(spark):
         ],
         "subject string, predicate string, object string",
     )
-    out = pivot_view_records(triples, "graph.thing", ["id", "schema_name"])
+    out = RP.table_from_wide(
+        RP.pivot_wide(triples), "graph.thing", ["id", "schema_name"]
+    )
     rows = {(r.subject, r.id, r.schema_name) for r in out.collect()}
     assert rows == {("p1", "p1", "Alice"), ("p2", "p2", None)}
 

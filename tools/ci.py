@@ -69,44 +69,86 @@ _SHARDS: list[list[str]] = [
 ]
 
 
+_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+
+
+def _jvm_bytes(size: str) -> int:
+    """A JVM memory size ("8g", "512m", "1073741824") in bytes."""
+    size = size.strip().lower()
+    if size and size[-1] in _UNITS:
+        return int(size[:-1]) * _UNITS[size[-1]]
+    return int(size)
+
+
+def usable_memory() -> int:
+    """Physical memory, or the cgroup's memory limit where one is set
+    below it (cgroup v2 ``memory.max``, v1 ``memory.limit_in_bytes``)."""
+    usable = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in (
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ):
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            usable = min(usable, int(limit))
+    return usable
+
+
 def run_pytest_sharded(py: str) -> bool:
+    """Run the suite as file-level shards, one pytest process (and one
+    Spark JVM) each. At most usable memory // per-shard driver heap
+    shards run at once, and the rest queue: shards that together could
+    outgrow the host's memory get a JVM killed by the kernel, and every
+    later test in that shard then fails with a Py4J network error."""
     import glob
     import tempfile
+    from concurrent.futures import ThreadPoolExecutor
 
     named = {f for shard in _SHARDS for f in shard}
     rest = sorted(
         f for f in glob.glob("tests/test_*.py") if f not in named
     )
     shards = _SHARDS + [rest]
+    heap = os.environ.get("SPARK_DRIVER_MEMORY", "8g")
+    usable = usable_memory()
+    concurrency = max(1, min(len(shards), usable // _jvm_bytes(heap)))
     t0 = time.time()
-    print(f"=== pytest: {len(shards)} parallel shards", flush=True)
-    procs = []
-    for i, files in enumerate(shards):
+    print(
+        f"=== pytest: {len(shards)} shards, {concurrency} at a time "
+        f"({heap} driver heap each, {usable / (1 << 30):.1f} GiB usable)",
+        flush=True,
+    )
+
+    def run_shard(i: int) -> subprocess.CompletedProcess:
         env = dict(os.environ)
-        env["SPARK_DRIVER_MEMORY"] = env.get("SPARK_DRIVER_MEMORY", "8g")
+        env["SPARK_DRIVER_MEMORY"] = heap
         env["SPARK_GRAFT_WAREHOUSE"] = tempfile.mkdtemp(prefix=f"ci_wh{i}_")
-        procs.append(
-            (
-                i,
-                files,
-                subprocess.Popen(
-                    [py, "-m", "pytest", *files, "-q"],
-                    cwd=REPO,
-                    env=env,
-                    stdout=subprocess.PIPE,
-                    stderr=subprocess.STDOUT,
-                    text=True,
-                ),
-            )
+        return subprocess.run(
+            [py, "-m", "pytest", *shards[i], "-q"],
+            cwd=REPO,
+            env=env,
+            stdout=subprocess.PIPE,
+            stderr=subprocess.STDOUT,
+            text=True,
         )
+
     ok = True
-    for i, files, proc in procs:
-        out, _ = proc.communicate()
-        tail = out.strip().splitlines()[-1] if out.strip() else ""
-        print(f"  shard {i} ({len(files)} files): rc={proc.returncode} {tail}")
-        if proc.returncode != 0:
-            print("\n".join(out.strip().splitlines()[-40:]))
-            ok = False
+    with ThreadPoolExecutor(max_workers=concurrency) as pool:
+        for i, proc in enumerate(pool.map(run_shard, range(len(shards)))):
+            out = proc.stdout.strip()
+            tail = out.splitlines()[-1] if out else ""
+            print(
+                f"  shard {i} ({len(shards[i])} files): "
+                f"rc={proc.returncode} {tail}",
+                flush=True,
+            )
+            if proc.returncode != 0:
+                print("\n".join(out.splitlines()[-40:]))
+                ok = False
     print(
         f"=== pytest: {'OK' if ok else 'FAILED'} ({time.time() - t0:.0f}s)",
         flush=True,

@@ -481,7 +481,6 @@ def curation_flow(
     span_dedup: bool = False,
     embeddings: DataFrame | None = None,
     semantic_threshold: float = 0.99,
-    collect_stats: bool = True,
 ) -> tuple[DataFrame, RunStats]:
     """The D-block counterpart of ``sync_flow``: one composed
     training-data curation run over the documents corpus —
@@ -502,9 +501,7 @@ def curation_flow(
     shuffling stages (dedup survivorship, mixture counts, packing
     window, shard window) keep their member operators' shapes. Stage
     semantics are the oracle-checked operators'; per-stage survivor
-    accounting rides RunStats (count passes gated by
-    ``collect_stats`` — at 100 TB turn it off and read sink metrics
-    instead).
+    accounting rides RunStats (one count pass per noted stage).
 
     Returns (curated docs with pack/shard assignment, stats)."""
     from prefect_flow_arc_kg_postgres_etl_spark.operators.text import (
@@ -540,7 +537,7 @@ def curation_flow(
         # store table, and RunStats.merged_tables must stay 0 for a
         # curation run (it counts status == 'merged').
         stats.tables[stage] = {
-            "staged": df.count() if collect_stats else -1,
+            "staged": df.count(),
             "merged": -1,
             "status": "curated",
             "error": None,

@@ -437,7 +437,6 @@ def lsh_verified_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    materialize_grams: bool = True,
 ) -> DataFrame:
     """The production dedup pipeline: MinHash-LSH candidate generation
     followed by EXACT n-gram Jaccard verification of the candidates
@@ -456,22 +455,18 @@ def lsh_verified_pairs(
         docs, k, bands, id_col, text_col, n, include_estimate=False
     )
     grams = doc_ngrams(docs, id_col, text_col, n)
-    if materialize_grams:
-        # The gram subtree (tokenize + hash + per-doc distinct +
-        # explode) is referenced THREE times below (both verify legs +
-        # the size table); without materialization Spark re-executes
-        # it per reference — three corpus scans. One eager
-        # localCheckpoint turns those into one scan + two cheap
-        # re-reads, and the size table derives from the materialized
-        # grams instead of a fourth corpus pass. Measured at sf0.1:
-        # 2.72 s -> 2.05 s steady-state, 10.7 s -> 4.6 s cold. Same
-        # cluster caveat as materialize_signatures: at 100 TB land the
-        # gram table to reliable storage instead (localCheckpoint
-        # blocks are lost with their executor).
-        grams = grams.localCheckpoint(eager=True)
-        sizes = grams.groupBy("id").agg(F.count("*").alias("n_grams"))
-    else:
-        sizes = doc_ngram_counts(docs, id_col, text_col, n)
+    # The gram subtree (tokenize + hash + per-doc distinct + explode) is
+    # referenced THREE times below (both verify legs + the size table);
+    # without materialization Spark re-executes it per reference — three
+    # corpus scans. One eager localCheckpoint turns those into one scan
+    # + two cheap re-reads, and the size table derives from the
+    # materialized grams instead of a fourth corpus pass. Measured at
+    # sf0.1: 2.72 s -> 2.05 s steady-state, 10.7 s -> 4.6 s cold. Same
+    # cluster caveat as materialize_signatures: at 100 TB land the gram
+    # table to reliable storage instead (localCheckpoint blocks are lost
+    # with their executor).
+    grams = grams.localCheckpoint(eager=True)
+    sizes = grams.groupBy("id").agg(F.count("*").alias("n_grams"))
     return _jaccard_verify(cands, grams, sizes, threshold)
 
 

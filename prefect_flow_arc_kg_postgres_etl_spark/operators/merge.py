@@ -65,8 +65,7 @@ def clear_and_insert(
 
 
 def orphan_cleanup(
-    child: DataFrame, parent: DataFrame, fk: str, parent_key: str,
-    keep_null_fk: bool = True,
+    child: DataFrame, parent: DataFrame, fk: str, parent_key: str
 ) -> DataFrame:
     """Remove child rows whose FK no longer resolves
     (database.ts:300-326 TEMP_deleteOrphanedTempRepresentation).
@@ -75,9 +74,7 @@ def orphan_cleanup(
     resolved = child.filter(F.col(fk).isNotNull()).join(
         parents, on=fk, how="left_semi"
     )
-    if keep_null_fk:
-        return child.filter(F.col(fk).isNull()).unionByName(resolved)
-    return resolved
+    return child.filter(F.col(fk).isNull()).unionByName(resolved)
 
 
 def delete_flagged(

@@ -3333,7 +3333,27 @@ def _reference_query_path(name: str) -> str:
     return os.path.join(base, name)
 
 
-_PERSON_SPARQL_PATH = _reference_query_path("person.sparql")
+class ReferenceUnavailable(FileNotFoundError):
+    """A reference ``.sparql`` file is absent: the reference checkout is
+    not mounted where ``REFERENCE_QUERY_DIR`` points."""
+
+
+def load_reference_query(name: str) -> str:
+    """The text of one reference query file, resolved against
+    ``REFERENCE_QUERY_DIR`` when called. Raises ReferenceUnavailable,
+    naming the file, when it is absent."""
+    path = _reference_query_path(name)
+    try:
+        with open(path) as f:
+            return f.read()
+    except FileNotFoundError as e:
+        raise ReferenceUnavailable(
+            f"reference query {path} is absent; set REFERENCE_QUERY_DIR "
+            f"to a checkout of the reference's typescript/queries"
+        ) from e
+
+
+_PERSON_SPARQL = "person.sparql"
 
 _SQ_NS = {
     "org": "https://data.hetarchief.be/id/organization/",
@@ -4306,8 +4326,7 @@ def kg_construct_real_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     IRI/CONCAT/MD5/COALESCE BIND surface."""
     from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
-    with open(_PERSON_SPARQL_PATH) as f:
-        text = f.read()
+    text = load_reference_query(_PERSON_SPARQL)
     quads = _sparql_person_quads(spark, sf_dir)
     return SQ.construct_query(quads, text)
 
@@ -4396,7 +4415,7 @@ SELECT subject, predicate, object FROM t
 # ---------------------------------------------------------------------------
 # A67b: organization.sparql verbatim (FROM datasets + nested OPTIONALs)
 
-_ORG_SPARQL_PATH = _reference_query_path("organization.sparql")
+_ORG_SPARQL = "organization.sparql"
 
 _OQ = {
     "w3org": "http://www.w3.org/ns/org#",
@@ -4562,8 +4581,7 @@ def kg_construct_real_query_org(spark: SparkSession, sf_dir: str) -> DataFrame:
     subject IRIs. Same compiler, same oracle discipline as A67."""
     from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
-    with open(_ORG_SPARQL_PATH) as f:
-        text = f.read()
+    text = load_reference_query(_ORG_SPARQL)
     quads = _sparql_org_quads(spark, sf_dir)
     return SQ.construct_query(quads, text)
 
@@ -4703,7 +4721,7 @@ SELECT subject, predicate, object FROM t
 # ---------------------------------------------------------------------------
 # A67c: deletes.sparql verbatim (parameter bindings + FILTER NOT EXISTS)
 
-_DEL_SPARQL_PATH = _reference_query_path("deletes.sparql")
+_DEL_SPARQL = "deletes.sparql"
 _DEL_SINCE = "1999-01-01 00:00:00"
 
 
@@ -4817,8 +4835,7 @@ def kg_construct_real_query_deletes(spark: SparkSession, sf_dir: str) -> DataFra
     boolean literal in the CONSTRUCT template."""
     from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
-    with open(_DEL_SPARQL_PATH) as f:
-        text = f.read()
+    text = load_reference_query(_DEL_SPARQL)
     quads = _sparql_del_quads(spark, sf_dir)
     return SQ.construct_query(
         quads,
@@ -4862,8 +4879,8 @@ SELECT subject, predicate, object FROM t
 # ---------------------------------------------------------------------------
 # A67d/A67e: newspaper-collection.sparql and iiif.sparql verbatim
 
-_NEWS_SPARQL_PATH = _reference_query_path("newspaper-collection.sparql")
-_IIIF_SPARQL_PATH = _reference_query_path("iiif.sparql")
+_NEWS_SPARQL = "newspaper-collection.sparql"
+_IIIF_SPARQL = "iiif.sparql"
 
 
 def kg_construct_real_query_newspaper(
@@ -4878,8 +4895,7 @@ def kg_construct_real_query_newspaper(
     the grouped-union lowering joins each key group once."""
     from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
-    with open(_NEWS_SPARQL_PATH) as f:
-        text = f.read()
+    text = load_reference_query(_NEWS_SPARQL)
     return SQ.construct_query(_sparql_person_quads(spark, sf_dir), text)
 
 
@@ -4892,8 +4908,7 @@ def kg_construct_real_query_iiif(spark: SparkSession, sf_dir: str) -> DataFrame:
     two key groups under an identity branch."""
     from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
-    with open(_IIIF_SPARQL_PATH) as f:
-        text = f.read()
+    text = load_reference_query(_IIIF_SPARQL)
     return SQ.construct_query(_sparql_person_quads(spark, sf_dir), text)
 
 
@@ -5346,7 +5361,7 @@ FROM b
 # ---------------------------------------------------------------------------
 # A67f: newspaper.sparql verbatim (the full issue/page detail query)
 
-_NP_SPARQL_PATH = _reference_query_path("newspaper.sparql")
+_NP_SPARQL = "newspaper.sparql"
 
 
 def kg_construct_real_query_issues(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5364,8 +5379,7 @@ def kg_construct_real_query_issues(spark: SparkSession, sf_dir: str) -> DataFram
     seeded disallowed sibling."""
     from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
-    with open(_NP_SPARQL_PATH) as f:
-        text = f.read()
+    text = load_reference_query(_NP_SPARQL)
     return SQ.construct_query(_sparql_person_quads(spark, sf_dir), text)
 
 
@@ -5589,16 +5603,15 @@ KG_REAL_QUERY_NP_ORACLE = _np_oracle()
 # ---------------------------------------------------------------------------
 # A67g/h/i: av-audio / av-video / av-complex verbatim
 
-_AV_AUDIO_PATH = _reference_query_path("av-audio.sparql")
-_AV_VIDEO_PATH = _reference_query_path("av-video.sparql")
-_AV_COMPLEX_PATH = _reference_query_path("av-complex.sparql")
+_AV_AUDIO_SPARQL = "av-audio.sparql"
+_AV_VIDEO_SPARQL = "av-video.sparql"
+_AV_COMPLEX_SPARQL = "av-complex.sparql"
 
 
-def _run_verbatim(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
+def _run_verbatim(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
-    with open(path) as f:
-        text = f.read()
+    text = load_reference_query(name)
     return SQ.construct_query(_sparql_person_quads(spark, sf_dir), text)
 
 
@@ -5615,7 +5628,7 @@ def kg_construct_real_query_av_audio(spark: SparkSession, sf_dir: str) -> DataFr
     (rel:isi|^ebucore:isMediaFragmentOf), and the peak-file chain
     (?file rel:isi/rel:inc ?peak with FILTER contains(.., "peak") — a
     seeded wave_ sibling must drop)."""
-    return _run_verbatim(spark, sf_dir, _AV_AUDIO_PATH)
+    return _run_verbatim(spark, sf_dir, _AV_AUDIO_SPARQL)
 
 
 def kg_construct_real_query_av_audio_org(
@@ -5634,8 +5647,7 @@ def kg_construct_real_query_av_audio_org(
     (pinned by tests/test_sparql.py)."""
     from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
-    with open(_AV_AUDIO_PATH) as f:
-        text = f.read()
+    text = load_reference_query(_AV_AUDIO_SPARQL)
     return SQ.construct_query(
         _sparql_person_quads(spark, sf_dir),
         text,
@@ -5647,13 +5659,13 @@ def kg_construct_real_query_av_video(spark: SparkSession, sf_dir: str) -> DataFr
     """av-video.sparql VERBATIM — same grammar as av-audio minus the
     peak block, Video-typed ies, image/jpeg added to the mime
     whitelist (the seeded application/xml sibling still drops)."""
-    return _run_verbatim(spark, sf_dir, _AV_VIDEO_PATH)
+    return _run_verbatim(spark, sf_dir, _AV_VIDEO_SPARQL)
 
 
 def kg_construct_real_query_av_complex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """av-complex.sparql VERBATIM — the Film/DVD/DVDChapter cut: a
     THREE-VALUE ie-type VALUES over the same av grammar."""
-    return _run_verbatim(spark, sf_dir, _AV_COMPLEX_PATH)
+    return _run_verbatim(spark, sf_dir, _AV_COMPLEX_SPARQL)
 
 
 def _av_oracle(type_cond: str, n_mimes: int, peaks: bool) -> str:
@@ -6055,23 +6067,23 @@ _REFERENCE_QUERY_SPECS: dict[str, tuple] = {}
 def _init_reference_query_specs() -> None:
     _REFERENCE_QUERY_SPECS.update(
         {
-            "person": (_PERSON_SPARQL_PATH, _sparql_person_quads, {}),
-            "organization": (_ORG_SPARQL_PATH, _sparql_org_quads, {}),
+            "person": (_PERSON_SPARQL, _sparql_person_quads, {}),
+            "organization": (_ORG_SPARQL, _sparql_org_quads, {}),
             "deletes": (
-                _DEL_SPARQL_PATH,
+                _DEL_SPARQL,
                 _sparql_del_quads,
                 {"since": _DEL_SINCE, "prefix_id_base": _SQ_NS["ent"]},
             ),
             "newspaper-collection": (
-                _NEWS_SPARQL_PATH,
+                _NEWS_SPARQL,
                 _sparql_person_quads,
                 {},
             ),
-            "iiif": (_IIIF_SPARQL_PATH, _sparql_person_quads, {}),
-            "newspaper": (_NP_SPARQL_PATH, _sparql_person_quads, {}),
-            "av-audio": (_AV_AUDIO_PATH, _sparql_person_quads, {}),
-            "av-video": (_AV_VIDEO_PATH, _sparql_person_quads, {}),
-            "av-complex": (_AV_COMPLEX_PATH, _sparql_person_quads, {}),
+            "iiif": (_IIIF_SPARQL, _sparql_person_quads, {}),
+            "newspaper": (_NP_SPARQL, _sparql_person_quads, {}),
+            "av-audio": (_AV_AUDIO_SPARQL, _sparql_person_quads, {}),
+            "av-video": (_AV_VIDEO_SPARQL, _sparql_person_quads, {}),
+            "av-complex": (_AV_COMPLEX_SPARQL, _sparql_person_quads, {}),
         }
     )
 
@@ -6093,12 +6105,11 @@ def run_reference_query_scoped(
     metadata graph is read (same machinery A75 pins for av-audio)."""
     from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
-    path, quads_fn, base = _REFERENCE_QUERY_SPECS[slug]
+    name, quads_fn, base = _REFERENCE_QUERY_SPECS[slug]
     params = dict(base)
     if maintainer_id is not None and slug != "organization":
         params["maintainer_id"] = maintainer_id
-    with open(path) as f:
-        text = f.read()
+    text = load_reference_query(name)
     return SQ.construct_query(
         quads_fn(spark, sf_dir), text, params=params or None
     )

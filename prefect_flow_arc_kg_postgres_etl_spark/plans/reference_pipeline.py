@@ -99,6 +99,16 @@ def _is_remote_path(path: str) -> bool:
     return "://" in path and not path.startswith("file:")
 
 
+def _local_path(path: str) -> str:
+    """The local path a ``file:`` URI names (``file:/x`` and
+    ``file:///x`` both give ``/x``); any other path as given."""
+    if path.startswith("file:"):
+        path = path[len("file:"):]
+        while path.startswith("//"):
+            path = path[1:]
+    return path
+
+
 def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) for any Hadoop-scheme path — the JVM-side API
     that works where os.walk/shutil do not (hdfs://, s3a://)."""
@@ -137,7 +147,7 @@ def _store_fingerprint(
                 pass
         return (-1, next(_FP_SEQ))
     total = latest = 0
-    for base, _dirs, files in os.walk(sf_dir):
+    for base, _dirs, files in os.walk(_local_path(sf_dir)):
         for fn in files:
             try:
                 st = os.stat(os.path.join(base, fn))
@@ -167,12 +177,7 @@ def _remove_spill(path: str) -> None:
         except Exception:
             pass
         return
-    local = path
-    if local.startswith("file:"):
-        local = local[len("file:"):]
-        while local.startswith("//"):
-            local = local[1:]
-    shutil.rmtree(local, ignore_errors=True)
+    shutil.rmtree(_local_path(path), ignore_errors=True)
 
 
 def _cleanup_spills() -> None:
@@ -197,14 +202,10 @@ def _make_spill_dir(spark: SparkSession) -> str:
     import tempfile
 
     root = _spill_root(spark)
-    if "://" in root and not root.startswith("file:"):
+    if _is_remote_path(root):
         path = f"{root}/{spark.sparkContext.applicationId}-{next(_SPILL_SEQ)}"
     else:
-        local = root
-        if local.startswith("file:"):
-            local = local[len("file:"):]
-            while local.startswith("//"):
-                local = local[1:]
+        local = _local_path(root)
         os.makedirs(local, exist_ok=True)
         path = tempfile.mkdtemp(prefix="kg_view_graph_", dir=local)
     _SPILL_DIRS.append(path)

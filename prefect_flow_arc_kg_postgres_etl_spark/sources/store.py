@@ -8,32 +8,50 @@ at 100 TB that is a second full pass over every landed byte.
 
 Layout instead:
 
-    <table>.parquet/
-        v_1/ ... v_N/     parquet data, one directory per version
-        _current          text file holding N (the live version)
+    <store>/
+        _commit.lock          held while a writer publishes
+        _snapshot_<n>.json    manifests: {table: version} pins
+        <table>.parquet/
+            v_1/ ... v_N/     parquet data, one directory per version
+            _current          text file holding N (the live version)
+            _stage_<token>/   a writer's data before it is published
 
-A merge reads ``v_N``, writes ``v_{N+1}`` ONCE, then atomically swaps
-the ``_current`` pointer (tmp file + ``os.replace``) and prunes old
-versions. Readers resolve the pointer first, so a crash mid-write
-leaves the previous version live (the half-written ``v_{N+1}`` is
-replaced wholesale by the retry). Flat legacy directories (plain
+Every writer lands through one protocol: (1) stage — the data is
+written ONCE into a private ``_stage_<token>`` dir, uncoordinated;
+(2) publish — under the store's commit lock, ``_publish`` allocates
+max(pointer, on-disk ``v_*``) + 1, renames the staging dir to that
+version (no data copy) and swaps the ``_current`` pointer (tmp file +
+``os.replace``); (3) retire — ``vacuum_table`` removes superseded
+versions that no snapshot manifest pins. Two writers never pick the
+same version, and none touches a version it did not stage.
+
+Readers resolve the pointer first, so a crash before publish leaves
+the previous version live and only a ``_stage_*`` dir behind, which
+vacuum reclaims after its grace window. Flat legacy directories (plain
 parquet files, no ``_current``) read as version-less tables, and their
-first merge converts them to the versioned layout.
+first write converts them to the versioned layout.
 """
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
+import re
 import shutil
+import time
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 _POINTER = "_current"
-# A crashed commit_tables holder's lock is taken over after this many
-# seconds; its half-committed versions (above the live pointer,
-# unpinned by any manifest) become vacuum-reclaimable orphans.
+_VERSION_DIR = re.compile(r"v_(\d+)")
+_MANIFEST = re.compile(r"_snapshot_(\d+)\.json")
+# A crashed lock holder's lock is taken over after this many seconds;
+# its half-published versions (above the live pointer, unpinned by any
+# manifest) become vacuum-reclaimable orphans.
 _COMMIT_LOCK_TTL = 600.0
 
 
@@ -48,6 +66,131 @@ def current_version(table_path: str) -> int | None:
 
 def version_dir(table_path: str, version: int) -> str:
     return os.path.join(table_path, f"v_{version}")
+
+
+def _on_disk_versions(table_path: str) -> list[int]:
+    """Every ``v_<n>`` directory of the table, ascending: published,
+    superseded and orphaned alike."""
+    try:
+        names = os.listdir(table_path)
+    except OSError:
+        return []
+    return sorted(
+        int(m.group(1))
+        for n in names
+        if (m := _VERSION_DIR.fullmatch(n))
+        and os.path.isdir(os.path.join(table_path, n))
+    )
+
+
+def _manifests(store_dir: str) -> list[str]:
+    """The store's snapshot manifest paths, oldest first."""
+    names = os.listdir(store_dir) if os.path.isdir(store_dir) else []
+    found = {int(m.group(1)): n for n in names if (m := _MANIFEST.fullmatch(n))}
+    return [os.path.join(store_dir, found[k]) for k in sorted(found)]
+
+
+def _store_dir(table_path: str) -> str:
+    """The store a table belongs to: the dir holding its lock and
+    manifests."""
+    return os.path.dirname(os.path.abspath(table_path))
+
+
+def _stage(df: DataFrame, table_path: str, token: str) -> str:
+    """Write ``df`` into the table's private ``_stage_<token>`` dir;
+    returns that dir. Nothing reads it until ``_publish`` renames it."""
+    staged = os.path.join(table_path, f"_stage_{token}")
+    df.write.mode("overwrite").parquet(staged)
+    return staged
+
+
+@contextlib.contextmanager
+def _store_lock(store_dir: str):
+    """The store-wide commit lock: an O_EXCL lock file, taken over by
+    rename after ``_COMMIT_LOCK_TTL``, released only by its owner."""
+    lock = os.path.join(store_dir, "_commit.lock")
+    lock_token = f"{os.getpid()}:{uuid.uuid4().hex[:12]}"
+    while True:
+        try:
+            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            os.write(fd, lock_token.encode())
+            os.close(fd)
+            break
+        except FileExistsError:
+            try:
+                if time.time() - os.stat(lock).st_mtime > _COMMIT_LOCK_TTL:
+                    # Stale-lock takeover must be ATOMIC: two waiters
+                    # that both stat the lock as expired must not both
+                    # unlink — waiter B's pending unlink would delete
+                    # the fresh lock waiter A just created, letting two
+                    # committers into the rename/manifest critical
+                    # section. rename() to a unique name arbitrates:
+                    # exactly one waiter's rename succeeds (the path is
+                    # gone for everyone else), and the stale file is
+                    # removed under a name no other waiter targets.
+                    takeover = f"{lock}.takeover.{uuid.uuid4().hex[:8]}"
+                    try:
+                        os.rename(lock, takeover)
+                    except OSError:
+                        continue  # lost the takeover race; re-check
+                    os.unlink(takeover)
+                    continue
+            except OSError:
+                continue
+            time.sleep(0.05)
+    try:
+        yield
+    finally:
+        # Release only OUR lock: if this holder overstayed
+        # _COMMIT_LOCK_TTL and a waiter took the lock over, the file
+        # now belongs to someone else — unlinking unconditionally
+        # would unlock THEIR critical section. (Read-then-unlink is
+        # not atomic, but the window is microseconds against a TTL of
+        # seconds — strictly safer than the unconditional unlink.)
+        try:
+            with open(lock) as f:
+                if f.read() == lock_token:
+                    os.unlink(lock)
+        except OSError:
+            pass
+
+
+def _publish(table_path: str, staged: str) -> int:
+    """Publish a staged dir as the table's next version; the caller
+    holds the store lock. The version is max(pointer, every on-disk
+    ``v_*``) + 1, so a version another writer landed — published or
+    not — is never overwritten. Returns the version."""
+    v = 1 + max(
+        [current_version(table_path) or 0, *_on_disk_versions(table_path)]
+    )
+    os.rename(staged, version_dir(table_path, v))
+    tmp = os.path.join(table_path, _POINTER + ".tmp")
+    with open(tmp, "w") as f:
+        f.write(str(v))
+    os.replace(tmp, os.path.join(table_path, _POINTER))
+    return v
+
+
+def _claim_manifest(store_dir: str, entries: dict[str, int]) -> str:
+    """Land ``entries`` as the next free ``_snapshot_<n>.json``. The
+    content is written to a private file first and hard-linked to the
+    number, so the claim is exclusive (two snapshotters never clobber
+    each other, a held manifest path never re-resolves) and a reader
+    never sees a manifest half-written. Returns the manifest path."""
+    tmp = os.path.join(store_dir, f"_manifest_{uuid.uuid4().hex[:12]}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(entries, f, sort_keys=True)
+    try:
+        n = 1
+        while True:
+            path = os.path.join(store_dir, f"_snapshot_{n}.json")
+            try:
+                os.link(tmp, path)
+                return path
+            except FileExistsError:
+                n += 1
+    finally:
+        os.unlink(tmp)
 
 
 def _read_parquet(
@@ -86,22 +229,19 @@ def table_exists(table_path: str) -> bool:
 
 
 def write_table(df: DataFrame, table_path: str, prune: bool = True) -> int:
-    """Land ``df`` as the next version of the table: ONE data write,
-    then an atomic pointer swap. Returns the new version number.
+    """Land ``df`` as the next version of the table: ONE data write into
+    a staging dir, then a publish under the store lock (version
+    allocation, rename, pointer swap). Returns the new version number.
 
-    ``prune`` removes superseded version directories after the swap
-    (pointer-first readers can no longer reach them; at cluster scale
-    this is the async GC job, here it runs inline)."""
-    prev = current_version(table_path)
-    v = (prev or 0) + 1
-    df.write.mode("overwrite").parquet(version_dir(table_path, v))
-    tmp = os.path.join(table_path, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(str(v))
-    os.replace(tmp, os.path.join(table_path, _POINTER))
-    if prune and prev is not None:
-        for k in range(1, prev + 1):
-            shutil.rmtree(version_dir(table_path, k), ignore_errors=True)
+    ``prune`` then retires superseded versions through
+    ``vacuum_table(keep_last=1)``: every version but the live one goes,
+    except those a snapshot manifest in the store pins and orphans
+    still in their grace window (another writer's in-flight data)."""
+    staged = _stage(df, table_path, uuid.uuid4().hex[:12])
+    with _store_lock(_store_dir(table_path)):
+        v = _publish(table_path, staged)
+    if prune:
+        vacuum_table(table_path, _store_dir(table_path), keep_last=1)
     return v
 
 
@@ -227,9 +367,9 @@ def targeted_delete_rewrite(
     files that can possibly hold a target key; only THOSE files
     re-encode through an anti join, every other file carries over as a
     byte-level copy (at cluster scale: an object-store server-side
-    copy — no scan, no decode). The new file set lands as the next
-    store version with the usual atomic pointer swap, so readers never
-    see a half-deleted table.
+    copy — no scan, no decode). The new file set is staged and
+    published like any write, so readers never see a half-deleted
+    table, and a crashed attempt leaves only its ``_stage_*`` dir.
 
     The deletion key set broadcasts BY CONTRACT — erasure requests are
     small (and at z-ordered/clustered layouts the affected-file
@@ -260,34 +400,28 @@ def targeted_delete_rewrite(
     affected = {
         os.path.basename(urllib.parse.urlparse(r._f).path) for r in hit_rows
     }
-    new_v = (v or 0) + 1
-    dst = version_dir(table_path, new_v)
-    # A prior attempt that crashed mid-write (before the pointer swap)
-    # leaves part files in v_{N+1}; the survivors write below appends,
-    # so without clearing first a retry would commit duplicated rows.
-    # Wholesale replacement restores write_table's crash contract.
-    shutil.rmtree(dst, ignore_errors=True)
-    os.makedirs(dst, exist_ok=True)
+    staged = os.path.join(table_path, f"_stage_{uuid.uuid4().hex[:12]}")
+    os.makedirs(staged)
     for fn in os.listdir(src_dir):
         if fn.startswith("_") or fn in affected:
             continue
         if fn.endswith(".parquet"):
-            shutil.copy2(os.path.join(src_dir, fn), os.path.join(dst, fn))
+            shutil.copy2(os.path.join(src_dir, fn), os.path.join(staged, fn))
     if affected:
         survivors = spark.read.parquet(
             *[os.path.join(src_dir, fn) for fn in sorted(affected)]
         ).join(F.broadcast(tgt), F.col(key_col) == F.col("_k"), "left_anti")
-        survivors.write.mode("append").parquet(dst)
-    tmp = os.path.join(table_path, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(str(new_v))
-    os.replace(tmp, os.path.join(table_path, _POINTER))
+        survivors.write.mode("append").parquet(staged)
+    with _store_lock(_store_dir(table_path)):
+        new_v = _publish(table_path, staged)
     # Erasure REQUIRES destroying history: every older version — and
     # the flat-legacy files when the table predates versioning — still
-    # holds the erased rows, so unlike write_table's prune this removes
-    # ALL of them, time travel included (that is the point of the op).
-    for k in range(1, new_v):
-        shutil.rmtree(version_dir(table_path, k), ignore_errors=True)
+    # holds the erased rows, so unlike vacuum this removes ALL of them,
+    # pinned versions and time travel included (that is the point of
+    # the op).
+    for k in _on_disk_versions(table_path):
+        if k < new_v:
+            shutil.rmtree(version_dir(table_path, k), ignore_errors=True)
     if v is None:
         for fn in os.listdir(table_path):
             if fn.endswith(".parquet") or fn == "_SUCCESS":
@@ -304,11 +438,12 @@ def read_table_version(
     """TIME TRAVEL: read a PINNED store version instead of the live
     pointer — the audit/debug read every versioned store owes its
     operators ("what did the table look like before last night's
-    merge?"). Requires the version to still exist: pass
-    ``prune=False`` to ``write_table`` (retention) for tables that
-    need history; the pruning default keeps exactly the live version,
-    trading time travel for space, and this raises cleanly when the
-    requested version was GC'd."""
+    merge?"). Requires the version to still exist: write with
+    ``prune=False`` (or vacuum with a larger ``keep_last``, or pin it
+    in a snapshot manifest) for tables that need history; the pruning
+    default keeps only the live version and pinned ones, trading time
+    travel for space, and this raises cleanly when the requested
+    version was GC'd."""
     d = version_dir(table_path, version)
     if not os.path.isdir(d):
         raise FileNotFoundError(
@@ -329,55 +464,25 @@ def write_snapshot_manifest(store_dir: str, tables: list[str]) -> str:
     readable until erasure destroys history (targeted_delete_rewrite
     intentionally breaks them — that is the point of erasure).
 
-    Consistency against CONCURRENT writers: pointer reads are
-    per-table, so a single pass could capture a torn combination (a
-    commit landing between two reads). The manifest therefore
-    DOUBLE-READS — capture all pointers, re-read, and accept only when
-    both passes agree (optimistic validation; any table that moved
-    forces a retry). Every manifest gets its own numbered file, claimed
-    with O_EXCL so two snapshotters can never clobber each other and a
-    held manifest path never re-resolves to newer versions. Returns the
-    manifest path."""
-    import json
-
-    def capture() -> dict[str, int]:
-        out = {}
+    Consistency against CONCURRENT writers: every writer swaps its
+    pointer inside the store lock (``_publish``), so the pointers are
+    captured inside that lock too — one pass sees one commit point.
+    Every manifest gets its own numbered file (``_claim_manifest``), so
+    two snapshotters can never clobber each other and a held manifest
+    path never re-resolves to newer versions. Returns the manifest
+    path."""
+    with _store_lock(store_dir):
+        manifest = {}
         for name in tables:
             v = current_version(os.path.join(store_dir, f"{name}.parquet"))
             if v is None:
-                raise ValueError(
-                    f"snapshot: table {name!r} is not versioned"
-                )
-            out[name] = v
-        return out
-
-    manifest = capture()
-    for _ in range(100):
-        again = capture()
-        if again == manifest:
-            break
-        manifest = again
-    else:
-        raise RuntimeError(
-            "snapshot: store did not quiesce across 100 validation reads"
-        )
-    n = 1
-    while True:
-        path = os.path.join(store_dir, f"_snapshot_{n}.json")
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            break
-        except FileExistsError:
-            n += 1
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f, sort_keys=True)
-    return path
+                raise ValueError(f"snapshot: table {name!r} is not versioned")
+            manifest[name] = v
+        return _claim_manifest(store_dir, manifest)
 
 
 def read_manifest(manifest_path: str) -> dict[str, int]:
     """The {table: version} pins of one snapshot manifest."""
-    import json
-
     with open(manifest_path) as f:
         return json.load(f)
 
@@ -412,19 +517,17 @@ def vacuum_table(
     keep_last: int = 1,
     orphan_grace_sec: float = 3600.0,
 ) -> list[int]:
-    """A56 (r6): MANIFEST-AWARE RETENTION GC — the missing end of the
-    version lifecycle. ``write_table(prune=True)`` keeps only the live
-    version (no time travel); ``prune=False`` keeps everything
-    (unbounded space). Vacuum is the policy in between: remove
-    superseded versions EXCEPT (a) the newest ``keep_last`` and (b) any
-    version PINNED by a snapshot manifest in the store (A46) — so a
-    held manifest keeps resolving until it is deleted, and space is
-    reclaimed the moment nothing can reach a version. Pure file-
+    """A56 (r6): MANIFEST-AWARE RETENTION GC — the store's one retention
+    rule, the last step of every landing (``write_table(prune=True)``
+    runs it with ``keep_last=1``). Removes superseded versions EXCEPT
+    (a) the newest ``keep_last`` and (b) any version PINNED by a
+    snapshot manifest in the store (A46) — so a held manifest keeps
+    resolving until it is deleted, and space is reclaimed the moment
+    nothing can reach a version. Versions above the live pointer and
+    ``_stage_*`` dirs (a writer that crashed before or during publish)
+    go once they are older than ``orphan_grace_sec``. Pure file-
     metadata work (no data scan); returns the removed version numbers,
-    newest-first never includes the live pointer's version."""
-    import glob
-    import re
-
+    newest-first; never includes the live pointer's version."""
     if keep_last < 1:
         # versions[-0:] would be the WHOLE list — i.e. keep everything,
         # the opposite of what a caller passing 0 means. The live
@@ -438,25 +541,18 @@ def vacuum_table(
         table_name = table_name[: -len(".parquet")]
     pinned: set[int] = set()
     if store_dir:
-        for mp in glob.glob(os.path.join(store_dir, "_snapshot_*.json")):
+        for mp in _manifests(store_dir):
             manifest = read_manifest(mp)
             if table_name in manifest:
                 pinned.add(int(manifest[table_name]))
-    import time
-
-    versions = sorted(
-        int(m.group(1))
-        for d in glob.glob(os.path.join(table_path, "v_*"))
-        if (m := re.match(r".*v_(\d+)$", d)) and os.path.isdir(d)
-    )
+    versions = _on_disk_versions(table_path)
     # Retention window over REACHABLE history only (versions <= live):
     # a crashed committer's orphan numbered ABOVE the live pointer must
     # not permanently occupy the newest keep_last slot and displace a
     # genuinely reachable version (ADVICE r6). Unpinned orphans above
-    # live are themselves reclaimable — after a grace window, so an
-    # IN-FLIGHT commit (landed data, manifest not yet written) is never
-    # swept out from under its committer. Stale _stage_* dirs age out
-    # on the same clock.
+    # live are themselves reclaimable — after a grace window, so a
+    # version another writer is publishing is never swept out from
+    # under it. Stale _stage_* dirs age out on the same clock.
     now = time.time()
     reachable = [v for v in versions if v <= live]
     keep = set(reachable[-keep_last:]) | {live} | pinned
@@ -473,9 +569,13 @@ def vacuum_table(
                 continue
         shutil.rmtree(d, ignore_errors=True)
         removed.append(v)
-    for sd in glob.glob(os.path.join(table_path, "_stage_*")):
+    for name in os.listdir(table_path):
+        sd = os.path.join(table_path, name)
         try:
-            if now - os.stat(sd).st_mtime >= orphan_grace_sec:
+            if (
+                name.startswith("_stage_")
+                and now - os.stat(sd).st_mtime >= orphan_grace_sec
+            ):
                 shutil.rmtree(sd, ignore_errors=True)
         except OSError:
             pass
@@ -486,43 +586,33 @@ class CommitValidationError(RuntimeError):
     """A validated commit found constraint violations; nothing landed."""
 
 
-def write_table_validated(
-    df: DataFrame, table_path: str, checks: list, prune: bool = True
-) -> int:
+def write_table_validated(df: DataFrame, table_path: str, checks: list) -> int:
     """A62 (r6): CONSTRAINT-GATED COMMIT — the write-side composition
-    of the DQ checks (A40) with the versioned store: the data lands in
-    the next version directory, the checks run AGAINST THE LANDED
-    FILES (what readers would actually see — validating the input
-    DataFrame would miss write-path corruption), and only a clean
-    validation swaps the pointer. A failing check leaves the live
-    pointer UNTOUCHED (readers never observe the bad version) and the
-    orphaned directory is removed. ``checks`` = [(name, fn)] where fn
-    maps the landed DataFrame to a violation COUNT (0 = pass).
+    of the DQ checks (A40) with the versioned store: the data is
+    staged, the checks run AGAINST THE STAGED FILES (what readers would
+    actually see — validating the input DataFrame would miss
+    write-path corruption), and only a clean validation publishes and
+    prunes like ``write_table``. A failing check removes only its own
+    staging dir: the live pointer and every version stay UNTOUCHED.
+    ``checks`` = [(name, fn)] where fn maps the landed DataFrame to a
+    violation COUNT (0 = pass). Returns the new version number.
     Raises CommitValidationError listing every failing check."""
-    spark = df.sparkSession
-    prev = current_version(table_path)
-    v = (prev or 0) + 1
-    d = version_dir(table_path, v)
-    df.write.mode("overwrite").parquet(d)
-    landed = spark.read.parquet(d)
+    staged = _stage(df, table_path, uuid.uuid4().hex[:12])
+    landed = df.sparkSession.read.parquet(staged)
     failures = []
     for name, fn in checks:
         n = int(fn(landed))
         if n:
             failures.append((name, n))
     if failures:
-        shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(staged, ignore_errors=True)
         raise CommitValidationError(
             "validated commit rejected: "
             + ", ".join(f"{name}={n}" for name, n in failures)
         )
-    tmp = os.path.join(table_path, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(str(v))
-    os.replace(tmp, os.path.join(table_path, _POINTER))
-    if prune and prev is not None:
-        for k in range(1, prev + 1):
-            shutil.rmtree(version_dir(table_path, k), ignore_errors=True)
+    with _store_lock(_store_dir(table_path)):
+        v = _publish(table_path, staged)
+    vacuum_table(table_path, _store_dir(table_path), keep_last=1)
     return v
 
 
@@ -545,16 +635,18 @@ def commit_tables(
     cross-table writes (fact + its index, parent + child) need
     all-or-nothing VISIBILITY. Per-file pointers cannot give it, so
     the commit root moves up a level — the lakehouse answer (one
-    commit log/root for the whole store): every table's data lands in
-    its next version directory WITHOUT touching its pointer, then ONE
+    commit log/root for the whole store): every table stages its data
+    first, then, inside the store lock, each table is published
+    (``_publish``: version allocation, rename, pointer swap) and ONE
     numbered snapshot manifest referencing all the new versions is
-    claimed with O_EXCL — the manifest write is the commit point. A
-    crash before it leaves only unreferenced directories (invisible,
-    vacuum-able); after it, manifest readers see ALL new versions.
-    Per-table pointers then swap as a convenience cache for
-    single-table readers — idempotent on retry, and pointer-path
-    readers of a torn retry window are exactly the anomaly A46
-    manifests exist to avoid. Returns the manifest path.
+    claimed (``_claim_manifest``) — the manifest is the commit point.
+    A crash before the lock leaves only ``_stage_*`` dirs (invisible,
+    reclaimed by vacuum); a crash inside it can move some pointers, but
+    manifest readers see either the previous manifest or ALL new
+    versions. Per-table pointers are a convenience cache for
+    single-table readers; pointer-path readers of a torn window are
+    exactly the anomaly A46 manifests exist to avoid. Returns the
+    manifest path.
 
     ``carry_from`` (r11): a manifest path whose entries are INHERITED
     by the new snapshot for every table not in ``tables`` — a partial
@@ -598,12 +690,6 @@ def commit_tables(
     ``latest_manifest()`` call and this commit can never be silently
     un-pinned (the lost-update the path form permits under
     multi-writer use)."""
-    import glob
-    import json
-    import re
-    import time
-    import uuid
-
     derived = derived or {}
     if derived and carry_from == CARRY_LATEST:
         raise ValueError(
@@ -616,25 +702,19 @@ def commit_tables(
         else {}
     )
 
-    # Phase 1 — NO coordination: every committer lands its data in a
-    # private staging dir per table (a crash here leaves only
-    # unreferenced _stage_* dirs, reclaimed by vacuum).  Version
-    # numbers are NOT chosen yet: two concurrent committers computing
-    # (current+1) independently would overwrite each other's v_{N+1}
-    # and interleave pointer swaps (ADVICE r6) — exactly the torn state
-    # the manifest exists to prevent.
+    # Stage — NO coordination: every table lands in a private staging
+    # dir under one token (a crash here leaves only unreferenced
+    # _stage_* dirs, reclaimed by vacuum). Version numbers are chosen
+    # only at publish, inside the lock.
     token = uuid.uuid4().hex[:12]
     staged: dict[str, str] = {}
 
-    def _stage(name: str, df) -> tuple[str, str]:
-        tp = os.path.join(store_dir, f"{name}.parquet")
-        sd = os.path.join(tp, f"_stage_{token}")
-        df.write.mode("overwrite").parquet(sd)
-        return name, sd
+    def stage(name: str, df) -> str:
+        return _stage(df, os.path.join(store_dir, f"{name}.parquet"), token)
 
     items = list(tables.items())
     if items:
-        # Staging writes run CONCURRENTLY (r12): Phase 1 is
+        # Staging writes run CONCURRENTLY (r12): staging is
         # coordination-free by design, so a multi-table commit's wall
         # is max(per-table write) instead of sum — for the reference
         # load's ~30 small graph.* tables the sequential form was
@@ -645,17 +725,16 @@ def commit_tables(
         # thread; Spark's scheduler accepts concurrent job
         # submission from driver threads natively.
         name0, df0 = items[0]
-        staged[name0] = _stage(name0, df0)[1]
+        staged[name0] = stage(name0, df0)
         if len(items) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(
                 max_workers=min(8, len(items) - 1)
             ) as ex:
-                for name, sd in ex.map(
-                    lambda it: _stage(*it), items[1:]
-                ):
-                    staged[name] = sd
+                staged.update(
+                    ex.map(lambda it: (it[0], stage(*it)), items[1:])
+                )
 
     if derived:
         spark = (
@@ -675,60 +754,15 @@ def commit_tables(
         for name, df in items:
             inputs[name] = _read_parquet(spark, staged[name], df.schema)
         for name, build in derived.items():
-            staged[name] = _stage(name, build(inputs))[1]
+            staged[name] = stage(name, build(inputs))
 
-    # Phase 2 — metadata-only critical section under a store-wide
-    # O_EXCL lock: allocate version numbers from what is actually on
-    # disk, RENAME staging dirs into place (atomic, no data copy),
-    # claim the next manifest number, write the manifest (the commit
-    # point), swap the convenience pointers. Lock hold time is a few
-    # renames + two tiny file writes. A committer that crashed inside
-    # the lock leaves a stale lock file; it is taken over after
-    # _COMMIT_LOCK_TTL (and its half-renamed versions sit above the
-    # live pointer, unpinned — vacuum reclaims them after the grace
-    # window).
-    lock = os.path.join(store_dir, "_commit.lock")
-    lock_token = f"{os.getpid()}:{token}"
-    while True:
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.write(fd, lock_token.encode())
-            os.close(fd)
-            break
-        except FileExistsError:
-            try:
-                if time.time() - os.stat(lock).st_mtime > _COMMIT_LOCK_TTL:
-                    # Stale-lock takeover must be ATOMIC: two waiters
-                    # that both stat the lock as expired must not both
-                    # unlink — waiter B's pending unlink would delete
-                    # the fresh lock waiter A just created, letting two
-                    # committers into the rename/manifest critical
-                    # section. rename() to a unique name arbitrates:
-                    # exactly one waiter's rename succeeds (the path is
-                    # gone for everyone else), and the stale file is
-                    # removed under a name no other waiter targets.
-                    takeover = f"{lock}.takeover.{uuid.uuid4().hex[:8]}"
-                    try:
-                        os.rename(lock, takeover)
-                    except OSError:
-                        continue  # lost the takeover race; re-check
-                    os.unlink(takeover)
-                    continue
-            except OSError:
-                continue
-            time.sleep(0.05)
-    try:
-        landed: dict[str, int] = {}
-        for name, sd in staged.items():
-            tp = os.path.join(store_dir, f"{name}.parquet")
-            on_disk = [
-                int(m.group(1))
-                for d in glob.glob(os.path.join(tp, "v_*"))
-                if (m := re.match(r".*v_(\d+)$", d)) and os.path.isdir(d)
-            ]
-            v = max([current_version(tp) or 0, *on_disk, 0]) + 1
-            os.rename(sd, version_dir(tp, v))
-            landed[name] = v
+    # Publish — a metadata-only critical section: a rename and a
+    # pointer write per table, then the manifest.
+    with _store_lock(store_dir):
+        landed = {
+            name: _publish(os.path.join(store_dir, f"{name}.parquet"), sd)
+            for name, sd in staged.items()
+        }
         if carry_from == CARRY_LATEST:
             # Resolved here, INSIDE the lock: no commit can land
             # between resolution and the manifest write, so
@@ -736,48 +770,10 @@ def commit_tables(
             src = latest_manifest(store_dir)
             inherited = read_manifest(src) if src is not None else {}
         # new versions win; everything else is pinned as-was
-        manifest_entries = {**inherited, **landed}
-        n = 1
-        while True:
-            path = os.path.join(store_dir, f"_snapshot_{n}.json")
-            try:
-                mfd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                n += 1
-        with os.fdopen(mfd, "w") as f:
-            json.dump(manifest_entries, f, sort_keys=True)
-        # convenience-cache pointer swaps (idempotent; manifest is truth)
-        for name, v in landed.items():
-            tp = os.path.join(store_dir, f"{name}.parquet")
-            tmp = os.path.join(tp, _POINTER + ".tmp")
-            with open(tmp, "w") as f:
-                f.write(str(v))
-            os.replace(tmp, os.path.join(tp, _POINTER))
-    finally:
-        # Release only OUR lock: if this committer overstayed
-        # _COMMIT_LOCK_TTL and a waiter took the lock over, the file
-        # now belongs to someone else — unlinking unconditionally
-        # would unlock THEIR critical section. (Read-then-unlink is
-        # not atomic, but the window is microseconds against a TTL of
-        # seconds — strictly safer than the unconditional unlink.)
-        try:
-            with open(lock) as f:
-                if f.read() == lock_token:
-                    os.unlink(lock)
-        except OSError:
-            pass
-    return path
+        return _claim_manifest(store_dir, {**inherited, **landed})
 
 
 def latest_manifest(store_dir: str) -> str | None:
     """Highest-numbered snapshot manifest in the store, or None."""
-    import glob
-    import re
-
-    best, best_n = None, 0
-    for p in glob.glob(os.path.join(store_dir, "_snapshot_*.json")):
-        m = re.match(r".*_snapshot_(\d+)\.json$", p)
-        if m and int(m.group(1)) > best_n:
-            best, best_n = p, int(m.group(1))
-    return best
+    paths = _manifests(store_dir)
+    return paths[-1] if paths else None

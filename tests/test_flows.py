@@ -692,6 +692,87 @@ def test_commit_tables_derived_failure_commits_nothing(spark, tmp_path):
         )
 
 
+def _stage_dirs(table_path):
+    import os
+
+    return [e for e in os.listdir(table_path) if e.startswith("_stage_")]
+
+
+def test_write_table_allocates_past_every_version_on_disk(spark, tmp_path):
+    """write_table allocates its version the way commit_tables does:
+    past every v_* on disk, so a version another writer landed above
+    the pointer is never overwritten."""
+    sd = str(tmp_path)
+    tp = f"{sd}/t.parquet"
+    tstore.commit_tables(sd, {"t": spark.range(10)})  # v1
+    spark.range(3).write.parquet(tstore.version_dir(tp, 2))  # another writer's
+    assert tstore.write_table(spark.range(20), tp, prune=False) == 3
+    assert tstore.read_table_version(spark, tp, 2).count() == 3
+    assert tstore.read_table(spark, tp).count() == 20
+
+
+def test_write_table_validated_rejection_removes_only_its_staging(
+    spark, tmp_path
+):
+    """A failed check removes the validated write's own staging dir and
+    nothing else: another writer's version and the pointer stay."""
+    import pytest
+
+    sd = str(tmp_path)
+    tp = f"{sd}/t.parquet"
+    tstore.commit_tables(sd, {"t": spark.range(10)})  # v1
+    spark.range(3).write.parquet(tstore.version_dir(tp, 2))
+    with pytest.raises(tstore.CommitValidationError, match="nonempty=20"):
+        tstore.write_table_validated(
+            spark.range(20), tp, [("nonempty", lambda landed: landed.count())]
+        )
+    assert tstore.read_table_version(spark, tp, 2).count() == 3
+    assert tstore.current_version(tp) == 1
+    assert _stage_dirs(tp) == []
+
+
+def test_write_table_prune_spares_manifest_pins(spark, tmp_path):
+    """write_table's prune is vacuum_table(keep_last=1): a version the
+    latest manifest pins stays readable through it; an unpinned
+    superseded version goes."""
+    sd = str(tmp_path)
+    tp = f"{sd}/t.parquet"
+    manifest = tstore.commit_tables(sd, {"t": spark.range(10)})  # pins v1
+    tstore.write_table(spark.range(20), tp)  # v2
+    assert tstore.read_snapshot(spark, sd, manifest)["t"].count() == 10
+    tstore.write_table(spark.range(30), tp)  # v3: v2 is unpinned
+    assert tstore._on_disk_versions(tp) == [1, 3]
+    assert tstore.read_table(spark, tp).count() == 30
+
+
+def test_write_table_concurrent_writers_get_distinct_versions(spark, tmp_path):
+    """Writers racing on one table each publish a distinct version, none
+    is lost, and the pointer ends on the highest."""
+    import os
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    tp = str(tmp_path / "t.parquet")
+    n = 6  # more writers than the suite's cores
+
+    def land(i):
+        return i, tstore.write_table(spark.range(i + 1), tp, prune=False)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=n) as ex:
+            got = dict(ex.map(land, range(n), timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert sorted(got.values()) == list(range(1, n + 1))
+    for i, v in got.items():
+        assert tstore.read_table_version(spark, tp, v).count() == i + 1
+    assert tstore.current_version(tp) == n
+    assert _stage_dirs(tp) == []
+    assert not os.path.exists(tmp_path / "_commit.lock")
+
+
 def test_run_exclusive_skip_if_running(tmp_path):
     """The engine-side at-most-one-running guard (main_flow.py:31-42):
     a held lock skips, a crashed (stale) lock is reclaimed atomically,

@@ -931,6 +931,19 @@ def test_failed_landing_leaves_no_spill_dir(tmp_path):
     assert root.is_dir() and os.listdir(root) == []
 
 
+def test_store_fingerprint_reads_file_uris(tmp_path):
+    """A file: URI fingerprints like the plain path it names, so the
+    view and document caches notice a change under either spelling."""
+    (tmp_path / "a.parquet").write_bytes(b"x" * 10)
+    plain = RP._store_fingerprint(str(tmp_path))
+    assert plain[0] == 10
+    assert RP._store_fingerprint(f"file://{tmp_path}") == plain
+    assert RP._store_fingerprint(f"file:{tmp_path}") == plain
+    (tmp_path / "b.parquet").write_bytes(b"y" * 5)
+    assert RP._store_fingerprint(f"file:{tmp_path}") != plain
+    assert RP._store_fingerprint(f"file://{tmp_path}")[0] == 15
+
+
 def test_index_documents_ndjson_payload(spark):
     """The ES feed variant: one JSON document per (id, index) routing
     pair, payload parseable, null fields omitted (ES treats absent and

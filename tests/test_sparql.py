@@ -6,17 +6,11 @@ GRAPH, alternation-over-sequence paths, EXISTS-in-expression)."""
 from __future__ import annotations
 
 import glob
-import os
 
 import pytest
 
 from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
-
-QUERIES_DIR = "/root/reference/typescript/queries"
-
-needs_reference = pytest.mark.skipif(
-    not os.path.isdir(QUERIES_DIR), reason="reference queries not mounted"
-)
+from tests.conftest import QUERIES_DIR, needs_reference
 
 
 @needs_reference
@@ -1032,6 +1026,23 @@ def test_reference_query_dir_env_override(monkeypatch, tmp_path):
     assert kg._reference_query_path("person.sparql") == str(
         tmp_path / "person.sparql"
     )
+
+
+def test_load_reference_query_reads_dir_or_raises_typed(monkeypatch, tmp_path):
+    """The one reference loader reads from REFERENCE_QUERY_DIR at call
+    time, and an absent file raises ReferenceUnavailable (a
+    FileNotFoundError) naming it."""
+    from prefect_flow_arc_kg_postgres_etl_spark.plans import kg
+
+    (tmp_path / "person.sparql").write_text("CONSTRUCT {} WHERE {}")
+    monkeypatch.setenv("REFERENCE_QUERY_DIR", str(tmp_path))
+    assert kg.load_reference_query("person.sparql") == "CONSTRUCT {} WHERE {}"
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    monkeypatch.setenv("REFERENCE_QUERY_DIR", str(empty))
+    with pytest.raises(kg.ReferenceUnavailable, match="person.sparql"):
+        kg.load_reference_query("person.sparql")
+    assert issubclass(kg.ReferenceUnavailable, FileNotFoundError)
 
 
 def test_compat_join_preserves_lang_term_identity(spark):

@@ -12,6 +12,11 @@ Round-1 lesson: the previous mirror stringified every cell, which passed
 list-typed columns and int/float drift that the driver rejects. This one
 must be at least as strict as the driver.
 
+An entry whose builder raises ``ReferenceUnavailable`` (the
+reference's query files are not mounted) is listed as ``unavailable``
+with its own count and does not fail the gate; any other exception
+does.
+
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
@@ -28,6 +33,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
+from prefect_flow_arc_kg_postgres_etl_spark.plans.kg import ReferenceUnavailable
 from prefect_flow_arc_kg_postgres_etl_spark.plans.registry import QUERIES
 from prefect_flow_arc_kg_postgres_etl_spark.session import get_spark
 from prefect_flow_arc_kg_postgres_etl_spark.sources.catalog import TABLES
@@ -159,6 +165,7 @@ def main() -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     n_pass = n_fail = 0
+    unavailable = []
     for name, spec in QUERIES.items():
         if only and name not in only:
             continue
@@ -166,6 +173,10 @@ def main() -> int:
         try:
             sdf = spec.builder(spark, sf_dir)
             s_pd = sdf.toPandas()
+        except ReferenceUnavailable as e:
+            print(f"UNAV {name}: {e}")
+            unavailable.append(name)
+            continue
         except Exception as e:
             print(f"FAIL {name}: spark error: {type(e).__name__}: {e}")
             n_fail += 1
@@ -193,7 +204,9 @@ def main() -> int:
             print(f"PASS {name} ({len(s_pd)} rows, {time.time()-t0:.1f}s)")
             n_pass += 1
 
-    print(f"\n{n_pass} pass, {n_fail} fail")
+    print(f"\n{n_pass} pass, {n_fail} fail, {len(unavailable)} unavailable")
+    if unavailable:
+        print("unavailable: " + ", ".join(unavailable))
     return 1 if n_fail else 0
 
 

@@ -118,51 +118,23 @@ def run_exclusive(lock_dir, name, fn, ttl_seconds=6 * 3600):
     concurrent full syncs interleaving truncate+insert corrupt the
     store no matter who scheduled them).
 
-    Semantics: acquire ``<lock_dir>/<name>.running`` with O_EXCL; if
+    Semantics: one ``store.try_lock`` on ``<lock_dir>/<name>.running``
+    (the store's commit-lock file, tried once instead of waited on); if
     held, return ``(False, None)`` — skipped, exactly the reference's
     warning-and-return. A lock older than ``ttl_seconds`` is a crashed
-    run: takeover is rename-arbitrated (atomic — two waiters cannot
-    both reclaim, the sources/store commit-lock pattern). On success
-    run ``fn()`` and return ``(True, result)``; the lock releases only
-    if still owned."""
+    run and is taken over. On success run ``fn()`` and return
+    ``(True, result)``; the lock releases only if still owned."""
     import os
-    import time
-    import uuid
 
     os.makedirs(lock_dir, exist_ok=True)
     lock = os.path.join(lock_dir, f"{name}.running")
-    token = uuid.uuid4().hex
-    try:
-        fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        try:
-            stale = time.time() - os.stat(lock).st_mtime > ttl_seconds
-        except OSError:
-            return False, None  # released between stat attempts: treat
-            # as running — next tick gets it
-        if not stale:
-            return False, None
-        takeover = f"{lock}.takeover.{uuid.uuid4().hex[:8]}"
-        try:
-            os.rename(lock, takeover)
-        except OSError:
-            return False, None  # lost the takeover race
-        os.unlink(takeover)
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            return False, None
-    os.write(fd, token.encode())
-    os.close(fd)
+    token = store.try_lock(lock, ttl_seconds)
+    if token is None:
+        return False, None
     try:
         return True, fn()
     finally:
-        try:
-            with open(lock) as f:
-                if f.read() == token:
-                    os.unlink(lock)
-        except OSError:
-            pass
+        store.release_lock(lock, token)
 
 
 def check_blocking(lock_dir, deployments, ttl_seconds=6 * 3600):

@@ -1828,11 +1828,9 @@ class _Eval:
         # stay bounded (the non-adaptive checkpoint plan cannot
         # size-coalesce), while COLD aggregate parallelism is preserved
         # because the first action executes all stars' narrow final
-        # stages concurrently in one DAG. Scale knob:
-        # SPARK_GRAFT_STAR_CKPT_PARTITIONS (default cores/8, min 2).
-        n_ckpt = int(
-            os.environ.get("SPARK_GRAFT_STAR_CKPT_PARTITIONS", "0")
-        ) or max(
+        # stages concurrently in one DAG. The count scales with the
+        # cluster: cores/8, at least 2.
+        n_ckpt = max(
             2,
             self.quads.sparkSession.sparkContext.defaultParallelism // 8,
         )
@@ -2228,19 +2226,7 @@ class _Eval:
                 from concurrent.futures import ThreadPoolExecutor
 
                 self._fanout_hot_buckets()
-                n_threads = min(
-                    int(
-                        _os.environ.get(
-                            "SPARK_GRAFT_STAR_COMPILE_THREADS", "8"
-                        )
-                    )
-                    or 1,
-                    len(groups),
-                )
-            else:
-                n_threads = 1
-            if n_threads > 1:
-                with ThreadPoolExecutor(max_workers=n_threads) as pool:
+                with ThreadPoolExecutor(max_workers=min(8, len(groups))) as pool:
                     star_units = list(
                         pool.map(
                             lambda kt: self._star_scan(
@@ -2821,64 +2807,6 @@ def parse(text: str) -> Query:
     return Parser(text).parse_query()
 
 
-import threading as _threading
-
-_TRUNCATE_AQE_LOCK = _threading.Lock()
-_TRUNCATE_AQE_DEPTH = 0
-_TRUNCATE_AQE_SAVED: "str | None" = None
-
-
-class _no_aqe_planning:
-    """Plan-with-AQE-off scope for lineage truncation (r13). Even a
-    LAZY ``localCheckpoint`` calls ``queryExecution.toRdd``, and with
-    adaptive execution enabled ``AdaptiveSparkPlanExec.execute`` runs
-    ``getFinalPhysicalPlan`` — which EXECUTES every shuffle stage of
-    the subtree synchronously at checkpoint-CALL time. Profiled on the
-    issues query at sf0.1: 33.4 s of its 47.5 s cold compile was the
-    22 truncation points each serially executing their star pivot's
-    stages with an idle tail (guide §2.6's anti-pattern). Planning the
-    checkpointed subtree with AQE OFF keeps toRdd genuinely lazy: the
-    FIRST action executes every star subtree inside one job DAG, where
-    the scheduler overlaps the independent stars across the cluster.
-    The traded-away AQE features are minor for these subtrees (a star
-    pivot is scan -> filter -> hash aggregate: no joins to re-plan; the
-    static shuffle partition count only shapes the checkpoint block
-    layout), and the TOP-LEVEL query plan — everything the truncation
-    points feed — still plans and runs under AQE. Re-entrant and
-    thread-safe (the star compile pool plans truncations
-    concurrently): a depth counter keeps AQE off until the outermost
-    scope restores the saved value.
-
-    Known limit: the flag is set on the SHARED session conf, so while
-    a star compiles, every other query planned in the same session
-    (another thread, the per-organisation fan-out) plans without AQE
-    too."""
-
-    def __init__(self, spark):
-        self.spark = spark
-
-    def __enter__(self):
-        global _TRUNCATE_AQE_DEPTH, _TRUNCATE_AQE_SAVED
-        with _TRUNCATE_AQE_LOCK:
-            if _TRUNCATE_AQE_DEPTH == 0:
-                _TRUNCATE_AQE_SAVED = self.spark.conf.get(
-                    "spark.sql.adaptive.enabled", "true"
-                )
-                self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-            _TRUNCATE_AQE_DEPTH += 1
-        return self
-
-    def __exit__(self, *exc):
-        global _TRUNCATE_AQE_DEPTH
-        with _TRUNCATE_AQE_LOCK:
-            _TRUNCATE_AQE_DEPTH -= 1
-            if _TRUNCATE_AQE_DEPTH == 0:
-                self.spark.conf.set(
-                    "spark.sql.adaptive.enabled", _TRUNCATE_AQE_SAVED
-                )
-        return False
-
-
 def _truncate_lineage(df: DataFrame, coalesce: "int | None" = None) -> DataFrame:
     """Accumulator lineage truncation, in the durability mode the run
     needs. Default: a LAZY executor-local DISK_ONLY localCheckpoint —
@@ -2893,33 +2821,49 @@ def _truncate_lineage(df: DataFrame, coalesce: "int | None" = None) -> DataFrame
     dir (defaulted beneath the warehouse — shared storage on a real
     cluster), which survive executor loss and driver restarts.
 
-    The subtree is PLANNED with AQE off (see _no_aqe_planning) so the
-    checkpoint call stays lazy instead of serially executing its
-    shuffle stages. Because the non-adaptive plan cannot coalesce its
-    output by size, callers whose checkpointed frame is known-small
-    (the per-subject star pivots) pass ``coalesce`` to bound the
-    block count — without it every checkpoint holds one block per
-    static shuffle partition, and a 22-truncation query leaves 3.5x
-    the storage blocks (measured: 1474 vs 419), slowing every warm
-    re-read and the whole session's block manager."""
-    import os
+    Either checkpoint is planned in a throwaway clone of the frame's
+    session with AQE off, and the result is rebound to the caller's
+    session. Even a lazy checkpoint calls ``queryExecution.toRdd``,
+    and under AQE ``AdaptiveSparkPlanExec.execute`` runs every shuffle
+    stage of the subtree at call time: on the issues query (sf0.1)
+    its 22 truncation points ran their star pivots one after another,
+    33.4 s of a 47.5 s cold compile. A non-adaptive plan keeps toRdd
+    lazy, so the first action runs every star subtree in one job DAG.
+    The star pivots lose little (scan -> filter -> hash aggregate, no
+    joins to re-plan), and the query the checkpoints feed still plans
+    under the caller's AQE. The clone (``cloneSession``, not
+    ``newSession``, which drops runtime conf) carries the caller's
+    conf, and the caller's session conf is never written, so no other
+    thread's or session's queries plan differently meanwhile.
+
+    Because the non-adaptive plan cannot coalesce its output by size,
+    callers whose checkpointed frame is known-small (the per-subject
+    star pivots) pass ``coalesce`` to bound the block count — without
+    it every checkpoint holds one block per static shuffle partition,
+    and a 22-truncation query leaves 3.5x the storage blocks
+    (measured: 1474 vs 419), slowing every warm re-read and the whole
+    session's block manager."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicFrame
+    from pyspark.storagelevel import StorageLevel
 
     if coalesce:
         df = df.coalesce(coalesce)
+    spark = df.sparkSession
+    sc = spark.sparkContext
+    rows = sc._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+    planner = spark._jsparkSession.cloneSession()
+    planner.conf().set("spark.sql.adaptive.enabled", "false")
+    subtree = rows(planner, df._jdf.logicalPlan())
     if os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT") == "1":
-        spark = df.sparkSession
-        sc = spark.sparkContext
         if sc._jsc.sc().getCheckpointDir().isEmpty():
             wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
             sc.setCheckpointDir(f"{wh.rstrip('/')}/_sparql_checkpoints")
-        with _no_aqe_planning(spark):
-            return df.checkpoint(eager=False)
-    from pyspark.storagelevel import StorageLevel
-
-    with _no_aqe_planning(df.sparkSession):
-        return df.localCheckpoint(
-            eager=False, storageLevel=StorageLevel.DISK_ONLY
+        ckpt = subtree.checkpoint(False)
+    else:
+        ckpt = subtree.localCheckpoint(
+            False, sc._getJavaStorageLevel(StorageLevel.DISK_ONLY)
         )
+    return ClassicFrame(rows(spark._jsparkSession, ckpt.logicalPlan()), spark)
 
 
 # Prepared-plan cache: the reference runner executes the same nine

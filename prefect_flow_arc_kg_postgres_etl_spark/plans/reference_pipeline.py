@@ -2063,7 +2063,6 @@ def all_view_triples_scoped(
     spark: SparkSession,
     sf_dir: str,
     or_ids: list[str],
-    max_parallel: int | None = None,
 ) -> DataFrame:
     """The per-organisation fan-out form of step 1: every production
     query runs ONCE PER OR ID with ?maintainer_id injected — exactly
@@ -2080,19 +2079,17 @@ def all_view_triples_scoped(
     unmaterialized verbatim plans is exactly the megaplan the landing
     step exists to prevent).
 
-    r10: scoped runs OVERLAP through a bounded thread pool (default
-    SPARK_GRAFT_FANOUT_PARALLEL=4, 1 = the old serial loop). The
+    r10: scoped runs OVERLAP through a 4-worker thread pool. The
     reference runs its per-org pipeline serially (the TS loop); on a
     cluster each scoped run is a SMALL job (one org's metadata graph),
     and serial landing leaves the executors idle between jobs — the
     r9 verdict's named fan-out lever. Each worker tags its jobs with a
     scheduler pool so a FAIR-configured cluster interleaves them;
     under the default FIFO local mode concurrent jobs still fill idle
-    task slots. The per-run plan-cache clear + gc of the serial path
-    (driver-heap hygiene for 1 GiB drivers) moves to one sweep per
-    pool drain."""
+    task slots. The plan cache is cleared and the heap collected once
+    the pool drains (driver-heap hygiene for 1 GiB drivers)."""
     import gc
-    import os
+    from concurrent.futures import ThreadPoolExecutor
 
     from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
     from prefect_flow_arc_kg_postgres_etl_spark.plans import kg
@@ -2110,36 +2107,24 @@ def all_view_triples_scoped(
     ):
         runs.extend((slug, oid) for oid in or_ids)
     spill = _make_spill_dir(spark)
-    if max_parallel is None:
-        max_parallel = int(os.environ.get("SPARK_GRAFT_FANOUT_PARALLEL", "4"))
     paths = [f"{spill}/q{i}" for i in range(len(runs))]
-    if max_parallel <= 1:
-        for i, (slug, oid) in enumerate(runs):
+    workers = 4
+
+    def _land(item: tuple[int, tuple[str, str | None]]) -> None:
+        i, (slug, oid) = item
+        sc = spark.sparkContext
+        sc.setLocalProperty("spark.scheduler.pool", f"kg-fanout-{i % workers}")
+        try:
             df = kg.run_reference_query_scoped(spark, sf_dir, slug, oid)
             df.write.mode("overwrite").parquet(paths[i])
-            del df
-            SQ.clear_plan_cache()
-            gc.collect()
-    else:
-        from concurrent.futures import ThreadPoolExecutor
+        finally:
+            sc.setLocalProperty("spark.scheduler.pool", None)
 
-        def _land(item: tuple[int, tuple[str, str | None]]) -> None:
-            i, (slug, oid) = item
-            sc = spark.sparkContext
-            sc.setLocalProperty(
-                "spark.scheduler.pool", f"kg-fanout-{i % max_parallel}"
-            )
-            try:
-                df = kg.run_reference_query_scoped(spark, sf_dir, slug, oid)
-                df.write.mode("overwrite").parquet(paths[i])
-            finally:
-                sc.setLocalProperty("spark.scheduler.pool", None)
-
-        with ThreadPoolExecutor(max_workers=max_parallel) as pool:
-            # list() re-raises the first worker exception
-            list(pool.map(_land, enumerate(runs)))
-        SQ.clear_plan_cache()
-        gc.collect()
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        # list() re-raises the first worker exception
+        list(pool.map(_land, enumerate(runs)))
+    SQ.clear_plan_cache()
+    gc.collect()
     return spark.read.parquet(*paths).distinct()
 
 

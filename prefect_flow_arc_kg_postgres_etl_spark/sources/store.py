@@ -104,55 +104,60 @@ def _stage(df: DataFrame, table_path: str, token: str) -> str:
     return staged
 
 
-@contextlib.contextmanager
-def _store_lock(store_dir: str):
-    """The store-wide commit lock: an O_EXCL lock file, taken over by
-    rename after ``_COMMIT_LOCK_TTL``, released only by its owner."""
-    lock = os.path.join(store_dir, "_commit.lock")
-    lock_token = f"{os.getpid()}:{uuid.uuid4().hex[:12]}"
-    while True:
+def try_lock(lock: str, ttl_seconds: float) -> str | None:
+    """One non-blocking attempt at an O_EXCL lock file. Returns the
+    owner token written into it, or None while someone else holds it.
+    A lock older than ``ttl_seconds`` belongs to a crashed holder and
+    is taken over — atomically: two waiters that both see it expired
+    must not both unlink, or one would delete the fresh lock the other
+    just created. ``rename`` to a unique name arbitrates: exactly one
+    rename succeeds, and the stale file is removed under a name no
+    other waiter targets."""
+    token = f"{os.getpid()}:{uuid.uuid4().hex[:12]}"
+    try:
+        fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+    except FileExistsError:
+        takeover = f"{lock}.takeover.{uuid.uuid4().hex[:8]}"
+        try:
+            if time.time() - os.stat(lock).st_mtime <= ttl_seconds:
+                return None
+            os.rename(lock, takeover)
+        except OSError:
+            return None  # released meanwhile, or lost the takeover race
+        os.unlink(takeover)
         try:
             fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.write(fd, lock_token.encode())
-            os.close(fd)
-            break
         except FileExistsError:
-            try:
-                if time.time() - os.stat(lock).st_mtime > _COMMIT_LOCK_TTL:
-                    # Stale-lock takeover must be ATOMIC: two waiters
-                    # that both stat the lock as expired must not both
-                    # unlink — waiter B's pending unlink would delete
-                    # the fresh lock waiter A just created, letting two
-                    # committers into the rename/manifest critical
-                    # section. rename() to a unique name arbitrates:
-                    # exactly one waiter's rename succeeds (the path is
-                    # gone for everyone else), and the stale file is
-                    # removed under a name no other waiter targets.
-                    takeover = f"{lock}.takeover.{uuid.uuid4().hex[:8]}"
-                    try:
-                        os.rename(lock, takeover)
-                    except OSError:
-                        continue  # lost the takeover race; re-check
-                    os.unlink(takeover)
-                    continue
-            except OSError:
-                continue
-            time.sleep(0.05)
+            return None
+    os.write(fd, token.encode())
+    os.close(fd)
+    return token
+
+
+def release_lock(lock: str, token: str) -> None:
+    """Remove ``lock`` only if it still holds ``token``: a holder that
+    overstayed the TTL and was taken over must not unlock its
+    successor. (Read-then-unlink is not atomic, but the window is
+    microseconds against a TTL of minutes.)"""
+    try:
+        with open(lock) as f:
+            if f.read() == token:
+                os.unlink(lock)
+    except OSError:
+        pass
+
+
+@contextlib.contextmanager
+def _store_lock(store_dir: str):
+    """The store-wide commit lock: ``try_lock`` on
+    ``<store>/_commit.lock`` until it is ours, then ``release_lock``."""
+    lock = os.path.join(store_dir, "_commit.lock")
+    while (token := try_lock(lock, _COMMIT_LOCK_TTL)) is None:
+        time.sleep(0.05)
     try:
         yield
     finally:
-        # Release only OUR lock: if this holder overstayed
-        # _COMMIT_LOCK_TTL and a waiter took the lock over, the file
-        # now belongs to someone else — unlinking unconditionally
-        # would unlock THEIR critical section. (Read-then-unlink is
-        # not atomic, but the window is microseconds against a TTL of
-        # seconds — strictly safer than the unconditional unlink.)
-        try:
-            with open(lock) as f:
-                if f.read() == lock_token:
-                    os.unlink(lock)
-        except OSError:
-            pass
+        release_lock(lock, token)
 
 
 def _publish(table_path: str, staged: str) -> int:

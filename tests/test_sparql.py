@@ -1221,6 +1221,115 @@ def test_reliable_checkpoint_mode(spark, monkeypatch, tmp_path):
     SQ.clear_plan_cache()
 
 
+def _shuffled(spark):
+    """A fresh frame with a shuffle: a lazy checkpoint of it must not
+    run its exchange at call time."""
+    from pyspark.sql import functions as F
+
+    return (
+        spark.range(1000)
+        .groupBy((F.col("id") % 7).alias("k"))
+        .agg(F.count("*").alias("n"))
+    )
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+@pytest.mark.parametrize("reliable", [False, True])
+def test_truncate_lineage_starts_no_job(spark, monkeypatch, tmp_path, reliable):
+    """Both checkpoint modes stay lazy: truncating a shuffled frame
+    starts no Spark job until the frame's first action, and the result
+    belongs to the caller's session with the frame's rows."""
+    if reliable:
+        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+        monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
+    df = _shuffled(spark)
+    before = _next_job_id(spark)
+    out = SQ._truncate_lineage(df, coalesce=2)
+    assert _next_job_id(spark) == before
+    assert out.sparkSession is spark
+    assert sorted(map(tuple, out.collect())) == [
+        (k, 143 if k < 6 else 142) for k in range(7)
+    ]
+
+
+def test_truncate_lineage_leaves_caller_aqe_on(spark, monkeypatch):
+    """The caller's session keeps AQE on while a truncation plans its
+    checkpoint: the subtree plans in a clone, so queries other threads
+    plan in the same session meanwhile keep adaptive execution. Read
+    from inside the checkpoint call (its storage-level conversion)."""
+    from pyspark import SparkContext
+
+    seen: list[str] = []
+    convert = SparkContext._getJavaStorageLevel
+
+    def spy(sc, level):
+        seen.append(spark.conf.get("spark.sql.adaptive.enabled"))
+        return convert(sc, level)
+
+    monkeypatch.setattr(SparkContext, "_getJavaStorageLevel", spy)
+    SQ._truncate_lineage(_shuffled(spark))
+    assert seen == ["true"]
+
+
+def test_truncate_lineage_overlapping_sessions_keep_their_conf(
+    spark, monkeypatch
+):
+    """Two sessions of one application truncate with overlapping
+    scopes — the first enters, the second enters, the first exits,
+    then the second — and each session's AQE setting afterwards is
+    what it was before, whatever the other session's was."""
+    import threading
+
+    from pyspark import SparkContext
+
+    other = spark.newSession()
+    other.conf.set("spark.sql.adaptive.enabled", "false")
+    before = {
+        "first": spark.conf.get("spark.sql.adaptive.enabled"),
+        "second": other.conf.get("spark.sql.adaptive.enabled"),
+    }
+    first_in, second_in, first_out = (threading.Event() for _ in range(3))
+    convert = SparkContext._getJavaStorageLevel
+
+    def gate(sc, level):
+        if threading.current_thread().name == "first":
+            first_in.set()
+            assert second_in.wait(60)
+        else:
+            second_in.set()
+            assert first_out.wait(60)
+        return convert(sc, level)
+
+    monkeypatch.setattr(SparkContext, "_getJavaStorageLevel", gate)
+    results: dict[str, list] = {}
+
+    def run(session, done=None):
+        out = SQ._truncate_lineage(_shuffled(session))
+        if done is not None:
+            done.set()
+        results[threading.current_thread().name] = out
+
+    first = threading.Thread(target=run, args=(spark, first_out), name="first")
+    second = threading.Thread(target=run, args=(other,), name="second")
+    first.start()
+    assert first_in.wait(60)
+    second.start()
+    first.join(120)
+    second.join(120)
+    assert not first.is_alive() and not second.is_alive()
+    monkeypatch.undo()
+
+    assert set(results) == {"first", "second"}
+    assert {
+        "first": spark.conf.get("spark.sql.adaptive.enabled"),
+        "second": other.conf.get("spark.sql.adaptive.enabled"),
+    } == before
+    assert results["first"].count() == results["second"].count() == 7
+
+
 def test_star_fusion_differential(spark, monkeypatch):
     """Property-table STAR fusion (same-subject constant-predicate
     triples -> one predicate-IN scan + one subject pivot, r11) must be

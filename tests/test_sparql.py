@@ -1304,7 +1304,7 @@ def test_truncate_lineage_overlapping_sessions_keep_their_conf(
         return convert(sc, level)
 
     monkeypatch.setattr(SparkContext, "_getJavaStorageLevel", gate)
-    results: dict[str, list] = {}
+    results: dict = {}
 
     def run(session, done=None):
         out = SQ._truncate_lineage(_shuffled(session))

@@ -35,7 +35,10 @@ from prefect_flow_arc_kg_postgres_etl_spark.operators import merge as M
 from prefect_flow_arc_kg_postgres_etl_spark.operators.merge import fk_merge_order
 from prefect_flow_arc_kg_postgres_etl_spark.sinks.es_bulk import write_bulk_ndjson
 from prefect_flow_arc_kg_postgres_etl_spark.sinks.jdbc import stage_then_merge
-from prefect_flow_arc_kg_postgres_etl_spark.sinks.observed import observed_write
+from prefect_flow_arc_kg_postgres_etl_spark.sinks.observed import (
+    observed_counts,
+    observed_write,
+)
 from prefect_flow_arc_kg_postgres_etl_spark.sources import store
 from prefect_flow_arc_kg_postgres_etl_spark.sources.catalog import load_table
 
@@ -627,7 +630,6 @@ def ingest_flow(
     store_path: str,
     batches: list[DataFrame],
     threshold: float = 0.8,
-    collect_stats: bool = True,
 ) -> tuple[DataFrame, RunStats]:
     """Incremental CORPUS GROWTH (r6) — the continuous form of
     ``curation_flow``'s one-shot dedup: each arriving batch dedups
@@ -649,7 +651,10 @@ def ingest_flow(
     which member of a cross-batch dup cluster survives then depends on
     arrival order — first arrival wins, by design.
 
-    Returns (final corpus frame, per-batch RunStats)."""
+    Returns (final corpus frame, RunStats): per batch, the rows that
+    arrived (``staged``) and landed (``merged``), and under ``corpus``
+    the rows the last write landed in all. Every count is observed in
+    the write that lands the batch; none costs a pass of its own."""
     from prefect_flow_arc_kg_postgres_etl_spark.operators.dedup import (
         incremental_dup_pairs,
     )
@@ -752,28 +757,40 @@ def ingest_flow(
             if decided_survivors is None
             else decided_survivors.unionByName(undecided)
         )
-        survivors = batch.join(surviving_ids, "doc_id", "left_semi")
-        merged = (
-            history.unionByName(survivors)
-            if history is not None
-            else survivors
+        # Every batch row rides the write marked ``_kept`` (survivor)
+        # or not, so the one observation above the left join counts
+        # what arrived, what survived and the whole corpus; the write
+        # keeps the survivors. (Under a semi join the observation
+        # could be dropped with an empty side.) The counts cannot run
+        # after the write: write_table prunes the previous version,
+        # which the survivors' lineage still reads.
+        landing = batch.join(
+            surviving_ids.withColumn("_kept", F.lit(True)), "doc_id", "left"
+        ).select(*batch.columns, "_kept", F.lit(True).alias("_batch"))
+        if history is not None:
+            landing = history.withColumns(
+                {"_kept": F.lit(True), "_batch": F.lit(False)}
+            ).unionByName(landing)
+        counts = observed_counts(
+            landing,
+            lambda d: store.write_table(
+                d.filter("_kept").drop("_kept", "_batch"), store_path
+            ),
+            staged=F.col("_batch"),
+            merged=F.col("_batch") & F.col("_kept"),
+            corpus=F.col("_kept"),
         )
-        # Stats counts run BEFORE the write: write_table prunes the
-        # previous store version, and survivors' lineage still reads
-        # it — counting afterwards would die on the deleted files
-        # (r6 review; the default collect_stats=True path).
-        if collect_stats:
-            # status 'merged': ingested batches ARE merged into the
-            # store, so RunStats.merged_tables counts them (unlike
-            # curation's pure projections, which use 'curated' exactly
-            # so that total stays 0).
-            stats.tables[f"batch_{i}"] = {
-                "staged": batch.count(),
-                "merged": survivors.count(),
-                "status": "merged",
-                "error": None,
-            }
-        store.write_table(merged, store_path)
+        # status 'merged': ingested batches ARE merged into the store,
+        # so RunStats.merged_tables counts them (unlike curation's pure
+        # projections, which use 'curated' exactly so that total stays
+        # 0).
+        stats.tables[f"batch_{i}"] = {
+            "staged": counts["staged"],
+            "merged": counts["merged"],
+            "status": "merged",
+            "error": None,
+        }
+        corpus_rows = counts["corpus"]
     if not store.table_exists(store_path):
         # No batches and no pre-existing store: nothing to read and no
         # schema to synthesize an empty frame from — fail loudly
@@ -782,12 +799,11 @@ def ingest_flow(
             "ingest_flow: no batches ingested and no existing store at "
             f"{store_path!r}"
         )
-    final = store.read_table(spark, store_path)
-    if collect_stats:
+    if batches:
         stats.tables["corpus"] = {
             "staged": -1,
-            "merged": final.count(),
+            "merged": corpus_rows,
             "status": "merged",
             "error": None,
         }
-    return final, stats
+    return store.read_table(spark, store_path), stats

@@ -1,20 +1,20 @@
 """SPARQL text -> DataFrame compiler: run the reference's OWN query files.
 
 The reference executes hand-written SPARQL CONSTRUCT files against its
-quad store (typescript/queries/*.sparql via 1_kg_view_construct.ts);
-the repo's ``operators/triples.construct`` implements the same algebra
-as composable Python, but takes patterns as Python literals. This
-module closes the loop: a tokenizer + recursive-descent parser for the
-grammar subset those production files actually use, lowered to
-DataFrame operations over the (subject, predicate, object, lang, graph)
-quad schema shared with ``triples.melt``.
+quad store (typescript/queries/*.sparql via 1_kg_view_construct.ts).
+This module is the repo's one SPARQL evaluator: a tokenizer +
+recursive-descent parser for the grammar subset those production
+files use (and the registry's own KG entries), lowered to DataFrame
+operations over the (subject, predicate, object, lang, graph) quad
+schema shared with ``triples.melt``.
 
 Grammar surface (everything person.sparql and organization.sparql use):
   PREFIX prologue; CONSTRUCT template (predicate-object lists, ``a``,
   literals); FROM dataset clauses; GROUP patterns with nested GRAPH
   (constant or variable term), OPTIONAL (nested, with inner FILTER and
   BIND), group UNION (including the ``{} UNION {..}`` identity-branch
-  idiom), FILTER, BIND .. AS, VALUES (single-var and row form);
+  idiom), FILTER, FILTER [NOT] EXISTS, MINUS, BIND .. AS, VALUES
+  (single-var and row form);
   property paths: sequence ``/``, alternation ``|``, inverse ``^``,
   parenthesized combinations; expressions: ``|| && ! = != < > <= >=``,
   ``IN ( .. )``, BOUND, COALESCE, CONCAT, IRI/URI, STR, MD5, REPLACE
@@ -44,6 +44,12 @@ Evaluation model (Spark-first, no UDFs anywhere):
   (dropped before joining); inverse swaps roles.
 - FILTERs collect per group and apply at group end (SPARQL scoping);
   Catalyst pushes the conjuncts back below the joins where legal.
+  ``FILTER [NOT] EXISTS`` is a filter too: wherever it is written, it
+  runs at group end as a semi (anti) join on the variables its group
+  shares with the solutions, and a group sharing none is refused.
+- MINUS applies where it is written (it is a join operator, not a
+  filter): an anti join on the shared variables; a MINUS group sharing
+  no variable removes nothing (§8.3's disjoint-domain identity).
 - CONSTRUCT emits one select per template triple (rows with any
   unbound term are skipped, per spec) and unions them by name into a
   DISTINCT triple set — one shuffle.
@@ -76,7 +82,10 @@ Unsupported (not used by the reference files): closure modifiers
 nested INSIDE a sequence/alternation (``(a+/b)``; top-level closure
 over any seq/alt/inverse body is supported), VALUES inside a
 subselect projection, lang tags surviving subselect projection
-(outer joins on projected vars are value equality).
+(outer joins on projected vars are value equality), and a variable
+an EXISTS or MINUS group shares that is still unbound (null) in a
+solution: the semi/anti join matches it by value equality, so a null
+never matches, where SPARQL would treat it as compatible.
 """
 
 from __future__ import annotations
@@ -172,7 +181,8 @@ class Group:
     elements: list = field(default_factory=list)
     # elements: ("triple", Triple) | ("optional", Group)
     #   | ("union", [Group]) | ("filter", expr) | ("bind", var, expr)
-    #   | ("values", [vars], [rows]) | ("group", Group)
+    #   | ("values", [vars], [rows]) | ("group", Group) | ("minus", Group)
+    #   | ("exists", Group) | ("not_exists", Group) | ("subselect", Query)
 
 
 @dataclass
@@ -611,6 +621,9 @@ class Parser:
             elif self.at("OPTIONAL"):
                 self.next()
                 g.elements.append(("optional", self.parse_group(graph)))
+            elif self.at("MINUS"):
+                self.next()
+                g.elements.append(("minus", self.parse_group(graph)))
             elif self.at("FILTER"):
                 self.next()
                 if self.at("NOT"):
@@ -654,10 +667,21 @@ class Parser:
                 else:
                     g.elements.append(("group", first))
             else:
+                start = self.i
                 g.elements.extend(
                     ("triple", t)
                     for t in self.parse_triples_block(graph, in_template=False)
                 )
+                if self.i == start:
+                    # a keyword with no branch here (a UNION not after a
+                    # {..} group) or the end of the text: fail instead
+                    # of looping on it
+                    tok = self.peek()
+                    raise SyntaxError(
+                        "unexpected end of query"
+                        if tok is None
+                        else f"unexpected {tok.text!r} in group pattern"
+                    )
             while self.at("."):
                 self.next()
         self.eat("}")
@@ -1324,7 +1348,7 @@ def _element_cb(el, acc_cb: set[str]) -> set[str]:
             if item[0] == "var" and item[1].lstrip("?") in inner:
                 out.add(item[1].lstrip("?"))
         return out
-    # optional / filter / not_exists / exists
+    # optional / minus / filter / not_exists / exists
     return set()
 
 
@@ -2585,15 +2609,13 @@ class _Eval:
                         else _join(acc, inner, compat=compat_for(inner, el_cb))
                     )
                     cb |= el_cb
-            elif kind in ("not_exists", "exists"):
-                sub = self.eval_group(el[1], None)
-                assert acc is not None and sub is not None
-                keys = sorted(set(_value_cols(acc)) & set(_value_cols(sub)))
-                assert keys, "FILTER [NOT] EXISTS shares no variable"
-                how = "left_anti" if kind == "not_exists" else "left_semi"
-                acc = acc.join(sub.select(*keys).distinct(), on=keys, how=how)
-            elif kind == "filter":
-                filters.append(el[1])
+            elif kind == "minus":
+                assert acc is not None, "MINUS cannot start a group"
+                acc = self._exists_join(acc, kind, el[1])
+            elif kind in ("filter", "not_exists", "exists"):
+                # FILTER [NOT] EXISTS is a filter too: it applies at
+                # group end, after every element binds (SPARQL §18.2.2)
+                filters.append(el)
             elif kind == "bind":
                 assert acc is not None, "BIND cannot start a group"
                 var = el[1][1:]
@@ -2627,11 +2649,28 @@ class _Eval:
             else:
                 raise ValueError(f"unknown group element {kind!r}")
         flush_triples()
-        for f in filters:
+        for kind, f in filters:
             assert acc is not None, "FILTER over empty group"
-            f, acc = self._materialize_exists(f, acc)
-            acc = acc.filter(self.to_column(f, acc))
+            if kind == "filter":
+                f, acc = self._materialize_exists(f, acc)
+                acc = acc.filter(self.to_column(f, acc))
+            else:
+                acc = self._exists_join(acc, kind, f)
         return acc
+
+    def _exists_join(self, acc: DataFrame, kind: str, group: Group) -> DataFrame:
+        """FILTER EXISTS (semi join), FILTER NOT EXISTS and MINUS (anti
+        joins) on the variables ``group`` shares with ``acc``. A MINUS
+        group sharing none removes nothing (§8.3's disjoint-domain
+        identity); an EXISTS group sharing none is refused."""
+        sub = self.eval_group(group, None)
+        assert sub is not None, f"empty {kind} group"
+        keys = sorted(set(_value_cols(acc)) & set(_value_cols(sub)))
+        if not keys:
+            assert kind == "minus", "FILTER [NOT] EXISTS shares no variable"
+            return acc
+        how = "left_semi" if kind == "exists" else "left_anti"
+        return acc.join(sub.select(*keys).distinct(), on=keys, how=how)
 
     # -- expressions
     def to_column(self, e, df: DataFrame) -> Column:
@@ -2912,7 +2951,7 @@ def _bind_params_in_group(g: "Group", params: dict[str, str]) -> None:
                     "triple",
                     Triple(t.s, t.p, _lit_term(params[t.o[1:]]), t.graph),
                 )
-        elif kind in ("optional", "group", "not_exists", "exists"):
+        elif kind in ("optional", "group", "minus", "not_exists", "exists"):
             _bind_params_in_group(el[1], params)
         elif kind == "union":
             for b in el[1]:

@@ -16,14 +16,13 @@ Spark-first redesign:
   — deterministic at any parallelism, unlike the reference's
   stream-order-dependent first-value rule. lang='nl' overrides, as in
   stream.ts:97-103.
-- ``construct`` compiles a SPARQL-like basic graph pattern into
-  self-joins on the triples DataFrame; shared variables become join
-  keys. Catalyst/AQE then picks physical join strategies.
+- CONSTRUCT itself is ``operators/sparql``: query text compiled to
+  scans and joins over the same quad DataFrame ``melt`` produces.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -82,223 +81,6 @@ def pivot_records(
     return triples.groupBy(F.col(subject_col).alias("subject")).agg(*aggs)
 
 
-_PATH_VAR = 0
-
-
-def _expand_paths(patterns: list[tuple]) -> list[tuple]:
-    """Rewrite SPARQL property paths into plain patterns:
-      - sequence  ``p1/p2``  -> two patterns through a fresh variable
-        (a join through the intermediate node);
-      - inverse   ``^p``     -> swapped subject/object roles.
-    Alternation ``p1|p2`` is handled at scan time (predicate isin).
-    The reference queries use all three (e.g. person.sparql:
-    ``(schema:license|(rel:isp/schema:license))``, ``^schema:mentions``).
-
-    A pattern may be a 4-tuple (s, p, o, graph); the graph term is
-    carried through every expansion (a path inside ``GRAPH ?g {...}``
-    keeps all its hops in that graph).
-    """
-    global _PATH_VAR
-    out: list[tuple] = []
-    for pat in patterns:
-        s, p, o = pat[0], pat[1], pat[2]
-        g = pat[3:]  # () for triple patterns, (graph_term,) for quads
-        if not p.startswith("?") and "/" in p:
-            hops = p.split("/")
-            prev = s
-            for i, hop in enumerate(hops):
-                if i == len(hops) - 1:
-                    out.extend(_expand_paths([(prev, hop, o, *g)]))
-                else:
-                    _PATH_VAR += 1
-                    mid = f"?__path{_PATH_VAR}"
-                    out.extend(_expand_paths([(prev, hop, mid, *g)]))
-                    prev = mid
-        elif p.startswith("^"):
-            out.append((o, p[1:], s, *g))
-        else:
-            out.append((s, p, o, *g))
-    return out
-
-
-def _bgp(
-    triples: DataFrame,
-    patterns: list[tuple],
-    values: dict[str, list[str]] | None = None,
-) -> tuple[DataFrame, set[str]]:
-    """Evaluate one basic graph pattern group; returns (df, bound vars).
-
-    Patterns are (s, p, o) triples or (s, p, o, graph) quads; the graph
-    term scopes the pattern to one named graph (constant) or binds the
-    graph id (?variable) — SPARQL ``GRAPH ?g { ... }`` semantics
-    (person.sparql:51 org-graph scoping). A constant/VALUES-constrained
-    graph term is a plain filter on the quad scan, so it prunes at the
-    source like any other predicate."""
-    values = values or {}
-    out: DataFrame | None = None
-    bound: set[str] = set()
-    for pat in _expand_paths(patterns):
-        s, p, o = pat[0], pat[1], pat[2]
-        t = triples
-        sel = []
-        if p.startswith("?"):
-            sel.append(F.col("predicate").alias(p[1:]))
-        elif p.startswith("!"):
-            # Negated property set ``!p`` / ``!(p1|p2)`` (SPARQL 1.1
-            # §9.1): any predicate EXCEPT the listed ones — still one
-            # scan, the complement in-list. On the predicate-partitioned
-            # staged layout this prunes to all-but-those partitions.
-            negated = p[1:].strip("()").split("|")
-            t = t.filter(~F.col("predicate").isin(negated))
-        elif "|" in p:  # path alternation: one scan, predicate isin
-            t = t.filter(F.col("predicate").isin(p.split("|")))
-        else:
-            t = t.filter(F.col("predicate") == p)
-        terms = [(s, "subject"), (o, "object")]
-        if len(pat) > 3:
-            terms.append((pat[3], "graph"))
-        for term, col in terms:
-            if term.startswith("?"):
-                # '?var@nl' = langMatches constraint on this binding
-                # (person.sparql:81 FILTER langMatches(lang(...), "nl")).
-                if "@" in term:
-                    term, lang = term.split("@", 1)
-                    t = t.filter(F.col("lang") == lang)
-                sel.append(F.col(col).alias(term[1:]))
-                if term in values:  # SPARQL VALUES: an in-list pushed to the scan
-                    t = t.filter(F.col(col).isin(values[term]))
-            else:
-                t = t.filter(F.col(col) == term)
-        t = t.select(*sel)
-        new_vars = set(t.columns)
-        if out is None:
-            out = t
-        else:
-            keys = sorted(bound & new_vars)
-            out = out.join(t, on=keys, how="inner") if keys else out.crossJoin(t)
-        bound |= new_vars
-    assert out is not None, "empty pattern list"
-    return out, bound
-
-
-def construct(
-    triples: DataFrame,
-    patterns: list[tuple[str, str, str]],
-    select: dict[str, str] | None = None,
-    filters: list[Column] | None = None,
-    optionals: list[list[tuple[str, str, str]]] | None = None,
-    values: dict[str, list[str]] | None = None,
-    unions: list[list[list[tuple[str, str, str]]]] | None = None,
-    not_exists: list[list[tuple[str, str, str]]] | None = None,
-    minus: list[list[tuple[str, str, str]]] | None = None,
-    binds: dict[str, Column] | None = None,
-    values_rows: list[dict[str, str]] | None = None,
-) -> DataFrame:
-    """Evaluate a SPARQL-shaped WHERE clause and project bound variables
-    — the CONSTRUCT core of 1_kg_view_construct.ts.
-
-    ``patterns``: (subject_var, predicate, object_var) entries — or
-    (subject, predicate, object, graph) quads, where the graph term
-    scopes the pattern to a named graph (constant) or binds the graph
-    id (?variable), i.e. SPARQL ``GRAPH ?g { ... }``
-    (person.sparql:51). Names starting with '?' are variables, anything
-    else is a constant. The predicate slot accepts property paths:
-    ``p1/p2`` sequence, ``p1|p2`` alternation, ``^p`` inverse (the
-    forms the reference queries use). Each pattern is a
-    predicate-filtered scan of the triples DataFrame; shared variables
-    across patterns become equi-join keys.
-
-    ``optionals``: SPARQL OPTIONAL groups — each group is evaluated as
-    its own BGP and LEFT-joined on the shared variables (unmatched rows
-    keep NULL bindings), exactly SPARQL's OPTIONAL semantics.
-
-    ``values``: SPARQL VALUES — variable -> allowed constants, applied
-    as an in-list filter at the scans that bind the variable.
-
-    ``unions``: SPARQL group UNION — each entry is a list of BGP
-    branches; the branches are evaluated independently, unioned by
-    name (missing variables become NULL, as SPARQL leaves them
-    unbound), and joined to the base on the shared variables.
-
-    ``not_exists``: FILTER NOT EXISTS groups — each group is a BGP
-    whose matches eliminate base rows (left-anti join on shared vars).
-
-    ``minus``: SPARQL MINUS groups (1.1 §8.3) — like NOT EXISTS an
-    anti join on the shared variables, EXCEPT the spec's quirk: a
-    MINUS group sharing NO variable with the base removes NOTHING
-    (set difference over disjoint domains is the identity), where
-    FILTER NOT EXISTS with a non-empty match would eliminate
-    everything. Both semantics live here, distinguished exactly as
-    the spec distinguishes them.
-
-    ``binds``: SPARQL BIND — variable -> Column expression over already
-    bound variables, applied after graph matching.
-
-    ``values_rows``: SPARQL VALUES in its FULL multi-variable row form
-    (1.1 §10.2): ``VALUES (?a ?b) { (x y) (z w) }`` — each dict is one
-    row binding several variables TOGETHER (the single-var ``values``
-    in-list cannot express correlated allowed combinations). The rows
-    become a literal inline-data frame inner-joined on its variables —
-    a broadcast of |rows|, never a per-row filter disjunction.
-
-    An object variable may carry a language constraint: ``?name@nl``
-    binds only language-tagged 'nl' literals (langMatches).
-
-    Returns one column per variable (without the '?'); internal
-    ``__path``-prefixed sequence variables are dropped.
-    """
-    out, bound = _bgp(triples, patterns, values)
-    for branches in unions or []:
-        parts = []
-        uvars: set[str] = set()
-        for branch in branches:
-            b, bvars = _bgp(triples, branch, values)
-            parts.append(b)
-            uvars |= bvars
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p, allowMissingColumns=True)
-        keys = sorted(bound & uvars)
-        out = out.join(u, on=keys, how="inner") if keys else out.crossJoin(u)
-        bound |= uvars
-    for group in optionals or []:
-        g, gvars = _bgp(triples, group, values)
-        keys = sorted(bound & gvars)
-        out = out.join(g, on=keys, how="left") if keys else out.crossJoin(g)
-        bound |= gvars
-    for group in not_exists or []:
-        g, gvars = _bgp(triples, group, values)
-        keys = sorted(bound & gvars)
-        assert keys, "FILTER NOT EXISTS group shares no variable with the base"
-        out = out.join(g.select(*keys).distinct(), on=keys, how="left_anti")
-    for group in minus or []:
-        g, gvars = _bgp(triples, group, values)
-        keys = sorted(bound & gvars)
-        if not keys:  # SPARQL MINUS over disjoint domains: identity
-            continue
-        out = out.join(g.select(*keys).distinct(), on=keys, how="left_anti")
-    if values_rows:
-        vr_vars = sorted({v.lstrip("?") for row in values_rows for v in row})
-        spark = triples.sparkSession
-        frame = spark.createDataFrame(
-            [tuple(row.get("?" + v) for v in vr_vars) for row in values_rows],
-            ", ".join(f"{v} string" for v in vr_vars),
-        )
-        keys = sorted(bound & set(vr_vars))
-        assert keys, "VALUES rows bind no variable of the query"
-        out = out.join(F.broadcast(frame), on=keys, how="inner")
-        bound |= set(vr_vars)
-    for var, expr in (binds or {}).items():
-        out = out.withColumn(var.lstrip("?"), expr)
-    if filters:
-        for f in filters:
-            out = out.filter(f)
-    out = out.select(*[c for c in out.columns if not c.startswith("__path")])
-    if select:
-        out = out.select(*[F.col(v).alias(a) for v, a in select.items()])
-    return out
-
-
 def to_table_triples(
     records: DataFrame, table_name: str, id_col: str
 ) -> DataFrame:
@@ -319,9 +101,9 @@ def transitive_closure(
 ) -> DataFrame:
     """SPARQL ``p+`` (one-or-more property path): all (node, ancestor)
     pairs reachable through 1..n ``p`` edges — the transitive-path
-    operator the construct layer's sequence/alternation/inverse support
-    (kg_construct_paths) deliberately left out while the reference used
-    none; with it the path algebra is complete.
+    operator ``operators/sparql`` lowers ``p+`` / ``p*`` / ``p?`` to;
+    with sequence, alternation and inverse (kg_construct_paths) it
+    completes the path algebra.
 
     POINTER DOUBLING, not one-hop expansion: after iteration k the pair
     set covers paths up to 2^k edges, so a depth-D hierarchy converges

@@ -19,6 +19,7 @@ from prefect_flow_arc_kg_postgres_etl_spark.functions.coercion import (
     safe_timestamp,
 )
 from prefect_flow_arc_kg_postgres_etl_spark.operators import merge as M
+from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 from prefect_flow_arc_kg_postgres_etl_spark.operators import triples as T
 from prefect_flow_arc_kg_postgres_etl_spark.operators.index_documents import (
     build_index_documents,
@@ -69,14 +70,13 @@ def kg_construct_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph = T.melt(cust, "c_custkey", CUSTOMER_COLS).unionByName(
         T.melt(nat, "n_nationkey", ["n_name"])
     )
-    out = T.construct(
+    out = SQ.select_query(
         graph,
-        patterns=[
-            ("?c", "c_name", "?cust_name"),
-            ("?c", "c_mktsegment", "BUILDING"),
-            ("?c", "c_nationkey", "?nk"),
-            ("?nk", "n_name", "?nation_name"),
-        ],
+        """SELECT ?c ?cust_name ?nation_name WHERE {
+          ?c <c_name> ?cust_name ; <c_mktsegment> "BUILDING" ;
+             <c_nationkey> ?nk .
+          ?nk <n_name> ?nation_name
+        }""",
     )
     return out.select(
         F.col("c").alias("id"),
@@ -170,11 +170,13 @@ def kg_construct_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep a NULL binding) — the dominant shape of the reference queries
     (73 OPTIONAL groups in av-audio.sparql; VALUES at
     person.sparql:53)."""
-    out = T.construct(
+    out = SQ.select_query(
         _kg_graph(spark, sf_dir),
-        patterns=[("?c", "c_name", "?name"), ("?c", "c_mktsegment", "?seg")],
-        values={"?seg": ["BUILDING", "MACHINERY"]},
-        optionals=[[("?o", "o_custkey", "?c"), ("?o", "o_orderpriority", "1-URGENT")]],
+        """SELECT ?c ?name ?seg ?o WHERE {
+          ?c <c_name> ?name ; <c_mktsegment> ?seg .
+          VALUES ?seg { "BUILDING" "MACHINERY" }
+          OPTIONAL { ?o <o_custkey> ?c ; <o_orderpriority> "1-URGENT" }
+        }""",
     )
     return out.select(
         F.col("c").alias("id"),
@@ -203,17 +205,18 @@ def kg_construct_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     either an urgent order OR their nation record (UNION), excluding
     customers that have a LOW-priority order (NOT EXISTS), with a BIND
     composing a display id."""
-    out = T.construct(
+    # The org-name lookup is GRAPH-scoped: graph:staging holds a draft
+    # copy of n_name that must NOT leak into results.
+    out = SQ.select_query(
         _kg_graph(spark, sf_dir),
-        patterns=[("?c", "c_mktsegment", "BUILDING")],
-        unions=[[
-            [("?o", "o_custkey", "?c"), ("?o", "o_orderpriority", "1-URGENT")],
-            # the org-name lookup is GRAPH-scoped: graph:staging holds a
-            # draft copy of n_name that must NOT leak into results
-            [("?c", "c_nationkey", "?nk"), ("?nk", "n_name", "?nation", "graph:orgs")],
-        ]],
-        not_exists=[[("?lo", "o_custkey", "?c"), ("?lo", "o_orderpriority", "5-LOW")]],
-        binds={"?display": F.concat(F.lit("cust-"), F.col("c"))},
+        """SELECT ?c ?o ?nation ?display WHERE {
+          ?c <c_mktsegment> "BUILDING" .
+          { ?o <o_custkey> ?c ; <o_orderpriority> "1-URGENT" }
+          UNION
+          { ?c <c_nationkey> ?nk . GRAPH <graph:orgs> { ?nk <n_name> ?nation } }
+          FILTER NOT EXISTS { ?lo <o_custkey> ?c ; <o_orderpriority> "5-LOW" }
+          BIND(CONCAT("cust-", ?c) AS ?display)
+        }""",
     )
     return out.select(
         F.col("c").alias("cust_id"),
@@ -261,14 +264,13 @@ def kg_construct_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     draft copy of every n_name, so an unscoped query would return two
     bindings per customer; the GRAPH constraint must keep exactly the
     org-graph one."""
-    out = T.construct(
+    out = SQ.select_query(
         _kg_graph(spark, sf_dir),
-        patterns=[
-            ("?c", "c_name", "?name"),
-            ("?c", "c_nationkey", "?nk"),
-            ("?nk", "n_name", "?nation", "?g"),
-        ],
-        values={"?g": ["graph:orgs"]},
+        """SELECT ?c ?name ?nation ?g WHERE {
+          ?c <c_name> ?name ; <c_nationkey> ?nk .
+          GRAPH ?g { ?nk <n_name> ?nation }
+          VALUES ?g { <graph:orgs> }
+        }""",
     )
     return out.select(
         F.col("c").alias("id"),
@@ -294,14 +296,15 @@ def kg_construct_filter_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep rows where the optional binding is absent OR satisfies the
     condition. In the triple model an unbound variable is a NULL
     column, so !BOUND(?o) is ``isNull`` and the disjunction is an
-    ordinary Column filter applied after graph matching
-    (construct(filters=...))."""
-    out = T.construct(
+    ordinary Column filter applied to the matched solutions (SPARQL
+    has no modulo, and a top-level FILTER is a filter after matching)."""
+    out = SQ.select_query(
         _kg_graph(spark, sf_dir),
-        patterns=[("?c", "c_name", "?name")],
-        optionals=[[("?o", "o_custkey", "?c"), ("?o", "o_orderpriority", "1-URGENT")]],
-        filters=[F.col("o").isNull() | (F.col("o").cast("bigint") % 2 == 0)],
-    )
+        """SELECT ?c ?name ?o WHERE {
+          ?c <c_name> ?name
+          OPTIONAL { ?o <o_custkey> ?c ; <o_orderpriority> "1-URGENT" }
+        }""",
+    ).filter(F.col("o").isNull() | (F.col("o").cast("bigint") % 2 == 0))
     return out.select(
         F.col("c").alias("id"),
         F.col("name").alias("cust_name"),
@@ -393,15 +396,15 @@ def kg_construct_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``schema:license|(rel:isp/schema:license)``, person.sparql:79
     ``^schema:mentions``). The org-name lookup is scoped to graph:orgs
     (graph:staging carries a draft n_name copy that must not match)."""
-    out = T.construct(
+    out = SQ.select_query(
         _kg_graph(spark, sf_dir),
-        patterns=[
-            ("?c", "^o_custkey", "?o"),
-            ("?o", "o_orderpriority", "1-URGENT"),
-            ("?o", "o_custkey/c_nationkey", "?nk", "graph:entities"),
-            ("?nk", "n_name", "?nation", "graph:orgs"),
-            ("?c", "c_name|c_mktsegment", "?label"),
-        ],
+        """SELECT ?o ?c ?nation ?label WHERE {
+          ?c ^<o_custkey> ?o .
+          ?o <o_orderpriority> "1-URGENT" .
+          GRAPH <graph:entities> { ?o <o_custkey>/<c_nationkey> ?nk }
+          GRAPH <graph:orgs> { ?nk <n_name> ?nation }
+          ?c <c_name>|<c_mktsegment> ?label
+        }""",
     )
     return out.select(
         F.col("o").alias("order_id"),
@@ -2315,21 +2318,20 @@ def kg_select_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     A22-24), DESCRIBE (A37) and ASK (A38) this completes the SPARQL
     query-form surface at its aggregate tier (SPARQL 1.1 §11).
 
-    Spark-first: the BGP binds via the same ``construct`` compiler
+    Spark-first: the BGP binds through ``sparql.select_query``
     (n_name scoped to graph:orgs — the unscoped pattern would double-
     match the staging drafts), then ONE hash aggregate keyed by the
     group variable. GROUP_CONCAT must be deterministic at any
     parallelism: collect_list has no order guarantee, so the list is
     array_sort-ed before joining — the oracle's ORDER BY inside
     STRING_AGG is the same contract."""
-    out = T.construct(
+    out = SQ.select_query(
         _kg_graph(spark, sf_dir),
-        patterns=[
-            ("?c", "c_name", "?name"),
-            ("?c", "c_nationkey", "?nk"),
-            ("?nk", "n_name", "?nation", "?g"),
-        ],
-        values={"?g": ["graph:orgs"]},
+        """SELECT ?name ?nation WHERE {
+          ?c <c_name> ?name ; <c_nationkey> ?nk .
+          GRAPH ?g { ?nk <n_name> ?nation }
+          VALUES ?g { <graph:orgs> }
+        }""",
     )
     return out.groupBy(F.col("nation")).agg(
         F.count(F.lit(1)).alias("n_customers"),
@@ -2431,14 +2433,13 @@ def kg_construct_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     populous = counts.crossJoin(F.broadcast(avg_n)).filter(
         F.col("n") > F.col("avg_n")
     )
-    out = T.construct(
+    out = SQ.select_query(
         graph,
-        patterns=[
-            ("?c", "c_name", "?name"),
-            ("?c", "c_nationkey", "?nk"),
-            ("?nk", "n_name", "?nation", "?g"),
-        ],
-        values={"?g": ["graph:orgs"]},
+        """SELECT ?c ?name ?nk ?nation WHERE {
+          ?c <c_name> ?name ; <c_nationkey> ?nk .
+          GRAPH ?g { ?nk <n_name> ?nation }
+          VALUES ?g { <graph:orgs> }
+        }""",
     )
     qualifying = populous.select(
         F.col("nk").alias("_pnk"), F.col("n").alias("nation_customers")
@@ -2529,12 +2530,11 @@ def kg_path_negated(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged layout it prunes to all-but-those partitions."""
     cust = load_table(spark, sf_dir, "customer")
     triples = T.melt(cust, "c_custkey", CUSTOMER_COLS, subject_prefix="customer:")
-    out = T.construct(
+    out = SQ.select_query(
         triples,
-        patterns=[
-            ("?c", "!(c_mktsegment|c_acctbal)", "?v"),
-            ("?c", "c_mktsegment", "BUILDING"),
-        ],
+        """SELECT ?c ?v WHERE {
+          ?c !(<c_mktsegment>|<c_acctbal>) ?v ; <c_mktsegment> "BUILDING"
+        }""",
     )
     return out.select(F.col("c").alias("id"), F.col("v"))
 
@@ -2560,14 +2560,12 @@ def kg_construct_minus(spark: SparkSession, sf_dir: str) -> DataFrame:
     match would erase the base. One left-anti join on the shared var."""
     cust = load_table(spark, sf_dir, "customer")
     triples = T.melt(cust, "c_custkey", CUSTOMER_COLS)
-    out = T.construct(
+    out = SQ.select_query(
         triples,
-        patterns=[
-            ("?c", "c_name", "?name"),
-            ("?c", "c_mktsegment", "BUILDING"),
-            ("?c", "c_nationkey", "?nk"),
-        ],
-        minus=[[("?c", "c_nationkey", "5")]],
+        """SELECT ?c ?name ?nk WHERE {
+          ?c <c_name> ?name ; <c_mktsegment> "BUILDING" ; <c_nationkey> ?nk .
+          MINUS { ?c <c_nationkey> "5" }
+        }""",
     )
     return out.select(
         F.col("c").alias("id"), F.col("name"), F.col("nk")
@@ -2926,17 +2924,12 @@ def kg_construct_values_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     correlated pair."""
     cust = load_table(spark, sf_dir, "customer")
     triples = T.melt(cust, "c_custkey", CUSTOMER_COLS, subject_prefix="customer:")
-    out = T.construct(
+    out = SQ.select_query(
         triples,
-        patterns=[
-            ("?c", "c_name", "?name"),
-            ("?c", "c_mktsegment", "?seg"),
-            ("?c", "c_nationkey", "?nk"),
-        ],
-        values_rows=[
-            {"?seg": "BUILDING", "?nk": "5"},
-            {"?seg": "MACHINERY", "?nk": "7"},
-        ],
+        """SELECT ?c ?name ?seg ?nk WHERE {
+          ?c <c_name> ?name ; <c_mktsegment> ?seg ; <c_nationkey> ?nk .
+          VALUES (?seg ?nk) { ("BUILDING" "5") ("MACHINERY" "7") }
+        }""",
     )
     return out.select(
         F.col("c").alias("id"), F.col("name"), F.col("seg"), F.col("nk")
@@ -4324,7 +4317,6 @@ def kg_construct_real_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverse), the ``{} UNION {..}`` idiom, OPTIONAL, langMatches/lang,
     !BOUND with an unbound parameter, IN filters, and the
     IRI/CONCAT/MD5/COALESCE BIND surface."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
     text = load_reference_query(_PERSON_SPARQL)
     quads = _sparql_person_quads(spark, sf_dir)
@@ -4579,7 +4571,6 @@ def kg_construct_real_query_org(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIND with regex REPLACE ("$1" extraction and the escaped
     backslash-underscore un-escape), strStarts, and md5-derived
     subject IRIs. Same compiler, same oracle discipline as A67."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
     text = load_reference_query(_ORG_SPARQL)
     quads = _sparql_org_quads(spark, sf_dir)
@@ -4833,7 +4824,6 @@ def kg_construct_real_query_deletes(spark: SparkSession, sf_dir: str) -> DataFra
     substitution), FILTER NOT EXISTS over a property-path group
     (tombstone IEs = no allowed license on either path branch), and a
     boolean literal in the CONSTRUCT template."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
     text = load_reference_query(_DEL_SPARQL)
     quads = _sparql_del_quads(spark, sf_dir)
@@ -4893,7 +4883,6 @@ def kg_construct_real_query_newspaper(
     a union whose branches key on TWO DIFFERENT variables (?id for
     in-language/alternate-name, ?serie for location/dates/publisher) —
     the grouped-union lowering joins each key group once."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
     text = load_reference_query(_NEWS_SPARQL)
     return SQ.construct_query(_sparql_person_quads(spark, sf_dir), text)
@@ -4906,7 +4895,6 @@ def kg_construct_real_query_iiif(spark: SparkSession, sf_dir: str) -> DataFrame:
     org's), a single-value VALUES pinning the mime type (the seeded
     sibling tiff file must drop), and rep/file attribute unions over
     two key groups under an identity branch."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
     text = load_reference_query(_IIIF_SPARQL)
     return SQ.construct_query(_sparql_person_quads(spark, sf_dir), text)
@@ -5021,7 +5009,6 @@ def kg_select_real_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     production; the form surface mirrors kg_select_agg's hand-built
     plan, now reachable from query text). Per-org entity counts over
     the shared verbatim-query store."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
     return SQ.select_query(_sparql_person_quads(spark, sf_dir), _SELECT_TEXT)
 
@@ -5031,7 +5018,6 @@ def kg_ask_real_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     license index 9 is outside every production query's allow-list but
     present in the store on even keys), emitted as a string boolean so
     the driver's hash check applies."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
     return SQ.select_query(_sparql_person_quads(spark, sf_dir), _ASK_TEXT)
 
@@ -5083,7 +5069,6 @@ def kg_describe_real_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``kg_describe``) defines — produced by ONE subject semi-join
     against the quad store (broadcast: the resource set is tiny;
     subject-partition-prunable at scale)."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
     return SQ.describe_query(_sparql_person_quads(spark, sf_dir), _DESCRIBE_TEXT)
 
@@ -5099,7 +5084,6 @@ def kg_update_real_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     it from update text: solution set computed once, two whole-quad
     null-safe hash joins against the store, no row-at-a-time path.
     Exercises GRAPH blocks in both templates and a var graph term."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
     return SQ.update_delta(_sparql_person_quads(spark, sf_dir), _UPDATE_TEXT)
 
@@ -5157,7 +5141,6 @@ def kg_select_subquery_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation, and the ``[ .. ]`` existential lowers to a fresh
     variable. High-volume ContentPartners only — the HAVING threshold
     genuinely filters at the graded scale."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
     return SQ.select_query(_sparql_person_quads(spark, sf_dir), _SUBSELECT_TEXT)
 
@@ -5185,7 +5168,6 @@ def kg_path_text_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim query text. Same edge relation as A28/A28b
     (_hierarchy_edges), so the text path and the hand-built plan can
     never diverge."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
     edges = _hierarchy_edges(spark, sf_dir)
     quads = edges.select(
@@ -5233,7 +5215,6 @@ def kg_path_nps_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the one pattern shape that scans the whole store — same
     as any RDF engine. Composes with a plain BGP here (status = 'F'
     orders keep their non-status, non-date attributes)."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
     orders = load_table(spark, sf_dir, "orders")
     okey = F.concat(F.lit("O"), F.col("o_orderkey").cast("string"))
@@ -5280,7 +5261,6 @@ def kg_path_nps_inverse(spark: SparkSession, sf_dir: str) -> DataFrame:
     placed/owns: the forward complement yields the prio values, the
     inverse complement yields the owning customers (placed is
     excluded)."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
     orders = load_table(spark, sf_dir, "orders")
     okey = F.concat(F.lit("O"), F.col("o_orderkey").cast("string"))
@@ -5377,7 +5357,6 @@ def kg_construct_real_query_issues(spark: SparkSession, sf_dir: str) -> DataFram
     thesauri labels behind nested GRAPH, per-branch langMatches with
     seeded wrong-language negatives, and a VALUES mime whitelist with a
     seeded disallowed sibling."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
     text = load_reference_query(_NP_SPARQL)
     return SQ.construct_query(_sparql_person_quads(spark, sf_dir), text)
@@ -5609,7 +5588,6 @@ _AV_COMPLEX_SPARQL = "av-complex.sparql"
 
 
 def _run_verbatim(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
     text = load_reference_query(name)
     return SQ.construct_query(_sparql_person_quads(spark, sf_dir), text)
@@ -5645,7 +5623,6 @@ def kg_construct_real_query_av_audio_org(
     selection, so ONE organisation's metadata graph is read. The
     result equals the unscoped av-audio run filtered to that org
     (pinned by tests/test_sparql.py)."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
     text = load_reference_query(_AV_AUDIO_SPARQL)
     return SQ.construct_query(
@@ -6103,7 +6080,6 @@ def run_reference_query_scoped(
     ``?schema_maintainer org:identifier ?maintainer_id`` pattern and
     the derived ?ORGraph graph selection, so one organisation's
     metadata graph is read (same machinery A75 pins for av-audio)."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
     name, quads_fn, base = _REFERENCE_QUERY_SPECS[slug]
     params = dict(base)

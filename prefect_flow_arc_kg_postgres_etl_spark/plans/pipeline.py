@@ -1828,9 +1828,7 @@ def flow_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b3 = corpus.filter(F.col("doc_id") >= _NEAR_OFF)
     target = tempfile.mkdtemp(prefix="ingest_flow_") + "/corpus"
-    final, _ = ingest_flow(
-        spark, target, [b1, b2, b3], _JAC_T, collect_stats=False
-    )
+    final, _ = ingest_flow(spark, target, [b1, b2, b3], _JAC_T)
     return final.select("doc_id", F.length("text").alias("n_chars"))
 
 

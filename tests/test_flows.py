@@ -434,13 +434,8 @@ def test_ingest_flow_matches_sequential_greedy_and_batch_invariant(
         (F.col("doc_id") >= _EXACT_OFF) & (F.col("doc_id") < _NEAR_OFF)
     )
     b3 = corpus.filter(F.col("doc_id") >= _NEAR_OFF)
-    three, _ = ingest_flow(
-        spark, str(tmp_path / "three"), [b1, b2, b3], _JAC_T,
-        collect_stats=False,
-    )
-    one, _ = ingest_flow(
-        spark, str(tmp_path / "one"), [corpus], _JAC_T, collect_stats=False
-    )
+    three, _ = ingest_flow(spark, str(tmp_path / "three"), [b1, b2, b3], _JAC_T)
+    one, _ = ingest_flow(spark, str(tmp_path / "one"), [corpus], _JAC_T)
     got3 = {r.doc_id for r in three.select("doc_id").collect()}
     got1 = {r.doc_id for r in one.select("doc_id").collect()}
     assert got3 == surviving
@@ -453,8 +448,8 @@ def test_ingest_flow_history_wins_both_id_orientations(spark, tmp_path):
     """r6 review regression: a batch doc with a SMALLER id than its
     landed near-copy must still be dropped (history wins regardless of
     id orientation) — the one-sided rule silently landed such dups.
-    Also exercises the default collect_stats=True path, whose counts
-    must run before the store prune."""
+    Also checks the counts observed in each batch's write against
+    counts of the batch, its survivors and the landed store."""
     from pyspark.sql import functions as F
 
     from prefect_flow_arc_kg_postgres_etl_spark.flows import ingest_flow
@@ -481,6 +476,11 @@ def test_ingest_flow_history_wins_both_id_orientations(spark, tmp_path):
     assert got and all(d >= 500_000 for d in got), sorted(got)[:5]
     assert ngram_jaccard_pairs(final, _JAC_T).count() == 0
     assert stats.tables["batch_1"]["merged"] == 0  # all dups of landed
+    assert stats.tables["batch_0"]["staged"] == b1.count()
+    assert stats.tables["batch_1"]["staged"] == b2.count()
+    # batch 0 landed into an empty store: its survivors are the store
+    assert stats.tables["batch_0"]["merged"] == len(got)
+    assert stats.tables["corpus"]["merged"] == final.count()
 
 
 def test_vacuum_respects_pins_and_reclaims_unreachable(spark, tmp_path):

@@ -1,11 +1,15 @@
-"""SPARQL text compiler: parse all nine reference production queries,
-execute person.sparql verbatim, and pin the semantics the flat
-construct() operator cannot express (identity-branch unions, nested
-GRAPH, alternation-over-sequence paths, EXISTS-in-expression)."""
+"""SPARQL text compiler, the repo's one SPARQL evaluator: parse all
+nine reference production queries, execute person.sparql verbatim, and
+pin the semantics the production shapes need (identity-branch unions,
+nested GRAPH, alternation-over-sequence paths, EXISTS-in-expression,
+EXISTS scope, MINUS). The basic pattern algebra the registry's KG
+entries use is pinned in tests/test_triples.py."""
 
 from __future__ import annotations
 
+import contextlib
 import glob
+import signal
 
 import pytest
 
@@ -176,6 +180,98 @@ def test_filter_not_exists(spark):
     )
     rows = {(r.subject, r.object) for r in out.collect()}
     assert rows == {("e2", "yes")}
+
+
+@contextlib.contextmanager
+def _deadline(seconds: float):
+    """Fail the test instead of hanging the suite when the body runs
+    longer than ``seconds`` (the parser once looped forever on a
+    keyword it had no branch for)."""
+
+    def expire(signum, frame):
+        raise TimeoutError(f"still running after {seconds} s")
+
+    previous = signal.signal(signal.SIGALRM, expire)
+    signal.setitimer(signal.ITIMER_REAL, seconds)
+    try:
+        yield
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, previous)
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        # UNION that does not follow a {..} group
+        "SELECT ?s WHERE { ?s <v> ?y UNION { ?s <v> ?z } }",
+        # the text ends inside the group
+        "SELECT ?s WHERE { ?s <v> ?y",
+    ],
+    ids=["stray_union", "unterminated"],
+)
+def test_parse_raises_where_a_group_element_consumes_nothing(text):
+    with _deadline(10), pytest.raises(SyntaxError):
+        SQ.parse(text)
+
+
+def test_minus_removes_compatible_rows_only(spark):
+    """MINUS (SPARQL 1.1 §8.3): an anti join on the shared variables; a
+    group sharing none removes nothing."""
+    quads = _quads(
+        spark,
+        [
+            ("s1", "v", "1", None, None),
+            ("s2", "v", "2", None, None),
+            ("x", "w", "u", None, None),
+        ],
+    )
+    shared = 'SELECT ?s WHERE { ?s <v> ?y MINUS { ?s <v> "1" } }'
+    disjoint = "SELECT ?s WHERE { ?s <v> ?y MINUS { ?z <w> ?u } }"
+    with _deadline(10):
+        SQ.parse(shared)
+        SQ.parse(disjoint)
+    assert {tuple(r) for r in SQ.select_query(quads, shared).collect()} == {
+        ("s2",)
+    }
+    assert {tuple(r) for r in SQ.select_query(quads, disjoint).collect()} == {
+        ("s1",),
+        ("s2",),
+    }
+
+
+@pytest.mark.parametrize(
+    "where, expected",
+    [
+        (
+            "?a <p> ?b . FILTER NOT EXISTS { ?a <q> ?c } OPTIONAL { ?a <r> ?c }",
+            [("s1", "o2")],
+        ),
+        (
+            "?a <p> ?b . OPTIONAL { ?a <r> ?c } FILTER NOT EXISTS { ?a <q> ?c }",
+            [("s1", "o2")],
+        ),
+        (
+            "?a <p> ?b . FILTER EXISTS { ?a <q> ?c } OPTIONAL { ?a <r> ?c }",
+            [],
+        ),
+    ],
+    ids=["not_exists_first", "not_exists_last", "exists_first"],
+)
+def test_exists_filters_apply_at_group_end(spark, where, expected):
+    """FILTER [NOT] EXISTS sees every binding of its group, wherever it
+    is written (SPARQL 1.1 §18.2.2): here ?c is bound to o2 by the
+    OPTIONAL, and (s1 q o2) is not in the store."""
+    quads = _quads(
+        spark,
+        [
+            ("s1", "p", "o1", None, None),
+            ("s1", "r", "o2", None, None),
+            ("s1", "q", "o3", None, None),
+        ],
+    )
+    out = SQ.select_query(quads, "SELECT ?a ?c WHERE { %s }" % where)
+    assert [tuple(r) for r in out.collect()] == expected
 
 
 def test_variable_predicate_with_if_classifier(spark):

@@ -2,12 +2,13 @@
 
 Hypothesis generates small random quad stores and random queries
 (BGPs with shared variables, OPTIONAL groups, UNION branches —
-including the fused single-pattern shape — and equality FILTERs),
-renders them to query TEXT (so the parser is exercised too), and
-compares ``construct_query``'s output against a 40-line reference
-evaluator implementing SPARQL semantics directly (compatible-binding
-joins, left-join OPTIONAL, bag UNION, post-filter, distinct CONSTRUCT
-output). This pins the compiler's algebra on shapes the nine
+including the fused single-pattern shape — equality FILTERs, and
+MINUS and FILTER NOT EXISTS over the BGP's variables), renders them
+to query TEXT (so the parser is exercised too), and compares
+``construct_query``'s output against a 50-line reference evaluator
+implementing SPARQL semantics directly (compatible-binding joins,
+left-join OPTIONAL, bag UNION, MINUS, group-end filters, distinct
+CONSTRUCT output). This pins the compiler's algebra on shapes the nine
 production files never take.
 """
 
@@ -43,14 +44,30 @@ def _bgp_vars(triples):
     return {t for tr in triples for t in (tr[0], tr[2]) if t.startswith("?")}
 
 
-query_st = st.fixed_dictionaries(
-    {
-        "bgp": st.lists(triple_st, min_size=1, max_size=3),
-        "optional": st.one_of(st.none(), triple_st),
-        "union": st.one_of(st.none(), st.tuples(triple_st, triple_st)),
-        "filter_eq": st.booleans(),
+@st.composite
+def query_st(draw):
+    bgp = draw(st.lists(triple_st, min_size=1, max_size=3))
+    bvars = sorted(_bgp_vars(bgp))
+    # MINUS and FILTER NOT EXISTS: one triple each over the BGP's
+    # variables, so every variable they share is bound in each solution
+    over_bgp = st.none()
+    if bvars:
+        over_bgp = st.one_of(
+            st.none(),
+            st.tuples(
+                st.sampled_from(bvars),
+                st.sampled_from(PREDS),
+                st.one_of(st.sampled_from(bvars), st.sampled_from(OBJECTS)),
+            ),
+        )
+    return {
+        "bgp": bgp,
+        "optional": draw(st.one_of(st.none(), triple_st)),
+        "union": draw(st.one_of(st.none(), st.tuples(triple_st, triple_st))),
+        "filter_eq": draw(st.booleans()),
+        "minus": draw(over_bgp),
+        "not_exists": draw(over_bgp),
     }
-)
 
 
 def _render(term: str) -> str:
@@ -63,6 +80,9 @@ def _render_triple(tr) -> str:
 
 def _to_text(q) -> str:
     lines = [_render_triple(t) for t in q["bgp"]]
+    if q["not_exists"] is not None:
+        # written first: it still applies at group end
+        lines.append("FILTER NOT EXISTS { %s }" % _render_triple(q["not_exists"]))
     if q["optional"] is not None:
         lines.append("OPTIONAL { %s }" % _render_triple(q["optional"]))
     if q["union"] is not None:
@@ -70,6 +90,8 @@ def _to_text(q) -> str:
         lines.append(
             "{ %s } UNION { %s }" % (_render_triple(a), _render_triple(b))
         )
+    if q["minus"] is not None:
+        lines.append("MINUS { %s }" % _render_triple(q["minus"]))
     fvars = sorted(_bgp_vars(q["bgp"]))
     if q["filter_eq"] and len(fvars) >= 2:
         lines.append(f"FILTER ({fvars[0]} = {fvars[1]})")
@@ -123,6 +145,10 @@ def _ref_eval(q, quads):
             out.extend(_match(a, quads, b))
             out.extend(_match(b_, quads, b))
         sols = out
+    # MINUS and NOT EXISTS triples use only BGP variables, bound in every
+    # solution: a solution goes iff the triple matches under it
+    if q["minus"] is not None:
+        sols = [b for b in sols if not any(_match(q["minus"], quads, b))]
     fvars = sorted(_bgp_vars(q["bgp"]))
     if q["filter_eq"] and len(fvars) >= 2:
         sols = [
@@ -130,6 +156,8 @@ def _ref_eval(q, quads):
             for b in sols
             if fvars[0] in b and fvars[1] in b and b[fvars[0]] == b[fvars[1]]
         ]
+    if q["not_exists"] is not None:
+        sols = [b for b in sols if not any(_match(q["not_exists"], quads, b))]
     out = set()
     for b in sols:
         if "?a" in b and "?b" in b:
@@ -146,7 +174,7 @@ def _ref_eval(q, quads):
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
 )
-@given(store=store_st, q=query_st)
+@given(store=store_st, q=query_st())
 def test_construct_matches_reference_evaluator(spark, store, q):
     quads_df = spark.createDataFrame(
         [(s, p, o, None, None) for s, p, o in store],

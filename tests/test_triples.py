@@ -1,13 +1,14 @@
 """Triple-model semantics: melt/pivot round-trip, the reference's
-first-value + 'nl'-override rule (stream.ts:97-103), and CONSTRUCT
-pattern joins."""
+first-value + 'nl'-override rule (stream.ts:97-103), the closure and
+PageRank operators, and the CONSTRUCT pattern algebra the registry's
+KG entries use, written as SPARQL text for ``operators/sparql``."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import pytest
 
+from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 from prefect_flow_arc_kg_postgres_etl_spark.operators.triples import (
-    construct,
     melt,
     pivot_records,
 )
@@ -39,105 +40,118 @@ def test_pivot_language_override(spark):
     assert out == {("s1", "nederlands"), ("s2", "aaa")}
 
 
+def _store(spark, rows):
+    """A quad store; 4-tuples sit in the default graph."""
+    return spark.createDataFrame(
+        [tuple(r) + (None,) * (5 - len(r)) for r in rows],
+        "subject string, predicate string, object string, lang string, "
+        "graph string",
+    )
+
+
+def _select(quads, text: str) -> set[tuple]:
+    return {tuple(r) for r in SQ.select_query(quads, text).collect()}
+
+
 def test_construct_joins_on_shared_vars(spark):
-    triples = spark.createDataFrame(
+    quads = _store(
+        spark,
         [
-            ("c1", "nation", "n1", None),
-            ("c2", "nation", "n2", None),
-            ("n1", "name", "BE", None),
-            ("n2", "name", "NL", None),
+            ("c1", "nation", "n1"),
+            ("c2", "nation", "n2"),
+            ("n1", "name", "BE"),
+            ("n2", "name", "NL"),
         ],
-        "subject string, predicate string, object string, lang string",
     )
-    out = construct(
-        triples,
-        patterns=[("?c", "nation", "?n"), ("?n", "name", "?nm")],
+    got = _select(
+        quads, "SELECT ?c ?nm WHERE { ?c <nation> ?n . ?n <name> ?nm }"
     )
-    assert {(r.c, r.nm) for r in out.collect()} == {("c1", "BE"), ("c2", "NL")}
+    assert got == {("c1", "BE"), ("c2", "NL")}
 
 
 def test_construct_constant_filter(spark):
-    triples = spark.createDataFrame(
+    quads = _store(
+        spark,
         [
-            ("a", "type", "Person", None),
-            ("b", "type", "Org", None),
-            ("a", "name", "Ann", None),
-            ("b", "name", "Acme", None),
+            ("a", "type", "Person"),
+            ("b", "type", "Org"),
+            ("a", "name", "Ann"),
+            ("b", "name", "Acme"),
         ],
-        "subject string, predicate string, object string, lang string",
     )
-    out = construct(
-        triples, patterns=[("?s", "type", "Person"), ("?s", "name", "?n")]
+    got = _select(
+        quads, 'SELECT ?s ?n WHERE { ?s <type> "Person" ; <name> ?n }'
     )
-    assert [(r.s, r.n) for r in out.collect()] == [("a", "Ann")]
+    assert got == {("a", "Ann")}
 
 
 def _graph(spark):
-    return spark.createDataFrame(
+    return _store(
+        spark,
         [
-            ("c1", "name", "alice", None),
-            ("c1", "seg", "BUILDING", None),
-            ("c2", "name", "bob", None),
-            ("c2", "seg", "AUTO", None),
-            ("c3", "name", "carol", None),
-            ("c3", "seg", "BUILDING", None),
-            ("o1", "cust", "c1", None),
-            ("o1", "prio", "URGENT", None),
-            ("o2", "cust", "c1", None),
-            ("o2", "prio", "LOW", None),
-            ("o3", "cust", "c3", None),
-            ("o3", "prio", "LOW", None),
-            ("c1", "nk", "n1", None),
-            ("c3", "nk", "n2", None),
-            ("n1", "nname", "BE", None),
-            ("n2", "nname", "NL", None),
+            ("c1", "name", "alice"),
+            ("c1", "seg", "BUILDING"),
+            ("c2", "name", "bob"),
+            ("c2", "seg", "AUTO"),
+            ("c3", "name", "carol"),
+            ("c3", "seg", "BUILDING"),
+            ("o1", "cust", "c1"),
+            ("o1", "prio", "URGENT"),
+            ("o2", "cust", "c1"),
+            ("o2", "prio", "LOW"),
+            ("o3", "cust", "c3"),
+            ("o3", "prio", "LOW"),
+            ("c1", "nk", "n1"),
+            ("c3", "nk", "n2"),
+            ("n1", "nname", "BE"),
+            ("n2", "nname", "NL"),
         ],
-        "subject string, predicate string, object string, lang string",
     )
 
 
 def test_construct_optional_keeps_unmatched(spark):
     """SPARQL OPTIONAL: base rows survive with NULL bindings when the
     optional group doesn't match (c3 has no URGENT order)."""
-    out = construct(
+    got = _select(
         _graph(spark),
-        patterns=[("?c", "seg", "BUILDING")],
-        optionals=[[("?o", "cust", "?c"), ("?o", "prio", "URGENT")]],
+        """SELECT ?c ?o WHERE {
+          ?c <seg> "BUILDING"
+          OPTIONAL { ?o <cust> ?c ; <prio> "URGENT" }
+        }""",
     )
-    assert {(r.c, r.o) for r in out.collect()} == {("c1", "o1"), ("c3", None)}
+    assert got == {("c1", "o1"), ("c3", None)}
 
 
 def test_construct_values_inlist(spark):
-    out = construct(
+    got = _select(
         _graph(spark),
-        patterns=[("?c", "seg", "?s")],
-        values={"?s": ["AUTO"]},
+        'SELECT ?c ?s WHERE { ?c <seg> ?s VALUES ?s { "AUTO" } }',
     )
-    assert {(r.c, r.s) for r in out.collect()} == {("c2", "AUTO")}
+    assert got == {("c2", "AUTO")}
 
 
 def test_construct_path_sequence_and_inverse(spark):
     """^cust inverse + nk/nname sequence: per URGENT order, the
-    customer's nation name through the two-hop path."""
-    out = construct(
+    customer's nation name through the two-hop path. The sequence's
+    intermediate node is not a solution column."""
+    out = SQ.select_query(
         _graph(spark),
-        patterns=[
-            ("?c", "^cust", "?o"),
-            ("?o", "prio", "URGENT"),
-            ("?c", "nk/nname", "?nn"),
-        ],
+        """SELECT * WHERE {
+          ?c ^<cust> ?o . ?o <prio> "URGENT" . ?c <nk>/<nname> ?nn
+        }""",
     )
-    rows = out.collect()
-    assert {(r.o, r.c, r.nn) for r in rows} == {("o1", "c1", "BE")}
-    assert all(not c.startswith("__path") for c in out.columns)
+    assert sorted(out.columns) == ["c", "nn", "o"]
+    assert {(r.o, r.c, r.nn) for r in out.collect()} == {("o1", "c1", "BE")}
 
 
 def test_construct_path_alternation(spark):
-    out = construct(
+    got = _select(
         _graph(spark),
-        patterns=[("?c", "seg", "BUILDING"), ("?c", "name|seg", "?label")],
+        """SELECT ?c ?label WHERE {
+          ?c <seg> "BUILDING" ; <name>|<seg> ?label
+        }""",
     )
-    assert {(r.c, r.label) for r in out.collect()} == {
+    assert got == {
         ("c1", "alice"), ("c1", "BUILDING"),
         ("c3", "carol"), ("c3", "BUILDING"),
     }
@@ -146,57 +160,62 @@ def test_construct_path_alternation(spark):
 def test_construct_union_groups(spark):
     """{A} UNION {B}: branch results union by name (unbound vars NULL)
     and join the base on shared vars."""
-    out = construct(
+    got = _select(
         _graph(spark),
-        patterns=[("?c", "seg", "BUILDING")],
-        unions=[[
-            [("?o", "cust", "?c"), ("?o", "prio", "URGENT")],
-            [("?c", "nk", "?n")],
-        ]],
+        """SELECT ?c ?o ?n WHERE {
+          ?c <seg> "BUILDING" .
+          { ?o <cust> ?c ; <prio> "URGENT" } UNION { ?c <nk> ?n }
+        }""",
     )
-    rows = {(r.c, getattr(r, "o", None), getattr(r, "n", None)) for r in out.collect()}
-    assert rows == {("c1", "o1", None), ("c1", None, "n1"), ("c3", None, "n2")}
+    assert got == {("c1", "o1", None), ("c1", None, "n1"), ("c3", None, "n2")}
 
 
 def test_construct_not_exists(spark):
     """FILTER NOT EXISTS removes matches (c1 has an URGENT order)."""
-    out = construct(
+    got = _select(
         _graph(spark),
-        patterns=[("?c", "seg", "BUILDING")],
-        not_exists=[[("?o", "cust", "?c"), ("?o", "prio", "URGENT")]],
+        """SELECT ?c WHERE {
+          ?c <seg> "BUILDING"
+          FILTER NOT EXISTS { ?o <cust> ?c ; <prio> "URGENT" }
+        }""",
     )
-    assert {r.c for r in out.collect()} == {"c3"}
+    assert got == {("c3",)}
 
 
 def test_construct_bind_expression(spark):
-    out = construct(
+    got = _select(
         _graph(spark),
-        patterns=[("?c", "name", "?nm")],
-        binds={"?tag": F.concat(F.lit("person:"), F.col("nm"))},
+        """SELECT ?c ?nm ?tag WHERE {
+          ?c <name> ?nm BIND(CONCAT("person:", ?nm) AS ?tag)
+        }""",
     )
-    assert ("c1", "alice", "person:alice") in {
-        (r.c, r.nm, r.tag) for r in out.collect()
-    }
+    assert ("c1", "alice", "person:alice") in got
 
 
 def test_construct_lang_constraint(spark):
-    triples = spark.createDataFrame(
+    quads = _store(
+        spark,
         [
             ("s1", "label", "english", "en"),
             ("s1", "label", "nederlands", "nl"),
             ("s2", "label", "only-en", "en"),
         ],
-        "subject string, predicate string, object string, lang string",
     )
-    out = construct(triples, patterns=[("?s", "label", "?l@nl")])
-    assert {(r.s, r.l) for r in out.collect()} == {("s1", "nederlands")}
+    got = _select(
+        quads,
+        """SELECT ?s ?l WHERE {
+          ?s <label> ?l FILTER(LANGMATCHES(LANG(?l), "nl"))
+        }""",
+    )
+    assert got == {("s1", "nederlands")}
 
 
 def _quads(spark):
     """A quad store with the same predicate in two named graphs: the
     'real' org names in graph:orgs and a draft copy in graph:staging —
     graph scoping must discriminate between them."""
-    return spark.createDataFrame(
+    return _store(
+        spark,
         [
             ("c1", "nk", "n1", None, "graph:entities"),
             ("c2", "nk", "n2", None, "graph:entities"),
@@ -205,37 +224,38 @@ def _quads(spark):
             ("n1", "nname", "BE (draft)", None, "graph:staging"),
             ("n2", "nname", "NL (draft)", None, "graph:staging"),
         ],
-        "subject string, predicate string, object string, lang string, graph string",
     )
 
 
 def test_construct_graph_constant_scopes_pattern(spark):
     """GRAPH <g> { pattern }: a constant graph term restricts the
     pattern to that graph's quads (person.sparql:51 shape)."""
-    out = construct(
+    got = _select(
         _quads(spark),
-        patterns=[("?c", "nk", "?n"), ("?n", "nname", "?nm", "graph:orgs")],
+        """SELECT ?c ?nm WHERE {
+          ?c <nk> ?n . GRAPH <graph:orgs> { ?n <nname> ?nm }
+        }""",
     )
-    assert {(r.c, r.nm) for r in out.collect()} == {("c1", "BE"), ("c2", "NL")}
+    assert got == {("c1", "BE"), ("c2", "NL")}
 
 
 def test_construct_graph_unscoped_matches_all_graphs(spark):
     """Without a graph term the pattern spans every graph (SPARQL's
     default-graph-as-union store mode) — both copies match."""
-    out = construct(_quads(spark), patterns=[("?n", "nname", "?nm")])
+    out = SQ.select_query(_quads(spark), "SELECT ?n ?nm WHERE { ?n <nname> ?nm }")
     assert out.count() == 4
 
 
 def test_construct_graph_variable_binds_and_values_prunes(spark):
     """GRAPH ?g binds the graph id as a variable; VALUES on ?g prunes
     to the allowed graphs (the reference's parameterized org graph)."""
-    out = construct(
+    got = _select(
         _quads(spark),
-        patterns=[("?n", "nname", "?nm", "?g")],
-        values={"?g": ["graph:staging"]},
+        """SELECT ?nm ?g WHERE {
+          GRAPH ?g { ?n <nname> ?nm } VALUES ?g { <graph:staging> }
+        }""",
     )
-    rows = {(r.nm, r.g) for r in out.collect()}
-    assert rows == {
+    assert got == {
         ("BE (draft)", "graph:staging"),
         ("NL (draft)", "graph:staging"),
     }
@@ -245,25 +265,26 @@ def test_construct_path_in_graph_scopes_every_hop(spark):
     """A property path inside GRAPH g keeps all expanded hops in g
     (SPARQL scoping); a hop whose triple lives elsewhere must not
     match."""
-    out = construct(
+    got = _select(
         _quads(spark),
-        patterns=[("?c", "nk/nname", "?nm", "graph:entities")],
+        "SELECT ?c ?nm WHERE { GRAPH <graph:entities> { ?c <nk>/<nname> ?nm } }",
     )
-    assert out.count() == 0  # nname lives in graph:orgs, not entities
+    assert got == set()  # nname lives in graph:orgs, not entities
 
 
 def test_construct_filter_unbound_disjunction(spark):
     """FILTER (!BOUND(?x) || cond(?x)) over an OPTIONAL binding
     (av-audio.sparql:220 conditional-since shape): rows with no binding
     pass, bound rows pass only when the condition holds."""
-    out = construct(
+    got = _select(
         _graph(spark),
-        patterns=[("?c", "name", "?nm")],
-        optionals=[[("?o", "cust", "?c"), ("?o", "prio", "URGENT")]],
-        filters=[F.col("o").isNull() | (F.col("o") == "o1")],
+        """SELECT ?c ?o WHERE {
+          ?c <name> ?nm
+          OPTIONAL { ?o <cust> ?c ; <prio> "URGENT" }
+          FILTER(!BOUND(?o) || ?o = "o1")
+        }""",
     )
-    rows = {(r.c, r.o) for r in out.collect()}
-    assert rows == {("c1", "o1"), ("c2", None), ("c3", None)}
+    assert got == {("c1", "o1"), ("c2", None), ("c3", None)}
 
 
 def test_melt_graph_column(spark):
@@ -363,28 +384,22 @@ def test_pagerank_resumable_restart_is_bit_identical(spark, tmp_path):
 
 def test_minus_disjoint_domains_is_identity(spark):
     """SPARQL MINUS quirk (1.1 §8.3): a MINUS group sharing NO variable
-    with the base removes NOTHING — while FILTER NOT EXISTS with the
-    same (matching) group erases every base row."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators.triples import (
-        construct,
-        melt,
-    )
-
+    with the base removes NOTHING; sharing one, it removes the
+    compatible rows. FILTER NOT EXISTS over a group sharing no variable
+    is refused when the plan is built."""
     df = spark.createDataFrame(
         [(1, "a", 10), (2, "b", 20)], "k int, name string, v int"
     )
-    triples = melt(df, "k")
-    base = [("?s", "name", "?n")]
-    disjoint = [[("?x", "v", "?y")]]  # matches rows, shares no var
-    kept = construct(triples, base, minus=disjoint)
-    assert kept.count() == 2  # MINUS: identity
-    # NOT EXISTS sharing no var is rejected loudly at plan build
-    # (ambiguous intent), where MINUS defines it as identity.
-    import pytest as _pytest
-
-    with _pytest.raises(AssertionError):
-        construct(triples, base, not_exists=[[("?s2", "v", "?y")]])
-    shared = construct(
-        triples, base, minus=[[("?s", "v", "10")]]
+    quads = melt(df, "k")
+    # matches rows, shares no var: identity
+    kept = _select(quads, "SELECT ?s WHERE { ?s <name> ?n MINUS { ?x <v> ?y } }")
+    assert kept == {("1",), ("2",)}
+    with pytest.raises(AssertionError):
+        SQ.select_query(
+            quads,
+            "SELECT ?s WHERE { ?s <name> ?n FILTER NOT EXISTS { ?s2 <v> ?y } }",
+        )
+    shared = _select(
+        quads, 'SELECT ?n WHERE { ?s <name> ?n MINUS { ?s <v> "10" } }'
     )
-    assert {r["n"] for r in shared.collect()} == {"b"}  # shared var: removes
+    assert shared == {("b",)}  # shared var: removes

@@ -50,6 +50,12 @@ Evaluation model (Spark-first, no UDFs anywhere):
 - MINUS applies where it is written (it is a join operator, not a
   filter): an anti join on the shared variables; a MINUS group sharing
   no variable removes nothing (§8.3's disjoint-domain identity).
+  For EXISTS and MINUS alike, a shared variable that may be unbound
+  matches compatibly (unbound matches anything); the others stay hash
+  join keys.
+- A VALUES list narrows the scans of its own group's BGP that bind
+  its variable (``object IN (..)`` in the scan filter) before the
+  VALUES join runs.
 - CONSTRUCT emits one select per template triple (rows with any
   unbound term are skipped, per spec) and unions them by name into a
   DISTINCT triple set — one shuffle.
@@ -81,11 +87,12 @@ supported beyond the reference surface.
 Unsupported (not used by the reference files): closure modifiers
 nested INSIDE a sequence/alternation (``(a+/b)``; top-level closure
 over any seq/alt/inverse body is supported), VALUES inside a
-subselect projection, lang tags surviving subselect projection
-(outer joins on projected vars are value equality), and a variable
-an EXISTS or MINUS group shares that is still unbound (null) in a
-solution: the semi/anti join matches it by value equality, so a null
-never matches, where SPARQL would treat it as compatible.
+subselect projection, and lang tags surviving subselect projection
+(outer joins on projected vars are value equality). EXISTS
+substitutes a solution's bindings into its group; here the group is
+evaluated once and matched compatibly, which differs only where the
+substituted value would change what an OPTIONAL or FILTER inside the
+EXISTS group matches.
 """
 
 from __future__ import annotations
@@ -1352,6 +1359,29 @@ def _element_cb(el, acc_cb: set[str]) -> set[str]:
     return set()
 
 
+def _values_in_lists(g: "Group") -> dict[str, list[str]]:
+    """Per variable, the values a group's VALUES elements allow: the
+    column's values when it holds no UNDEF, intersected across VALUES
+    elements. Every solution of the group binds such a variable to one
+    of them, so a scan of the group's own BGP that certainly binds the
+    variable may drop any other value before the join (the VALUES join
+    still runs and keeps the result exact)."""
+    out: dict[str, list[str]] = {}
+    for el in g.elements:
+        if el[0] != "values":
+            continue
+        vars_, rows = el[1], el[2]
+        for i, v in enumerate(vars_):
+            if any(row[i] is None for row in rows):
+                continue
+            vals = sorted({_lit_parts(row[i])[0] for row in rows})
+            name = v[1:]
+            if name in out:
+                vals = [x for x in out[name] if x in vals]
+            out[name] = vals
+    return out
+
+
 _NUMERIC_RE = re.compile(r"[+-]?\d+(?:\.\d+)?\Z")
 
 
@@ -1710,6 +1740,7 @@ class _Eval:
         key: tuple,
         ts: list[Triple],
         opt_ts: "list[Triple] | tuple" = (),
+        values: "dict[str, list[str]] | None" = None,
     ) -> tuple[DataFrame, set[str]]:
         """Property-table star fusion (the classic RDF property-table
         layout, applied per-BGP): n constant-predicate triples sharing
@@ -1760,7 +1791,14 @@ class _Eval:
         would. organization.sparql's 8 single-triple OPTIONALs on
         ?org collapse from 8 scans + 8 left joins into this one scan.
 
+        ``values`` (the group's VALUES in-lists) narrows the subject,
+        a variable graph and each REQUIRED member's object variable to
+        its list inside the scan filter, so the pivot never groups a
+        subject the VALUES join would drop for that member. Optional
+        members are not narrowed: their variable may stay unbound.
+
         Returns (frame, bound vars)."""
+        values = values or {}
         svar, graph = key
         ts = list(ts) + list(opt_ts)
         n_req = len(ts) - len(opt_ts)
@@ -1775,8 +1813,12 @@ class _Eval:
             self.small_vars.add(graph[1:])
             out_gvar = graph[1:]
             gcols.append("graph")
+            if out_gvar in values:
+                q = q.filter(F.col("graph").isin(values[out_gvar]))
         else:
             q = q.filter(F.col("graph") == graph)
+        if svar[1:] in values:
+            q = q.filter(F.col("subject").isin(values[svar[1:]]))
         conds: list[Column] = []
         aggs: list[Column] = []
         for i, t in enumerate(ts):
@@ -1786,6 +1828,8 @@ class _Eval:
                 else (F.col("predicate") == members[i][0])
             )
             if t.o.startswith("?"):
+                if i < n_req and t.o[1:] in values:
+                    cond = cond & F.col("object").isin(values[t.o[1:]])
                 payload: Column = F.struct(
                     F.col("object").alias("o"), F.col("lang").alias("l")
                 )
@@ -2179,6 +2223,7 @@ class _Eval:
         acc: DataFrame | None,
         acc_cb: set[str] | None = None,
         opt_triples: "list[Triple] | None" = None,
+        values: "dict[str, list[str]] | None" = None,
     ) -> DataFrame:
         # Scans certainly bind their variables, so scan-to-scan joins
         # stay pure equi-joins; only the join against the accumulator
@@ -2186,6 +2231,11 @@ class _Eval:
         # accumulator may carry unbound (acc_cb = its certainly-bound
         # set; None = everything certainly bound, the historical
         # behavior for callers without OPTIONAL/UNION context).
+        # ``values`` holds the group's VALUES in-lists
+        # (_values_in_lists): each unit that certainly binds one of
+        # those variables is filtered to its list before any join.
+        values = values or {}
+
         def acc_compat(df_acc: DataFrame) -> set[str]:
             if acc_cb is None:
                 return set()
@@ -2254,14 +2304,17 @@ class _Eval:
                     star_units = list(
                         pool.map(
                             lambda kt: self._star_scan(
-                                kt[0], kt[1], opts_by_key.get(kt[0], ())
+                                kt[0],
+                                kt[1],
+                                opts_by_key.get(kt[0], ()),
+                                values,
                             ),
                             groups,
                         )
                     )
             else:
                 star_units = [
-                    self._star_scan(k, ts, opts_by_key.get(k, ()))
+                    self._star_scan(k, ts, opts_by_key.get(k, ()), values)
                     for k, ts in groups
                 ]
 
@@ -2345,6 +2398,8 @@ class _Eval:
                 df, bound = pick[1], pick[2]
             else:
                 df, bound = eval_one(pick[1])
+                for v in sorted(bound & set(values)):
+                    df = df.filter(F.col(v).isin(values[v]))
             acc = (
                 df if acc is None else _join(acc, df, compat=acc_compat(acc))
             )
@@ -2401,6 +2456,7 @@ class _Eval:
             _os.environ.get("SPARK_GRAFT_SPARQL_STAR_FUSION", "1") != "0"
         )
         pending_optionals: list[Triple] = []
+        scan_values = _values_in_lists(g)
 
         def flush_triples():
             nonlocal acc, pending_triples, pending_optionals
@@ -2411,6 +2467,7 @@ class _Eval:
                         acc,
                         acc_cb=cb,
                         opt_triples=pending_optionals,
+                        values=scan_values,
                     ),
                     n=len(pending_triples) + len(pending_optionals),
                 )
@@ -2611,7 +2668,7 @@ class _Eval:
                     cb |= el_cb
             elif kind == "minus":
                 assert acc is not None, "MINUS cannot start a group"
-                acc = self._exists_join(acc, kind, el[1])
+                acc = self._exists_join(acc, kind, el[1], cb)
             elif kind in ("filter", "not_exists", "exists"):
                 # FILTER [NOT] EXISTS is a filter too: it applies at
                 # group end, after every element binds (SPARQL §18.2.2)
@@ -2655,14 +2712,23 @@ class _Eval:
                 f, acc = self._materialize_exists(f, acc)
                 acc = acc.filter(self.to_column(f, acc))
             else:
-                acc = self._exists_join(acc, kind, f)
+                acc = self._exists_join(acc, kind, f, cb)
         return acc
 
-    def _exists_join(self, acc: DataFrame, kind: str, group: Group) -> DataFrame:
+    def _exists_join(
+        self, acc: DataFrame, kind: str, group: Group, acc_cb: set[str]
+    ) -> DataFrame:
         """FILTER EXISTS (semi join), FILTER NOT EXISTS and MINUS (anti
         joins) on the variables ``group`` shares with ``acc``. A MINUS
         group sharing none removes nothing (§8.3's disjoint-domain
-        identity); an EXISTS group sharing none is refused."""
+        identity); an EXISTS group sharing none is refused.
+
+        A shared variable bound in every solution on both sides is a
+        hash join key. One that may be unbound (outside ``acc_cb`` or
+        the group's certainly-bound set) matches compatibly: unbound on
+        either side matches anything, as in ``_compat_join``. MINUS
+        additionally needs one shared variable bound on both sides
+        (§8.3: dom(mu) and dom(mu') must intersect)."""
         sub = self.eval_group(group, None)
         assert sub is not None, f"empty {kind} group"
         keys = sorted(set(_value_cols(acc)) & set(_value_cols(sub)))
@@ -2670,7 +2736,25 @@ class _Eval:
             assert kind == "minus", "FILTER [NOT] EXISTS shares no variable"
             return acc
         how = "left_semi" if kind == "exists" else "left_anti"
-        return acc.join(sub.select(*keys).distinct(), on=keys, how=how)
+        sub_cb = _group_cb(group)
+        maybe = [k for k in keys if k not in acc_cb or k not in sub_cb]
+        if not maybe:
+            return acc.join(sub.select(*keys).distinct(), on=keys, how=how)
+        right = sub.select(
+            *[F.col(k).alias(k + "__x") for k in keys]
+        ).distinct()
+        cond = F.lit(True)
+        overlap = F.lit(False)
+        for k in keys:
+            a, b = acc[k], right[k + "__x"]
+            if k in maybe:
+                cond = cond & (a.isNull() | b.isNull() | (a == b))
+                overlap = overlap | (a.isNotNull() & b.isNotNull())
+            else:
+                cond = cond & (a == b)
+        if kind == "minus" and len(maybe) == len(keys):
+            cond = cond & overlap
+        return acc.join(right, cond, how)
 
     # -- expressions
     def to_column(self, e, df: DataFrame) -> Column:

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import contextlib
 import os
+import signal
 import sys
 
 import pytest
@@ -24,6 +26,24 @@ needs_reference = pytest.mark.skipif(
     not os.path.isdir(QUERIES_DIR),
     reason=f"reference queries not mounted at {QUERIES_DIR}",
 )
+
+
+@contextlib.contextmanager
+def deadline(seconds: float):
+    """Fail the test instead of hanging the suite when the body runs
+    longer than ``seconds`` (the SPARQL parser once looped forever on a
+    keyword it had no branch for)."""
+
+    def expire(signum, frame):
+        raise TimeoutError(f"still running after {seconds} s")
+
+    previous = signal.signal(signal.SIGALRM, expire)
+    signal.setitimer(signal.ITIMER_REAL, seconds)
+    try:
+        yield
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, previous)
 
 
 @pytest.hookimpl(wrapper=True)

@@ -265,32 +265,38 @@ def test_correlated_subquery_decorrelates_to_one_agg_join(spark):
 
 
 def test_construct_optional_values_pushed_to_scan(spark, monkeypatch):
-    """The OPTIONAL + VALUES entry's pattern scans partition-prune the
-    predicate-partitioned store, and the OPTIONAL group is a left outer
-    join. The SPARQL compiler checkpoints each star scan, which hides
-    the scan behind the checkpoint in the final plan, so the star
-    subtrees are left inline here to read their scans (the checkpoint
-    stores the same subtree). The VALUES rows join as a broadcast
-    inline table after the star."""
+    """The OPTIONAL + VALUES entry's star scans partition-prune the
+    predicate-partitioned store, the VALUES list reaches the filter over
+    the customer star's scan (``object IN (..)`` on its c_mktsegment
+    member), and the OPTIONAL group is a left outer join. The SPARQL
+    compiler checkpoints each star, which hides its scan behind the
+    checkpoint in the final plan, so each star's executed plan is read
+    as the checkpoint receives it."""
     from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
-    monkeypatch.setattr(
-        SQ, "_truncate_lineage", lambda df, coalesce=None: df
-    )
+    truncate = SQ._truncate_lineage
+    star_plans: list[str] = []
+
+    def spy(df, coalesce=None):
+        star_plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return truncate(df, coalesce)
+
+    monkeypatch.setattr(SQ, "_truncate_lineage", spy)
     SQ.clear_plan_cache()
     plan = build(spark, "kg_construct_optional")
     SQ.clear_plan_cache()
     assert "CartesianProduct" not in plan
     # OPTIONAL group compiles to a left outer join
     assert "LeftOuter" in plan or "left_outer" in plan.lower()
-    # The staged triple store is partitioned by predicate, so every
-    # pattern scan must partition-prune to its posting list.
-    pruned = [
-        line
-        for line in plan.splitlines()
-        if line.startswith("PartitionFilters:") and "predicate#" in line
-    ]
-    assert pruned and len(pruned) == plan.count(") Scan parquet"), plan
+    assert len(star_plans) == 2, star_plans  # customer star, order star
+    for sp in star_plans:
+        # The staged triple store is partitioned by predicate, so every
+        # star scan must partition-prune to its posting lists.
+        scans = [ln for ln in sp.splitlines() if "FileScan parquet" in ln]
+        assert scans and all("PartitionFilters: [((predicate#" in ln for ln in scans), sp
+    customer = next(sp for sp in star_plans if "c_mktsegment" in sp)
+    assert "(predicate#" in customer and "= c_mktsegment) AND object#" in customer
+    assert "IN (BUILDING,MACHINERY)" in customer, customer
 
 
 def test_incremental_since_ts_filter_reaches_parquet_scan(spark):

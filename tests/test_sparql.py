@@ -7,14 +7,12 @@ entries use is pinned in tests/test_triples.py."""
 
 from __future__ import annotations
 
-import contextlib
 import glob
-import signal
 
 import pytest
 
 from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
-from tests.conftest import QUERIES_DIR, needs_reference
+from tests.conftest import QUERIES_DIR, deadline, needs_reference
 
 
 @needs_reference
@@ -182,24 +180,6 @@ def test_filter_not_exists(spark):
     assert rows == {("e2", "yes")}
 
 
-@contextlib.contextmanager
-def _deadline(seconds: float):
-    """Fail the test instead of hanging the suite when the body runs
-    longer than ``seconds`` (the parser once looped forever on a
-    keyword it had no branch for)."""
-
-    def expire(signum, frame):
-        raise TimeoutError(f"still running after {seconds} s")
-
-    previous = signal.signal(signal.SIGALRM, expire)
-    signal.setitimer(signal.ITIMER_REAL, seconds)
-    try:
-        yield
-    finally:
-        signal.setitimer(signal.ITIMER_REAL, 0)
-        signal.signal(signal.SIGALRM, previous)
-
-
 @pytest.mark.parametrize(
     "text",
     [
@@ -211,67 +191,127 @@ def _deadline(seconds: float):
     ids=["stray_union", "unterminated"],
 )
 def test_parse_raises_where_a_group_element_consumes_nothing(text):
-    with _deadline(10), pytest.raises(SyntaxError):
+    with deadline(10), pytest.raises(SyntaxError):
         SQ.parse(text)
 
 
-def test_minus_removes_compatible_rows_only(spark):
-    """MINUS (SPARQL 1.1 §8.3): an anti join on the shared variables; a
-    group sharing none removes nothing."""
-    quads = _quads(
-        spark,
-        [
-            ("s1", "v", "1", None, None),
-            ("s2", "v", "2", None, None),
-            ("x", "w", "u", None, None),
-        ],
-    )
-    shared = 'SELECT ?s WHERE { ?s <v> ?y MINUS { ?s <v> "1" } }'
-    disjoint = "SELECT ?s WHERE { ?s <v> ?y MINUS { ?z <w> ?u } }"
-    with _deadline(10):
-        SQ.parse(shared)
-        SQ.parse(disjoint)
-    assert {tuple(r) for r in SQ.select_query(quads, shared).collect()} == {
-        ("s2",)
-    }
-    assert {tuple(r) for r in SQ.select_query(quads, disjoint).collect()} == {
-        ("s1",),
-        ("s2",),
-    }
+_EXISTS_STORE = [
+    ("s1", "p", "o1", None, None),
+    ("s1", "r", "o2", None, None),
+    ("s1", "q", "o3", None, None),
+]
+
+
+@pytest.mark.parametrize(
+    "store, where, expected",
+    [
+        (
+            _EXISTS_STORE,
+            "?a <p> ?b . FILTER NOT EXISTS { ?a <q> ?c } OPTIONAL { ?a <r> ?c }",
+            [("s1", "o2")],
+        ),
+        (
+            _EXISTS_STORE,
+            "?a <p> ?b . OPTIONAL { ?a <r> ?c } FILTER NOT EXISTS { ?a <q> ?c }",
+            [("s1", "o2")],
+        ),
+        (
+            _EXISTS_STORE,
+            "?a <p> ?b . FILTER EXISTS { ?a <q> ?c } OPTIONAL { ?a <r> ?c }",
+            [],
+        ),
+        # no <r> triple: ?c stays unbound, and an unbound ?c is
+        # compatible with (s1 q o3), so NOT EXISTS removes the row
+        (
+            [_EXISTS_STORE[0], _EXISTS_STORE[2]],
+            "?a <p> ?b . FILTER NOT EXISTS { ?a <q> ?c } OPTIONAL { ?a <r> ?c }",
+            [],
+        ),
+        (
+            [_EXISTS_STORE[0], _EXISTS_STORE[2]],
+            "?a <p> ?b . FILTER EXISTS { ?a <q> ?c } OPTIONAL { ?a <r> ?c }",
+            [("s1", None)],
+        ),
+    ],
+    ids=[
+        "not_exists_first",
+        "not_exists_last",
+        "exists_first",
+        "not_exists_unbound",
+        "exists_unbound",
+    ],
+)
+def test_exists_filters_apply_at_group_end(spark, store, where, expected):
+    """FILTER [NOT] EXISTS sees every binding of its group, wherever it
+    is written (SPARQL 1.1 §18.2.2): with the <r> triple, ?c is bound
+    to o2 by the OPTIONAL, and (s1 q o2) is not in the store; without
+    it, ?c is unbound and only ?a constrains the EXISTS group."""
+    quads = _quads(spark, store)
+    out = SQ.select_query(quads, "SELECT ?a ?c WHERE { %s }" % where)
+    assert [tuple(r) for r in out.collect()] == expected
 
 
 @pytest.mark.parametrize(
     "where, expected",
     [
+        # ?c unbound on the left shares no bound variable: kept
+        ("?a <p> ?b . OPTIONAL { ?a <r> ?c } MINUS { ?x <q> ?c }", {("s1", None)}),
+        # ?a bound on both sides, ?c unbound: compatible, removed
+        ("?a <p> ?b . OPTIONAL { ?a <r> ?c } MINUS { ?a <q> ?c }", set()),
+    ],
+    ids=["no_bound_overlap", "compatible"],
+)
+def test_minus_with_an_unbound_shared_variable(spark, where, expected):
+    """MINUS (SPARQL 1.1 §8.3) removes a row only when a MINUS solution
+    is compatible with it AND the two bind a shared variable."""
+    quads = _quads(spark, [_EXISTS_STORE[0], _EXISTS_STORE[2]])
+    text = "SELECT ?a ?c WHERE { %s }" % where
+    with deadline(10):  # the parser once looped forever on MINUS
+        SQ.parse(text)
+    out = SQ.select_query(quads, text)
+    assert {tuple(r) for r in out.collect()} == expected
+
+
+@pytest.mark.parametrize(
+    "where, expected",
+    [
+        # a required star member: narrowed inside the star scan
+        ('?s <p> ?x ; <q> ?v . VALUES ?v { "a" }', {("s1", "a")}),
+        # an optional star member is not narrowed: s2's "b" must bind
+        # ?v so that the VALUES join drops s2, and s3 keeps ?v unbound
+        # until the VALUES join binds it
         (
-            "?a <p> ?b . FILTER NOT EXISTS { ?a <q> ?c } OPTIONAL { ?a <r> ?c }",
-            [("s1", "o2")],
+            '?s <p> ?x . OPTIONAL { ?s <q> ?v } VALUES ?v { "a" }',
+            {("s1", "a"), ("s3", "a")},
         ),
+        # a lone pattern: narrowed on its frame
+        ('?s <q> ?v . VALUES ?v { "a" "c" }', {("s1", "a")}),
+        # the star's subject
+        ("?s <p> ?x ; <q> ?v . VALUES ?s { <s2> }", {("s2", "b")}),
+        # a column holding UNDEF narrows nothing
         (
-            "?a <p> ?b . OPTIONAL { ?a <r> ?c } FILTER NOT EXISTS { ?a <q> ?c }",
-            [("s1", "o2")],
-        ),
-        (
-            "?a <p> ?b . FILTER EXISTS { ?a <q> ?c } OPTIONAL { ?a <r> ?c }",
-            [],
+            '?s <q> ?v . VALUES (?v) { (UNDEF) ("a") }',
+            {("s1", "a"), ("s2", "b")},
         ),
     ],
-    ids=["not_exists_first", "not_exists_last", "exists_first"],
+    ids=["star_member", "optional_member", "lone_pattern", "subject", "undef"],
 )
-def test_exists_filters_apply_at_group_end(spark, where, expected):
-    """FILTER [NOT] EXISTS sees every binding of its group, wherever it
-    is written (SPARQL 1.1 §18.2.2): here ?c is bound to o2 by the
-    OPTIONAL, and (s1 q o2) is not in the store."""
+def test_values_narrow_scans_that_bind_the_variable(spark, where, expected):
+    """A VALUES list narrows the scans of its group's BGP that certainly
+    bind its variable; the answer is the one the VALUES join alone
+    gives."""
     quads = _quads(
         spark,
         [
-            ("s1", "p", "o1", None, None),
-            ("s1", "r", "o2", None, None),
-            ("s1", "q", "o3", None, None),
+            ("s1", "p", "x1", None, None),
+            ("s1", "q", "a", None, None),
+            ("s2", "p", "x2", None, None),
+            ("s2", "q", "b", None, None),
+            ("s3", "p", "x3", None, None),
         ],
     )
-    out = SQ.select_query(quads, "SELECT ?a ?c WHERE { %s }" % where)
-    assert [tuple(r) for r in out.collect()] == expected
+    out = SQ.select_query(quads, "SELECT ?s ?v WHERE { %s }" % where)
+    assert {tuple(r) for r in out.collect()} == expected
 
 
 def test_variable_predicate_with_if_classifier(spark):

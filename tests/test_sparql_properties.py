@@ -2,8 +2,8 @@
 
 Hypothesis generates small random quad stores and random queries
 (BGPs with shared variables, OPTIONAL groups, UNION branches —
-including the fused single-pattern shape — equality FILTERs, and
-MINUS and FILTER NOT EXISTS over the BGP's variables), renders them
+including the fused single-pattern shape — equality FILTERs, MINUS and
+FILTER NOT EXISTS, whose variables may be unbound in a solution), renders them
 to query TEXT (so the parser is exercised too), and compares
 ``construct_query``'s output against a 50-line reference evaluator
 implementing SPARQL semantics directly (compatible-binding joins,
@@ -48,16 +48,17 @@ def _bgp_vars(triples):
 def query_st(draw):
     bgp = draw(st.lists(triple_st, min_size=1, max_size=3))
     bvars = sorted(_bgp_vars(bgp))
-    # MINUS and FILTER NOT EXISTS: one triple each over the BGP's
-    # variables, so every variable they share is bound in each solution
-    over_bgp = st.none()
+    # FILTER NOT EXISTS: one triple whose subject is a BGP variable (the
+    # group must share a variable) and whose object may be any variable,
+    # so it can meet one an OPTIONAL or UNION leaves unbound
+    not_exists = st.none()
     if bvars:
-        over_bgp = st.one_of(
+        not_exists = st.one_of(
             st.none(),
             st.tuples(
                 st.sampled_from(bvars),
                 st.sampled_from(PREDS),
-                st.one_of(st.sampled_from(bvars), st.sampled_from(OBJECTS)),
+                st.one_of(st.sampled_from(VARS), term_o),
             ),
         )
     return {
@@ -65,8 +66,8 @@ def query_st(draw):
         "optional": draw(st.one_of(st.none(), triple_st)),
         "union": draw(st.one_of(st.none(), st.tuples(triple_st, triple_st))),
         "filter_eq": draw(st.booleans()),
-        "minus": draw(over_bgp),
-        "not_exists": draw(over_bgp),
+        "minus": draw(st.one_of(st.none(), triple_st)),
+        "not_exists": draw(not_exists),
     }
 
 
@@ -145,10 +146,19 @@ def _ref_eval(q, quads):
             out.extend(_match(a, quads, b))
             out.extend(_match(b_, quads, b))
         sols = out
-    # MINUS and NOT EXISTS triples use only BGP variables, bound in every
-    # solution: a solution goes iff the triple matches under it
+    # MINUS (§8.3): a solution goes iff some MINUS solution is
+    # compatible with it and shares a bound variable with it
     if q["minus"] is not None:
-        sols = [b for b in sols if not any(_match(q["minus"], quads, b))]
+        minus = list(_match(q["minus"], quads, {}))
+        sols = [
+            b
+            for b in sols
+            if not any(
+                b.keys() & m.keys()
+                and all(b[k] == m[k] for k in b.keys() & m.keys())
+                for m in minus
+            )
+        ]
     fvars = sorted(_bgp_vars(q["bgp"]))
     if q["filter_eq"] and len(fvars) >= 2:
         sols = [
@@ -156,6 +166,8 @@ def _ref_eval(q, quads):
             for b in sols
             if fvars[0] in b and fvars[1] in b and b[fvars[0]] == b[fvars[1]]
         ]
+    # NOT EXISTS substitutes the solution's bindings into its triple;
+    # a variable the solution leaves unbound matches anything
     if q["not_exists"] is not None:
         sols = [b for b in sols if not any(_match(q["not_exists"], quads, b))]
     out = set()

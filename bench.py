@@ -3,7 +3,10 @@
 
 Prints ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec", "sf": ...,
-   "unavailable": [name, ...], "queries": {name: sec, ...}}
+   "jobs": n, "unavailable": [name, ...], "queries": {name: sec, ...}}
+
+"jobs" is the number of Spark jobs the three timed passes started
+(the DAGScheduler's job counter), driver-side eager jobs included.
 
 An entry that reads a reference .sparql file absent from
 REFERENCE_QUERY_DIR is listed under "unavailable" instead of timed.
@@ -243,6 +246,8 @@ def main() -> None:
     # time under noisy neighbors (any single pass can catch a CPU steal
     # spike or a sporadic JVM stall).
     timings: dict[str, float] = {}
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs_before = dag.numTotalJobs()
     for _ in range(3):
         for name in timed:
             builder = QUERIES[name].builder
@@ -259,6 +264,7 @@ def main() -> None:
             if name not in timings or elapsed < timings[name]:
                 timings[name] = elapsed
 
+    jobs = dag.numTotalJobs() - jobs_before
     total = round(sum(timings.values()), 2)
     # Contention telemetry (round-5 postmortem): the r5 driver bench ran
     # ~1.5x slower than the same commit on a quiet host, uniformly across
@@ -289,6 +295,7 @@ def main() -> None:
                 "drift_control_version": 2,
                 "loadavg_start": round(load_start[0], 2),
                 "loadavg_end": round(load_end[0], 2),
+                "jobs": jobs,
                 "unavailable": unavailable,
                 "queries": timings,
             },

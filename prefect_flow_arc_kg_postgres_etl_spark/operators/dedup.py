@@ -21,6 +21,7 @@ from prefect_flow_arc_kg_postgres_etl_spark.functions.text import (
     words,
 )
 from prefect_flow_arc_kg_postgres_etl_spark.session import MISS, AppLRU
+from prefect_flow_arc_kg_postgres_etl_spark.sources.store import read_parquet
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -790,9 +791,10 @@ def _index_partitions(docs: int) -> int:
 # stamped with the listing stamp of the _meta dir -> collected rows (or
 # None for a pre-_meta index). The _meta is four ints of BUILD-TIME
 # configuration — a catalog lookup, not query data — but reading it
-# through spark.read.json costs a schema-inference job + a collect per
-# probe call (guide §1: don't pay per-call for what cannot change under
-# the key). The stamp hashes the
+# through spark.read.json costs a collect (one Spark job) per probe
+# call (guide §1: don't pay per-call for what cannot change under the
+# key); the read passes _META_SCHEMA, so a miss starts no
+# schema-inference job besides. The stamp hashes the
 # (name, length, mtime) of every file in the _meta directory: a rebuilt
 # index rewrites _meta with new part-file names (each write has its own
 # job id), so even a rewrite inside one coarse mtime tick with equal
@@ -803,6 +805,7 @@ def _index_partitions(docs: int) -> int:
 # fresh every call) rather than pinned to a key that would serve a
 # stale _meta for a rebuilt index.
 _INDEX_META_CACHE = AppLRU(64)
+_META_SCHEMA = "k long, bands long, n long, partitions long"
 
 
 def _listing_stamp(files) -> int:
@@ -844,7 +847,7 @@ def _read_index_meta(spark, index_path: str):
         if hit is not MISS:
             return hit
     try:
-        rows = spark.read.json(f"{index_path}/_meta").collect()
+        rows = spark.read.schema(_META_SCHEMA).json(f"{index_path}/_meta").collect()
     except AnalysisException as exc:
         # Only a MISSING _meta (pre-_meta index) may fall back to the
         # caller's parameters; a present-but-unreadable one must not.
@@ -922,7 +925,7 @@ def incremental_dup_pairs_indexed(
         .collect()
     ]
     hist_keys = (
-        spark.read.parquet(f"{index_path}/band_keys")
+        read_parquet(spark, f"{index_path}/band_keys")
         .filter(F.col("bh_p").isin(probe_parts))
         .select("id", "band", "bh")
     )
@@ -967,7 +970,7 @@ def incremental_dup_pairs_indexed(
         .collect()
     ]
     hist_grams = (
-        spark.read.parquet(f"{index_path}/grams")
+        read_parquet(spark, f"{index_path}/grams")
         .filter(F.col("id_p").isin(gram_parts))
         .join(F.broadcast(hist_cand_ids), "id", "left_semi")
         .select("id", "gram")

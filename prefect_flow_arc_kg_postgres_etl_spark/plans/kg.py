@@ -26,6 +26,7 @@ from prefect_flow_arc_kg_postgres_etl_spark.operators.index_documents import (
     partition_stats,
 )
 from prefect_flow_arc_kg_postgres_etl_spark.sources.catalog import load_table
+from prefect_flow_arc_kg_postgres_etl_spark.sources.store import read_parquet
 
 CUSTOMER_COLS = ["c_name", "c_mktsegment", "c_nationkey", "c_acctbal"]
 
@@ -124,7 +125,7 @@ def _kg_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         fp.update(f"{t}:{st.st_mtime_ns}:{st.st_size};".encode())
     path = f"{tempfile.gettempdir()}/kg_graph_{fp.hexdigest()[:16]}"
     try:
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     except Exception:
         pass
     cust = load_table(spark, sf_dir, "customer")
@@ -161,7 +162,7 @@ def _kg_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     graph = graph.distinct()  # RDF graphs are SETS of triples
     graph.repartition("predicate").write.mode("overwrite").partitionBy("predicate").parquet(path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def kg_construct_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1900,7 +1901,7 @@ def maintenance_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     zorder_layout(orders, ["o_custkey", "o_orderdate"], n_files=16).write.mode(
         "overwrite"
     ).parquet(out)
-    return spark.read.parquet(out).select(*orders.columns)
+    return read_parquet(spark, out).select(*orders.columns)
 
 
 MAINTENANCE_ZORDER_ORACLE = "SELECT * FROM orders"
@@ -3121,8 +3122,8 @@ def schema_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(f"{root}/gen2")
     )
-    s1 = {f.name: f.dataType.simpleString() for f in spark.read.parquet(f"{root}/gen1").schema.fields}
-    s2 = {f.name: f.dataType.simpleString() for f in spark.read.parquet(f"{root}/gen2").schema.fields}
+    s1 = {f.name: f.dataType.simpleString() for f in read_parquet(spark, f"{root}/gen1").schema.fields}
+    s2 = {f.name: f.dataType.simpleString() for f in read_parquet(spark, f"{root}/gen2").schema.fields}
     rows = []
     for c in sorted(set(s1) | set(s2)):
         if c not in s1:
@@ -3415,7 +3416,7 @@ def _sparql_person_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
         fp.update(f"{t}:{st.st_mtime_ns}:{st.st_size};".encode())
     path = f"{tempfile.gettempdir()}/sparql_quads_{fp.hexdigest()[:16]}"
     try:
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     except Exception:
         pass
 
@@ -4302,7 +4303,7 @@ def _sparql_person_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     quads = quads.distinct()  # RDF graphs are SETS of triples
     quads.repartition("predicate").write.mode("overwrite").partitionBy("predicate").parquet(path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def kg_construct_real_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4450,7 +4451,7 @@ def _sparql_org_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp.update(f"{st.st_mtime_ns}:{st.st_size}".encode())
     path = f"{tempfile.gettempdir()}/sparql_org_quads_{fp.hexdigest()[:16]}"
     try:
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     except Exception:
         pass
 
@@ -4560,7 +4561,7 @@ def _sparql_org_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("object").isNotNull())
     quads = quads.distinct()  # RDF graphs are SETS of triples
     quads.repartition("predicate").write.mode("overwrite").partitionBy("predicate").parquet(path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def kg_construct_real_query_org(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4735,7 +4736,7 @@ def _sparql_del_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
         fp.update(f"{t}:{st.st_mtime_ns}:{st.st_size};".encode())
     path = f"{tempfile.gettempdir()}/sparql_del_quads_{fp.hexdigest()[:16]}"
     try:
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     except Exception:
         pass
 
@@ -4812,7 +4813,7 @@ def _sparql_del_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of forcing exactly one.
     quads = quads.distinct()  # RDF graphs are SETS of triples
     quads.repartition("predicate").write.mode("overwrite").partitionBy("predicate").parquet(path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def kg_construct_real_query_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:

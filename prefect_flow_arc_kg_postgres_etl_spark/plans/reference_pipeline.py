@@ -73,6 +73,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from prefect_flow_arc_kg_postgres_etl_spark.operators import merge as M
 from prefect_flow_arc_kg_postgres_etl_spark.session import MISS, AppLRU
+from prefect_flow_arc_kg_postgres_etl_spark.sources.store import read_parquet
 
 _NS = "urn:kg-to-postgres:"
 
@@ -434,7 +435,7 @@ def all_view_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.sparkContext._jvm.System.gc()
         _VIEW_CACHE.put(spark, sf_dir, spill, fp)
     paths = [f"{spill}/q{i}" for i in range(len(builders))]
-    return spark.read.parquet(*paths).distinct()
+    return read_parquet(spark, *paths).distinct()
 
 
 def pivot_wide(triples: DataFrame) -> DataFrame:
@@ -1046,7 +1047,7 @@ def flow_reference_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_reference_index_documents(tables, SYNTHETIC_STORE_ADAPTER).write.mode(
         "overwrite"
     ).parquet(f"{spill}/index_documents")
-    docs = spark.read.parquet(f"{spill}/index_documents")
+    docs = read_parquet(spark, f"{spill}/index_documents")
     # a mutated store under the same path replaces its old entry (the
     # old spill stays on disk until exit, for frames already returned)
     _DOCS_CACHE.put(spark, sf_dir, docs, fp)
@@ -2125,7 +2126,7 @@ def all_view_triples_scoped(
         list(pool.map(_land, enumerate(runs)))
     SQ.clear_plan_cache()
     gc.collect()
-    return spark.read.parquet(*paths).distinct()
+    return read_parquet(spark, *paths).distinct()
 
 
 def reference_incremental_flow(

@@ -138,6 +138,14 @@ def get_spark(app_name: str = "arc-kg-spark", cpus: int | None = None) -> SparkS
         # messages lose only the Python file:line "DataFrame" query
         # context. Static: PySpark reads it once per process.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # lower()/upper() without ICU case mapping. With it (Spark 4's
+        # default) the first such call in a JVM runs the static
+        # initialiser of CollationAwareUTF8String: on a 4-core host a
+        # first lower() over 10 rows cost 2.5-2.7 s of JVM CPU, against
+        # 0.44-0.48 s with this off (fresh JVM, after one plain query).
+        # The nightly path calls lower() in langMatches and in the
+        # index-document SQL.
+        .config("spark.sql.icu.caseMappings.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -25,6 +25,8 @@ from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
+from prefect_flow_arc_kg_postgres_etl_spark.sources.store import read_parquet
+
 
 def jdbc_options(
     url: str,
@@ -173,7 +175,7 @@ def resumable_stage(
 
     try:
         done = (
-            spark.read.parquet(staging_path).select(batch_col).distinct()
+            read_parquet(spark, staging_path).select(batch_col).distinct()
         )
         n_done = done.count()
     except Exception:  # first attempt: nothing staged yet
@@ -220,9 +222,10 @@ def stage_then_merge(
 
     Returns a ``MergeResult``: the merged table read back from the
     landed target, plus the staged and merged row counts. Both counts
-    are observed in the two writes, and both read-backs (the staging
-    dir, the landed table) use the schema just written, so besides the
-    two writes the only Spark job is the target's schema inference.
+    are observed in the two writes, both read-backs (the staging dir,
+    the landed table) use the schema just written, and the target's
+    read takes its schema from a footer on the driver
+    (``store.read_parquet``), so the two writes are the only Spark jobs.
     "First load" means ``store.table_exists`` says there is no target;
     any other failure to read or merge the target raises and leaves the
     live version untouched.
@@ -242,7 +245,7 @@ def stage_then_merge(
     n_staged = observed_write(
         source, lambda d: d.write.mode("overwrite").parquet(staging_path)
     )
-    staged = spark.read.schema(source.schema).parquet(staging_path)
+    staged = read_parquet(spark, staging_path, schema=source.schema)
     if store.table_exists(target_path):
         target = store.read_table(spark, target_path)
         # Column-level intersection (get_table_columns.sql analogue):

@@ -2,9 +2,9 @@
 
 The reference discovers its load targets from database metadata
 (reference: typescript/src/database.ts:55-66 getIntersectingSchemaTables);
-here the catalog is the parquet directory. Readers are plain
-``spark.read.parquet`` so Catalyst gets pushdown + pruning; nothing is
-cached eagerly — operators decide what to persist.
+here the catalog is the parquet directory. Readers are plain parquet
+scans (``store.read_parquet``) so Catalyst gets pushdown + pruning;
+nothing is cached eagerly — operators decide what to persist.
 
 At cluster scale the same catalog fronts object-store paths; only
 ``sf_dir`` changes.
@@ -16,6 +16,8 @@ import os
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+
+from prefect_flow_arc_kg_postgres_etl_spark.sources import store
 
 TABLES = [
     "region",
@@ -57,8 +59,8 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Per-session memo of table DataFrames. The catalog dirs are immutable
 # for a session's lifetime, and DataFrames are immutable logical plans,
-# so reuse is safe — and it skips the per-call file listing + parquet
-# footer schema read + py4j chatter that otherwise costs ~50-150 ms per
+# so reuse is safe — and it skips the per-call file listing, the
+# driver's footer read, the epoch probe and the py4j chatter of each
 # table per query build. Keyed weakly on the session so a stopped
 # session's plans are collectable.
 _TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
@@ -163,12 +165,10 @@ def read_raw(spark: SparkSession, path: str) -> DataFrame:
     the read itself would raise)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(path)
+    return store.read_parquet(spark, path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from prefect_flow_arc_kg_postgres_etl_spark.sources import store
-
     path = f"{sf_dir}/{name}.parquet"
     # Versioned store tables (sources/store.py) resolve their pointer
     # first; keying the memo on the version keeps it correct for

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from prefect_flow_arc_kg_postgres_etl_spark.sources.store import read_parquet
+
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table.
 
@@ -121,7 +123,7 @@ def windowed_agg_stream_watermarked(
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(out_path)
+    return read_parquet(spark, out_path)
 
 
 SESSION_GAP_MIN = 30
@@ -945,12 +947,10 @@ def dq_gate_stream(
     # inference would fail exactly when the data is perfectly
     # clean/dirty — the gate must return an empty split instead.
     schema = ev.schema
-    valid = spark.read.schema(schema).parquet(f"{out_root}/valid").select(*cols)
-    dead = (
-        spark.read.schema(schema)
-        .parquet(f"{out_root}/dead_letter")
-        .select(*cols)
-    )
+    valid = read_parquet(spark, f"{out_root}/valid", schema=schema).select(*cols)
+    dead = read_parquet(
+        spark, f"{out_root}/dead_letter", schema=schema
+    ).select(*cols)
     return valid.withColumn("sink", F.lit("valid")).unionByName(
         dead.withColumn("sink", F.lit("dead_letter"))
     )
@@ -1163,7 +1163,7 @@ def pivot_records_stream(
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(out_path)
+    return read_parquet(spark, out_path)
 
 
 # -------------------------------------- C14 SCD2 point-in-time enrich
@@ -1239,7 +1239,7 @@ def scd2_enrich_stream(
     q = ev.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
     q.awaitTermination()
     try:
-        landed = spark.read.parquet(f"{out_root}/enriched")
+        landed = read_parquet(spark, f"{out_root}/enriched")
     except Exception:
         return spark.createDataFrame(
             [], "event_id bigint, ts timestamp_ntz, user_id bigint, "
@@ -1306,7 +1306,7 @@ def interval_join_outer_stream(
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(out_path)
+    return read_parquet(spark, out_path)
 
 
 # ----------------------------------------- C16 streaming gap fill
@@ -1448,7 +1448,7 @@ def windowed_distinct_stream(
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(out_path)
+    return read_parquet(spark, out_path)
 
 
 def agg_retractable_stream(

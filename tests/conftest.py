@@ -54,6 +54,29 @@ def pytest_runtest_call(item):
         pytest.skip(str(e))
 
 
+@pytest.fixture
+def star_plans(monkeypatch):
+    """The executed plan of every star the SPARQL compiler checkpoints
+    during the test, in compile order. Lineage truncation leaves only
+    ``Scan ExistingRDD`` where a star's quad scans were in the final
+    plan, so a plan audit of a SPARQL-text entry reads the scans here.
+    The plan cache is cleared on both sides, so every star of the
+    test's queries is compiled, and seen, inside it."""
+    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
+
+    truncate = SQ._truncate_lineage
+    plans: list[str] = []
+
+    def spy(df, coalesce=None):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return truncate(df, coalesce)
+
+    monkeypatch.setattr(SQ, "_truncate_lineage", spy)
+    SQ.clear_plan_cache()
+    yield plans
+    SQ.clear_plan_cache()
+
+
 @pytest.fixture(scope="session")
 def spark():
     # The whole suite shares one JVM. With get_spark's 16g default heap

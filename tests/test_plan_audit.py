@@ -264,27 +264,15 @@ def test_correlated_subquery_decorrelates_to_one_agg_join(spark):
     assert plan.count("HashAggregate") >= 2  # partial+final of the avg
 
 
-def test_construct_optional_values_pushed_to_scan(spark, monkeypatch):
+def test_construct_optional_values_pushed_to_scan(spark, star_plans):
     """The OPTIONAL + VALUES entry's star scans partition-prune the
     predicate-partitioned store, the VALUES list reaches the filter over
     the customer star's scan (``object IN (..)`` on its c_mktsegment
     member), and the OPTIONAL group is a left outer join. The SPARQL
     compiler checkpoints each star, which hides its scan behind the
     checkpoint in the final plan, so each star's executed plan is read
-    as the checkpoint receives it."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
-
-    truncate = SQ._truncate_lineage
-    star_plans: list[str] = []
-
-    def spy(df, coalesce=None):
-        star_plans.append(df._jdf.queryExecution().executedPlan().toString())
-        return truncate(df, coalesce)
-
-    monkeypatch.setattr(SQ, "_truncate_lineage", spy)
-    SQ.clear_plan_cache()
+    from the ``star_plans`` fixture."""
     plan = build(spark, "kg_construct_optional")
-    SQ.clear_plan_cache()
     assert "CartesianProduct" not in plan
     # OPTIONAL group compiles to a left outer join
     assert "LeftOuter" in plan or "left_outer" in plan.lower()

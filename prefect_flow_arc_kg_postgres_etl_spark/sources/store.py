@@ -35,11 +35,13 @@ first write converts them to the versioned layout.
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import re
 import shutil
 import time
+import types
 import uuid
 from collections.abc import Callable
 
@@ -238,25 +240,41 @@ def _footer_schema(spark: SparkSession, paths) -> StructType | None:
         sql_conf = state.conf()
         if sql_conf.isParquetSchemaMergingEnabled():
             return None
-        jvm = spark._jvm
+        jvm = _jvm_classes(spark._jvm)
         conf = state.newHadoopConf()
         status = _first_data_file(jvm, conf, paths)
         if status is None:
             return None
-        pq = jvm.org.apache.spark.sql.execution.datasources.parquet
-        metadata = pq.ParquetFooterReader.readFooter(
-            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
-                status, conf
-            ),
-            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        metadata = jvm.ParquetFooterReader.readFooter(
+            jvm.HadoopInputFile.fromStatus(status, conf), jvm.SKIP_ROW_GROUPS
         )
-        jschema = pq.ParquetFileFormat.readSchemaFromFooter(
-            jvm.org.apache.parquet.hadoop.Footer(status.getPath(), metadata),
-            pq.ParquetToSparkSchemaConverter(sql_conf),
+        jschema = jvm.ParquetFileFormat.readSchemaFromFooter(
+            jvm.Footer(status.getPath(), metadata),
+            jvm.ParquetToSparkSchemaConverter(sql_conf),
         )
         return StructType.fromJson(json.loads(jschema.json()))
     except Exception:
         return None
+
+
+@functools.lru_cache(maxsize=None)
+def _jvm_classes(jvm) -> types.SimpleNamespace:
+    """The JVM classes a footer read uses, looked up once per gateway:
+    py4j resolves ``jvm.org.apache...`` one package name per round
+    trip, about 35 of them per read if done inline."""
+    spark_pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    parquet = jvm.org.apache.parquet
+    return types.SimpleNamespace(
+        Path=jvm.org.apache.hadoop.fs.Path,
+        HadoopInputFile=parquet.hadoop.util.HadoopInputFile,
+        Footer=parquet.hadoop.Footer,
+        SKIP_ROW_GROUPS=(
+            parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+        ),
+        ParquetFooterReader=spark_pq.ParquetFooterReader,
+        ParquetFileFormat=spark_pq.ParquetFileFormat,
+        ParquetToSparkSchemaConverter=spark_pq.ParquetToSparkSchemaConverter,
+    )
 
 
 def _first_data_file(jvm, conf, paths):
@@ -271,7 +289,7 @@ def _first_data_file(jvm, conf, paths):
     sink's ``_spark_metadata`` log. A missing or glob root raises."""
     best = None
     for p in paths:
-        root = jvm.org.apache.hadoop.fs.Path(p)
+        root = jvm.Path(p)
         fs = root.getFileSystem(conf)
         found = _first_file_under(fs, fs.getFileStatus(root))
         if found is _DEFER:

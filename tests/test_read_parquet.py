@@ -5,6 +5,8 @@ they were."""
 
 from __future__ import annotations
 
+import shutil
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -94,6 +96,31 @@ def test_empty_directory_raises_sparks_error(spark, tmp_path):
         spark.read.parquet(str(empty))
     assert ours.value.getCondition() == sparks.value.getCondition()
     assert ours.value.getCondition() == "UNABLE_TO_INFER_SCHEMA"
+
+
+def test_streaming_sink_output_is_read_through_its_log(spark, tmp_path):
+    """Spark reads a file sink's output through its ``_spark_metadata``
+    log, not its listing, so a stray file the log does not name (here
+    one that sorts first, with another schema) must not decide the
+    schema: the reader leaves such a read to Spark."""
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    spark.range(3).selectExpr("id", "id * 2 AS twice").write.parquet(src)
+    query = (
+        spark.readStream.schema("id long, twice long").parquet(src)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "chk"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    stray = str(tmp_path / "stray")
+    spark.range(1).selectExpr("'x' AS other").coalesce(1).write.parquet(stray)
+    (part,) = (tmp_path / "stray").glob("part-*.parquet")
+    shutil.copy(part, f"{out}/a-stray.parquet")
+    df = store.read_parquet(spark, out)
+    assert df.schema == spark.read.parquet(out).schema
+    assert df.columns == ["id", "twice"]
 
 
 def test_read_table_of_a_landed_table_starts_no_job(spark, tmp_path):

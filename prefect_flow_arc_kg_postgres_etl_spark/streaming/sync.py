@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from prefect_flow_arc_kg_postgres_etl_spark.sources.store import read_parquet
 
+
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table.
 

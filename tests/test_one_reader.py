@@ -14,38 +14,17 @@ ROOT = Path(__file__).resolve().parent.parent
 PKG = ROOT / "prefect_flow_arc_kg_postgres_etl_spark"
 
 
-def _receiver_chain(call: ast.Call) -> list[ast.AST]:
-    """The attribute and call nodes under ``call``'s method, nearest
-    first: ``spark.read.schema(s).parquet(p)`` gives the ``schema(s)``
-    call, then the ``read`` attribute."""
-    chain = []
+def _is_bare_read(call: ast.Call) -> bool:
+    """``<x>.read.parquet(..)`` or ``<x>.read.schema(..).parquet(..)``."""
+    if not (isinstance(call.func, ast.Attribute) and call.func.attr == "parquet"):
+        return False
+    names = []
     node = call.func.value
     while isinstance(node, (ast.Attribute, ast.Call)):
-        chain.append(node)
+        if isinstance(node, ast.Attribute):
+            names.append(node.attr)
         node = node.func if isinstance(node, ast.Call) else node.value
-    return chain
-
-
-def _is_bare_read(call: ast.Call) -> bool:
-    if not isinstance(call.func, ast.Attribute):
-        return False
-    names = [n.attr for n in _receiver_chain(call) if isinstance(n, ast.Attribute)]
-    if "read" not in names:
-        return False
-    between = names[: names.index("read")]
-    if call.func.attr == "parquet":
-        return set(between) <= {"schema"}
-    if call.func.attr == "load":
-        return any(
-            isinstance(n, ast.Call)
-            and isinstance(n.func, ast.Attribute)
-            and n.func.attr == "format"
-            and n.args
-            and isinstance(n.args[0], ast.Constant)
-            and n.args[0].value == "parquet"
-            for n in _receiver_chain(call)
-        )
-    return False
+    return "read" in names and set(names[: names.index("read")]) <= {"schema"}
 
 
 def bare_reads(source: str, skip_function: str | None = None) -> list[int]:
@@ -70,15 +49,13 @@ def test_checker_flags_bare_reads_only():
         [
             "spark.read.parquet(p)",
             "df.sparkSession.read.schema(s).parquet(p)",
-            'spark.read.format("parquet").load(p)',
             "spark.readStream.schema(s).parquet(p)",
             'spark.read.option("mergeSchema", "true").parquet(p)',
             'df.write.mode("overwrite").parquet(p)',
             "read_parquet(spark, p)",
-            'spark.read.format("json").load(p)',
         ]
     )
-    assert bare_reads(source) == [1, 2, 3]
+    assert bare_reads(source) == [1, 2]
 
 
 def test_package_reads_parquet_through_one_reader():

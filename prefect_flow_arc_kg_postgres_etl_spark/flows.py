@@ -9,16 +9,17 @@ The Prefect plumbing (deployment scheduling, skip-if-running) is not
 data processing and stays with whatever scheduler runs this; the flow
 below is the data path itself:
 
-  scope (SINCE filter) -> stage -> merge per table in topo order
+  scope (SINCE filter) -> merge per table in topo order
   (tables within a level are independent -> submitted concurrently;
   Spark's scheduler interleaves the jobs) -> rebuild index documents
   -> emit the ES bulk feed.
 
 Full sync is truncate-insert (overwrite); incremental goes through
 stage_then_merge: the distributed PK upsert, or clear-then-insert on
-the group key for a multi-value table. A table with no
-last-modified column is re-upserted in full on incremental runs —
-idempotent, converges (the reference treats those the same way).
+the group key for a multi-value table, landed in one write per table.
+A table with no last-modified column is re-upserted in full on
+incremental runs — idempotent, converges (the reference treats those
+the same way).
 """
 
 from __future__ import annotations
@@ -38,6 +39,7 @@ from prefect_flow_arc_kg_postgres_etl_spark.sinks.jdbc import stage_then_merge
 from prefect_flow_arc_kg_postgres_etl_spark.sinks.observed import (
     observed_counts,
     observed_write,
+    write_observed,
 )
 from prefect_flow_arc_kg_postgres_etl_spark.sources import store
 from prefect_flow_arc_kg_postgres_etl_spark.sources.catalog import load_table
@@ -304,20 +306,26 @@ def sync_flow(
     (``RunStats``).
 
     Every count is observed in the write that lands it (one
-    ``Observation`` per written frame), so reporting costs no Spark
-    job: the full-sync write, the staged batch and the merged table of
-    an incremental merge, and the index feed. ``index_documents`` is
-    the number of lines this run wrote to the feed, two per document
-    (every document is a ``to_json`` of a struct, never null). It is
-    not the feed directory's total: the feed is overwritten per
-    organisation, and an organisation partition an earlier run left in
-    place is not counted.
+    ``Observation`` per counted frame), so reporting costs no Spark
+    job: the full-sync write, the batch and the merged table of an
+    incremental merge (both in the merge's one write), and the index
+    feed. ``index_documents`` is the number of lines this run wrote to
+    the feed, two per document (every document is a ``to_json`` of a
+    struct, never null). It is not the feed directory's total: the
+    feed is overwritten per organisation, and an organisation
+    partition an earlier run left in place is not counted.
 
-    ``since="auto"`` derives each table's watermark from the STORE
-    itself (max of its modified column — a full scan of that one
-    column of the landed table):
-    the store is its own high-water mark, so the scheduler needs no
-    external watermark bookkeeping and a crashed run resumes correctly.
+    ``since="auto"`` takes each table's watermark from the STORE
+    itself: the max of its modified column, observed in the write that
+    landed the live version (the full-sync write or the incremental
+    merge's) and stored with that version (``store.version_summary``),
+    so reading it is a file read, not a Spark job. The store is its own
+    high-water mark, so the scheduler needs no external watermark
+    bookkeeping and a crashed run resumes correctly. A live version
+    with no recorded watermark (a legacy store, or a version another
+    writer landed through ``store.write_table``) re-upserts the table
+    in full that night: exact, because the merges are idempotent, and
+    its merge records the watermark for the next night.
     Auto watermarks filter INCLUSIVELY (>=): rows that arrive later
     WITH the landed max timestamp would otherwise be skipped forever
     (max never advances past them — a wide window for date-granularity
@@ -340,14 +348,10 @@ def sync_flow(
             return since
         if name not in TABLE_MODIFIED:
             return None
-        path = f"{store_dir}/{name}.parquet"
-        if not store.table_exists(path):
-            return None  # nothing landed yet: treat as full load
-        return (
-            store.read_table(spark, path)
-            .agg(F.max(TABLE_MODIFIED[name]))
-            .first()[0]
-        )
+        # None when nothing landed yet or the live version recorded no
+        # watermark: the table then loads in full.
+        recorded = store.version_summary(f"{store_dir}/{name}.parquet")
+        return recorded.get("max", {}).get(TABLE_MODIFIED[name])
 
     def sync_table(name: str) -> tuple[int, int]:
         """Returns (staged_rows, merged_rows), as the writes observed."""
@@ -355,10 +359,11 @@ def sync_flow(
         if or_ids is not None and name in TABLE_ORG:
             src = src.filter(F.col(TABLE_ORG[name]).isin(or_ids))
         path = f"{store_dir}/{name}.parquet"
+        watermark = TABLE_MODIFIED.get(name)
         if full_sync:
             if record_limit is not None:
                 src = src.limit(record_limit)
-            n = observed_write(src, lambda d: store.write_table(d, path))
+            n = write_observed(src, path, watermark)
             return n, n
         s = since_for(name)
         if s is not None and name in TABLE_MODIFIED:
@@ -385,8 +390,7 @@ def sync_flow(
         if record_limit is not None:
             src = src.limit(record_limit)
         landed = stage_then_merge(
-            spark, src, path, f"{store_dir}/_staging/{name}",
-            TABLE_PK[name], merge,
+            spark, src, path, TABLE_PK[name], merge, watermark
         )
         return landed.staged, landed.merged
 

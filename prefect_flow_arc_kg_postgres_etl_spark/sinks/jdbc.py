@@ -14,9 +14,10 @@ Spark the same contract splits into:
   mirroring the reference's merge queries, for engines where the final
   hop runs in the warehouse.
 - ``stage_then_merge`` — the engine-side alternative used throughout
-  this repo: stage the batch, apply the distributed upsert
-  (operators/merge.py), land the converged table. Works at any scale
-  with no DB round-trip in the data path.
+  this repo: apply the distributed upsert (operators/merge.py) to the
+  batch and land the converged table in one write. The batch is not
+  copied to a staging table first; its row count is observed in that
+  write. Works at any scale with no DB round-trip in the data path.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ from __future__ import annotations
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from prefect_flow_arc_kg_postgres_etl_spark.sources.store import read_parquet
 
@@ -171,8 +173,6 @@ def resumable_stage(
 
     Returns {"written": n, "skipped": n} batch counts (the progress
     accounting a restartable loader reports)."""
-    from pyspark.sql import functions as F
-
     try:
         done = (
             read_parquet(spark, staging_path).select(batch_col).distinct()
@@ -196,8 +196,10 @@ def resumable_stage(
 
 class MergeResult(NamedTuple):
     """What ``stage_then_merge`` landed: the table (read back from the
-    landed version) and the row counts the two writes observed — the
-    staged batch and the merged table (the counts the reference's
+    landed version) and the row counts its one write observed: the
+    batch (``staged``, the rows of the source frame as given, the
+    reference's temp-table load) and the merged table (``merged``, the
+    rows of the landed version; the counts the reference's
     ``MERGE INTO`` statements return)."""
 
     table: DataFrame
@@ -209,23 +211,29 @@ def stage_then_merge(
     spark: SparkSession,
     source: DataFrame,
     target_path: str,
-    staging_path: str,
     keys: list[str],
     merge: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
+    watermark: str | None = None,
 ) -> MergeResult:
-    """Engine-side merge: stage the batch as parquet (the temp-table
-    analogue — restartable, inspectable), then converge it into the
-    target with ``merge(target, staged)`` and land the result. The
-    default merge is the distributed source-wins upsert on ``keys``
-    (database.ts's ``MERGE INTO``); a multi-value table passes its
-    clear-then-insert on the group key instead.
+    """Engine-side merge: converge the batch ``source`` into the target
+    with ``merge(target, batch)`` and land the result as the target's
+    next version. The default merge is the distributed source-wins
+    upsert on ``keys`` (database.ts's ``MERGE INTO``); a multi-value
+    table passes its clear-then-insert on the group key instead. The
+    reference's temp table has no copy here: the batch is read once,
+    inside the merge's write, and nothing is written but the new
+    version (``store.write_table``: staged privately, published
+    atomically).
 
     Returns a ``MergeResult``: the merged table read back from the
-    landed target, plus the staged and merged row counts. Both counts
-    are observed in the two writes, both read-backs (the staging dir,
-    the landed table) use the schema just written, and the target's
-    read takes its schema from a footer on the driver
-    (``store.read_parquet``), so the two writes are the only Spark jobs.
+    landed target, plus the batch and merged row counts. Both are
+    observed in the one write (an ``Observation`` on the batch, one on
+    the merged frame), the landed table is read back with the schema
+    just written, and the target's read takes its schema from a footer
+    on the driver (``store.read_parquet``), so the write is the only
+    Spark job. ``watermark`` names a column whose ``max`` over the
+    merged frame, which is the whole new version, that write also
+    observes and stores with the version (``write_observed``).
     "First load" means ``store.table_exists`` says there is no target;
     any other failure to read or merge the target raises and leaves the
     live version untouched.
@@ -236,32 +244,34 @@ def stage_then_merge(
     version N+1 with ONE data write + an atomic pointer swap — no
     write-tmp-read-rewrite double I/O."""
     from prefect_flow_arc_kg_postgres_etl_spark.operators import merge as M
-    from prefect_flow_arc_kg_postgres_etl_spark.sinks.observed import observed_write
+    from prefect_flow_arc_kg_postgres_etl_spark.sinks.observed import (
+        observe,
+        write_observed,
+    )
     from prefect_flow_arc_kg_postgres_etl_spark.sources import store
     from prefect_flow_arc_kg_postgres_etl_spark.sources.catalog import (
         conform_to_schema,
     )
 
-    n_staged = observed_write(
-        source, lambda d: d.write.mode("overwrite").parquet(staging_path)
-    )
-    staged = read_parquet(spark, staging_path, schema=source.schema)
+    batch, seen = observe(source, rows=F.count(F.lit(1)))
     if store.table_exists(target_path):
         target = store.read_table(spark, target_path)
         # Column-level intersection (get_table_columns.sql analogue):
-        # the staged batch is projected onto the target's columns, so a
+        # the batch is projected onto the target's columns, so a
         # drifted source schema (extra / missing / retyped columns)
         # still merges — extra columns drop, missing ones land NULL.
-        batch = conform_to_schema(staged, target.schema)
+        conformed = conform_to_schema(batch, target.schema)
         merged = (
-            merge(target, batch) if merge is not None
-            else M.upsert(target, batch, keys)
+            merge(target, conformed) if merge is not None
+            else M.upsert(target, conformed, keys)
         )
     else:  # first load: nothing to merge into
-        merged = staged
-    n_merged = observed_write(merged, lambda d: store.write_table(d, target_path))
+        merged = batch
+    n_merged = write_observed(merged, target_path, watermark)
     return MergeResult(
-        store.read_table(spark, target_path, merged.schema), n_staged, n_merged
+        store.read_table(spark, target_path, merged.schema),
+        seen()["rows"],
+        n_merged,
     )
 
 

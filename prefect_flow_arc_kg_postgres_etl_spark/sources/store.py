@@ -13,6 +13,8 @@ Layout instead:
         _snapshot_<n>.json    manifests: {table: version} pins
         <table>.parquet/
             v_1/ ... v_N/     parquet data, one directory per version
+                _summary.json what the writer observed in the data
+                              (optional; see ``write_table``)
             _current          text file holding N (the live version)
             _stage_<token>/   a writer's data before it is published
 
@@ -35,6 +37,7 @@ first write converts them to the versioned layout.
 from __future__ import annotations
 
 import contextlib
+import datetime
 import functools
 import json
 import os
@@ -49,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 _POINTER = "_current"
+_SUMMARY = "_summary.json"
 _VERSION_DIR = re.compile(r"v_(\d+)")
 _MANIFEST = re.compile(r"_snapshot_(\d+)\.json")
 # A crashed lock holder's lock is taken over after this many seconds;
@@ -363,21 +367,77 @@ def table_exists(table_path: str) -> bool:
     )
 
 
-def write_table(df: DataFrame, table_path: str, prune: bool = True) -> int:
+def write_table(
+    df: DataFrame,
+    table_path: str,
+    prune: bool = True,
+    summary: Callable[[], dict] | None = None,
+) -> int:
     """Land ``df`` as the next version of the table: ONE data write into
     a staging dir, then a publish under the store lock (version
     allocation, rename, pointer swap). Returns the new version number.
+
+    ``summary`` is called once the data is written and before the
+    publish; the dict it returns (JSON values, dates and datetimes)
+    lands inside the version as ``_summary.json``, so it becomes
+    visible, and is vacuumed, with the data it describes. It is where
+    a writer puts what an ``Observation`` on the written frame saw
+    (``version_summary`` reads it back). Spark's readers skip
+    ``_``-prefixed files.
 
     ``prune`` then retires superseded versions through
     ``vacuum_table(keep_last=1)``: every version but the live one goes,
     except those a snapshot manifest in the store pins and orphans
     still in their grace window (another writer's in-flight data)."""
     staged = _stage(df, table_path, uuid.uuid4().hex[:12])
+    if summary is not None:
+        with open(os.path.join(staged, _SUMMARY), "w") as f:
+            json.dump(summary(), f, default=_encode_summary_value)
     with _store_lock(_store_dir(table_path)):
         v = _publish(table_path, staged)
     if prune:
         vacuum_table(table_path, _store_dir(table_path), keep_last=1)
     return v
+
+
+def version_summary(table_path: str) -> dict:
+    """The summary stored with the live version (``write_table``'s
+    ``summary``), or {} when it has none: a flat legacy table, a
+    version written without one, or a version vacuumed between the
+    pointer read and this one. Reads one small file; no Spark job."""
+    v = current_version(table_path)
+    if v is None:
+        return {}
+    try:
+        with open(os.path.join(version_dir(table_path, v), _SUMMARY)) as f:
+            return json.load(f, object_hook=_decode_summary_value)
+    except FileNotFoundError:
+        return {}
+
+
+# JSON has no date or datetime: a summary value of either type is
+# stored as {"$<type>": isoformat} and read back as the same Python
+# type, so a recorded watermark compares exactly as the value observed.
+_SUMMARY_TYPES = {
+    "$datetime": datetime.datetime.fromisoformat,
+    "$date": datetime.date.fromisoformat,
+}
+
+
+def _encode_summary_value(value):
+    if isinstance(value, datetime.datetime):  # before date: a subclass
+        return {"$datetime": value.isoformat()}
+    if isinstance(value, datetime.date):
+        return {"$date": value.isoformat()}
+    raise TypeError(f"summary value {value!r} is not JSON serializable")
+
+
+def _decode_summary_value(obj: dict):
+    if len(obj) == 1:
+        ((tag, text),) = obj.items()
+        if tag in _SUMMARY_TYPES:
+            return _SUMMARY_TYPES[tag](text)
+    return obj
 
 
 def compact_files(

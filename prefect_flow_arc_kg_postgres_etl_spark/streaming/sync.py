@@ -124,7 +124,7 @@ def windowed_agg_stream_watermarked(
         .start()
     )
     q.awaitTermination()
-    return read_parquet(spark, out_path)
+    return read_parquet(spark, out_path, schema=agg.schema)
 
 
 SESSION_GAP_MIN = 30
@@ -1164,7 +1164,7 @@ def pivot_records_stream(
         .start()
     )
     q.awaitTermination()
-    return read_parquet(spark, out_path)
+    return read_parquet(spark, out_path, schema=rec.schema)
 
 
 # -------------------------------------- C14 SCD2 point-in-time enrich
@@ -1307,7 +1307,7 @@ def interval_join_outer_stream(
         .start()
     )
     q.awaitTermination()
-    return read_parquet(spark, out_path)
+    return read_parquet(spark, out_path, schema=joined.schema)
 
 
 # ----------------------------------------- C16 streaming gap fill
@@ -1449,7 +1449,7 @@ def windowed_distinct_stream(
         .start()
     )
     q.awaitTermination()
-    return read_parquet(spark, out_path)
+    return read_parquet(spark, out_path, schema=agg.schema)
 
 
 def agg_retractable_stream(

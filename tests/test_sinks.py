@@ -198,25 +198,66 @@ def test_clear_statement_executes_and_matches_engine_clear(spark):
 
 def test_stage_then_merge_converges(spark, tmp_path):
     target = str(tmp_path / "target")
-    staging = str(tmp_path / "staging")
     v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    out1 = stage_then_merge(spark, v1, target, staging, ["id"])
+    out1 = stage_then_merge(spark, v1, target, ["id"])
     assert {(r.id, r.v) for r in out1.table.collect()} == {(1, "a"), (2, "b")}
     assert (out1.staged, out1.merged) == (2, 2)
 
     v2 = spark.createDataFrame([(2, "B"), (3, "c")], "id long, v string")
-    out2 = stage_then_merge(spark, v2, target, staging, ["id"])
+    out2 = stage_then_merge(spark, v2, target, ["id"])
     assert {(r.id, r.v) for r in out2.table.collect()} == {
         (1, "a"), (2, "B"), (3, "c")
     }
     assert (out2.staged, out2.merged) == (2, 3)
 
     # idempotent: re-merging the same batch changes nothing
-    out3 = stage_then_merge(spark, v2, target, staging, ["id"])
+    out3 = stage_then_merge(spark, v2, target, ["id"])
     assert {(r.id, r.v) for r in out3.table.collect()} == {
         (1, "a"), (2, "B"), (3, "c")
     }
     assert (out3.staged, out3.merged) == (2, 3)
+
+
+def test_stage_then_merge_empty_batch_reports_zero(spark, tmp_path):
+    """An empty batch merges and reports staged == 0 for every shape
+    whose plan the optimizer can prune around its observation: a first
+    load, an upsert into an empty and into a non-empty target, and a
+    clear-then-insert (its batch appears twice in the plan). Each merge
+    runs on a thread with a deadline, so an observation that never
+    reports fails the test instead of hanging it."""
+    import threading
+
+    from prefect_flow_arc_kg_postgres_etl_spark.operators.merge import (
+        clear_and_insert,
+    )
+
+    schema = "id long, g long, v string"
+    empty = spark.createDataFrame([], schema)
+    rows = spark.createDataFrame([(1, 1, "a"), (2, 1, "b")], schema)
+
+    def by_group(target, batch):
+        return clear_and_insert(target, batch, "g")
+
+    def merged(target, batch, merge=None):
+        out = {}
+
+        def run():
+            out["r"] = stage_then_merge(spark, batch, target, ["id"], merge)
+
+        worker = threading.Thread(target=run, daemon=True)
+        worker.start()
+        worker.join(120)
+        assert not worker.is_alive(), "the merge did not return in 120 s"
+        return out["r"].staged, out["r"].merged
+
+    # a first load of nothing, then nothing merged into that empty table
+    assert merged(str(tmp_path / "e.parquet"), empty) == (0, 0)
+    assert merged(str(tmp_path / "e.parquet"), empty) == (0, 0)
+    full = str(tmp_path / "t.parquet")
+    assert merged(full, rows) == (2, 2)
+    assert merged(full, empty) == (0, 2)
+    assert merged(full, empty, by_group) == (0, 2)
+    assert merged(full, rows.limit(1), by_group) == (1, 1)
 
 
 def test_stage_then_merge_unreadable_target_raises(spark, tmp_path):
@@ -229,9 +270,8 @@ def test_stage_then_merge_unreadable_target_raises(spark, tmp_path):
     from prefect_flow_arc_kg_postgres_etl_spark.sources import store
 
     target = str(tmp_path / "t.parquet")
-    staging = str(tmp_path / "staging")
     v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    stage_then_merge(spark, v1, target, staging, ["id"])
+    stage_then_merge(spark, v1, target, ["id"])
     live = store.current_version(target)
     files = glob.glob(f"{store.version_dir(target, live)}/*.parquet")
     saved = {f: open(f, "rb").read() for f in files}
@@ -241,7 +281,7 @@ def test_stage_then_merge_unreadable_target_raises(spark, tmp_path):
 
     v2 = spark.createDataFrame([(3, "c")], "id long, v string")
     with pytest.raises(Exception):
-        stage_then_merge(spark, v2, target, staging, ["id"])
+        stage_then_merge(spark, v2, target, ["id"])
 
     assert store.current_version(target) == live
     for f, data in saved.items():
@@ -295,24 +335,23 @@ def test_stage_then_merge_drifted_schema_converges(spark, tmp_path):
     still merges — extra drops, missing lands NULL, types conform to
     the target."""
     target = str(tmp_path / "t.parquet")
-    staging = str(tmp_path / "staging")
     v1 = spark.createDataFrame(
         [(1, "a", 10.0), (2, "b", 20.0)], "id long, v string, score double"
     )
-    stage_then_merge(spark, v1, target, staging, ["id"])
+    stage_then_merge(spark, v1, target, ["id"])
 
     # drifted batch: no `score`, extra `junk`, `id` arrives as int
     drifted = spark.createDataFrame(
         [(2, "B", "zzz"), (3, "c", "zzz")], "id int, v string, junk string"
     )
-    out = stage_then_merge(spark, drifted, target, staging, ["id"]).table
+    out = stage_then_merge(spark, drifted, target, ["id"]).table
     assert [f.name for f in out.schema.fields] == ["id", "v", "score"]
     assert dict(out.dtypes)["id"] == "bigint"
     rows = {(r.id, r.v, r.score) for r in out.collect()}
     assert rows == {(1, "a", 10.0), (2, "B", None), (3, "c", None)}
 
     # idempotent under the drifted schema too
-    again = stage_then_merge(spark, drifted, target, staging, ["id"]).table
+    again = stage_then_merge(spark, drifted, target, ["id"]).table
     assert {(r.id, r.v, r.score) for r in again.collect()} == rows
 
 

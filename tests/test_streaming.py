@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
+
 from prefect_flow_arc_kg_postgres_etl_spark.plans.relational import events_tumbling
 from prefect_flow_arc_kg_postgres_etl_spark.sources.catalog import load_table
 from prefect_flow_arc_kg_postgres_etl_spark.streaming.sync import (
@@ -603,3 +605,39 @@ def test_gap_fill_correct_under_crossbatch_disorder(spark, tmp_path):
         (0.0, 1), (1.0, 0), (2.0, 0), (3.0, 0), (4.0, 0), (5.0, 0),
         (6.0, 0), (7.0, 1),
     }
+
+
+@pytest.mark.parametrize(
+    "runner",
+    [
+        "windowed_agg_stream_watermarked",
+        "pivot_records_stream",
+        "interval_join_outer_stream",
+        "windowed_distinct_stream",
+    ],
+)
+def test_file_sink_read_back_starts_no_job(spark, tmp_path, monkeypatch, runner):
+    """A runner that streams into an ``availableNow`` parquet sink reads
+    the output back with the streamed frame's schema: the sink's
+    ``_spark_metadata`` log would otherwise leave the read to Spark's
+    schema inference, one job per read-back. The schema passed is the
+    one inference finds."""
+    from prefect_flow_arc_kg_postgres_etl_spark.streaming import sync
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    read = sync.read_parquet
+    reads = []
+
+    def counted(session, *paths, schema=None):
+        before = dag.numTotalJobs()
+        df = read(session, *paths, schema=schema)
+        reads.append((paths, schema, dag.numTotalJobs() - before))
+        return df
+
+    monkeypatch.setattr(sync, "read_parquet", counted)
+    out_path = str(tmp_path / "out")
+    out = getattr(sync, runner)(spark, SF_SMOKE, out_path)
+    assert [(p, s is not None, jobs) for p, s, jobs in reads] == [
+        ((out_path,), True, 0)
+    ]
+    assert out.schema == spark.read.parquet(out_path).schema

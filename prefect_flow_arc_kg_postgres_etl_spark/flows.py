@@ -338,7 +338,10 @@ def sync_flow(
     (flows/arc_db_load_flow.py:44): a per-table LIMIT applied at
     stage time after the org/since filters, so a smoke run touches a
     bounded row count per table while the merge semantics stay
-    identical; ``None`` (production) changes nothing."""
+    identical. An incremental run caps a multi-value table at that
+    many GROUPS and stages every row of each: clear-and-insert
+    replaces whole groups, so a row cap would delete the rows it cut.
+    ``None`` (production) changes nothing."""
     wanted = tables or list(TABLE_PK)
     deps = {t: TABLE_DEPS[t] & set(wanted) for t in wanted}
     stats = RunStats()
@@ -387,7 +390,16 @@ def sync_flow(
             def merge(target: DataFrame, batch: DataFrame) -> DataFrame:
                 return M.clear_and_insert(target, batch, TABLE_MULTIVALUE[name])
 
-        if record_limit is not None:
+        if record_limit is not None and name in TABLE_MULTIVALUE:
+            # Whole groups only: clear_and_insert replaces every row of
+            # each group the batch touches.
+            key = TABLE_MULTIVALUE[name]
+            src = src.join(
+                src.select(key).distinct().limit(record_limit),
+                on=key,
+                how="left_semi",
+            )
+        elif record_limit is not None:
             src = src.limit(record_limit)
         landed = stage_then_merge(
             spark, src, path, TABLE_PK[name], merge, watermark

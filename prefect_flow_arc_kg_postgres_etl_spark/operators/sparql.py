@@ -1882,9 +1882,9 @@ class _Eval:
             df = df.filter(F.size(f"__st{i}") >= 1)
         # Every star checkpoints its pivot output PRE-explode, one
         # array row per subject. Without a per-star materialization
-        # the plan-cache-warm walls double (sf0.1, tools/time_query.py,
-        # warm min-of-3: issues 16.0 s without vs 7.5 s with,
-        # av_audio_org 8.9 vs 3.8, deletes 2.6 vs 1.4): repeated
+        # the plan-cache-warm walls double (sf0.1, warm min-of-3:
+        # issues 16.0 s without vs 7.5 s with, av_audio_org 8.9 vs
+        # 3.8, deletes 2.6 vs 1.4): repeated
         # actions on a cached plan re-run every star pivot upstream of
         # the LAST lazy checkpoint. The one-shot cost is ~10%, and the
         # pre-explode rows are the small representation, never the

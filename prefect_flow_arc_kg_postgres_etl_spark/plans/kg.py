@@ -9,6 +9,9 @@ SQL, which is what makes the driver's oracle check meaningful.
 
 from __future__ import annotations
 
+import functools
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
@@ -26,7 +29,11 @@ from prefect_flow_arc_kg_postgres_etl_spark.operators.index_documents import (
     partition_stats,
 )
 from prefect_flow_arc_kg_postgres_etl_spark.sources.catalog import load_table
-from prefect_flow_arc_kg_postgres_etl_spark.sources.store import read_parquet
+from prefect_flow_arc_kg_postgres_etl_spark.session import scratch_dir
+from prefect_flow_arc_kg_postgres_etl_spark.sources.store import (
+    read_parquet,
+    staged_input,
+)
 
 CUSTOMER_COLS = ["c_name", "c_mktsegment", "c_nationkey", "c_acctbal"]
 
@@ -95,39 +102,44 @@ WHERE c_mktsegment = 'BUILDING'
 """
 
 
+# ------------------------------------------------- staged quad stores
+def _staged_by_predicate(tag: str, tables: tuple[str, ...]):
+    """Decorate a quad-store builder ``(spark, sf_dir) -> DataFrame`` so
+    that its rows are staged once per content of ``sf_dir``'s
+    ``tables`` (``store.staged_input``), as parquet partitioned by
+    predicate, and read back from there. Every BGP pattern filters on
+    one predicate (or a small in-list), so each pattern scan prunes to
+    its posting list instead of re-deriving the store per pattern: the
+    vertical-partitioning layout for RDF on columnar storage.
+    ``repartition("predicate")`` lands each posting list in one task,
+    so one file per partition dir (355 -> 96 files for the deletes
+    store): a compiled SPARQL plan re-scans the store hundreds of
+    times. At real scale the writer would cap file size per predicate
+    instead of forcing exactly one."""
+
+    def wrap(quads):
+        @functools.wraps(quads)
+        def staged(spark: SparkSession, sf_dir: str) -> DataFrame:
+            def build(out: str) -> None:
+                frame = quads(spark, sf_dir).repartition("predicate")
+                frame.write.partitionBy("predicate").parquet(out)
+
+            files = [os.path.join(sf_dir, f"{t}.parquet") for t in tables]
+            return read_parquet(spark, staged_input(tag, files, build))
+
+        return staged
+
+    return wrap
+
+
 # ------------------------------------- A17 construct: OPTIONAL + VALUES
+@_staged_by_predicate("kg_graph_v3", ("customer", "nation", "orders"))
 def _kg_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer + nation + orders melted into one triple graph — the
     multi-'graph' store the reference queries span (entity graph +
-    organization graph, person.sparql:48-56).
-
-    The graph is STAGED as parquet partitioned by predicate before
-    querying: every BGP pattern filters on one predicate (or a small
-    in-list), so each pattern scan partition-prunes to exactly its
-    posting list instead of re-melting all source tables per pattern —
-    the standard vertical-partitioning layout for RDF on columnar
-    storage, and the layout a 100 TB triple store would ship with.
-    Staged once per (sf_dir, source-content) and reused across the
-    construct queries."""
-    import hashlib
-    import os
-    import tempfile
-
-    # Cache key = content fingerprint of the source files (mtime+size
-    # per table) + a layout version. A bare version tag would silently
-    # serve a stale graph if the source parquet changed underneath;
-    # fingerprinting makes any source update (or a concurrent writer's
-    # refresh) land in its own staging dir.
-    fp = hashlib.md5(b"layout_v3")
-    for t in ("customer", "nation", "orders"):
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        st = os.stat(p)
-        fp.update(f"{t}:{st.st_mtime_ns}:{st.st_size};".encode())
-    path = f"{tempfile.gettempdir()}/kg_graph_{fp.hexdigest()[:16]}"
-    try:
-        return read_parquet(spark, path)
-    except Exception:
-        pass
+    organization graph, person.sparql:48-56), staged by predicate
+    once per source content and reused across the construct
+    queries."""
     cust = load_table(spark, sf_dir, "customer")
     nat = load_table(spark, sf_dir, "nation")
     orders = load_table(spark, sf_dir, "orders")
@@ -160,9 +172,7 @@ def _kg_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    graph = graph.distinct()  # RDF graphs are SETS of triples
-    graph.repartition("predicate").write.mode("overwrite").partitionBy("predicate").parquet(path)
-    return read_parquet(spark, path)
+    return graph.distinct()  # RDF graphs are SETS of triples
 
 
 def kg_construct_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -329,11 +339,9 @@ def flow_full_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     data path): full sync into a temp store in FK order, then the index
     documents built FROM THE LANDED STORE. Hash-equality with the
     source-built oracle proves the load+merge legs are lossless."""
-    import tempfile
-
     from prefect_flow_arc_kg_postgres_etl_spark.flows import sync_flow
 
-    store = tempfile.mkdtemp(prefix="flow_store_")
+    store = scratch_dir(spark, "flow_store_")
     sync_flow(
         spark,
         sf_dir,
@@ -905,13 +913,11 @@ def source_ttl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     text, parse back with the whole-file tokenizer
     (sources/turtle.py) — the identity on the triple model, which the
     melt oracle checks."""
-    import tempfile
-
     from prefect_flow_arc_kg_postgres_etl_spark.sources import rdf, turtle
 
     cust = load_table(spark, sf_dir, "customer")
     triples = T.melt(cust, "c_custkey", CUSTOMER_COLS, subject_prefix="customer:")
-    out = tempfile.mkdtemp(prefix="ttl_rt_") + "/graph"
+    out = scratch_dir(spark, "ttl_rt_") + "/graph"
     turtle.write_turtle(
         triples,
         out,
@@ -933,12 +939,10 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings with embedded delimiters. The identity on the table is the
     oracle (sources/text_formats.py; NDJSON twin tested in
     tests/test_text_formats.py)."""
-    import tempfile
-
     from prefect_flow_arc_kg_postgres_etl_spark.sources import text_formats
 
     cust = load_table(spark, sf_dir, "customer")
-    out = tempfile.mkdtemp(prefix="csv_rt_") + "/customer"
+    out = scratch_dir(spark, "csv_rt_") + "/customer"
     text_formats.write_csv(cust, out)
     return text_formats.read_csv(spark, out, cust.schema)
 
@@ -1229,10 +1233,8 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity oracle as the CSV/NDJSON round trips; the format-specific
     risk this pins is type fidelity (decimal/timestamp/double widths),
     not parsing."""
-    import tempfile
-
     cust = load_table(spark, sf_dir, "customer")
-    out = tempfile.mkdtemp(prefix="orc_rt_") + "/customer"
+    out = scratch_dir(spark, "orc_rt_") + "/customer"
     cust.write.mode("overwrite").orc(out)
     return spark.read.schema(cust.schema).orc(out)
 
@@ -1408,10 +1410,8 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift every long-lived 100 TB dataset accumulates. (Schema
     merging is a footer-level union; the data pages are untouched, so
     the read cost is per-FILE footer metadata, not a rewrite.)"""
-    import tempfile
-
     cust = load_table(spark, sf_dir, "customer")
-    out = tempfile.mkdtemp(prefix="schema_evo_") + "/customer"
+    out = scratch_dir(spark, "schema_evo_") + "/customer"
     gen1 = cust.filter(F.col("c_custkey") % 2 == 0).select(
         "c_custkey", "c_name", "c_nationkey", "c_mktsegment"
     )
@@ -1443,12 +1443,10 @@ def maintenance_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; sizing reads FILE METADATA only. Content is untouched —
     the identity oracle — and the post-compaction file count contract
     is pinned in tests/test_sinks.py."""
-    import tempfile
-
     from prefect_flow_arc_kg_postgres_etl_spark.sources.store import compact_files
 
     cust = load_table(spark, sf_dir, "customer")
-    root = tempfile.mkdtemp(prefix="compact_")
+    root = scratch_dir(spark, "compact_")
     frag = f"{root}/fragmented"
     cust.repartition(64).write.mode("overwrite").parquet(frag)
     return compact_files(
@@ -1539,15 +1537,13 @@ def bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     across bucket files locally).
 
     Spark's native (non-Hive) catalog handles bucketed parquet tables.
-    Each call lands EXTERNAL tables at a fresh temp location: catalog
+    Each call lands EXTERNAL tables in a fresh scratch dir: catalog
     metadata is per-session while managed-table directories persist,
     so a managed DROP+rewrite collides across sessions
-    (LOCATION_ALREADY_EXISTS — hit in-session); a unique path also
-    keeps the entry independent of the driver's cwd/warehouse. The
+    (LOCATION_ALREADY_EXISTS — hit in-session). The
     oracle is the plain join+agg — layout must never change results."""
     import os
     import shutil
-    import tempfile
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
@@ -1563,10 +1559,10 @@ def bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     # builder contract returns a DataFrame whose scan resolves the
     # catalog entry at action time) keeps its tables through the
     # build-then-consume cadence; dropping at return is not an option
-    # for the same reason. A crash after mkdtemp leaves the entry in
+    # for the same reason. A crash after scratch_dir leaves the entry in
     # the list and the call after next reclaims it (DROP IF EXISTS
     # tolerates tables that were never created).
-    root = tempfile.mkdtemp(prefix="bucketed_")
+    root = scratch_dir(spark, "bucketed_")
     tag = os.path.basename(root).removeprefix("bucketed_").lower()
     with _BUCKETED_LOCK:
         while len(_BUCKETED_LANDINGS) > 1:
@@ -1890,14 +1886,12 @@ def maintenance_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-column data-skipping pass a 100 TB store runs as scheduled
     maintenance. Content is untouched (identity oracle); the per-file
     stat-narrowness contract is pinned in tests/test_sinks.py."""
-    import tempfile
-
     from prefect_flow_arc_kg_postgres_etl_spark.sources.store import (
         zorder_layout,
     )
 
     orders = load_table(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="zorder_") + "/orders"
+    out = scratch_dir(spark, "zorder_") + "/orders"
     zorder_layout(orders, ["o_custkey", "o_orderdate"], n_files=16).write.mode(
         "overwrite"
     ).parquet(out)
@@ -1918,12 +1912,10 @@ def targeted_delete_gdpr(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning actually prunes — the same layout discipline A41 exists
     for. Erasure of every 97th customer's orders; the oracle is the
     logical complement."""
-    import tempfile
-
     from prefect_flow_arc_kg_postgres_etl_spark.sources import store as S
 
     orders = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="gdpr_") + "/orders.parquet"
+    root = scratch_dir(spark, "gdpr_") + "/orders.parquet"
     S.write_table(orders.repartitionByRange(16, "o_orderkey"), root)
     keys = orders.filter(F.col("o_custkey") % 97 == 0).select("o_orderkey")
     S.targeted_delete_rewrite(spark, root, keys, "o_orderkey")
@@ -2182,11 +2174,9 @@ def flow_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     result must be the pre-write orders exactly (the oracle), not the
     advanced version a live read would see. Requires retention
     (prune=False writes), the same precondition as time travel."""
-    import tempfile
-
     from prefect_flow_arc_kg_postgres_etl_spark.sources import store
 
-    root = tempfile.mkdtemp(prefix="snapshot_")
+    root = scratch_dir(spark, "snapshot_")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     store.write_table(orders, f"{root}/orders.parquet", prune=False)
@@ -2282,8 +2272,6 @@ def graph_pagerank_resumable(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory) does not survive. Exact integer arithmetic makes the
     resumed and straight-through runs bit-identical (tested), and the
     fixpoint shares A43's unrolled SQL oracle."""
-    import tempfile
-
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     pairs = (
@@ -2296,7 +2284,7 @@ def graph_pagerank_resumable(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.select(c_id.alias("src"), p_id.alias("dst")).unionByName(
         pairs.select(p_id.alias("src"), c_id.alias("dst"))
     )
-    state = tempfile.mkdtemp(prefix="pagerank_state_") + "/ranks"
+    state = scratch_dir(spark, "pagerank_state_") + "/ranks"
     ranks = T.pagerank_int_resumable(spark, edges, state, iters=2)
     return ranks.select(
         F.when(
@@ -2598,8 +2586,6 @@ def source_json_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSON serialization, parse, explode) must be value-exact: doubles
     survive because Spark's JSON writer emits shortest-round-trip
     decimals, timestamp_ntz survives the default ISO form."""
-    import tempfile
-
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     lines = li.select(
@@ -2616,7 +2602,7 @@ def source_json_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_sort(F.collect_list("ln")).alias("lines"),
         )
     )
-    out_dir = tempfile.mkdtemp(prefix="json_rt_") + "/orders_nested"
+    out_dir = scratch_dir(spark, "json_rt_") + "/orders_nested"
     schema = docs.schema
     docs.select(F.to_json(F.struct(*docs.columns)).alias("value")).write.mode(
         "overwrite"
@@ -2660,11 +2646,9 @@ def maintenance_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     live. Pure file metadata — no data scan. The returned live table
     is the identity oracle; the pin/removal contract is asserted
     in-plan (loud failure) and in tests/test_flows.py."""
-    import tempfile
-
     from prefect_flow_arc_kg_postgres_etl_spark.sources import store
 
-    store_dir = tempfile.mkdtemp(prefix="vacuum_")
+    store_dir = scratch_dir(spark, "vacuum_")
     tp = f"{store_dir}/orders.parquet"
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
     store.write_table(orders.filter(F.col("o_orderstatus") == "F"), tp, prune=False)
@@ -2764,8 +2748,6 @@ def source_corrupt_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
     conservation (valid + dead == source) is part of the oracle, as
     in C10. Scan-side end to end: serialize, truncate, parse, and
     classify are projections; zero shuffles."""
-    import tempfile
-
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal"
     )
@@ -2778,7 +2760,7 @@ def source_corrupt_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(doc)
         .alias("value")
     )
-    out_dir = tempfile.mkdtemp(prefix="corrupt_rt_") + "/feed"
+    out_dir = scratch_dir(spark, "corrupt_rt_") + "/feed"
     lines.write.mode("overwrite").text(out_dir)
     parsed = spark.read.text(out_dir).select(
         F.from_json(
@@ -2956,11 +2938,9 @@ def store_validated_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pointer untouched. Both outcomes exercised in-plan: the dirty
     commit must fail, the clean commit must land, and the returned
     live table is the identity oracle."""
-    import tempfile
-
     from prefect_flow_arc_kg_postgres_etl_spark.sources import store
 
-    tp = tempfile.mkdtemp(prefix="validated_") + "/orders.parquet"
+    tp = scratch_dir(spark, "validated_") + "/orders.parquet"
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
 
     def pk_dupes(landed):
@@ -3001,11 +2981,9 @@ def store_multi_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     first manifest still reads BOTH old ones (no torn combination
     either way). Returns the post-commit join read THROUGH the
     manifest; oracle = the same join recomputed."""
-    import tempfile
-
     from prefect_flow_arc_kg_postgres_etl_spark.sources import store
 
-    sd = tempfile.mkdtemp(prefix="multicommit_")
+    sd = scratch_dir(spark, "multicommit_")
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_extendedprice", "l_tax"
@@ -3109,10 +3087,8 @@ def schema_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     string, drops o_orderpriority, adds o_channel), so the Spark side
     must genuinely diff footers; the oracle pins the expected
     classification — the fk_merge_order precedent for metadata ops."""
-    import tempfile
-
     orders = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="drift_")
+    root = scratch_dir(spark, "drift_")
     orders.limit(10).write.mode("overwrite").parquet(f"{root}/gen1")
     (
         orders.limit(10)
@@ -3392,6 +3368,7 @@ def _sq_pick(options: list[str], idx_col) -> Column:
     )
 
 
+@_staged_by_predicate("sparql_person_v6", ("customer", "nation", "orders"))
 def _sparql_person_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic quad store shaped for person.sparql's WHERE graph:
     orgs (ContentPartner or not) in graph:organization; per-org metadata
@@ -3404,22 +3381,8 @@ def _sparql_person_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     Built in ONE pass per source table: each row emits its quads via
     ``inline(array(struct(...)))`` — a scan-fused generator, no
     per-quad scans — then staged as predicate-partitioned parquet
-    (the vertical-partitioning layout _kg_graph documents) so every
+    (``_staged_by_predicate``) so every
     BGP pattern scan partition-prunes to its posting list."""
-    import hashlib
-    import os
-    import tempfile
-
-    fp = hashlib.md5(b"sparql_person_v6")
-    for t in ("customer", "nation", "orders"):
-        st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
-        fp.update(f"{t}:{st.st_mtime_ns}:{st.st_size};".encode())
-    path = f"{tempfile.gettempdir()}/sparql_quads_{fp.hexdigest()[:16]}"
-    try:
-        return read_parquet(spark, path)
-    except Exception:
-        pass
-
     ns = _SQ_NS
 
     def as_col(x):
@@ -4301,9 +4264,7 @@ def _sparql_person_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(thes_quads)
         .filter(F.col("object").isNotNull())
     )
-    quads = quads.distinct()  # RDF graphs are SETS of triples
-    quads.repartition("predicate").write.mode("overwrite").partitionBy("predicate").parquet(path)
-    return read_parquet(spark, path)
+    return quads.distinct()  # RDF graphs are SETS of triples
 
 
 def kg_construct_real_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4430,6 +4391,7 @@ _OQ = {
 }
 
 
+@_staged_by_predicate("sparql_org_v1", ("customer",))
 def _sparql_org_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quad store shaped for organization.sparql: orgs from the
     customer table with every OPTIONAL populated on a deterministic
@@ -4442,19 +4404,6 @@ def _sparql_org_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     across the four FROM graphs so the dataset-clause union is doing
     real work. One inline() generator pass, staged predicate-
     partitioned like the person store."""
-    import hashlib
-    import os
-    import tempfile
-
-    fp = hashlib.md5(b"sparql_org_v1")
-    st = os.stat(os.path.join(sf_dir, "customer.parquet"))
-    fp.update(f"{st.st_mtime_ns}:{st.st_size}".encode())
-    path = f"{tempfile.gettempdir()}/sparql_org_quads_{fp.hexdigest()[:16]}"
-    try:
-        return read_parquet(spark, path)
-    except Exception:
-        pass
-
     q = _OQ
     cust = load_table(spark, sf_dir, "customer")
     ck = F.col("c_custkey")
@@ -4559,9 +4508,7 @@ def _sparql_org_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     ).filter(F.col("object").isNotNull())
-    quads = quads.distinct()  # RDF graphs are SETS of triples
-    quads.repartition("predicate").write.mode("overwrite").partitionBy("predicate").parquet(path)
-    return read_parquet(spark, path)
+    return quads.distinct()  # RDF graphs are SETS of triples
 
 
 def kg_construct_real_query_org(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4717,6 +4664,7 @@ _DEL_SPARQL = "deletes.sparql"
 _DEL_SINCE = "1999-01-01 00:00:00"
 
 
+@_staged_by_predicate("sparql_del_v1", ("customer", "nation", "orders"))
 def _sparql_del_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quad store for deletes.sparql: ContentPartner orgs (shared shape
     with the person store), per-org metadata graphs holding MediaHaven
@@ -4726,20 +4674,6 @@ def _sparql_del_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     list has NO allowed entry (okey % 11 >= 9 under the shared license
     indexing). Separate staging from the person store so each verbatim
     query's fixture is self-contained."""
-    import hashlib
-    import os
-    import tempfile
-
-    fp = hashlib.md5(b"sparql_del_v1")
-    for t in ("customer", "nation", "orders"):
-        st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
-        fp.update(f"{t}:{st.st_mtime_ns}:{st.st_size};".encode())
-    path = f"{tempfile.gettempdir()}/sparql_del_quads_{fp.hexdigest()[:16]}"
-    try:
-        return read_parquet(spark, path)
-    except Exception:
-        pass
-
     ns = _SQ_NS
     mh = "https://data.hetarchief.be/ns/mediahaven/"
 
@@ -4806,14 +4740,7 @@ def _sparql_del_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("object").isNotNull())
 
     quads = org_quads.unionByName(frag_quads)
-    # repartition("predicate") lands each posting list in ONE task ->
-    # one file per partition dir (355 -> 96 files; layout hygiene — a
-    # compiled SPARQL plan re-scans the store hundreds of times). At
-    # real scale the writer would cap file size per predicate instead
-    # of forcing exactly one.
-    quads = quads.distinct()  # RDF graphs are SETS of triples
-    quads.repartition("predicate").write.mode("overwrite").partitionBy("predicate").parquet(path)
-    return read_parquet(spark, path)
+    return quads.distinct()  # RDF graphs are SETS of triples
 
 
 def kg_construct_real_query_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -12,6 +12,8 @@ order matches Spark's ``aggregate`` fold bit-for-bit.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -26,7 +28,9 @@ from prefect_flow_arc_kg_postgres_etl_spark.operators.multimodal import (
     sample_frames,
     synthesize_bmp_media,
 )
+from prefect_flow_arc_kg_postgres_etl_spark.session import scratch_dir
 from prefect_flow_arc_kg_postgres_etl_spark.sources.catalog import load_table
+from prefect_flow_arc_kg_postgres_etl_spark.sources.store import staged_input
 
 # ---------------------------------------------------------- dup corpora
 _EXACT_OFF = 1_000_000
@@ -1401,8 +1405,6 @@ def multimodal_binary_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     rides the file name), and decode in the same Arrow-batched step as
     the in-plan variant — so the decode oracle (closed-form in doc_id)
     checks the whole file round trip byte-for-byte."""
-    import tempfile
-
     from prefect_flow_arc_kg_postgres_etl_spark.operators.multimodal import (
         decode_media,
         land_media_files,
@@ -1413,7 +1415,7 @@ def multimodal_binary_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = synthesize_bmp_media(
         _spread(spark, load_table(spark, sf_dir, "documents"))
     )
-    out = tempfile.mkdtemp(prefix="media_land_") + "/assets"
+    out = scratch_dir(spark, "media_land_") + "/assets"
     land_media_files(media, out)
     return decode_media(read_media_files(spark, out))
 
@@ -1646,25 +1648,18 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the in-plan incremental_dup_pairs (same banding, same verify);
     tests/test_dedup_similarity.py pins the equivalence and the pruned
     scan."""
-    import hashlib
-    import os
-    import tempfile
-
     corpus = _dup_corpus(spark, sf_dir, near=True)
     history = corpus.filter(F.col("doc_id") < _NEAR_OFF)
     new = corpus.filter(F.col("doc_id") >= _NEAR_OFF)
 
-    # The signature-derivation version is part of the fingerprint: a
-    # hash-formula change (r11 moved gram identity to md5 and the g2
-    # seed to the long path — TWICE in one round) must force a
-    # rebuild, or the persisted band keys silently match nothing
-    # (caught both times by the oracle gate: 25 rows vs 993).
-    fp = hashlib.md5(f"dedup_index_v{D.SIGNATURE_VERSION}".encode())
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    fp.update(f"{st.st_mtime_ns}:{st.st_size}".encode())
-    path = f"{tempfile.gettempdir()}/dedup_index_{fp.hexdigest()[:16]}"
-    if not os.path.exists(f"{path}/grams/_SUCCESS"):
-        D.build_dedup_index(history, path)
+    # The signature-derivation version is part of the key: a
+    # hash-formula change must force a rebuild, or the persisted band
+    # keys silently match nothing.
+    path = staged_input(
+        f"dedup_index_v{D.SIGNATURE_VERSION}",
+        [os.path.join(sf_dir, "documents.parquet")],
+        lambda out: D.build_dedup_index(history, out),
+    )
     return D.incremental_dup_pairs_indexed(new, path, _JAC_T)
 
 
@@ -1817,8 +1812,6 @@ def flow_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     query; the exact greedy semantics are pinned by the Python-oracle
     convergence test in tests/test_flows.py (2-batch == 1-batch ==
     sequential greedy over the quadratic pair set)."""
-    import tempfile
-
     from prefect_flow_arc_kg_postgres_etl_spark.flows import ingest_flow
 
     corpus = _dup_corpus(spark, sf_dir, near=True)
@@ -1827,7 +1820,7 @@ def flow_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") >= _EXACT_OFF) & (F.col("doc_id") < _NEAR_OFF)
     )
     b3 = corpus.filter(F.col("doc_id") >= _NEAR_OFF)
-    target = tempfile.mkdtemp(prefix="ingest_flow_") + "/corpus"
+    target = scratch_dir(spark, "ingest_flow_") + "/corpus"
     final, _ = ingest_flow(spark, target, [b1, b2, b3], _JAC_T)
     return final.select("doc_id", F.length("text").alias("n_chars"))
 

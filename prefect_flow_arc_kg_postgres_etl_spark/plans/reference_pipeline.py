@@ -72,17 +72,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from prefect_flow_arc_kg_postgres_etl_spark.operators import merge as M
-from prefect_flow_arc_kg_postgres_etl_spark.session import MISS, AppLRU
+from prefect_flow_arc_kg_postgres_etl_spark.session import (
+    MISS,
+    AppLRU,
+    hadoop_fs,
+    is_remote_path,
+    local_path,
+    scratch_dir,
+)
 from prefect_flow_arc_kg_postgres_etl_spark.sources.store import read_parquet
 
 _NS = "urn:kg-to-postgres:"
-
-# Every spill dir ``_make_spill_dir`` created, removed at interpreter
-# exit. A dir is recorded when it is created, so a landing that raises
-# leaves nothing behind; a spill superseded by a re-land stays until
-# exit, because a frame returned before the store changed still scans
-# it.
-_SPILL_DIRS: list[str] = []
 
 # Landed view graphs: sf_dir -> spill dir, stamped with the store
 # fingerprint (file sizes + mtimes under sf_dir), so a changed store
@@ -96,28 +96,6 @@ _VIEW_CACHE = AppLRU(8)
 _FP_SEQ = iter(range(1, 1 << 30))
 
 
-def _is_remote_path(path: str) -> bool:
-    return "://" in path and not path.startswith("file:")
-
-
-def _local_path(path: str) -> str:
-    """The local path a ``file:`` URI names (``file:/x`` and
-    ``file:///x`` both give ``/x``); any other path as given."""
-    if path.startswith("file:"):
-        path = path[len("file:"):]
-        while path.startswith("//"):
-            path = path[1:]
-    return path
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for any Hadoop-scheme path — the JVM-side API
-    that works where os.walk/shutil do not (hdfs://, s3a://)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
 def _store_fingerprint(
     sf_dir: str, spark: SparkSession | None = None
 ) -> tuple[int, int]:
@@ -129,14 +107,14 @@ def _store_fingerprint(
     callers re-land instead of serving a stale cache entry."""
     import os
 
-    if _is_remote_path(sf_dir):
+    if is_remote_path(sf_dir):
         if spark is None:
             from pyspark.sql import SparkSession as _SS
 
             spark = _SS.getActiveSession()
         if spark is not None:
             try:
-                fs, hpath = _hadoop_fs(spark, sf_dir)
+                fs, hpath = hadoop_fs(spark, sf_dir)
                 total = latest = 0
                 it = fs.listFiles(hpath, True)
                 while it.hasNext():
@@ -148,7 +126,7 @@ def _store_fingerprint(
                 pass
         return (-1, next(_FP_SEQ))
     total = latest = 0
-    for base, _dirs, files in os.walk(_local_path(sf_dir)):
+    for base, _dirs, files in os.walk(local_path(sf_dir)):
         for fn in files:
             try:
                 st = os.stat(os.path.join(base, fn))
@@ -158,75 +136,6 @@ def _store_fingerprint(
             latest = max(latest, st.st_mtime_ns)
     return total, latest
 
-
-def _remove_spill(path: str) -> None:
-    """Best-effort spill-dir removal. shutil.rmtree cannot delete
-    remote-scheme paths (hdfs://, s3a://) — exactly the shared-
-    warehouse deployment's spill target — so those go through the
-    Hadoop FileSystem API while a session is still live (r10
-    ADVICE)."""
-    import shutil
-
-    if _is_remote_path(path):
-        try:
-            from pyspark.sql import SparkSession as _SS
-
-            spark = _SS.getActiveSession()
-            if spark is not None:
-                fs, hpath = _hadoop_fs(spark, path)
-                fs.delete(hpath, True)
-        except Exception:
-            pass
-        return
-    shutil.rmtree(_local_path(path), ignore_errors=True)
-
-
-def _cleanup_spills() -> None:
-    while _SPILL_DIRS:
-        _remove_spill(_SPILL_DIRS.pop())
-
-
-import atexit as _atexit  # noqa: E402
-
-_atexit.register(_cleanup_spills)
-
-
-_SPILL_SEQ = iter(range(1, 1 << 30))
-
-
-def _make_spill_dir(spark: SparkSession) -> str:
-    """A fresh spill dir under the spill root (``_spill_root``),
-    recorded for the exit sweep. Local (or file:) roots get a real
-    mkdtemp; remote-scheme roots (hdfs://, s3a://) get a unique
-    per-application subpath that Spark's writers create."""
-    import os
-    import tempfile
-
-    root = _spill_root(spark)
-    if _is_remote_path(root):
-        path = f"{root}/{spark.sparkContext.applicationId}-{next(_SPILL_SEQ)}"
-    else:
-        local = _local_path(root)
-        os.makedirs(local, exist_ok=True)
-        path = tempfile.mkdtemp(prefix="kg_view_graph_", dir=local)
-    _SPILL_DIRS.append(path)
-    return path
-
-
-def _spill_root(spark: SparkSession) -> str:
-    """Landing area for the view-graph spills, the document spills and
-    the scratch stores: under the session's WAREHOUSE dir, not
-    driver-local /tmp — on a real cluster the warehouse is shared
-    storage every executor and a restarted driver can read (the r8
-    verdict's 100 TB watch item); on local mode it is a local dir
-    exactly like /tmp was. Override via SPARK_GRAFT_SPILL_DIR."""
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_SPILL_DIR")
-    if env:
-        return env
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    return f"{wh.rstrip('/')}/_kg_view_spills"
 
 # Every table the nine production queries emit, with the full column
 # set observed across all nine (stream.ts derives these from the live
@@ -415,7 +324,7 @@ def all_view_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
             sparql as SQ,
         )
 
-        spill = _make_spill_dir(spark)
+        spill = scratch_dir(spark, "view_graph_")
         for i, b in enumerate(builders):
             df = b(spark, sf_dir)
             df.write.mode("overwrite").parquet(f"{spill}/q{i}")
@@ -1016,40 +925,32 @@ def _flow_plan_cached(spark, sf_dir, tag, build):
 
 
 def flow_reference_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A74: the reference's full production cycle — nine verbatim
+    """A74: the reference's full production cycle: nine verbatim
     queries -> triple stream -> graph.* record pivot in FK order ->
     update_partition.sql index documents. The ES NDJSON feed over this
-    result is ``index_documents_ndjson``."""
+    result is ``index_documents_ndjson``.
+
+    The documents are landed in a scratch dir (``session.scratch_dir``)
+    and the read-back is returned: consumers (incremental flags, delete
+    cascade, NDJSON feed) plan over a scan leaf instead of the
+    ~3000-node build lineage, and every action re-reads the documents
+    from storage, as a fresh session reading the committed snapshot
+    would. The result is cached per (application, sf_dir, store
+    fingerprint). A changed store lands again, and the old dir stays
+    until interpreter exit because frames already returned still scan
+    it. The durable form of this landing is reference_pipeline_flow's
+    store commit."""
     fp = _store_fingerprint(sf_dir, spark)
     hit = _DOCS_CACHE.get(spark, sf_dir, fp)
     if hit is not MISS:
         return hit
     triples = all_view_triples(spark, sf_dir)
     tables = pivot_view_tables(triples)
-    # Land the composed documents in a parquet spill and return the
-    # READ-BACK (r13, replacing the r12 localCheckpoint): the returned
-    # frame's plan is a scan leaf, so consumers (incremental flags,
-    # delete cascade, NDJSON feed) never embed the ~3000-node build
-    # lineage (guide §5 "very large query plans" / §3.3 plan
-    # truncation) — same truncation the checkpoint gave — but every
-    # action now re-reads the standing state from STORAGE, exactly
-    # what a fresh session reading the committed
-    # graph.index_documents snapshot does, instead of scanning
-    # session-memoised executor blocks (the r12 verdict's
-    # measurement-scope caveat: flow bench numbers must reflect work a
-    # fresh session would do). The spill is keyed per (application,
-    # sf_dir, store fingerprint), superseded on store mutation, and
-    # removed at interpreter exit — nothing persists across runs. At
-    # cluster scale the durable form of this landing is
-    # reference_pipeline_flow's store commit, which writes the
-    # documents table to the warehouse.
-    spill = _make_spill_dir(spark)
+    spill = scratch_dir(spark, "index_documents_")
     build_reference_index_documents(tables, SYNTHETIC_STORE_ADAPTER).write.mode(
         "overwrite"
     ).parquet(f"{spill}/index_documents")
     docs = read_parquet(spark, f"{spill}/index_documents")
-    # a mutated store under the same path replaces its old entry (the
-    # old spill stays on disk until exit, for frames already returned)
     _DOCS_CACHE.put(spark, sf_dir, docs, fp)
     return docs
 
@@ -2107,7 +2008,7 @@ def all_view_triples_scoped(
         "av-complex",
     ):
         runs.extend((slug, oid) for oid in or_ids)
-    spill = _make_spill_dir(spark)
+    spill = scratch_dir(spark, "view_fanout_")
     paths = [f"{spill}/q{i}" for i in range(len(runs))]
     workers = 4
 
@@ -2220,7 +2121,7 @@ def flow_reference_incremental_store(
     from prefect_flow_arc_kg_postgres_etl_spark.sources import store as S
 
     prev = _incremental_frames(spark, sf_dir)[1]
-    store = _make_spill_dir(spark)
+    store = scratch_dir(spark, "incremental_store_")
     S.commit_tables(store, {INDEX_DOCUMENTS: prev})
     return reference_incremental_flow(spark, sf_dir, store)
 
@@ -2234,7 +2135,7 @@ def flow_reference_deletes_store(
     whose worklist-scoped rebuild passes untouched documents through
     from that standing snapshot (r10). Committed read-back equals the
     storeless post-cascade build, so it shares A78's oracle."""
-    store = _make_spill_dir(spark)
+    store = scratch_dir(spark, "deletes_store_")
     reference_pipeline_flow(spark, sf_dir, store)
     return reference_delete_flow(spark, sf_dir, store)
 
@@ -2346,7 +2247,7 @@ def flow_reference_main_store(
     carry_from manifest inheritance exercised on the graded path (the
     index stage's partial commit must pin the load stage's table
     versions for the delete stage to read one consistent state)."""
-    store = _make_spill_dir(spark)
+    store = scratch_dir(spark, "main_store_")
     out = main_reference_flow(spark, sf_dir, store)
     assert out["load"] and out["index"] and out["delete"]
     return out["documents"]

@@ -20,6 +20,7 @@ from prefect_flow_arc_kg_postgres_etl_spark.plans import (
     relational,
     streaming_plans,
 )
+from prefect_flow_arc_kg_postgres_etl_spark.session import scratch_dir
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
@@ -1110,13 +1111,12 @@ def _ensure_package_on_workers(spark: SparkSession) -> None:
     if key in _SHIPPED:
         return
     import os
-    import tempfile
     import zipfile
 
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     repo_root = os.path.dirname(pkg_root)
     zip_path = os.path.join(
-        tempfile.mkdtemp(prefix="pkg_ship_"),
+        scratch_dir(spark, "pkg_ship_"),
         "prefect_flow_arc_kg_postgres_etl_spark.zip",
     )
     with zipfile.ZipFile(zip_path, "w") as zf:

@@ -9,14 +9,13 @@ engine-internal; final-state semantics are tested in tests/).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
 from prefect_flow_arc_kg_postgres_etl_spark.plans.relational import (
     FUNNEL_ORACLE,
     TUMBLING_ORACLE,
 )
+from prefect_flow_arc_kg_postgres_etl_spark.session import scratch_dir
 from prefect_flow_arc_kg_postgres_etl_spark.streaming.sync import (
     dedup_stream,
     es_feed_stream,
@@ -48,7 +47,7 @@ def stream_windowed_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     in state (they would flush on the next trigger in a continuous
     run). That makes the production path SQL-oracle-checkable, not just
     the complete-mode harness above."""
-    out = tempfile.mkdtemp(prefix="stream_wm_") + "/agg"
+    out = scratch_dir(spark, "stream_wm_") + "/agg"
     return windowed_agg_stream_watermarked(spark, sf_dir, out)
 
 
@@ -64,7 +63,7 @@ HAVING window_start <= (SELECT MAX(ts) - INTERVAL 2 HOUR FROM events)
 
 
 def stream_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    target = tempfile.mkdtemp(prefix="stream_upsert_") + "/target"
+    target = scratch_dir(spark, "stream_upsert_") + "/target"
     return incremental_upsert_stream(spark, sf_dir, target)
 
 
@@ -177,7 +176,7 @@ def stream_es_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     string assembly and the document values are exact integer cents —
     so the read-back text carries a full SQL oracle (promoted from
     rows-only in r11; epoch directory split does not affect the set)."""
-    out = tempfile.mkdtemp(prefix="stream_es_") + "/feed"
+    out = scratch_dir(spark, "stream_es_") + "/feed"
     return es_feed_stream(spark, sf_dir, out)
 
 
@@ -322,7 +321,7 @@ def stream_agg_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg_state_stream,
     )
 
-    target = tempfile.mkdtemp(prefix="stream_agg_state_") + "/state"
+    target = scratch_dir(spark, "stream_agg_state_") + "/state"
     return agg_state_stream(spark, sf_dir, target)
 
 
@@ -343,7 +342,7 @@ def stream_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         dq_gate_stream,
     )
 
-    root = tempfile.mkdtemp(prefix="stream_dq_")
+    root = scratch_dir(spark, "stream_dq_")
     return dq_gate_stream(spark, sf_dir, root)
 
 
@@ -365,7 +364,7 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         windowed_topk_stream,
     )
 
-    target = tempfile.mkdtemp(prefix="stream_topk_") + "/state"
+    target = scratch_dir(spark, "stream_topk_") + "/state"
     return windowed_topk_stream(spark, sf_dir, target, k=3)
 
 
@@ -394,7 +393,7 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_state_stream,
     )
 
-    target = tempfile.mkdtemp(prefix="stream_dedup_state_") + "/seen"
+    target = scratch_dir(spark, "stream_dedup_state_") + "/seen"
     return dedup_state_stream(spark, sf_dir, target)
 
 
@@ -415,7 +414,7 @@ def stream_pivot_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         pivot_records_stream,
     )
 
-    out = tempfile.mkdtemp(prefix="stream_pivot_") + "/records"
+    out = scratch_dir(spark, "stream_pivot_") + "/records"
     return pivot_records_stream(spark, sf_dir, out)
 
 
@@ -441,7 +440,7 @@ def stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         scd2_enrich_stream,
     )
 
-    root = tempfile.mkdtemp(prefix="stream_scd2_")
+    root = scratch_dir(spark, "stream_scd2_")
     return scd2_enrich_stream(spark, sf_dir, root)
 
 
@@ -487,7 +486,7 @@ def stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         interval_join_outer_stream,
     )
 
-    out = tempfile.mkdtemp(prefix="stream_ivl_outer_") + "/joined"
+    out = scratch_dir(spark, "stream_ivl_outer_") + "/joined"
     return interval_join_outer_stream(spark, sf_dir, out)
 
 
@@ -570,7 +569,7 @@ def stream_windowed_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         windowed_distinct_stream,
     )
 
-    out = tempfile.mkdtemp(prefix="stream_wdist_") + "/agg"
+    out = scratch_dir(spark, "stream_wdist_") + "/agg"
     return windowed_distinct_stream(spark, sf_dir, out)
 
 
@@ -593,7 +592,7 @@ def stream_agg_retractable(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg_retractable_stream,
     )
 
-    target = tempfile.mkdtemp(prefix="stream_retract_") + "/state"
+    target = scratch_dir(spark, "stream_retract_") + "/state"
     return agg_retractable_stream(spark, sf_dir, target)
 
 

@@ -5,11 +5,18 @@ you would ship to a 1000-executor cluster: AQE on (runtime coalesce +
 skew-join), UTC session timezone (oracle comparison + sanity), Arrow for
 the few Pandas-UDF paths, shuffle partitions sized to cores locally
 (cluster: size to total cores / target partition bytes).
+
+Also the one owner of builders' scratch space (``scratch_dir``) and the
+driver-side application cache (``AppLRU``).
 """
 
 from __future__ import annotations
 
+import atexit
+import itertools
 import os
+import shutil
+import tempfile
 import threading
 from collections import OrderedDict
 
@@ -67,6 +74,100 @@ class AppLRU:
     def __len__(self) -> int:
         with self._lock:
             return len(self._entries)
+
+
+def is_remote_path(path: str) -> bool:
+    return "://" in path and not path.startswith("file:")
+
+
+def local_path(path: str) -> str:
+    """The local path a ``file:`` URI names (``file:/x`` and
+    ``file:///x`` both give ``/x``); any other path as given."""
+    if path.startswith("file:"):
+        path = path[len("file:"):]
+        while path.startswith("//"):
+            path = path[1:]
+    return path
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for any Hadoop-scheme path: the JVM-side API
+    that works where os.walk/shutil do not (hdfs://, s3a://)."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+# This process's scratch root under each scratch base it has used
+# (base -> root), removed at interpreter exit.
+_SCRATCH_ROOTS: dict[str, str] = {}
+_SCRATCH_LOCK = threading.Lock()
+_SCRATCH_SEQ = itertools.count(1)
+
+
+def _scratch_base(spark: SparkSession) -> str:
+    """Where every builder keeps its scratch data:
+    ``SPARK_GRAFT_SPILL_DIR``, else ``<warehouse>/_kg_view_spills``.
+    The warehouse, not driver-local /tmp: on a cluster it is shared
+    storage that every executor and a restarted driver can read; in
+    local mode it is a local dir like /tmp."""
+    env = os.environ.get("SPARK_GRAFT_SPILL_DIR")
+    if env:
+        return env
+    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+    return f"{wh.rstrip('/')}/_kg_view_spills"
+
+
+def _remove_scratch_roots() -> None:
+    """Best-effort removal of this process's scratch roots. shutil
+    cannot delete remote-scheme paths, so those go through the Hadoop
+    FileSystem API while a session is still live."""
+    while _SCRATCH_ROOTS:
+        _base, root = _SCRATCH_ROOTS.popitem()
+        if not is_remote_path(root):
+            shutil.rmtree(local_path(root), ignore_errors=True)
+            continue
+        try:
+            spark = SparkSession.getActiveSession()
+            if spark is not None:
+                fs, hpath = hadoop_fs(spark, root)
+                fs.delete(hpath, True)
+        except Exception:
+            pass
+
+
+def scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """A fresh scratch dir for a builder's intermediate data: stream
+    sinks and checkpoints, round-trip files, scratch stores, spills.
+
+    Every dir a process makes sits under one process root below the
+    scratch base (``_scratch_base``). The root is made on first use and
+    removed at interpreter exit, so a builder that raises leaves
+    nothing behind, and a returned DataFrame can scan its dir for as
+    long as the process lives. A local (or ``file:``) base gets real
+    directories; a remote-scheme base (hdfs://, s3a://) gets unique
+    subpaths that Spark's writers create."""
+    base = _scratch_base(spark)
+    with _SCRATCH_LOCK:
+        root = _SCRATCH_ROOTS.get(base)
+        if root is None:
+            if is_remote_path(base):
+                app = spark.sparkContext.applicationId
+                root = f"{base}/{app}-{os.getpid()}"
+            else:
+                os.makedirs(local_path(base), exist_ok=True)
+                root = tempfile.mkdtemp(
+                    prefix=f"pid{os.getpid()}_", dir=local_path(base)
+                )
+            if not _SCRATCH_ROOTS:
+                # Registered after the session's JVM gateway: exit
+                # handlers run last-in first-out, so the sweep runs
+                # while the JVM that deletes remote paths is still up.
+                atexit.register(_remove_scratch_roots)
+            _SCRATCH_ROOTS[base] = root
+    if is_remote_path(root):
+        return f"{root}/{prefix}{next(_SCRATCH_SEQ)}"
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
 
 
 def get_spark(app_name: str = "arc-kg-spark", cpus: int | None = None) -> SparkSession:

@@ -39,10 +39,12 @@ from __future__ import annotations
 import contextlib
 import datetime
 import functools
+import hashlib
 import json
 import os
 import re
 import shutil
+import tempfile
 import time
 import types
 import uuid
@@ -202,6 +204,48 @@ def _claim_manifest(store_dir: str, entries: dict[str, int]) -> str:
                 n += 1
     finally:
         os.unlink(tmp)
+
+
+# Every staged input (``staged_input``) sits in this dir under the
+# temp dir, shared by every process on the host.
+_STAGED_INPUTS = "spark_graft_staged"
+
+
+def staged_input(
+    tag: str, source_files: list[str], build: Callable[[str], None]
+) -> str:
+    """The dir holding ``build``'s output for the current content of
+    ``source_files``, built once per host and shared across processes.
+
+    The key is an md5 over ``tag`` (name it with a layout version, so a
+    layout change rebuilds) and the (path, mtime_ns, size) of each
+    source file, so a changed source lands under a new key. On a miss
+    ``build(stage)`` writes a private ``<path>._stage_<token>`` dir,
+    which one ``os.rename`` publishes. Only a published dir is served:
+    a build that raised or was killed leaves at most a stage behind,
+    never a half-written ``path``. When two builders race, the first
+    rename wins and the loser deletes its own stage."""
+    key = hashlib.md5(tag.encode())
+    for f in source_files:
+        st = os.stat(f)
+        stamp = f"{os.path.abspath(f)}:{st.st_mtime_ns}:{st.st_size};"
+        key.update(stamp.encode())
+    path = os.path.join(
+        tempfile.gettempdir(), _STAGED_INPUTS, f"{tag}_{key.hexdigest()[:16]}"
+    )
+    if os.path.isdir(path):
+        return path
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    stage = f"{path}._stage_{uuid.uuid4().hex}"
+    try:
+        build(stage)
+        os.rename(stage, path)
+    except OSError:
+        if not os.path.isdir(path):
+            raise
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+    return path
 
 
 def read_parquet(

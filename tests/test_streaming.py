@@ -3,8 +3,6 @@ windowed agg, and final-state convergence for the CDC upsert loop."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 
 from prefect_flow_arc_kg_postgres_etl_spark.plans.relational import events_tumbling
@@ -25,10 +23,10 @@ def test_stream_agg_equals_batch(spark):
     assert stream_out == batch_out
 
 
-def test_incremental_upsert_converges_to_source(spark):
+def test_incremental_upsert_converges_to_source(spark, tmp_path):
     """event_ids are unique, so continuously upserting the stream must
     converge to exactly the source table."""
-    target = tempfile.mkdtemp(prefix="t_upsert_") + "/target"
+    target = str(tmp_path / "target")
     final = incremental_upsert_stream(spark, SF_SMOKE, target)
     src = load_table(spark, SF_SMOKE, "events")
     assert final.count() == src.count()
@@ -323,7 +321,7 @@ def test_buffered_funnel_correct_under_crossbatch_disorder(spark, tmp_path):
     assert got == {(2, 20 * MIN)}
 
 
-def test_stream_agg_state_converges_and_skips_replay(spark):
+def test_stream_agg_state_converges_and_skips_replay(spark, tmp_path):
     """Converged streaming aggregate state == the batch per-user
     aggregate; a SECOND bounded run over the same target RESUMES the
     persisted checkpoint (no new source files => no new epochs) and
@@ -334,7 +332,7 @@ def test_stream_agg_state_converges_and_skips_replay(spark):
         agg_state_stream,
     )
 
-    target = tempfile.mkdtemp(prefix="t_agg_state_") + "/state"
+    target = str(tmp_path / "state")
     first = {tuple(r) for r in agg_state_stream(spark, SF_SMOKE, target).collect()}
 
     ev = load_table(spark, SF_SMOKE, "events")

@@ -124,17 +124,21 @@ def run_pytest_sharded(py: str) -> bool:
     )
 
     def run_shard(i: int) -> subprocess.CompletedProcess:
-        env = dict(os.environ)
-        env["SPARK_DRIVER_MEMORY"] = heap
-        env["SPARK_GRAFT_WAREHOUSE"] = tempfile.mkdtemp(prefix=f"ci_wh{i}_")
-        return subprocess.run(
-            [py, "-m", "pytest", *shards[i], "-q"],
-            cwd=REPO,
-            env=env,
-            stdout=subprocess.PIPE,
-            stderr=subprocess.STDOUT,
-            text=True,
-        )
+        # The shard's warehouse also holds its scratch root, so removing
+        # it when the shard ends leaves nothing behind, also when the
+        # shard's process was killed before its exit sweep ran.
+        with tempfile.TemporaryDirectory(prefix=f"ci_wh{i}_") as warehouse:
+            env = dict(os.environ)
+            env["SPARK_DRIVER_MEMORY"] = heap
+            env["SPARK_GRAFT_WAREHOUSE"] = warehouse
+            return subprocess.run(
+                [py, "-m", "pytest", *shards[i], "-q"],
+                cwd=REPO,
+                env=env,
+                stdout=subprocess.PIPE,
+                stderr=subprocess.STDOUT,
+                text=True,
+            )
 
     ok = True
     with ThreadPoolExecutor(max_workers=concurrency) as pool:

@@ -392,10 +392,11 @@ def sync_flow(
 
         if record_limit is not None and name in TABLE_MULTIVALUE:
             # Whole groups only: clear_and_insert replaces every row of
-            # each group the batch touches.
+            # each group the batch touches. Ordered, so each read of
+            # the batch (group keys, then rows) picks the same groups.
             key = TABLE_MULTIVALUE[name]
             src = src.join(
-                src.select(key).distinct().limit(record_limit),
+                src.select(key).distinct().orderBy(key).limit(record_limit),
                 on=key,
                 how="left_semi",
             )

@@ -324,7 +324,7 @@ def all_view_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
             sparql as SQ,
         )
 
-        spill = scratch_dir(spark, "view_graph_")
+        spill = scratch_dir(spark, "view_graph_", shared=True)
         for i, b in enumerate(builders):
             df = b(spark, sf_dir)
             df.write.mode("overwrite").parquet(f"{spill}/q{i}")
@@ -946,7 +946,7 @@ def flow_reference_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         return hit
     triples = all_view_triples(spark, sf_dir)
     tables = pivot_view_tables(triples)
-    spill = scratch_dir(spark, "index_documents_")
+    spill = scratch_dir(spark, "index_documents_", shared=True)
     build_reference_index_documents(tables, SYNTHETIC_STORE_ADAPTER).write.mode(
         "overwrite"
     ).parquet(f"{spill}/index_documents")
@@ -2008,7 +2008,7 @@ def all_view_triples_scoped(
         "av-complex",
     ):
         runs.extend((slug, oid) for oid in or_ids)
-    spill = scratch_dir(spark, "view_fanout_")
+    spill = scratch_dir(spark, "view_fanout_", shared=True)
     paths = [f"{spill}/q{i}" for i in range(len(runs))]
     workers = 4
 

@@ -106,7 +106,7 @@ _SCRATCH_SEQ = itertools.count(1)
 
 
 def _scratch_base(spark: SparkSession) -> str:
-    """Where every builder keeps its scratch data:
+    """Where builders keep their scratch data:
     ``SPARK_GRAFT_SPILL_DIR``, else ``<warehouse>/_kg_view_spills``.
     The warehouse, not driver-local /tmp: on a cluster it is shared
     storage that every executor and a restarted driver can read; in
@@ -136,7 +136,7 @@ def _remove_scratch_roots() -> None:
             pass
 
 
-def scratch_dir(spark: SparkSession, prefix: str) -> str:
+def scratch_dir(spark: SparkSession, prefix: str, shared: bool = False) -> str:
     """A fresh scratch dir for a builder's intermediate data: stream
     sinks and checkpoints, round-trip files, scratch stores, spills.
 
@@ -144,10 +144,14 @@ def scratch_dir(spark: SparkSession, prefix: str) -> str:
     scratch base (``_scratch_base``). The root is made on first use and
     removed at interpreter exit, so a builder that raises leaves
     nothing behind, and a returned DataFrame can scan its dir for as
-    long as the process lives. A local (or ``file:``) base gets real
-    directories; a remote-scheme base (hdfs://, s3a://) gets unique
-    subpaths that Spark's writers create."""
+    long as the process lives. The dir is local unless ``shared``: a
+    caller that reads and writes it only through Spark (Hadoop
+    FileSystem) APIs passes ``shared=True`` and may get a unique
+    subpath of a remote-scheme base, which Spark's writers create."""
     base = _scratch_base(spark)
+    if is_remote_path(base) and not shared:
+        # Python file APIs cannot write hdfs:// or s3a://
+        base = tempfile.gettempdir()
     with _SCRATCH_LOCK:
         root = _SCRATCH_ROOTS.get(base)
         if root is None:

@@ -12,9 +12,13 @@ import ast
 import os
 import subprocess
 import sys
+import tempfile
 import textwrap
+import zipfile
 from pathlib import Path
 
+from prefect_flow_arc_kg_postgres_etl_spark import session
+from prefect_flow_arc_kg_postgres_etl_spark.plans import registry
 from prefect_flow_arc_kg_postgres_etl_spark.sources.store import _STAGED_INPUTS
 from tests.conftest import SF_SMOKE
 
@@ -69,6 +73,44 @@ def test_package_makes_scratch_dirs_in_one_place():
         for line in temp_uses(source, _OWNERS.get(path.name)):
             found.append(f"{path.relative_to(ROOT)}:{line}")
     assert not found, sorted(found)
+
+
+def test_remote_scratch_base_keeps_python_writers_local(
+    spark, tmp_path, monkeypatch
+):
+    """A remote-scheme scratch base (hdfs://, s3a://) serves only
+    ``shared=True`` callers. Every other scratch dir, such as the one
+    that holds the package zip shipped to workers, is written with
+    Python file APIs and goes under the local temp dir. The remote
+    base is a local dir that ``is_remote_path`` is patched to call
+    remote, so no remote filesystem is touched."""
+    remote = tmp_path / "remote"
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setenv("SPARK_GRAFT_SPILL_DIR", str(remote))
+    monkeypatch.setattr(
+        session, "is_remote_path", lambda p: p.startswith(str(remote))
+    )
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    monkeypatch.setattr(session, "_SCRATCH_ROOTS", {})
+    monkeypatch.setattr(registry, "_SHIPPED", set())
+    shipped = []
+    monkeypatch.setattr(spark.sparkContext, "addPyFile", shipped.append)
+
+    registry._ensure_package_on_workers(spark)
+    [zip_path] = shipped
+    assert zip_path.startswith(str(tmp)), zip_path
+    with zipfile.ZipFile(zip_path) as zf:
+        assert "prefect_flow_arc_kg_postgres_etl_spark/session.py" in zf.namelist()
+
+    local = session.scratch_dir(spark, "store_")
+    assert local.startswith(str(tmp)) and os.path.isdir(local), local
+    shared = session.scratch_dir(spark, "spill_", shared=True)
+    assert shared.startswith(f"{remote}/"), shared
+    assert not remote.exists()
+
+    session._remove_scratch_roots()
+    assert os.listdir(tmp) == []
 
 
 _LEAK_ENTRIES = [

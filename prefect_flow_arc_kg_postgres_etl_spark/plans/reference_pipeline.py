@@ -71,6 +71,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from prefect_flow_arc_kg_postgres_etl_spark.functions.coercion import _DUR_RE
 from prefect_flow_arc_kg_postgres_etl_spark.operators import merge as M
 from prefect_flow_arc_kg_postgres_etl_spark.session import (
     MISS,
@@ -475,6 +476,28 @@ SYNTHETIC_STORE_ADAPTER = ReferenceAdapter(
 )
 
 
+def _duration_seconds_sql(col: str, pattern: str, matches: str) -> str:
+    """SQL text of ``coercion.iso_duration_seconds`` over ``col`` (an
+    XSD duration literal), floored to whole seconds as BIGINT — the
+    seconds the reference's stream load stores (stream.ts:29-42), so
+    ``PT1M2S`` is 62, not the first digit run. ``pattern`` is the SQL
+    reference to ``coercion._DUR_RE`` and ``matches`` the dialect's
+    regex test over ``{v}`` and ``{p}``, so Spark and the DuckDB oracle
+    apply the one rule."""
+    v = f"trim({col})"
+    units = (31536000, 2592000, 604800, 86400, 3600, 60, 1)
+    secs = " + ".join(
+        f"coalesce(TRY_CAST(nullif(regexp_extract({v}, {pattern}, {i}), '') "
+        f"AS DOUBLE), 0) * {u}"
+        for i, u in enumerate(units, 1)
+    )
+    test = matches.format(v=v, p=pattern)
+    return (
+        f"CASE WHEN {test} AND length({v}) > 1 "
+        f"THEN TRY_CAST(floor({secs}) AS BIGINT) END"
+    )
+
+
 # update_partition.sql:1-366 as one Spark SQL statement. ``{table}``
 # placeholders are the graph.* frames (spark.sql's DataFrame
 # arguments); ``:name`` markers are the adapter's values, bound as
@@ -518,7 +541,7 @@ pid AS (
 dur AS (
   SELECT k, max(d) AS schema_duration FROM (
     SELECT r.premis_represents AS k,
-           CAST(regexp_extract(f.schema_duration, '(\\d+)', 1) AS BIGINT) AS d
+           @FILE_DURATION_SECONDS@ AS d
     FROM {file} f
     JOIN {includes} i ON i.file_id = f.subject
     JOIN {representation} r ON r.subject = i.representation_id
@@ -836,7 +859,10 @@ LEFT JOIN ipo ON ipo.k = ie.subject
 LEFT JOIN mf ON mf.k = ie.subject
 LEFT JOIN transcript ON transcript.k = ie.subject
 WHERE ie.relation_is_part_of IS NULL
-"""
+""".replace(
+    "@FILE_DURATION_SECONDS@",
+    _duration_seconds_sql("f.schema_duration", ":duration_re", "{v} RLIKE {p}"),
+)
 
 
 def build_reference_index_documents(
@@ -883,6 +909,7 @@ def build_reference_index_documents(
             "audio_false_carrier": adapter.audio_false_carrier,
             "reuse_category_ids": [k for k, _ in lookup],
             "reuse_category_labels": [v for _, v in lookup],
+            "duration_re": _DUR_RE,
         },
         **frames,
     )
@@ -1202,7 +1229,7 @@ pid AS (
 dur AS (
   SELECT k, MAX(d) AS schema_duration FROM (
     SELECT r.premis_represents AS k,
-           CAST(regexp_extract(f.schema_duration, '(\\d+)', 1) AS BIGINT) AS d
+           @FILE_DURATION_SECONDS@ AS d
     FROM p_file f
     JOIN p_includes i ON i.file_id = f.subject
     JOIN p_representation r ON r.subject = i.representation_id
@@ -1454,7 +1481,12 @@ LEFT JOIN ipo ON ipo.k = ie.subject
 LEFT JOIN mf ON mf.k = ie.subject
 LEFT JOIN transcript ON transcript.k = ie.subject
 WHERE ie.relation_is_part_of IS NULL
-"""
+""".replace(
+    "@FILE_DURATION_SECONDS@",
+    _duration_seconds_sql(
+        "f.schema_duration", f"'{_DUR_RE}'", "regexp_matches({v}, {p})"
+    ),
+)
 
 
 # ---------------------------------------------------------------------------

@@ -6,6 +6,7 @@ import signal
 import sys
 
 import pytest
+from hypothesis import settings
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -14,6 +15,12 @@ from prefect_flow_arc_kg_postgres_etl_spark.plans.kg import (
     _reference_query_path,
 )
 from prefect_flow_arc_kg_postgres_etl_spark.session import get_spark
+
+# The ``ci`` Hypothesis profile (tools/ci.py's sparql-properties stage
+# loads it with ``--hypothesis-profile=ci``): derandomized, and five
+# times Hypothesis' default example count, by which each property test
+# scales its own count (tests/test_sparql_properties._examples).
+settings.register_profile("ci", max_examples=500, derandomize=True)
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"

@@ -318,6 +318,29 @@ def test_previously_dead_arms_are_live(spark):
     assert e4["meemoofilm_color"] is None
 
 
+@pytest.mark.parametrize(
+    "literal,seconds",
+    [("PT1M2S", 62), ("PT1H2M3S", 3723), ("P1DT0S", 86400)],
+)
+def test_duration_literal_reads_as_seconds(spark, literal, seconds):
+    """A file's XSD duration counts in seconds (coercion's
+    iso_duration_seconds rule), in Spark and in the DuckDB oracle body:
+    the first digit run read PT1M2S as 1, below the fragment leg's 40."""
+    rows = _fixture_rows()
+    for f in rows["graph.file"]:
+        if f["subject"] == "fv":
+            f["schema_duration"] = literal
+    got = _docs_pdf(spark, rows).set_index("iri")
+    assert got.loc[E + "2", "schema_duration"] == seconds
+    con = duckdb.connect()
+    _duck_tables(con, rows)
+    want = con.execute("WITH " + RP._ORACLE_BODY).df().set_index("iri")
+    assert want.loc[E + "2", "schema_duration"] == seconds
+    assert got["schema_duration"].astype(str).sort_index().tolist() == (
+        want["schema_duration"].astype(str).sort_index().tolist()
+    )
+
+
 def test_graph_load_order_respects_fk():
     levels = RP.graph_load_order()
     seen: set[str] = set()

@@ -8,6 +8,7 @@ entries use is pinned in tests/test_triples.py."""
 from __future__ import annotations
 
 import glob
+import os
 
 import pytest
 
@@ -1762,20 +1763,25 @@ def test_disjoint_groups_cross_product_is_broadcast_not_cartesian(spark):
 def test_cross_join_probe_failure_does_not_broadcast(spark):
     """When the size probe of a variable-disjoint cross join raises, the
     right side's size is unknown, so it must not be broadcast: the
-    join falls back to the plain crossJoin (no BroadcastNestedLoopJoin
-    once size-based broadcasting is off)."""
+    join falls back to the plain cross join (no BroadcastNestedLoopJoin
+    once size-based broadcasting is off). The right side is a
+    checkpoint, so its plan carries no row bound or row count and only
+    the probe could size it."""
     from pyspark.sql import functions as F
 
     from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
 
     a = spark.range(3).toDF("x")
     # every row fails the assertion, so the probe's count raises
-    b = spark.range(3).toDF("y").filter(F.assert_true(F.col("y") < 0).isNull())
+    b = SQ._truncate_lineage(
+        spark.range(3).toDF("y").filter(F.assert_true(F.col("y") < 0).isNull())
+    )
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
-        df = SQ._join(a, b)
+        ev = SQ._Eval(a, [])
+        df = ev.to_df(ev._join(ev.frame_rel(a), ev.frame_rel(b)))
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
@@ -1783,3 +1789,266 @@ def test_cross_join_probe_failure_does_not_broadcast(spark):
         spark.conf.set(key, prev)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" in plan
+
+
+def test_cross_join_probe_runs_only_where_size_is_unknown(spark):
+    """A cross join with an inline VALUES table is sized from the table
+    (exact row count) and starts no probe job. A right side with no
+    size statistics (a pattern scan over a stat-less store) is probed
+    once: the second compile of the same query over the same quads
+    reads the memoised probe and starts no job."""
+    from prefect_flow_arc_kg_postgres_etl_spark.operators import sparql as SQ
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    quads = _quads(
+        spark,
+        [
+            ("s1", "urn:p", "o1", None, "g"),
+            ("s2", "urn:p", "o2", None, "g"),
+            ("x1", "urn:q", "y1", None, "g"),
+        ],
+    )
+    values = 'SELECT * WHERE { ?s <urn:p> ?o . VALUES ?k { "a" "b" } }'
+    pattern = "SELECT * WHERE { ?s <urn:p> ?o . ?x <urn:q> ?y }"
+
+    def compile_jobs(text):
+        SQ._PLAN_CACHE.clear()
+        before = dag.numTotalJobs()
+        df = SQ.select_query(quads, text)
+        return dag.numTotalJobs() - before, df
+
+    SQ.clear_plan_cache()
+    try:
+        first, df = compile_jobs(values)
+        assert len(df.collect()) == 4
+        second, _ = compile_jobs(values)
+        assert (first, second) == (0, 0)
+        first, df = compile_jobs(pattern)
+        assert len(df.collect()) == 2
+        second, _ = compile_jobs(pattern)
+        assert first >= 1 and second == 0
+    finally:
+        SQ.clear_plan_cache()
+
+
+@pytest.fixture(scope="module")
+def kg7(spark, tmp_path_factory):
+    """perfbench's seed-7 knowledge graph (1000 entities), both nights,
+    and its view query."""
+    from perfbench import gen
+
+    root = str(tmp_path_factory.mktemp("kg7"))
+    gen.gen_kg(root, 7, 1000)
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(here, "perfbench", "kg_view.sparql")) as f:
+        text = f.read()
+    return {
+        "night1": spark.read.parquet(os.path.join(root, "night1")),
+        "night2": spark.read.parquet(os.path.join(root, "night2")),
+        "text": text,
+        "since": gen.KG_SINCE,
+    }
+
+
+def test_kg_view_output_hash_pinned(kg7):
+    """The kg_view CONSTRUCT over the seed-7 graph returns the same
+    triples the DataFrame-built evaluator returned on both nights
+    (count and an order-free hash), night 2 scoped by ?since."""
+    SQ.clear_plan_cache()
+    got = []
+    for night, params in (("night1", None), ("night2", {"since": kg7["since"]})):
+        r = (
+            SQ.construct_query(kg7[night], kg7["text"], params)
+            .selectExpr(
+                "count(*) AS n",
+                "sum(cast(xxhash64(subject, predicate, object) "
+                "AS decimal(38,0))) AS h",
+            )
+            .collect()[0]
+        )
+        got.append((r.n, int(r.h)))
+    SQ.clear_plan_cache()
+    assert got == [
+        (19156, -166906796354244901485),
+        (1441, -400552983353866370782),
+    ]
+
+
+def test_kg_view_compile_py4j_budget(kg7, monkeypatch):
+    """Compiling kg_view.sparql (plan cache cleared, so every star is
+    compiled and the fan-out probe runs) makes at most a third of the
+    py4j round trips the DataFrame builder made. Counted at
+    ClientServerConnection.send_command after one warm-up compile,
+    leaving out py4j's reference-release messages, whose number depends
+    on when Python frees objects of earlier work: the DataFrame/Column
+    builder made 1959 round trips on night 1 (1955 on night 2; seed 7,
+    4 cores); one SQL statement per segment makes 343 (347)."""
+    from py4j.clientserver import ClientServerConnection
+
+    SQ.clear_plan_cache()
+    SQ.construct_query(kg7["night1"], kg7["text"])
+    SQ.clear_plan_cache()
+    calls = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *a, **k):
+        if not command.startswith("m\nd\n"):
+            calls[0] += 1
+        return send(self, command, *a, **k)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    SQ.construct_query(kg7["night1"], kg7["text"])
+    monkeypatch.setattr(ClientServerConnection, "send_command", send)
+    SQ.clear_plan_cache()
+    assert 0 < calls[0] <= 1959 // 3, calls[0]
+
+
+_NASTY = [
+    "it's",
+    "back\\slash",
+    "tick`tick",
+    ":p0",
+    "{quads}",
+    "${x}",
+    "x' OR '1'='1",
+    "all'\\`:p1{f1}${y}",
+]
+
+
+def _sparql_string(value: str) -> str:
+    return '"' + value.replace("\\", "\\\\").replace('"', '\\"') + '"'
+
+
+def test_literals_and_params_round_trip_byte_exact(spark):
+    """Values containing quotes, backslashes, backticks, parameter
+    markers, frame placeholders and variable references are bound as
+    parameters, never spliced into the SQL text: each comes back
+    byte-exact, and each selects exactly its own row."""
+    rows = [(f"e{i}", "urn:name", v, None, "g") for i, v in enumerate(_NASTY)]
+    quads = _quads(spark, rows)
+    SQ.clear_plan_cache()
+    try:
+        got = {
+            r.object
+            for r in SQ.construct_query(
+                quads, "CONSTRUCT { ?e <urn:out> ?n } WHERE { ?e <urn:name> ?n }"
+            ).collect()
+        }
+        assert got == set(_NASTY)
+        for i, v in enumerate(_NASTY):
+            lit = _sparql_string(v)
+            text = (
+                "CONSTRUCT { ?e <urn:out> ?c . ?e <urn:param> ?p } WHERE { "
+                f"?e <urn:name> ?n FILTER (?n = {lit}) "
+                f"BIND ({lit} AS ?c) BIND (?since AS ?p) }}"
+            )
+            out = {
+                (r.subject, r.predicate, r.object)
+                for r in SQ.construct_query(quads, text, {"since": v}).collect()
+            }
+            assert out == {(f"e{i}", "urn:out", v), (f"e{i}", "urn:param", v)}
+            sel = SQ.select_query(
+                quads,
+                "SELECT ?e WHERE { ?e <urn:name> ?n FILTER (?n = ?since) }",
+                {"since": v},
+            )
+            assert [r.e for r in sel.collect()] == [f"e{i}"]
+    finally:
+        SQ.clear_plan_cache()
+
+
+def test_filtered_optional_joins_its_star(spark, monkeypatch):
+    """A single-triple OPTIONAL whose FILTER mentions only its own
+    variables is an optional member of the star (the filter inside the
+    member's condition), so later plain OPTIONALs join the same star;
+    a FILTER over an outer variable keeps the left join, as a LeftJoin
+    condition. Star fusion on and off give the same solutions."""
+    quads = _quads(
+        spark,
+        [
+            ("e1", "urn:a", "Doc", None, "g"),
+            ("e1", "urn:key", "k1", None, "g"),
+            ("e1", "urn:name", "boek", "nl", "g"),
+            ("e1", "urn:name", "book", "en", "g"),
+            ("e1", "urn:desc", "d1", None, "g"),
+            ("e1", "urn:alias", "k1", None, "g"),
+            ("e1", "urn:alias", "zz", None, "g"),
+            ("e2", "urn:a", "Doc", None, "g"),
+            ("e2", "urn:key", "k2", None, "g"),
+            ("e2", "urn:name", "only en", "en", "g"),
+            ("e2", "urn:alias", "nope", None, "g"),
+        ],
+    )
+    sel = """
+    SELECT ?e ?n ?d ?al WHERE {
+      ?e <urn:a> "Doc" ; <urn:key> ?k .
+      OPTIONAL { ?e <urn:name> ?n FILTER langMatches(lang(?n), "nl") }
+      OPTIONAL { ?e <urn:desc> ?d }
+      OPTIONAL { ?e <urn:alias> ?al FILTER (?al = ?k) }
+    }
+    """
+    star = SQ._Eval._star_scan
+    members = []
+
+    def spy(self, key, ts, opt_ts=(), values=None):
+        members.append(len(opt_ts))
+        return star(self, key, ts, opt_ts, values)
+
+    def rows(fusion: str):
+        monkeypatch.setenv("SPARK_GRAFT_SPARQL_STAR_FUSION", fusion)
+        SQ.clear_plan_cache()
+        out = sorted(
+            map(tuple, SQ.select_query(quads, sel).collect()),
+            key=lambda r: tuple("" if x is None else x for x in r),
+        )
+        SQ.clear_plan_cache()
+        return out
+
+    monkeypatch.setattr(SQ._Eval, "_star_scan", spy)
+    fused = rows("1")
+    assert members == [2]  # both own-variable OPTIONALs joined the star
+    assert rows("0") == fused
+    assert fused == [
+        ("e1", "boek", "d1", "k1"),
+        ("e2", None, None, None),
+    ]
+
+
+def test_parameter_and_frame_registration_is_thread_safe(spark):
+    """Star pivots compile on a thread pool and register parameters and
+    frame arguments concurrently: every distinct value gets exactly one
+    ``:pN`` marker and every frame its own name."""
+    import sys
+    import threading
+
+    quads = _quads(spark, [("s", "urn:p", "o", None, None)])
+    ev = SQ._Eval(quads, [])
+    values = [f"v{i % 50}" for i in range(800)]
+    markers: dict[str, set] = {}
+    frames: list[str] = []
+    errors: list[BaseException] = []
+
+    def work(k: int) -> None:
+        try:
+            for v in values[k::16]:
+                markers.setdefault(v, set()).add(ev.lit(v))
+                frames.append(ev.frame_rel(quads, ["subject"]).sql)
+        except BaseException as e:  # reported by the assertion below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(k,)) for k in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert all(len(m) == 1 for m in markers.values())
+    assert sorted(ev.args.values()) == sorted(set(values))
+    assert len(set(frames)) == len(frames) == len(values)
+    assert len(ev.frames) == len(values) + 1  # plus {quads}

@@ -1,15 +1,20 @@
 """Property-based differential testing of the SPARQL text compiler.
 
 Hypothesis generates small random quad stores and random queries
-(BGPs with shared variables, OPTIONAL groups, UNION branches —
-including the fused single-pattern shape — equality FILTERs, MINUS and
-FILTER NOT EXISTS, whose variables may be unbound in a solution), renders them
-to query TEXT (so the parser is exercised too), and compares
-``construct_query``'s output against a 50-line reference evaluator
-implementing SPARQL semantics directly (compatible-binding joins,
-left-join OPTIONAL, bag UNION, MINUS, group-end filters, distinct
-CONSTRUCT output). This pins the compiler's algebra on shapes the nine
-production files never take.
+(BGPs with shared variables, OPTIONAL groups — also with a FILTER over
+the optional triple's own variables or over an outer one — UNION
+branches — including the fused single-pattern shape — equality
+FILTERs, MINUS and FILTER NOT EXISTS, whose variables may be unbound in
+a solution), renders them to query TEXT (so the parser is exercised
+too), and compares ``construct_query``'s output against a 50-line
+reference evaluator implementing SPARQL semantics directly
+(compatible-binding joins, left-join OPTIONAL with its condition, bag
+UNION, MINUS, group-end filters, distinct CONSTRUCT output). This pins
+the compiler's algebra on shapes the nine production files never take.
+
+Each test's example count scales with the loaded Hypothesis profile
+(``_examples``): tools/ci.py runs the file under the ``ci`` profile
+registered in tests/conftest.py, derandomized at five times the count.
 """
 
 from __future__ import annotations
@@ -28,6 +33,12 @@ SUBJECTS = [f"urn:s{i}" for i in range(4)]
 PREDS = [f"urn:p{i}" for i in range(3)]
 OBJECTS = [f"urn:o{i}" for i in range(3)] + SUBJECTS[:2]
 VARS = ["?a", "?b", "?c"]
+
+
+def _examples(n: int) -> int:
+    """``n`` examples at Hypothesis' default profile (max_examples 100),
+    scaled by the loaded profile's max_examples."""
+    return max(1, n * settings.default.max_examples // 100)
 
 
 quad_st = st.tuples(
@@ -61,9 +72,20 @@ def query_st(draw):
                 st.one_of(st.sampled_from(VARS), term_o),
             ),
         )
+    # a FILTER inside the OPTIONAL group: equality of its own variable
+    # with a constant, langMatches on it (the store has no tags, so it
+    # never holds), or equality with a variable that may be outer —
+    # the LeftJoin condition
+    opt_filter = st.one_of(
+        st.none(),
+        st.tuples(st.just("eq_const"), st.sampled_from(OBJECTS)),
+        st.tuples(st.just("lang"), st.just("nl")),
+        st.tuples(st.just("eq_var"), st.sampled_from(VARS)),
+    )
     return {
         "bgp": bgp,
         "optional": draw(st.one_of(st.none(), triple_st)),
+        "opt_filter": draw(opt_filter),
         "union": draw(st.one_of(st.none(), st.tuples(triple_st, triple_st))),
         "filter_eq": draw(st.booleans()),
         "minus": draw(st.one_of(st.none(), triple_st)),
@@ -79,13 +101,50 @@ def _render_triple(tr) -> str:
     return f"{_render(tr[0])} <{tr[1]}> {_render(tr[2])} ."
 
 
+def _opt_filter(q):
+    """(own variable, filter) of the OPTIONAL group, or None: the
+    filter is about the optional triple's object variable, else its
+    subject variable."""
+    if q["optional"] is None or q["opt_filter"] is None:
+        return None
+    s, _, o = q["optional"]
+    own = o if o.startswith("?") else s if s.startswith("?") else None
+    return None if own is None else (own, q["opt_filter"])
+
+
+def _render_opt_filter(own, f) -> str:
+    kind, arg = f
+    if kind == "eq_const":
+        return f"FILTER ({own} = <{arg}>)"
+    if kind == "lang":
+        return f'FILTER langMatches(lang({own}), "{arg}")'
+    return f"FILTER ({own} = {arg})"
+
+
+def _holds(own, f, b) -> bool:
+    """The OPTIONAL filter over a merged solution; an unbound variable
+    is an error, which rejects."""
+    kind, arg = f
+    if own not in b:
+        return False
+    if kind == "eq_const":
+        return b[own] == arg
+    if kind == "lang":
+        return False  # model 1's literals carry no language tag
+    return arg in b and b[own] == b[arg]
+
+
 def _to_text(q) -> str:
     lines = [_render_triple(t) for t in q["bgp"]]
     if q["not_exists"] is not None:
         # written first: it still applies at group end
         lines.append("FILTER NOT EXISTS { %s }" % _render_triple(q["not_exists"]))
     if q["optional"] is not None:
-        lines.append("OPTIONAL { %s }" % _render_triple(q["optional"]))
+        of = _opt_filter(q)
+        inner = _render_triple(q["optional"])
+        if of is not None:
+            inner += " " + _render_opt_filter(*of)
+        lines.append("OPTIONAL { %s }" % inner)
     if q["union"] is not None:
         a, b = q["union"]
         lines.append(
@@ -134,9 +193,15 @@ def _eval_bgp(triples, quads, bindings):
 def _ref_eval(q, quads):
     sols = _eval_bgp(q["bgp"], quads, [{}])
     if q["optional"] is not None:
+        # LeftJoin(sols, optional, F): F over the merged solution
+        of = _opt_filter(q)
         out = []
         for b in sols:
-            ext = list(_match(q["optional"], quads, b))
+            ext = [
+                m
+                for m in _match(q["optional"], quads, b)
+                if of is None or _holds(*of, m)
+            ]
             out.extend(ext if ext else [b])
         sols = out
     if q["union"] is not None:
@@ -182,7 +247,7 @@ def _ref_eval(q, quads):
 
 
 @settings(
-    max_examples=12,
+    max_examples=_examples(12),
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
 )
@@ -288,7 +353,7 @@ def _lmatch(tr, quads, binding):
 
 
 @settings(
-    max_examples=12,
+    max_examples=_examples(12),
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
 )
@@ -374,7 +439,7 @@ def _closure(edges, mod):
 
 
 @settings(
-    max_examples=10,
+    max_examples=_examples(10),
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
 )
@@ -439,7 +504,7 @@ squery_st = st.fixed_dictionaries(
 
 
 @settings(
-    max_examples=8,
+    max_examples=_examples(8),
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
 )

@@ -1,19 +1,23 @@
 """Round gate: refuse to call a round done while anything is red.
 
-Runs, in order, six checks:
+Runs, in order, seven checks:
 
   1. ``pytest tests/ -q``               (unit + oracle + plan-audit suite)
-  2. ``pytest perfbench/tests -q``      (the benchmark's entry points still
+  2. ``pytest tests/test_sparql_properties.py --hypothesis-profile=ci``
+                                        (the SPARQL differential property
+                                         tests, derandomized, five times
+                                         their default example count)
+  3. ``pytest perfbench/tests -q``      (the benchmark's entry points still
                                          run against the package)
-  3. ``perfbench/run.py --workload sync_dedup`` (one seeded run of the
+  4. ``perfbench/run.py --workload sync_dedup`` (one seeded run of the
                                          table-sync + dedup workload; its
                                          store-hash, RunStats-status and
                                          planted-pair checks must pass)
-  4. ``perfbench/run.py --workload kg_nightly`` (one seeded run of the
+  5. ``perfbench/run.py --workload kg_nightly`` (one seeded run of the
                                          KG load; the documents of both
                                          nights must match the generator)
-  5. ``tools/check_oracle.py <sf_dir>`` (oracle correctness gate)
-  6. ``python bench.py``                (must exit 0 and print its JSON line)
+  6. ``tools/check_oracle.py <sf_dir>`` (oracle correctness gate)
+  7. ``python bench.py``                (must exit 0 and print its JSON line)
 
 Exit code is non-zero if ANY stage fails, so ``python tools/ci.py`` is
 the one command to run before ending a round (VERDICT r3: a red suite
@@ -168,6 +172,11 @@ def main() -> int:
         ok = run("pytest", [py, "-m", "pytest", "tests/", "-q"])
     else:
         ok = run_pytest_sharded(py)
+    ok = run(
+        "sparql-properties",
+        [py, "-m", "pytest", "tests/test_sparql_properties.py", "-q",
+         "-p", "no:cacheprovider", "--hypothesis-profile=ci"],
+    ) and ok
     ok = run(
         "perfbench-tests",
         [py, "-m", "pytest", "perfbench/tests", "-q", "-p", "no:cacheprovider"],

@@ -654,11 +654,12 @@ def ingest_flow(
     never evicted by a later near-copy, so training-set membership is
     stable across ingests) and within itself (smaller id wins), then
     the survivors append as the next store version. History is never
-    re-paired: the per-batch cost is the batch's signature probes
-    against the landed index plus in-batch banding
-    (operators/dedup.incremental_dup_pairs) — the property that makes
-    continuous ingestion affordable at 100 TB where any re-pairing of
-    the corpus is a non-starter.
+    re-paired (no history x history candidates), but each batch runs
+    ``operators/dedup.incremental_dup_pairs``, which re-derives every
+    history document's MinHash signature and gram set from the landed
+    corpus: per-batch cost is linear in history. Only the
+    persisted-index path (``plans/pipeline.dedup_incremental`` over
+    ``incremental_dup_pairs_indexed``) probes a landed index instead.
 
     History-wins applies in BOTH id orientations (a batch doc dups a
     landed doc regardless of which id is smaller). The batch-invariance

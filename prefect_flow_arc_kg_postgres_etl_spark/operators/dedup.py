@@ -20,7 +20,7 @@ from prefect_flow_arc_kg_postgres_etl_spark.functions.text import (
     fingerprint,
     words,
 )
-from prefect_flow_arc_kg_postgres_etl_spark.session import MISS, AppLRU
+from prefect_flow_arc_kg_postgres_etl_spark.session import MISS, AppLRU, listing_stamp
 from prefect_flow_arc_kg_postgres_etl_spark.sources.store import read_parquet
 
 
@@ -788,64 +788,27 @@ def _index_partitions(docs: int) -> int:
 
 
 # Per-process cache of persisted index _meta: (application, path),
-# stamped with the listing stamp of the _meta dir -> collected rows (or
-# None for a pre-_meta index). The _meta is four ints of BUILD-TIME
+# stamped with session.listing_stamp of the _meta dir -> collected rows
+# (or None for a pre-_meta index). The _meta is four ints of BUILD-TIME
 # configuration — a catalog lookup, not query data — but reading it
 # through spark.read.json costs a collect (one Spark job) per probe
 # call (guide §1: don't pay per-call for what cannot change under the
 # key); the read passes _META_SCHEMA, so a miss starts no
-# schema-inference job besides. The stamp hashes the
-# (name, length, mtime) of every file in the _meta directory: a rebuilt
-# index rewrites _meta with new part-file names (each write has its own
-# job id), so even a rewrite inside one coarse mtime tick with equal
-# lengths changes the stamp and a stale hit is impossible. The listing
-# comes from driver-side os.scandir, or from the Hadoop FileSystem API
-# when the path is not visible to it (hdfs://, s3a://, file: URIs —
-# r12 ADVICE); if THAT fails too, the cache is bypassed entirely (read
-# fresh every call) rather than pinned to a key that would serve a
-# stale _meta for a rebuilt index.
+# schema-inference job besides. A rebuilt index rewrites _meta with new
+# part-file names, so its stamp changes even inside one coarse mtime
+# tick with equal lengths; a _meta nothing can list is read fresh every
+# call.
 _INDEX_META_CACHE = AppLRU(64)
 _META_SCHEMA = "k long, bands long, n long, partitions long"
-
-
-def _listing_stamp(files) -> int:
-    """Order-independent stamp of a directory listing, given as
-    (name, length, mtime) tuples."""
-    return hash(tuple(sorted(files)))
-
-
-def _meta_stamp(spark, index_path: str) -> "int | None":
-    import os as _os
-
-    meta = f"{index_path}/_meta"
-    try:
-        with _os.scandir(meta) as it:
-            return _listing_stamp(
-                (e.name, st.st_size, st.st_mtime_ns)
-                for e in it
-                for st in (e.stat(),)
-            )
-    except OSError:
-        pass
-    try:
-        hpath = spark._jvm.org.apache.hadoop.fs.Path(meta)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        return _listing_stamp(
-            (st.getPath().getName(), st.getLen(), st.getModificationTime())
-            for st in fs.listStatus(hpath)
-        )
-    except Exception:
-        return None
 
 
 def _read_index_meta(spark, index_path: str):
     from pyspark.errors import AnalysisException
 
-    stamp = _meta_stamp(spark, index_path)
-    if stamp is not None:
-        hit = _INDEX_META_CACHE.get(spark, index_path, stamp)
-        if hit is not MISS:
-            return hit
+    stamp = listing_stamp(spark, f"{index_path}/_meta")
+    hit = _INDEX_META_CACHE.get(spark, index_path, stamp)
+    if hit is not MISS:
+        return hit
     try:
         rows = spark.read.schema(_META_SCHEMA).json(f"{index_path}/_meta").collect()
     except AnalysisException as exc:
@@ -854,8 +817,7 @@ def _read_index_meta(spark, index_path: str):
         if "PATH_NOT_FOUND" not in (exc.getErrorClass() or ""):
             raise
         rows = None
-    if stamp is not None:
-        _INDEX_META_CACHE.put(spark, index_path, rows, stamp)
+    _INDEX_META_CACHE.put(spark, index_path, rows, stamp)
     return rows
 
 

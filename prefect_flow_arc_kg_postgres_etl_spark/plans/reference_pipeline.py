@@ -76,66 +76,17 @@ from prefect_flow_arc_kg_postgres_etl_spark.operators import merge as M
 from prefect_flow_arc_kg_postgres_etl_spark.session import (
     MISS,
     AppLRU,
-    hadoop_fs,
-    is_remote_path,
-    local_path,
+    listing_stamp,
     scratch_dir,
 )
 from prefect_flow_arc_kg_postgres_etl_spark.sources.store import read_parquet
 
 _NS = "urn:kg-to-postgres:"
 
-# Landed view graphs: sf_dir -> spill dir, stamped with the store
-# fingerprint (file sizes + mtimes under sf_dir), so a changed store
-# re-lands instead of serving stale triples (r9 ADVICE).
+# Landed view graphs: sf_dir -> spill dir, stamped with
+# session.listing_stamp of sf_dir, so a changed store re-lands instead
+# of serving stale triples (r9 ADVICE).
 _VIEW_CACHE = AppLRU(8)
-
-# Unique tokens for stores that cannot be fingerprinted (remote scheme,
-# no live session): each call gets a fresh key, so the cache is
-# BYPASSED rather than degenerating to a shared (0,0) key that would
-# serve stale data for a mutated store (r10 ADVICE).
-_FP_SEQ = iter(range(1, 1 << 30))
-
-
-def _store_fingerprint(
-    sf_dir: str, spark: SparkSession | None = None
-) -> tuple[int, int]:
-    """(total bytes, latest mtime) under sf_dir — a driver-side
-    metadata sweep (same cost class as Spark's own file listing).
-    Remote-scheme stores are swept via the Hadoop FileSystem listing
-    (os.walk yields nothing there — r10 ADVICE); if no session is
-    available to reach the JVM, the fingerprint is a unique token so
-    callers re-land instead of serving a stale cache entry."""
-    import os
-
-    if is_remote_path(sf_dir):
-        if spark is None:
-            from pyspark.sql import SparkSession as _SS
-
-            spark = _SS.getActiveSession()
-        if spark is not None:
-            try:
-                fs, hpath = hadoop_fs(spark, sf_dir)
-                total = latest = 0
-                it = fs.listFiles(hpath, True)
-                while it.hasNext():
-                    st = it.next()
-                    total += st.getLen()
-                    latest = max(latest, st.getModificationTime())
-                return total, latest
-            except Exception:
-                pass
-        return (-1, next(_FP_SEQ))
-    total = latest = 0
-    for base, _dirs, files in os.walk(local_path(sf_dir)):
-        for fn in files:
-            try:
-                st = os.stat(os.path.join(base, fn))
-            except OSError:
-                continue
-            total += st.st_size
-            latest = max(latest, st.st_mtime_ns)
-    return total, latest
 
 
 # Every table the nine production queries emit, with the full column
@@ -311,12 +262,12 @@ def all_view_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         kg.kg_construct_real_query_av_video,
         kg.kg_construct_real_query_av_complex,
     ]
-    # One landing per (session, sf_dir, store fingerprint): re-running
+    # One landing per (session, sf_dir, listing stamp): re-running
     # the composed pipeline (bench passes, repeated driver calls) reuses
     # the landed view graph the same way the compiled verbatim plans
     # reuse the plan cache; a CHANGED store under the same path misses
     # and re-lands.
-    fp = _store_fingerprint(sf_dir, spark)
+    fp = listing_stamp(spark, sf_dir)
     spill = _VIEW_CACHE.get(spark, sf_dir, fp)
     if spill is MISS:
         import gc
@@ -916,7 +867,7 @@ def build_reference_index_documents(
 
 
 # Built document frames, keyed by (application, sf_dir) and stamped
-# with the store fingerprint, so a mutated store under the same path
+# with the store's listing stamp, so a mutated store under the same path
 # misses and its rebuild replaces the entry. The documents are the
 # FAN-IN of the whole composition (tens of thousands of rows from a
 # 23-join star over millions of triples) and THREE registered entries
@@ -935,14 +886,14 @@ _DOCS_CACHE = AppLRU(8)
 # planning-bound drivers). Returning the SAME DataFrame re-uses the
 # analyzed plan while every action still re-EXECUTES it end to end —
 # a plan cache, not a result cache. Keyed by (application, tag,
-# sf_dir) and stamped with the store fingerprint like _DOCS_CACHE, so a
+# sf_dir) and stamped with the store's listing stamp like _DOCS_CACHE, so a
 # mutated store recompiles.
 _FLOW_PLAN_CACHE = AppLRU(32)
 
 
 def _flow_plan_cached(spark, sf_dir, tag, build):
     key = (tag, sf_dir)
-    fp = _store_fingerprint(sf_dir, spark)
+    fp = listing_stamp(spark, sf_dir)
     hit = _FLOW_PLAN_CACHE.get(spark, key, fp)
     if hit is not MISS:
         return hit
@@ -962,12 +913,12 @@ def flow_reference_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     cascade, NDJSON feed) plan over a scan leaf instead of the
     ~3000-node build lineage, and every action re-reads the documents
     from storage, as a fresh session reading the committed snapshot
-    would. The result is cached per (application, sf_dir, store
-    fingerprint). A changed store lands again, and the old dir stays
+    would. The result is cached per (application, sf_dir, listing
+    stamp of the store). A changed store lands again, and the old dir stays
     until interpreter exit because frames already returned still scan
     it. The durable form of this landing is reference_pipeline_flow's
     store commit."""
-    fp = _store_fingerprint(sf_dir, spark)
+    fp = listing_stamp(spark, sf_dir)
     hit = _DOCS_CACHE.get(spark, sf_dir, fp)
     if hit is not MISS:
         return hit

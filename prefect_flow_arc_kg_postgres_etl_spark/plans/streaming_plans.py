@@ -25,14 +25,9 @@ from prefect_flow_arc_kg_postgres_etl_spark.streaming.sync import (
     windowed_agg_stream_watermarked,
 )
 
-_COUNTER = {"n": 0}
-
 
 def stream_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _COUNTER["n"] += 1
-    return windowed_agg_stream(
-        spark, sf_dir, query_name=f"stream_windowed_agg_{_COUNTER['n']}"
-    )
+    return windowed_agg_stream(spark, sf_dir)
 
 
 STREAM_WINDOWED_ORACLE = TUMBLING_ORACLE
@@ -73,10 +68,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded source the closed set is deterministic — every session
     except the per-user last — so this is oracle-backed: the batch
     sessionization minus each user's final session."""
-    _COUNTER["n"] += 1
-    return sessionize_stream(
-        spark, sf_dir, query_name=f"stream_sessionize_{_COUNTER['n']}"
-    )
+    return sessionize_stream(spark, sf_dir)
 
 
 # Batch sessionization (relational.SESSIONIZE_ORACLE semantics) minus
@@ -118,10 +110,7 @@ def stream_sessionize_buffered(spark: SparkSession, sf_dir: str) -> DataFrame:
         sessionize_stream_buffered,
     )
 
-    _COUNTER["n"] += 1
-    return sessionize_stream_buffered(
-        spark, sf_dir, query_name=f"stream_sessionize_buffered_{_COUNTER['n']}"
-    )
+    return sessionize_stream_buffered(spark, sf_dir)
 
 
 # Batch sessionization restricted to watermark-finalized sessions:
@@ -160,8 +149,7 @@ HAVING EPOCH_US(MAX(ts)) <
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4: watermarked streaming dedup of a doubled source; final table
     == the plain events table, which is the batch-SQL oracle."""
-    _COUNTER["n"] += 1
-    return dedup_stream(spark, sf_dir, query_name=f"stream_dedup_{_COUNTER['n']}")
+    return dedup_stream(spark, sf_dir)
 
 
 STREAM_DEDUP_ORACLE = """
@@ -209,8 +197,7 @@ def stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     table equals the batch LEFT join, which is the SQL oracle."""
     from prefect_flow_arc_kg_postgres_etl_spark.streaming.sync import enrich_stream
 
-    _COUNTER["n"] += 1
-    return enrich_stream(spark, sf_dir, query_name=f"stream_enrich_{_COUNTER['n']}")
+    return enrich_stream(spark, sf_dir)
 
 
 STREAM_ENRICH_ORACLE = """
@@ -234,8 +221,7 @@ def stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle."""
     from prefect_flow_arc_kg_postgres_etl_spark.streaming.sync import funnel_stream
 
-    _COUNTER["n"] += 1
-    return funnel_stream(spark, sf_dir, query_name=f"stream_funnel_{_COUNTER['n']}")
+    return funnel_stream(spark, sf_dir)
 
 
 # On a bounded source the stateful funnel's emitted set equals the
@@ -252,10 +238,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         interval_join_stream,
     )
 
-    _COUNTER["n"] += 1
-    return interval_join_stream(
-        spark, sf_dir, query_name=f"stream_interval_join_{_COUNTER['n']}"
-    )
+    return interval_join_stream(spark, sf_dir)
 
 
 STREAM_INTERVAL_JOIN_ORACLE = """
@@ -284,10 +267,7 @@ def stream_funnel_buffered(spark: SparkSession, sf_dir: str) -> DataFrame:
         funnel_stream_buffered,
     )
 
-    _COUNTER["n"] += 1
-    return funnel_stream_buffered(
-        spark, sf_dir, query_name=f"stream_funnel_buffered_{_COUNTER['n']}"
-    )
+    return funnel_stream_buffered(spark, sf_dir)
 
 
 # The batch funnel restricted to watermark-finalized purchases.
@@ -526,10 +506,7 @@ def stream_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         gap_fill_stream,
     )
 
-    _COUNTER["n"] += 1
-    return gap_fill_stream(
-        spark, sf_dir, query_name=f"stream_gap_fill_{_COUNTER['n']}"
-    )
+    return gap_fill_stream(spark, sf_dir)
 
 
 # Per type: every hour bucket from the type's first observed hour up to

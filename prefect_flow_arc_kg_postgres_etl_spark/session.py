@@ -6,8 +6,9 @@ skew-join), UTC session timezone (oracle comparison + sanity), Arrow for
 the few Pandas-UDF paths, shuffle partitions sized to cores locally
 (cluster: size to total cores / target partition bytes).
 
-Also the one owner of builders' scratch space (``scratch_dir``) and the
-driver-side application cache (``AppLRU``).
+Also the one owner of builders' scratch space (``scratch_dir``), the
+driver-side application cache (``AppLRU``) and the file-listing stamp
+its entries are checked against (``listing_stamp``).
 """
 
 from __future__ import annotations
@@ -33,8 +34,8 @@ class AppLRU:
     The application id, not the session object, scopes an entry: ids
     are unique per SparkContext, so a stopped session's entries can
     never be served to a new one (a recycled Python ``id()`` could).
-    An entry put with a ``stamp`` (a store fingerprint, a listing
-    stamp) hits only when read with the same stamp; a put replaces it.
+    An entry put with a ``stamp`` (a ``listing_stamp``) hits only when
+    read with the same stamp; a put replaces it.
     A lock guards every access: the per-organisation fan-out and the
     star compile pool read and fill these caches from threads. Values
     are built outside the lock by the caller, so two threads missing
@@ -96,6 +97,41 @@ def hadoop_fs(spark: SparkSession, path: str):
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def listing_stamp(spark: SparkSession | None, path: str):
+    """Stamp of every file under ``path``, for ``AppLRU`` entries that
+    must miss once the files change: a hash of each file's (path,
+    length, mtime). A rewrite lands new part-file names (each write has
+    its own job id), so it changes the stamp even at equal sizes inside
+    one mtime tick. A local path (``file:`` URIs included) is listed
+    with os.walk, any other scheme through the Hadoop FileSystem. When
+    nothing can list ``path`` the stamp is a fresh object, equal to no
+    other stamp, so the cache is bypassed rather than serving a stale
+    entry (a missing local directory included)."""
+    files = []
+    try:
+        if is_remote_path(path):
+            fs, hpath = hadoop_fs(spark, path)
+            it = fs.listFiles(hpath, True)
+            while it.hasNext():
+                st = it.next()
+                files.append(
+                    (st.getPath().toString(), st.getLen(), st.getModificationTime())
+                )
+        else:
+            for base, _dirs, names in os.walk(local_path(path), onerror=_reraise):
+                for name in names:
+                    full = os.path.join(base, name)
+                    st = os.stat(full)
+                    files.append((full, st.st_size, st.st_mtime_ns))
+    except Exception:
+        return object()
+    return hash(tuple(sorted(files)))
+
+
+def _reraise(err: OSError):
+    raise err
 
 
 # This process's scratch root under each scratch base it has used

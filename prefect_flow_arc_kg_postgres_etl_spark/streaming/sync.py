@@ -8,44 +8,95 @@ applies the same ``operators.merge.upsert`` used in batch, and windowed
 aggregations maintain the continuously-updated stats the index flow
 reads (reference: flows/main_flow.py orchestration + database.ts merge).
 
-Local tests drive these with the file source + memory/parquet sinks and
-``processAllAvailable()`` (synchronous drain); on a cluster the same
-code runs against Kafka/object-store sources untouched.
+Every query streams from ``table_stream`` and runs through ``_run``:
+one ``availableNow`` trigger (drain what the source holds, then stop)
+into a memory table, a parquet path or a foreachBatch function. Local
+tests drive them over the file source; on a cluster the same code runs
+against Kafka/object-store sources untouched.
 """
 
 from __future__ import annotations
 
+import uuid
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from prefect_flow_arc_kg_postgres_etl_spark.sources import catalog, store
 from prefect_flow_arc_kg_postgres_etl_spark.sources.store import read_parquet
 
 
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events table.
+def table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File-source stream over ``<sf_dir>/<table>.parquet``.
 
     The raw schema and any int64-epoch -> timestamp conversion are
     DERIVED from a batch read of the same file (sources/catalog.py
     read_raw + epoch_conversions), so batch and streaming can never
-    disagree about what ``ts`` is — whichever physical type the harness
-    regenerates (nanos-int64, micros timestamp, tz-tagged micros), both
-    paths normalize it identically to timestamp_ntz."""
-    from prefect_flow_arc_kg_postgres_etl_spark.sources import catalog
-
-    path = f"{sf_dir}/events.parquet"
-    probe = catalog.read_raw(spark, path)
+    disagree about what a timestamp column is — whichever physical type
+    the harness regenerates (nanos-int64, micros timestamp, tz-tagged
+    micros), both paths normalize it identically to timestamp_ntz."""
+    probe = catalog.read_raw(spark, f"{sf_dir}/{table}.parquet")
     conv = catalog.epoch_conversions(probe)
     # The file-stream source needs a directory or glob, not a bare file
     # path; the single-char glob makes it treat the file as a match set.
     raw = spark.readStream.schema(probe.schema).parquet(
-        f"{sf_dir}/events.[p]arquet"
+        f"{sf_dir}/{table}.[p]arquet"
     )
     return catalog.apply_epoch_conversions(raw, conv)
 
 
-def windowed_agg_stream(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_windowed_agg"
-) -> DataFrame:
+def _run(
+    frame: DataFrame,
+    *,
+    path: str | None = None,
+    batch: Callable[[DataFrame, int], None] | None = None,
+    checkpoint: str | None = None,
+    mode: str = "append",
+) -> DataFrame | None:
+    """Run ``frame`` as one ``availableNow`` query over everything its
+    source holds, wait for it, and return what landed. The sink is:
+
+    - ``batch``: foreachBatch into ``batch``, checkpointed at
+      ``checkpoint`` (Spark's temporary checkpoint when None). Returns
+      None; the caller reads the target ``batch`` writes.
+    - ``path``: parquet files under ``path``, checkpointed at
+      ``<path>_chk``. Returns them read with the streamed schema, so the
+      read starts no schema-inference job.
+    - neither: a memory table under a fresh name, returned as a frame.
+      The name is dropped from the catalog, so the rows live as long as
+      that frame.
+
+    A failed query (a ``batch`` that raises included) raises
+    ``StreamingQueryException`` from the wait, and the query is stopped
+    whatever the wait raises."""
+    spark = frame.sparkSession
+    writer = frame.writeStream.outputMode(mode).trigger(availableNow=True)
+    if batch is not None:
+        writer = writer.foreachBatch(batch)
+    elif path is not None:
+        writer = writer.format("parquet").option("path", path)
+        checkpoint = f"{path}_chk"
+    else:
+        name = f"stream_{uuid.uuid4().hex}"
+        writer = writer.format("memory").queryName(name)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    query = writer.start()
+    try:
+        query.awaitTermination()
+    finally:
+        query.stop()
+    if batch is not None:
+        return None
+    if path is not None:
+        return read_parquet(spark, path, schema=frame.schema)
+    table = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return table
+
+
+def windowed_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour aggregation maintained by the stream (complete
     mode => the final table equals the batch events_tumbling result —
     that equivalence is the oracle check). Complete mode + memory sink
@@ -53,7 +104,7 @@ def windowed_agg_stream(
     production path at scale is ``windowed_agg_stream_watermarked``
     (append + watermark => bounded state, windows finalized and flushed
     to the sink as the watermark passes them)."""
-    ev = events_stream(spark, sf_dir)
+    ev = table_stream(spark, sf_dir, "events")
     agg = ev.groupBy(
         F.window("ts", "1 hour").getField("start").alias("window_start"),
         "event_type",
@@ -61,17 +112,7 @@ def windowed_agg_stream(
         F.count("*").alias("n"),
         F.round(F.sum("value"), 4).alias("total_value"),
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name).select(
+    return _run(agg, mode="complete").select(
         "window_start", "event_type", "n", "total_value"
     )
 
@@ -95,7 +136,7 @@ def windowed_agg_stream_watermarked(
     open windows are not emitted (they would flush on the next trigger
     in a continuous run). Returns the landed result (batch re-read).
     """
-    ev = events_stream(spark, sf_dir)
+    ev = table_stream(spark, sf_dir, "events")
     # Watermarks track TIMESTAMP (ltz) event time only; UTC round-trip
     # as in dedup_stream.
     agg = (
@@ -115,16 +156,7 @@ def windowed_agg_stream_watermarked(
             "total_value",
         )
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", f"{out_path}_chk")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return read_parquet(spark, out_path, schema=agg.schema)
+    return _run(agg, path=out_path)
 
 
 SESSION_GAP_MIN = 30
@@ -195,9 +227,7 @@ def _sessionize_group(key, pdfs, state):
         )
 
 
-def sessionize_stream(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_sessionize"
-) -> DataFrame:
+def sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming gap-based sessionization — the custom stateful operator
     Spark has no built-in for (C3). Closed sessions emit as soon as the
     gap that closes them is seen; each user's final session remains in
@@ -207,7 +237,7 @@ def sessionize_stream(
     |active users| rows, not events; shuffle is one hash exchange on
     user_id per micro-batch.
     """
-    ev = events_stream(spark, sf_dir).select("user_id", "ts")
+    ev = table_stream(spark, sf_dir, "events").select("user_id", "ts")
     sessions = ev.groupBy("user_id").applyInPandasWithState(
         _sessionize_group,
         outputStructType=_SESS_OUT_SCHEMA,
@@ -215,15 +245,7 @@ def sessionize_stream(
         outputMode="append",
         timeoutConf="NoTimeout",
     )
-    q = (
-        sessions.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name).select(
+    return _run(sessions).select(
         "user_id", "session_start", "session_end", "n_events"
     )
 
@@ -304,7 +326,6 @@ def _sessionize_group_buffered(key, pdfs, state):
 def sessionize_stream_buffered(
     spark: SparkSession,
     sf_dir: str,
-    query_name: str = "stream_sessionize_buffered",
     delay: str = "1 hour",
 ) -> DataFrame:
     """C3b: the watermark-buffered sessionizer (the C7b fix pattern
@@ -314,7 +335,7 @@ def sessionize_stream_buffered(
     watermark finalized) — under ANY cross-batch arrival order within
     the lateness window."""
     ev = (
-        events_stream(spark, sf_dir)
+        table_stream(spark, sf_dir, "events")
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", delay)
         .select("user_id", "ts")
@@ -326,15 +347,7 @@ def sessionize_stream_buffered(
         outputMode="append",
         timeoutConf="EventTimeTimeout",
     )
-    q = (
-        sessions.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name).select(
+    return _run(sessions).select(
         "user_id", "session_start", "session_end", "n_events"
     )
 
@@ -352,11 +365,10 @@ def incremental_upsert_stream(
 
     Returns the final target state (batch re-read)."""
     keys = keys or ["event_id"]
-    ev = events_stream(spark, sf_dir)
+    ev = table_stream(spark, sf_dir, "events")
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         from prefect_flow_arc_kg_postgres_etl_spark.operators import merge as M
-        from prefect_flow_arc_kg_postgres_etl_spark.sources import store
 
         sp = batch_df.sparkSession
         # table_exists, not try/except: a transient read failure must
@@ -376,16 +388,11 @@ def incremental_upsert_stream(
         # read-modify-write is safe with a single data write per epoch.
         store.write_table(merged, target_path)
 
-    q = ev.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
-    from prefect_flow_arc_kg_postgres_etl_spark.sources import store
-
+    _run(ev, batch=apply_batch)
     return store.read_table(spark, target_path)
 
 
-def dedup_stream(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_dedup"
-) -> DataFrame:
+def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4: streaming exact deduplication. The source is read TWICE and
     unioned (a deterministic duplicated stream — the at-least-once
     delivery case dedup exists for); ``dropDuplicatesWithinWatermark``
@@ -399,7 +406,7 @@ def dedup_stream(
     # the ntz column through ltz for the stateful op (value-exact under
     # the catalog's pinned UTC session tz) and back for the output the
     # oracle compares.
-    ev = events_stream(spark, sf_dir).select(
+    ev = table_stream(spark, sf_dir, "events").select(
         "event_id",
         F.col("ts").cast("timestamp").alias("ts"),
         "user_id",
@@ -410,15 +417,7 @@ def dedup_stream(
     deduped = doubled.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _run(deduped)
 
 
 def es_feed_stream(
@@ -435,7 +434,7 @@ def es_feed_stream(
 
     from prefect_flow_arc_kg_postgres_etl_spark.sinks.es_bulk import to_bulk_actions
 
-    ev = events_stream(spark, sf_dir)
+    ev = table_stream(spark, sf_dir, "events")
     # The document carries the value in EXACT integer cents (floor) —
     # to_json's double rendering (Jackson shortest-roundtrip) is not
     # reproducible in another engine's string formatter, while integer
@@ -467,8 +466,7 @@ def es_feed_stream(
             .text(f"{out_path}/epoch={epoch_id}")
         )
 
-    q = docs.writeStream.foreachBatch(write_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    _run(docs, batch=write_batch)
     # Project the bulk lines only: the partitioned layout makes
     # read.text infer epoch=/index= as extra columns, but the feed's
     # contract (and its oracle) is the NDJSON line set itself.
@@ -485,25 +483,18 @@ def enrich_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     size-based planning picks broadcast at small sf and shuffled join
     at scale; fixed-size dims would be hinted via
     ``catalog.BROADCAST_DIMS`` membership."""
-    from prefect_flow_arc_kg_postgres_etl_spark.sources.catalog import (
-        BROADCAST_DIMS,
-        load_table,
-    )
-
-    ev = events_stream(spark, sf_dir)
-    cust = load_table(spark, sf_dir, "customer").select(
+    ev = table_stream(spark, sf_dir, "events")
+    cust = catalog.load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey"
     )
-    if "customer" in BROADCAST_DIMS:  # pragma: no cover — customer is sf-scaled
+    if "customer" in catalog.BROADCAST_DIMS:  # pragma: no cover — sf-scaled
         cust = F.broadcast(cust)
     return ev.join(cust, ev.user_id == cust.c_custkey, "left").select(
         "event_id", "user_id", "event_type", "value", "c_name", "c_nationkey"
     )
 
 
-def enrich_stream(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_enrich"
-) -> DataFrame:
+def enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C6: stream-static enrichment — each micro-batch of events joins
     the static customer dimension (the standard lookup-join of a
     continuous ingest path; the reference's record constructor does the
@@ -514,16 +505,7 @@ def enrich_stream(
     store, so at 100 TB the cost is the batch join cost per
     micro-batch. LEFT join keeps events with no matching entity —
     exactly the batch SQL the oracle runs."""
-    joined = enrich_plan(spark, sf_dir)
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _run(enrich_plan(spark, sf_dir))
 
 
 _FUNNEL_OUT_SCHEMA = "user_id bigint, purchase_event bigint, gap_us bigint"
@@ -582,14 +564,14 @@ def _funnel_group(key, pdfs, state):
         )
 
 
-def funnel_stream(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_funnel"
-) -> DataFrame:
+def funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C7: streaming conversion funnel — view -> purchase within 1 hour
     per user, detected incrementally with per-user state instead of the
     batch window pass. One hash exchange on user_id per micro-batch;
     emits conversions as they are seen."""
-    ev = events_stream(spark, sf_dir).select("user_id", "ts", "event_type", "event_id")
+    ev = table_stream(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_type", "event_id"
+    )
     conv = ev.groupBy("user_id").applyInPandasWithState(
         _funnel_group,
         outputStructType=_FUNNEL_OUT_SCHEMA,
@@ -597,15 +579,7 @@ def funnel_stream(
         outputMode="append",
         timeoutConf="NoTimeout",
     )
-    q = (
-        conv.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name).select("user_id", "purchase_event", "gap_us")
+    return _run(conv).select("user_id", "purchase_event", "gap_us")
 
 
 def interval_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -625,7 +599,7 @@ def interval_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Delay choice: the watermark delay must be >= the join interval or
     in-order late pairs get dropped; 1 hour matches the interval."""
-    ev = events_stream(spark, sf_dir)
+    ev = table_stream(spark, sf_dir, "events")
     # Watermarks track TIMESTAMP (ltz) event time; UTC round-trip as in
     # dedup_stream. Both branches re-derive from one source stream —
     # Spark plans this as a self-join of the scan, not two sources.
@@ -661,26 +635,13 @@ def interval_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def interval_join_stream(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_interval_join"
-) -> DataFrame:
+def interval_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C8: stream-stream time-interval join. On a bounded source every
     qualifying pair is emitted (inner join emits on arrival; state
     eviction only discards rows that can no longer match), so the
     result hash-equals the batch interval self-join — the full SQL
     oracle, unlike most stream-stream setups."""
-    joined = interval_join_plan(spark, sf_dir)
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
+    return _run(interval_join_plan(spark, sf_dir))
 
 
 _FUNNELB_STATE_SCHEMA = (
@@ -773,7 +734,6 @@ def _funnel_group_buffered(key, pdfs, state):
 def funnel_stream_buffered(
     spark: SparkSession,
     sf_dir: str,
-    query_name: str = "stream_funnel_buffered",
     delay: str = "1 hour",
 ) -> DataFrame:
     """C7b: the watermarked buffered funnel. Emits exactly the batch
@@ -784,7 +744,7 @@ def funnel_stream_buffered(
     source the emitted set is deterministic: conversions whose
     purchase time <= max event time - delay."""
     ev = (
-        events_stream(spark, sf_dir)
+        table_stream(spark, sf_dir, "events")
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", delay)
         .filter(F.col("event_type").isin("view", "purchase"))
@@ -797,15 +757,7 @@ def funnel_stream_buffered(
         outputMode="append",
         timeoutConf="EventTimeTimeout",
     )
-    q = (
-        conv.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name).select("user_id", "purchase_event", "gap_us")
+    return _run(conv).select("user_id", "purchase_event", "gap_us")
 
 
 def agg_state_stream(
@@ -836,7 +788,7 @@ def agg_state_stream(
 
     After the bounded run the state equals the batch aggregate over
     the whole source — the full SQL oracle."""
-    ev = events_stream(spark, sf_dir)
+    ev = table_stream(spark, sf_dir, "events")
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         from pyspark.sql import functions as FF
@@ -844,8 +796,6 @@ def agg_state_stream(
         from prefect_flow_arc_kg_postgres_etl_spark.operators.merge import (
             merge_agg_state,
         )
-        from prefect_flow_arc_kg_postgres_etl_spark.sources import store
-
         sp = batch_df.sparkSession
         delta = batch_df.select(
             "user_id",
@@ -880,15 +830,7 @@ def agg_state_stream(
             merged.withColumn("_epoch", FF.lit(epoch_id)), target_path
         )
 
-    q = (
-        ev.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", f"{target_path}_chk")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from prefect_flow_arc_kg_postgres_etl_spark.sources import store
-
+    _run(ev, batch=apply_batch, checkpoint=f"{target_path}_chk")
     return store.read_table(spark, target_path).select(
         "user_id",
         F.col("n").alias("n_events"),
@@ -915,7 +857,7 @@ def dq_gate_stream(
     micro-batch, not two source reads."""
     import os
 
-    ev = events_stream(spark, sf_dir)
+    ev = table_stream(spark, sf_dir, "events")
     rule = (F.col("value") >= 0) & (F.col("value") <= 90)
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -936,12 +878,7 @@ def dq_gate_stream(
     # schema guarding the zero-row case (ADVICE r5).
     os.makedirs(f"{out_root}/valid", exist_ok=True)
     os.makedirs(f"{out_root}/dead_letter", exist_ok=True)
-    q = (
-        ev.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run(ev, batch=apply_batch)
     cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     # Explicit schema on the read-back: a sink that received ZERO rows
     # across all epochs holds only _SUCCESS markers, and schema
@@ -973,7 +910,7 @@ def windowed_topk_stream(
     replay-idempotent, so each state version carries its epoch and a
     replayed micro-batch is skipped. After the bounded run the ranked
     state equals the batch windowed top-k — the full SQL oracle."""
-    ev = events_stream(spark, sf_dir)
+    ev = table_stream(spark, sf_dir, "events")
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         from pyspark.sql import functions as FF
@@ -981,8 +918,6 @@ def windowed_topk_stream(
         from prefect_flow_arc_kg_postgres_etl_spark.operators.merge import (
             merge_agg_state,
         )
-        from prefect_flow_arc_kg_postgres_etl_spark.sources import store
-
         sp = batch_df.sparkSession
         delta = batch_df.select(
             FF.date_trunc("hour", FF.col("ts")).alias("window_start"),
@@ -1012,16 +947,8 @@ def windowed_topk_stream(
             merged.withColumn("_epoch", FF.lit(epoch_id)), target_path
         )
 
-    q = (
-        ev.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", f"{target_path}_chk")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run(ev, batch=apply_batch, checkpoint=f"{target_path}_chk")
     from pyspark.sql import Window
-
-    from prefect_flow_arc_kg_postgres_etl_spark.sources import store
 
     state = store.read_table(spark, target_path)
     w = Window.partitionBy("window_start").orderBy(
@@ -1058,12 +985,10 @@ def dedup_state_stream(
     the fresh-checkpoint hazards C9 documents. The source is read
     twice and unioned (deterministic at-least-once duplication); the
     converged store equals the distinct source — the full SQL oracle."""
-    ev = events_stream(spark, sf_dir)
+    ev = table_stream(spark, sf_dir, "events")
     doubled = ev.unionByName(ev)
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from prefect_flow_arc_kg_postgres_etl_spark.sources import store
-
         sp = batch_df.sparkSession
         fresh = batch_df.dropDuplicates(["event_id"])
         if store.table_exists(target_path):
@@ -1076,15 +1001,7 @@ def dedup_state_stream(
             merged = fresh
         store.write_table(merged, target_path)
 
-    q = (
-        doubled.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", f"{target_path}_chk")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from prefect_flow_arc_kg_postgres_etl_spark.sources import store
-
+    _run(doubled, batch=apply_batch, checkpoint=f"{target_path}_chk")
     return store.read_table(spark, target_path).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -1121,16 +1038,7 @@ def pivot_records_stream(
     batch pivot restricted to o_orderdate <= max - 2 days, which is the
     SQL oracle.
     """
-    from prefect_flow_arc_kg_postgres_etl_spark.sources import catalog
-
-    path = f"{sf_dir}/orders.parquet"
-    probe = catalog.read_raw(spark, path)
-    conv = catalog.epoch_conversions(probe)
-    raw = spark.readStream.schema(probe.schema).parquet(
-        f"{sf_dir}/orders.[p]arquet"
-    )
-    orders = catalog.apply_epoch_conversions(raw, conv)
-
+    orders = table_stream(spark, sf_dir, "orders")
     pairs = ", ".join(f"'{c}', cast(`{c}` as string)" for c in PIVOT_STREAM_COLS)
     triples = orders.select(
         F.concat(F.lit("order:"), F.col("o_orderkey").cast("string")).alias(
@@ -1155,16 +1063,7 @@ def pivot_records_stream(
         .agg(*aggs)
         .select("subject", *PIVOT_STREAM_COLS)
     )
-    q = (
-        rec.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", f"{out_path}_chk")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return read_parquet(spark, out_path, schema=rec.schema)
+    return _run(rec, path=out_path)
 
 
 # -------------------------------------- C14 SCD2 point-in-time enrich
@@ -1176,8 +1075,6 @@ def scd2_user_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     valid_to = the next version's valid_from (lead window). Disjoint,
     gap-free-per-key validity intervals — the A27/A47 layout."""
     from pyspark.sql import Window as W
-
-    from prefect_flow_arc_kg_postgres_etl_spark.sources import catalog
 
     orders = catalog.load_table(spark, sf_dir, "orders")
     vf = F.expr(
@@ -1218,7 +1115,7 @@ def scd2_enrich_stream(
     import os
 
     dim = scd2_user_dim(spark, sf_dir)
-    ev = events_stream(spark, sf_dir).select(
+    ev = table_stream(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "value"
     )
 
@@ -1237,8 +1134,7 @@ def scd2_enrich_stream(
         out.write.mode("overwrite").parquet(f"{out_root}/enriched/epoch={epoch_id}")
 
     os.makedirs(f"{out_root}/enriched", exist_ok=True)
-    q = ev.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
+    _run(ev, batch=apply_batch)
     try:
         landed = read_parquet(spark, f"{out_root}/enriched")
     except Exception:
@@ -1257,7 +1153,7 @@ def interval_join_outer_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves no qualifying purchase can still arrive (view-state
     eviction at wm > v_ts + interval) — matched pairs emit on
     arrival exactly as the inner join."""
-    ev = events_stream(spark, sf_dir)
+    ev = table_stream(spark, sf_dir, "events")
     base = ev.withColumn("ts", F.col("ts").cast("timestamp"))
     views = (
         base.filter(F.col("event_type") == "view")
@@ -1297,17 +1193,7 @@ def interval_join_outer_stream(
     """C15 runner: parquet sink + availableNow so the final no-data
     batch advances the watermark and flushes the outer NULL rows for
     every view whose match window closed."""
-    joined = interval_join_outer_plan(spark, sf_dir)
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", f"{out_path}_chk")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return read_parquet(spark, out_path, schema=joined.schema)
+    return _run(interval_join_outer_plan(spark, sf_dir), path=out_path)
 
 
 # ----------------------------------------- C16 streaming gap fill
@@ -1377,7 +1263,6 @@ def _gap_fill_group(key, pdfs, state):
 def gap_fill_stream(
     spark: SparkSession,
     sf_dir: str,
-    query_name: str,
     delay: str = "1 hour",
 ) -> DataFrame:
     """C16 runner. On a bounded source the emitted set is
@@ -1386,7 +1271,7 @@ def gap_fill_stream(
     ms-floored max ts - delay), zeros for empty buckets — the batch
     gap fill (B41) restricted per-type and to the horizon."""
     ev = (
-        events_stream(spark, sf_dir)
+        table_stream(spark, sf_dir, "events")
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", delay)
         .select("event_type", "ts")
@@ -1398,15 +1283,7 @@ def gap_fill_stream(
         outputMode="append",
         timeoutConf="EventTimeTimeout",
     )
-    q = (
-        filled.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name).select(
+    return _run(filled).select(
         "event_type",
         F.col("hour").cast("timestamp_ntz").alias("hour"),
         "n",
@@ -1423,7 +1300,7 @@ def windowed_distinct_stream(
     survivors — each stage's state is horizon-bounded, and the count
     is EXACT (approx_count_distinct is the usual streaming compromise).
     On a bounded source: windows with end <= final watermark emit."""
-    ev = events_stream(spark, sf_dir)
+    ev = table_stream(spark, sf_dir, "events")
     base = (
         ev.withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", delay)
@@ -1440,16 +1317,7 @@ def windowed_distinct_stream(
             "n_distinct_users",
         )
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", f"{out_path}_chk")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return read_parquet(spark, out_path, schema=agg.schema)
+    return _run(agg, path=out_path)
 
 
 def agg_retractable_stream(
@@ -1468,7 +1336,7 @@ def agg_retractable_stream(
     replay protection as C9 (additive state is not replay-idempotent).
     Converged state == the batch aggregate over the surviving rows
     (value <= 150), the full SQL oracle."""
-    ev = events_stream(spark, sf_dir)
+    ev = table_stream(spark, sf_dir, "events")
     inserts = ev.select("user_id", "value", F.lit(1).alias("sign"))
     retracts = (
         ev.filter(F.col("value") > 150)
@@ -1482,8 +1350,6 @@ def agg_retractable_stream(
         from prefect_flow_arc_kg_postgres_etl_spark.operators.merge import (
             merge_agg_state_signed,
         )
-        from prefect_flow_arc_kg_postgres_etl_spark.sources import store
-
         sp = batch_df.sparkSession
         delta = batch_df.select(
             "user_id",
@@ -1519,15 +1385,7 @@ def agg_retractable_stream(
             merged.withColumn("_epoch", FF.lit(epoch_id)), target_path
         )
 
-    q = (
-        feed.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", f"{target_path}_chk")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from prefect_flow_arc_kg_postgres_etl_spark.sources import store
-
+    _run(feed, batch=apply_batch, checkpoint=f"{target_path}_chk")
     return store.read_table(spark, target_path).select(
         "user_id",
         F.col("n").alias("n_events"),

@@ -4,6 +4,7 @@ entries, thread safety, and clear_plan_cache."""
 
 from __future__ import annotations
 
+import os
 import sys
 import threading
 from types import SimpleNamespace
@@ -61,7 +62,7 @@ def test_stamped_entry_misses_on_a_new_stamp_and_is_replaced():
 def test_flow_plan_entry_rebuilds_on_a_changed_store_fingerprint(monkeypatch):
     spark = _app("app-flow")
     fingerprint = [(10, 1)]
-    monkeypatch.setattr(RP, "_store_fingerprint", lambda sf_dir, s: fingerprint[0])
+    monkeypatch.setattr(RP, "listing_stamp", lambda s, sf_dir: fingerprint[0])
     monkeypatch.setattr(RP, "_FLOW_PLAN_CACHE", AppLRU(32))
     builds: list[int] = []
 
@@ -75,6 +76,33 @@ def test_flow_plan_entry_rebuilds_on_a_changed_store_fingerprint(monkeypatch):
     assert RP._flow_plan_cached(spark, "/store", "deletes", build) == "plan2"
     assert len(builds) == 2
     assert len(RP._FLOW_PLAN_CACHE) == 1  # replaced, not added beside
+
+
+def test_flow_plan_entry_misses_after_a_same_size_rewrite(monkeypatch, tmp_path):
+    """A rewrite that replaces a store's part files with same-size
+    files under new names, inside the old latest mtime, keeps its total
+    bytes and latest mtime; the cached plan must still miss."""
+    spark = _app("app-rewrite")
+    monkeypatch.setattr(RP, "_FLOW_PLAN_CACHE", AppLRU(32))
+    store = tmp_path / "store"
+    store.mkdir()
+    for name in ("part-00000-a.parquet", "part-00001-a.parquet"):
+        (store / name).write_bytes(b"x" * 8)
+    latest = max(os.stat(p).st_mtime_ns for p in store.iterdir())
+    builds: list[int] = []
+
+    def build():
+        builds.append(1)
+        return f"plan{len(builds)}"
+
+    assert RP._flow_plan_cached(spark, str(store), "deletes", build) == "plan1"
+    assert RP._flow_plan_cached(spark, str(store), "deletes", build) == "plan1"
+    for old in list(store.iterdir()):
+        new = store / old.name.replace("-a.", "-b.")
+        old.unlink()
+        new.write_bytes(b"y" * 8)
+        os.utime(new, ns=(latest, latest))
+    assert RP._flow_plan_cached(spark, str(store), "deletes", build) == "plan2"
 
 
 def test_concurrent_put_get_keeps_the_bound():

@@ -917,18 +917,26 @@ def test_index_partitions_sized_to_corpus():
     assert _index_partitions(10**12) == 4096
 
 
-def test_meta_listing_stamp_separates_colliding_listings():
-    """Two _meta listings whose max(mtime * 1e6 + len) collides (a
-    rewrite inside one coarse mtime tick) must not share a cache key;
-    the same listing in another order must."""
-    from prefect_flow_arc_kg_postgres_etl_spark.operators.dedup import (
-        _listing_stamp,
-    )
+def test_meta_listing_stamp_separates_colliding_listings(tmp_path):
+    """Two _meta listings with equal lengths and mtimes (a rewrite
+    inside one coarse mtime tick) must not share a cache key; the same
+    listing read again must."""
+    import os
 
-    old = [("part-0000-a.json", 48, 1_700_000_000_000), ("_SUCCESS", 0, 1_700_000_000_000)]
-    new = [("part-0000-b.json", 48, 1_700_000_000_000), ("_SUCCESS", 0, 1_700_000_000_000)]
-    assert max(m * 1_000_000 + n for _, n, m in old) == max(
-        m * 1_000_000 + n for _, n, m in new
-    )
-    assert _listing_stamp(old) != _listing_stamp(new)
-    assert _listing_stamp(old) == _listing_stamp(list(reversed(old)))
+    from prefect_flow_arc_kg_postgres_etl_spark.session import listing_stamp
+
+    meta = tmp_path / "_meta"
+    meta.mkdir()
+    tick = 1_700_000_000 * 10**9
+
+    def land(name):
+        for f in meta.iterdir():
+            f.unlink()
+        for f, size in ((name, 48), ("_SUCCESS", 0)):
+            (meta / f).write_bytes(b"x" * size)
+            os.utime(meta / f, ns=(tick, tick))
+        return listing_stamp(None, str(meta))
+
+    old = land("part-0000-a.json")
+    assert listing_stamp(None, str(meta)) == old
+    assert land("part-0000-b.json") != old

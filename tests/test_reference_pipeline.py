@@ -955,16 +955,19 @@ def test_failed_landing_leaves_no_spill_dir(tmp_path):
 
 
 def test_store_fingerprint_reads_file_uris(tmp_path):
-    """A file: URI fingerprints like the plain path it names, so the
-    view and document caches notice a change under either spelling."""
+    """A file: URI stamps like the plain path it names, so the view
+    and document caches notice a change under either spelling."""
+    from prefect_flow_arc_kg_postgres_etl_spark.session import listing_stamp
+
     (tmp_path / "a.parquet").write_bytes(b"x" * 10)
-    plain = RP._store_fingerprint(str(tmp_path))
-    assert plain[0] == 10
-    assert RP._store_fingerprint(f"file://{tmp_path}") == plain
-    assert RP._store_fingerprint(f"file:{tmp_path}") == plain
+    plain = listing_stamp(None, str(tmp_path))
+    assert listing_stamp(None, f"file://{tmp_path}") == plain
+    assert listing_stamp(None, f"file:{tmp_path}") == plain
     (tmp_path / "b.parquet").write_bytes(b"y" * 5)
-    assert RP._store_fingerprint(f"file:{tmp_path}") != plain
-    assert RP._store_fingerprint(f"file://{tmp_path}")[0] == 15
+    changed = listing_stamp(None, f"file:{tmp_path}")
+    assert changed != plain
+    assert listing_stamp(None, f"file://{tmp_path}") == changed
+    assert listing_stamp(None, str(tmp_path)) == changed
 
 
 def test_index_documents_ndjson_payload(spark):
@@ -1223,22 +1226,28 @@ def test_per_org_fanout_composes_to_scoped_documents(spark):
 
 
 def test_store_fingerprint_tracks_changes(tmp_path):
-    """The spill/docs cache key includes a store fingerprint so a
-    CHANGED store under the same path re-lands instead of serving
-    stale results (r9 ADVICE): fingerprint moves on size or mtime."""
+    """The spill/docs cache entries are stamped with the store's
+    listing stamp so a CHANGED store under the same path re-lands
+    instead of serving stale results (r9 ADVICE): the stamp moves on
+    size or mtime."""
     import os
     import time
 
+    from prefect_flow_arc_kg_postgres_etl_spark.session import listing_stamp
+
     f = tmp_path / "t.parquet"
     f.write_bytes(b"abc")
-    fp1 = RP._store_fingerprint(str(tmp_path))
+    fp1 = listing_stamp(None, str(tmp_path))
     f.write_bytes(b"abcd")
-    fp2 = RP._store_fingerprint(str(tmp_path))
+    fp2 = listing_stamp(None, str(tmp_path))
     assert fp1 != fp2
     now = time.time() + 10
     os.utime(f, (now, now))
-    fp3 = RP._store_fingerprint(str(tmp_path))
+    fp3 = listing_stamp(None, str(tmp_path))
     assert fp3 != fp2
+    # Nothing lists a missing directory: its stamp matches no other.
+    missing = str(tmp_path / "missing")
+    assert listing_stamp(None, missing) != listing_stamp(None, missing)
 
 
 def test_reference_incremental_flow_store_backed(spark, tmp_path):

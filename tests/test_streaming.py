@@ -17,7 +17,7 @@ from tests.conftest import SF_SMOKE
 def test_stream_agg_equals_batch(spark):
     stream_out = {
         tuple(r)
-        for r in windowed_agg_stream(spark, SF_SMOKE, "t_stream_agg").collect()
+        for r in windowed_agg_stream(spark, SF_SMOKE).collect()
     }
     batch_out = {tuple(r) for r in events_tumbling(spark, SF_SMOKE).collect()}
     assert stream_out == batch_out
@@ -46,7 +46,7 @@ def test_stream_sessionize_equals_batch_closed_sessions(spark):
 
     streamed = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in sessionize_stream(spark, SF_SMOKE, "t_sessionize").collect()
+        for r in sessionize_stream(spark, SF_SMOKE).collect()
     }
     batch = sessionize(spark, SF_SMOKE).collect()
     last_per_user = {}
@@ -67,13 +67,49 @@ def test_stream_dedup_equals_source(spark):
     from prefect_flow_arc_kg_postgres_etl_spark.sources.catalog import load_table
     from prefect_flow_arc_kg_postgres_etl_spark.streaming.sync import dedup_stream
 
-    out = dedup_stream(spark, SF_SMOKE, query_name="t_stream_dedup")
+    out = dedup_stream(spark, SF_SMOKE)
     expected = load_table(spark, SF_SMOKE, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
     assert out.count() == expected.count()
     assert out.exceptAll(expected).count() == 0
     assert expected.exceptAll(out).count() == 0
+
+
+def test_memory_sink_calls_each_return_their_own_rows(spark, tmp_path):
+    """The runner names every memory sink afresh: two calls of one
+    memory-sink entry in one session each keep their own rows, and
+    neither leaves a table in the session catalog."""
+    from prefect_flow_arc_kg_postgres_etl_spark.streaming.sync import dedup_stream
+
+    small = tmp_path / "sf"
+    small.mkdir()
+    events = load_table(spark, SF_SMOKE, "events")
+    events.orderBy("event_id").limit(10).coalesce(1).write.parquet(
+        str(small / "events.parquet")
+    )
+    views = {t.name for t in spark.catalog.listTables()}
+    first = dedup_stream(spark, str(small))
+    second = dedup_stream(spark, SF_SMOKE)
+    assert first.count() == 10
+    assert second.count() == events.count()
+    assert first.exceptAll(second).count() == 0
+    assert {t.name for t in spark.catalog.listTables()} == views
+
+
+def test_raising_batch_function_fails_the_run_and_leaves_no_query(spark):
+    """A foreachBatch function that raises fails the run with
+    StreamingQueryException, and no query is left active."""
+    from pyspark.errors import StreamingQueryException
+
+    from prefect_flow_arc_kg_postgres_etl_spark.streaming import sync
+
+    def boom(batch_df, epoch_id):
+        raise ValueError("batch failed")
+
+    with pytest.raises(StreamingQueryException):
+        sync._run(sync.table_stream(spark, SF_SMOKE, "events"), batch=boom)
+    assert spark.streams.active == []
 
 
 def test_stream_es_feed_lands_bulk_pairs(spark, tmp_path):
@@ -155,7 +191,7 @@ def test_stream_enrich_equals_batch_join(spark):
     per-micro-batch join; no rows lost or duplicated)."""
     from prefect_flow_arc_kg_postgres_etl_spark.streaming.sync import enrich_stream
 
-    out = enrich_stream(spark, SF_SMOKE, query_name="t_enrich")
+    out = enrich_stream(spark, SF_SMOKE)
     ev = load_table(spark, SF_SMOKE, "events")
     cust = load_table(spark, SF_SMOKE, "customer").select(
         "c_custkey", "c_name", "c_nationkey"
@@ -178,7 +214,7 @@ def test_stream_funnel_equals_batch_funnel(spark):
 
     got = {
         (r.user_id, r.purchase_event, r.gap_us)
-        for r in funnel_stream(spark, SF_SMOKE, "funnel_eq_test").collect()
+        for r in funnel_stream(spark, SF_SMOKE).collect()
     }
     want = {
         (r.user_id, r.purchase_event, r.gap_us)

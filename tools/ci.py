@@ -53,12 +53,17 @@ def run(label: str, cmd: list[str]) -> bool:
 # Suite shards for the parallel gate (no pytest-xdist in the image, so
 # file-level sharding with one subprocess + one Spark JVM each).
 # Groupings balance measured wall time: the oracle sweep is its own
-# shard (the longest), plan-audit + streaming together, the store/merge
-# family, and the rest. Files created later fall into shard 3 via the
-# catch-all so a new test file cannot silently drop out of the gate.
+# shard (the longest), plan-audit + streaming + the one-streaming-runner
+# guard together, the store/merge family, and the rest. Files created
+# later fall into shard 3 via the catch-all so a new test file cannot
+# silently drop out of the gate.
 _SHARDS: list[list[str]] = [
     ["tests/test_oracle.py"],
-    ["tests/test_plan_audit.py", "tests/test_streaming.py"],
+    [
+        "tests/test_plan_audit.py",
+        "tests/test_streaming.py",
+        "tests/test_one_stream_runner.py",
+    ],
     [
         "tests/test_flows.py",
         "tests/test_sinks.py",
